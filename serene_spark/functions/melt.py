@@ -19,7 +19,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def spread(df: DataFrame, key_cols: tuple[str, ...] | None = None) -> DataFrame:
+def _num_partitions(df: DataFrame) -> int:
+    """``df``'s partition count, memoized on the handle: the probe costs an
+    RDD-conversion planning pass (~50 ms of driver work), so the cached
+    catalog tables (serene_spark.catalog.load_table) pay it once per
+    session."""
+    nparts = getattr(df, "_serene_nparts", None)
+    if nparts is None:
+        nparts = df.rdd.getNumPartitions()
+        try:
+            df._serene_nparts = nparts
+        except Exception:
+            pass
+    return nparts
+
+
+def spread(
+    df: DataFrame, key_cols: tuple[str, ...] | None = None, probe: DataFrame | None = None
+) -> DataFrame:
     """Round-robin repartition ONLY when the input is under-partitioned.
 
     A small parquet file arrives as one partition locally, which would pin all
@@ -37,20 +54,14 @@ def spread(df: DataFrame, key_cols: tuple[str, ...] | None = None) -> DataFrame:
     consumer reads every column anyway (the melt/stack path). A unique key
     also keeps duplicate-heavy corpora evenly spread — identical full rows
     hash to one partition, identical rows with distinct ids do not.
+
+    ``probe`` is the handle whose partition count decides, when ``df`` is a
+    fresh projection of it: a projection keeps its input's partition count,
+    and only a long-lived handle (a cached catalog table) carries the memo
+    from one call to the next.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    # the partition probe costs an RDD-conversion planning pass (~50 ms of
-    # driver work); memoize it on the DataFrame handle so the cached catalog
-    # tables (serene_spark.catalog.load_table) pay it once per session
-    nparts = getattr(df, "_serene_nparts", None)
-    if nparts is None:
-        nparts = df.rdd.getNumPartitions()
-        try:
-            df._serene_nparts = nparts
-        except Exception:
-            pass
-    if nparts < target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if _num_partitions(df if probe is None else probe) < target:
         # Deterministic content-hash routing instead of round-robin
         # ``repartition(n)``: (a) round-robin pays a local sort of its input
         # (sortBeforeRepartition) and re-runs of retried map tasks can only
@@ -81,7 +92,7 @@ def melt(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     pairs = ", ".join(f"'{c}', coalesce(cast(`{c}` as string), '')" for c in cols)
     # project before spreading so the repartition shuffle never carries
     # columns the melt doesn't need (explicit, not left to ColumnPruning)
-    return spread(df.select(*[f"`{c}`" for c in cols])).select(
+    return spread(df.select(*[f"`{c}`" for c in cols]), probe=df).select(
         F.expr(f"stack({len(cols)}, {pairs}) as (column_name, value)")
     )
 
@@ -104,7 +115,7 @@ def melt_ids(df: DataFrame, columns: list[str] | None = None) -> tuple[DataFrame
     pairs = ", ".join(
         f"{i}, coalesce(cast(`{c}` as string), '')" for i, c in enumerate(cols)
     )
-    long_df = spread(df.select(*[f"`{c}`" for c in cols])).select(
+    long_df = spread(df.select(*[f"`{c}`" for c in cols]), probe=df).select(
         F.expr(f"stack({len(cols)}, {pairs}) as (column_name, value)")
     )
     name_case = (

@@ -23,8 +23,9 @@ from pyspark.sql import functions as F
 
 from serene_spark.registry import register
 from serene_spark.materialize import constraint_propagation_off, materialize
+from serene_spark.reference import reference_path, require
 
-HOMESEEKERS_CSV = "/root/reference/core/src/test/resources/homeseekers.csv"
+HOMESEEKERS_CSV = reference_path("core", "src", "test", "resources", "homeseekers.csv")
 
 # SparkParallelSpec.scala:122-143 — 0-based header position -> class, verbatim.
 DEFAULT_LABELS: dict[int, str] = {
@@ -59,6 +60,7 @@ def load_homeseekers_long(spark: SparkSession):
     """
     from serene_spark.sources.csv_loader import load_csv
 
+    require(HOMESEEKERS_CSV)
     wide = load_csv(spark, HOMESEEKERS_CSV)
     cols = wide.columns
     pairs = ", ".join(
@@ -131,6 +133,7 @@ def accuracy(preds: DataFrame, labels_df: DataFrame) -> float:
     doc="SURVEY §2.9 accuracy gate on the REAL homeseekers.csv "
     "(SparkParallelSpec.scala:404-447): 18 labeled columns, NoResampling, "
     "resubstitution predict; >0.9 gate pinned in tests/test_homeseekers_real.py",
+    requires=(HOMESEEKERS_CSV,),
 )
 def semantic_type_predict_homeseekers_real(
     spark: SparkSession, sf_dir: str

@@ -65,6 +65,13 @@ def profile_features_from_long(
     ids — the narrower group-by key, guide §2.3), the CASE expression
     mapping ids back to names; applied to the final per-column matrix so
     callers always see name-keyed rows.
+
+    Eager: the fused statement runs here, behind its own ``materialize()``
+    barrier, and the result is one projection over that checkpoint. The
+    matrix is column-metadata-sized but sits on a ~100-node fused plan;
+    staged, every consumer (joins, ``PipelineModel`` stages, the score
+    projections) analyzes and optimizes a leaf instead of re-planning the
+    profiler. Callers need no further ``cache()``/``materialize()``.
     """
     from serene_spark.operators.profile_fused import fused_profile_sql
     from serene_spark.operators.profile_scalar import hist_sql
@@ -126,7 +133,7 @@ def profile_features_from_long(
                 needs_numeric=needs_numeric,
                 ncounts_src=ncnt_view if needs_numeric else None,
             )
-        )
+        ).transform(materialize)
     finally:
         spark.catalog.dropTempView(view)
         spark.catalog.dropTempView(hist_view)
@@ -137,12 +144,9 @@ def profile_features_from_long(
         feature_cols = [c for c in out.columns if c != "column_name"]
     else:
         feature_cols = settings.matrix_columns()
-    name_col = (
-        F.expr(name_case).alias("column_name") if name_case else F.col("column_name")
-    )
-    return out.select(
-        name_col,
-        *[F.coalesce(F.col(c).cast("double"), F.lit(-1.0)).alias(c) for c in feature_cols],
+    return out.selectExpr(
+        f"{name_case} AS column_name" if name_case else "column_name",
+        *[f"coalesce(CAST(`{c}` AS DOUBLE), -1.0D) AS `{c}`" for c in feature_cols],
     )
 
 
@@ -301,37 +305,39 @@ def predict_with_scores(
     mlib_labels: list[str] = list(model.stages[0].labels)
     new_order = [mlib_labels.index(c) if c in mlib_labels else -1 for c in classes]
 
-    preds = model.transform(features_df).withColumn(
-        "_probs", vector_to_array("probability")
-    )
-    score_cols = [
-        (F.col("_probs")[idx] if idx >= 0 else F.lit(0.0)).alias(score_column_name(c))
-        for c, idx in zip(classes, new_order)
-    ]
-    scored = preds.select("column_name", *score_cols)
-
-    if bag_col is not None:
-        # bag-averaging: mean score vector per original column (:154-166)
-        scored = preds.select("column_name", F.col(bag_col), *score_cols).groupBy(
-            "column_name"
-        ).agg(*[F.avg(score_column_name(c)).alias(score_column_name(c)) for c in classes])
-
     names = [score_column_name(c) for c in classes]
-    confidence = F.greatest(*[F.col(n) for n in names]) if len(names) > 1 else F.col(names[0])
-    # first-maximum tie-break in user class order (Scala maxBy semantics)
-    predicted = F.coalesce(
-        *[F.when(F.col(n) == F.col("_conf"), F.lit(c)) for c, n in zip(classes, names)]
-    )
-    return (
-        scored.withColumn("_conf", confidence)
-        .withColumn("predicted_class", predicted)
-        .select(
+    # SQL-string projections over the transformed leaf (the staged feature
+    # matrix): each call analyzes a few nodes above the checkpoint, not the
+    # profiling plan
+    scored = (
+        model.transform(features_df)
+        .select("column_name", vector_to_array("probability").alias("_probs"))
+        .selectExpr(
             "column_name",
-            "predicted_class",
-            F.round(F.col("_conf"), 6).alias("confidence"),
-            *[F.round(F.col(n), 6).alias(n) for n in names],
+            *[f"{f'_probs[{idx}]' if idx >= 0 else '0.0D'} AS {n}"
+              for n, idx in zip(names, new_order)],
         )
     )
+    if bag_col is not None:
+        # bag-averaging: mean score vector per original column (:154-166)
+        scored = scored.groupBy("column_name").agg(*[F.avg(n).alias(n) for n in names])
+
+    confidence = f"greatest({', '.join(names)})" if len(names) > 1 else names[0]
+    # first-maximum tie-break in user class order (Scala maxBy semantics)
+    predicted = "coalesce(" + ", ".join(
+        f"CASE WHEN {n} = _conf THEN {_sql_string(c)} END" for c, n in zip(classes, names)
+    ) + ")"
+    return scored.selectExpr("*", f"{confidence} AS _conf").selectExpr(
+        "column_name",
+        f"{predicted} AS predicted_class",
+        "round(_conf, 6) AS confidence",
+        *[f"round({n}, 6) AS {n}" for n in names],
+    )
+
+
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash-escaping parser)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def save_derived_features(
@@ -431,21 +437,19 @@ def semantic_type_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the fixture-train chain and the target-profiling chain are independent
     # until predict; profile the target on a second thread so its histogram
-    # checkpoint overlaps RF fit (Spark schedules concurrent jobs fine, and
-    # profile_features_from_long uses per-call view names — thread-safe)
+    # and feature-matrix checkpoints overlap RF fit (Spark schedules
+    # concurrent jobs fine, and profile_features_from_long uses per-call
+    # view names — thread-safe). profile_features_from_long is eager, so the
+    # fused profiling statement EXECUTES on this thread and the predict
+    # action pays only the assembler+RF transform over a leaf
     target_box: dict[str, object] = {}
 
     def _profile_target() -> None:
         try:
-            # eager checkpoint: the fused profiling statement EXECUTES here,
-            # overlapped with model fit/load on the main thread — the
-            # predict action then pays only the assembler+RF transform,
-            # not the profiling plan's compile+run (measured ~3s of the
-            # predict action moved off the critical path)
             long_df, name_case = melt_ids(load_table(spark, sf_dir, "customer"))
             target_box["df"] = profile_features_from_long(
                 spark, long_df, name_case=name_case
-            ).transform(materialize)
+            )
         except BaseException as exc:  # surfaced on the main thread below
             target_box["err"] = exc
 

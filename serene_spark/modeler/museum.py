@@ -2,8 +2,8 @@
 
 Runs the reference's own museum benchmark artifacts — the 29 Karma model
 JSONs per ontology flavor at
-``/root/reference/modeler/src/test/resources/karma/museum/museum-29-{crm,edm}``
-— through the rebuild, read-only:
+``modeler/src/test/resources/karma/museum/museum-29-{crm,edm}`` of the
+reference checkout (serene_spark.reference) — through the rebuild, read-only:
 
 1. **Read-in extraction** (MuseumSpec.scala:54-144 "Museum dataset crm/edm
    read in"): parse every model, emit one row per column node with its first
@@ -40,8 +40,9 @@ from serene_spark.modeler.karma_io import (
 from serene_spark.modeler.suggest import suggest_models
 from serene_spark.registry import register
 from serene_spark.materialize import constraint_propagation_off, materialize
+from serene_spark.reference import reference_path, require
 
-MUSEUM_ROOT = "/root/reference/modeler/src/test/resources/karma/museum"
+MUSEUM_ROOT = reference_path("modeler", "src", "test", "resources", "karma", "museum")
 
 
 def museum_dir(flavor: str = "crm") -> str:
@@ -52,6 +53,7 @@ def museum_dir(flavor: str = "crm") -> str:
 def load_museum(flavor: str = "crm") -> tuple[KarmaModel, ...]:
     """The 29 parsed models of one flavor, name-ordered (cached: the files
     are immutable reference test resources, read many times per session)."""
+    require(museum_dir(flavor))
     return tuple(load_karma_dir(museum_dir(flavor)))
 
 
@@ -197,12 +199,13 @@ def _column_types_df(spark: SparkSession, flavor: str) -> DataFrame:
     doc="REAL-data museum benchmark: per-column first user semantic type "
     "across all 29 crm Karma models (MuseumSpec.scala:54-99 'read in'); "
     "418 rows pinned in tests/test_museum.py",
+    requires=(museum_dir("crm"),),
 )
 def museum29_column_types_crm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _column_types_df(spark, "crm")
 
 
-S01_CSV = "/root/reference/core/src/test/resources/s01-cb.csv.csv"
+S01_CSV = reference_path("core", "src", "test", "resources", "s01-cb.csv.csv")
 
 
 def museum_e2e_s01(spark: SparkSession):
@@ -239,6 +242,7 @@ def museum_e2e_s01(spark: SparkSession):
         for col, _h, dom, typ in held.column_types
         if dom
     }
+    require(S01_CSV)
     wide = load_csv(spark, S01_CSV)
     cols = [c for c in wide.columns if c in label_by_col]
     pairs = ", ".join(f"'{c}', coalesce(`{c}`, '')" for c in cols)
@@ -276,6 +280,7 @@ def museum_e2e_s01(spark: SparkSession):
     doc="FULL serene pipeline on the reference's real s01-cb museum data: "
     "CSV loader -> profiling -> RF types -> alignment suggestion from the "
     "other 28 models; recovery gates pinned in tests/test_museum.py",
+    requires=(museum_dir("crm"), S01_CSV),
 )
 def museum_e2e_s01_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serene_spark.modeler.report_fixture import _suggestions_df
@@ -290,6 +295,7 @@ def museum_e2e_s01_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="REAL-data museum benchmark: leave-one-out suggestion for s01-cb.csv "
     "from the other 28 crm models (MuseumSpec/AlignmentGraphSpec workload); "
     "structural gates pinned in tests/test_museum.py",
+    requires=(museum_dir("crm"),),
 )
 def ssd_suggest_museum29(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serene_spark.modeler.report_fixture import _suggestions_df

@@ -28,9 +28,10 @@ from serene_spark.modeler.alignment import AlignmentGraph
 from serene_spark.modeler.ssd import DATA_NODE, Ontology, Ssd
 from serene_spark.modeler.ssd_io import load_ssd
 from serene_spark.modeler.suggest import suggest_models
+from serene_spark.reference import reference_path, require
 from serene_spark.registry import register
 
-SSD_DIR = "/root/reference/modeler/src/test/resources/ssd"
+SSD_DIR = reference_path("modeler", "src", "test", "resources", "ssd")
 REPORT_ONTOLOGY_TTL = os.path.join(SSD_DIR, "dataintegration_report_ontology.ttl")
 
 
@@ -42,12 +43,15 @@ def real_report_ontology() -> Ontology:
     internal inverse/hierarchy links on top, SuggestModelSpec.scala:309-312)."""
     from serene_spark.modeler.owl import load_ontology
 
+    require(REPORT_ONTOLOGY_TTL)
     return load_ontology(REPORT_ONTOLOGY_TTL)
 
 
 @lru_cache(maxsize=8)
 def real_ssd(name: str) -> Ssd:
-    return load_ssd(os.path.join(SSD_DIR, f"{name}.ssd"))
+    path = os.path.join(SSD_DIR, f"{name}.ssd")
+    require(path)
+    return load_ssd(path)
 
 
 def predictions_from_ssd(ssd: Ssd) -> dict[str, dict[str, float]]:
@@ -107,6 +111,7 @@ def _suggestion_triples_df(spark: SparkSession, suggestions) -> DataFrame:
     doc="REAL-file SuggestModelSpec scenario: suggestion for empty "
     "businessInfo from the actual businessInfo.ssd + report ontology "
     "(SuggestModelSpec.scala:353-377); recovery pinned in tests/test_ssd_io.py",
+    requires=(SSD_DIR,),
 )
 def ssd_suggest_business_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     suggestions, _known = suggest_business_real()
@@ -119,6 +124,7 @@ def ssd_suggest_business_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="REAL-file cross-SSD scenario: getCities suggested from "
     "personalInfo+businessInfo via the ontology closure "
     "(SuggestModelSpec.scala:770-800)",
+    requires=(SSD_DIR,),
 )
 def ssd_suggest_cities_cross_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     suggestions, _target = suggest_cities_cross_real()

@@ -47,7 +47,7 @@ def incremental_train_eval(
         train_semantic_classifier,
     )
 
-    feats = profile_features_from_long(spark, long_df).cache()
+    feats = profile_features_from_long(spark, long_df)
     labels = {r["column_name"]: r["class"] for r in labels_df.collect()}
 
     by_class: dict[str, list[str]] = {}
@@ -67,7 +67,7 @@ def incremental_train_eval(
             pool[cls] = ranked[n_test:]
 
         test_labels = {c: labels[c] for c in test_cols}
-        test_feats = feats.filter(F.col("column_name").isin(list(test_cols))).cache()
+        test_feats = feats.filter(F.col("column_name").isin(list(test_cols)))
 
         for prop in proportions:
             train_cols = [

@@ -522,11 +522,10 @@ def _sql_query(sql: str, spread_tables: dict[str, tuple[str, ...]] | tuple[str, 
             from serene_spark.functions.melt import spread as _spread
 
             for t in spread_tables:
-                df = load_table(spark, sf_dir, t)
+                src = load_table(spark, sf_dir, t)
                 cols = spread_tables[t] if isinstance(spread_tables, dict) else None
-                if cols:
-                    df = df.select(*cols)
-                _spread(df).createOrReplaceTempView(t)
+                df = src.select(*cols) if cols else src
+                _spread(df, probe=src).createOrReplaceTempView(t)
         return spark.sql(sql)
 
     return run

@@ -29,16 +29,25 @@ class Query:
     spark: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     doc: str = ""
+    # external fixture paths the query reads (serene_spark.reference): the
+    # rows-only parity test skips the query while any is absent, and its
+    # loaders raise reference.ReferenceFixtureMissing
+    requires: tuple[str, ...] = ()
 
 
 QUERIES: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
+def register(
+    name: str, oracle: str | None = None, doc: str = "", requires: tuple[str, ...] = ()
+):
     """Decorator: register a query under ``name`` with its oracle SQL."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = Query(name=name, spark=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        QUERIES[name] = Query(
+            name=name, spark=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""),
+            requires=tuple(requires),
+        )
         return fn
 
     return wrap

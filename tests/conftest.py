@@ -92,6 +92,7 @@ _SLOW_TESTS = frozenset((
     "test_ml_pipeline.py::test_cross_validation_grid_deterministic",
     "test_ml_pipeline.py::test_fixture_model_disk_cache_parity",
     "test_ml_pipeline.py::test_prediction_deterministic",
+    "test_ml_pipeline.py::test_registered_predictions_golden",
     "test_ml_pipeline.py::test_score_map_reorder_and_absent_class",
     "test_modeler.py::test_suggest_deterministic",
     "test_modeler.py::test_suggest_supplier_golden",
@@ -134,7 +135,7 @@ _SLOW_TESTS = frozenset((
     "test_timeseries.py::test_acf_matches_numpy",
     "test_timeseries.py::test_mann_kendall_matches_numpy",
     "test_vocab.py::test_bpe_trainer_matches_python_reference",
-        "test_burn_stream.py::test_burn_compaction_invariant",
+    "test_burn_stream.py::test_burn_compaction_invariant",
     "test_burn_stream.py::test_streamed_burn_equals_batch",
     "test_clustering.py::test_kmeans_converged_truncation_equals_unrolled",
     "test_clustering.py::test_kmeans_quality_matches_numpy",
@@ -168,17 +169,27 @@ _SLOW_TESTS = frozenset((
 ))
 
 
+# path-free keys of every test this session collected, before any
+# deselection (tests/test_slow_tests.py checks _SLOW_TESTS against them)
+COLLECTED: set[str] = set()
+
+
+def _key(nodeid: str) -> str:
+    # nodeid is "tests/test_x.py::name" from the repo root but
+    # "test_x.py::name" when invoked inside tests/ — match on the
+    # path-free form
+    rel = nodeid.split("::", 1)
+    return rel[0].rsplit("/", 1)[-1] + "::" + rel[1] if len(rel) == 2 else nodeid
+
+
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
+    COLLECTED.update(_key(item.nodeid) for item in items)
     if os.environ.get("SERENE_FULL_TESTS") == "1":
         return
     keep, dropped = [], []
     for item in items:
-        # nodeid is "tests/test_x.py::name" from the repo root but
-        # "test_x.py::name" when invoked inside tests/ — match on the
-        # path-free form
-        rel = item.nodeid.split("::", 1)
-        key = rel[0].rsplit("/", 1)[-1] + "::" + rel[1] if len(rel) == 2 else item.nodeid
-        if key in _SLOW_TESTS:
+        if _key(item.nodeid) in _SLOW_TESTS:
             dropped.append(item)
         else:
             keep.append(item)

@@ -151,7 +151,9 @@ def test_cli_convert_model(tmp_path):
 
     import pytest
 
-    src = "/root/reference/modeler/src/test/resources/karma/museum/museum-29-crm/s01-cb.csv.model.json"
+    from serene_spark.modeler.museum import museum_dir
+
+    src = os.path.join(museum_dir("crm"), "s01-cb.csv.model.json")
     if not os.path.isfile(src):
         pytest.skip("reference museum corpus not mounted")
     from serene_spark.cli import main
@@ -179,7 +181,9 @@ def test_cli_convert_model_namespace(tmp_path):
 
     import pytest
 
-    src = "/root/reference/modeler/src/test/resources/karma/museum/museum-29-crm/s01-cb.csv.model.json"
+    from serene_spark.modeler.museum import museum_dir
+
+    src = os.path.join(museum_dir("crm"), "s01-cb.csv.model.json")
     if not os.path.isfile(src):
         pytest.skip("reference museum corpus not mounted")
     from serene_spark.cli import main

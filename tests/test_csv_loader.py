@@ -128,7 +128,9 @@ def test_reference_real_fixture_files(spark):
 
     import pytest
 
-    base = "/root/reference/core/src/test/resources"
+    from serene_spark.reference import reference_path
+
+    base = reference_path("core", "src", "test", "resources")
     if not os.path.isdir(base):
         pytest.skip("reference resources not mounted")
     from serene_spark.sources.csv_loader import load_csv

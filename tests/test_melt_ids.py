@@ -62,3 +62,26 @@ def test_profile_scalar_unchanged_by_id_keying(spark, sf_dir):
     a = sorted(map(tuple, via_strings.select(*key).collect()))
     b = sorted(map(tuple, via_ids.select(*key).collect()))
     assert a == b
+
+
+def test_melts_of_one_handle_probe_partitions_once(spark, sf_dir, monkeypatch):
+    """melt/melt_ids spread a fresh projection of their input; the partition
+    probe (~50 ms of planning) is memoized on the input handle, so repeated
+    melts of one cached catalog table pay it once."""
+    df = load_table(spark, sf_dir, "supplier")
+    if hasattr(df, "_serene_nparts"):  # memoized by an earlier test
+        del df._serene_nparts
+    cls = type(df)
+    rdd = cls.rdd  # a cached_property in pyspark's classic DataFrame
+    probes = []
+
+    def counting(self):
+        probes.append(self)
+        return rdd.func(self) if hasattr(rdd, "func") else rdd.fget(self)
+
+    # a data descriptor: wins over any RDD already cached on the instance
+    monkeypatch.setattr(cls, "rdd", property(counting))
+    melt(df)
+    melt_ids(df)
+    melt(load_table(spark, sf_dir, "supplier"), ["s_name", "s_acctbal"])
+    assert probes == [df]

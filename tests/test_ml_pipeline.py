@@ -252,3 +252,105 @@ def test_fixture_model_disk_cache_parity(spark, tmp_path, monkeypatch):
     with open(meta) as f:
         assert json.load(f)["fingerprint"] == P._fixture_fingerprint()
     P._FIXTURE_MODEL_CACHE.clear()
+
+
+def test_feature_matrix_is_staged_projection(spark, sf_dir):
+    """profile_features_from_long is eager: its result is one projection over
+    a checkpointed leaf, so consumers never re-plan the fused profiler."""
+    from serene_spark.catalog import load_table
+    from serene_spark.functions.melt import melt_ids
+    from serene_spark.ml.pipeline import profile_features_from_long
+
+    long_df, name_case = melt_ids(load_table(spark, sf_dir, "nation"))
+    feats = profile_features_from_long(spark, long_df, name_case=name_case)
+    plan = feats._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "Project"
+    assert plan.children().apply(0).nodeName() == "LogicalRDD"
+    tree = plan.treeString()
+    assert "Aggregate" not in tree and "Join" not in tree
+    assert sorted(r["column_name"] for r in feats.collect()) == sorted(
+        load_table(spark, sf_dir, "nation").columns
+    )
+
+
+class _StubModel:
+    """Just what predict_with_scores reads of a PipelineModel: the label
+    order of stage 0 and a transform yielding a ``probability`` vector."""
+
+    class _Indexer:
+        labels = ["back\\slash", "it's", "plain"]
+
+    stages = [_Indexer()]
+
+    def transform(self, df):
+        from pyspark.ml.functions import array_to_vector
+
+        return df.withColumn("probability", array_to_vector(F.array("p0", "p1", "p2")))
+
+
+def test_predict_with_scores_semantics(spark):
+    """Reordering to the user's classes, absent class -> 0.0, first-maximum
+    tie-break in user order, round(.., 6), bag averaging, and class names
+    that need SQL-literal escaping."""
+    from serene_spark.ml.pipeline import predict_with_scores, score_column_name
+
+    classes = ["plain", "never_seen", "it's", "back\\slash"]
+    names = [score_column_name(c) for c in classes]
+    feats = spark.createDataFrame(
+        [
+            ("tie", 0.5, 0.5, 0.0),      # it's and back\slash tie: it's is first
+            ("plain", 0.2, 0.3, 0.5),
+            ("third", 1 / 3, 1 / 3, 1 / 3),
+            ("slash", 0.7, 0.2, 0.1),
+        ],
+        "column_name string, p0 double, p1 double, p2 double",
+    )
+    rows = {
+        r["column_name"]: (r["predicted_class"], r["confidence"], [r[n] for n in names])
+        for r in predict_with_scores(_StubModel(), feats, classes).collect()
+    }
+    assert rows == {
+        "tie": ("it's", 0.5, [0.0, 0.0, 0.5, 0.5]),
+        "plain": ("plain", 0.5, [0.5, 0.0, 0.3, 0.2]),
+        "third": ("plain", 0.333333, [0.333333, 0.0, 0.333333, 0.333333]),
+        "slash": ("back\\slash", 0.7, [0.1, 0.0, 0.2, 0.7]),
+    }
+
+    bags = spark.createDataFrame(
+        [("c", 0, 1.0, 0.0, 0.0), ("c", 1, 0.0, 1.0, 0.0), ("d", 0, 0.0, 0.0, 1.0)],
+        "column_name string, bag int, p0 double, p1 double, p2 double",
+    )
+    rows = {
+        r["column_name"]: (r["predicted_class"], r["confidence"], [r[n] for n in names])
+        for r in predict_with_scores(_StubModel(), bags, classes, bag_col="bag").collect()
+    }
+    assert rows == {
+        "c": ("it's", 0.5, [0.0, 0.0, 0.5, 0.5]),
+        "d": ("plain", 1.0, [1.0, 0.0, 0.0, 0.0]),
+    }
+
+
+def test_registered_predictions_golden(spark, sf_dir):
+    """Rows of the RF-backed registered queries, pinned by digest: staging
+    the feature matrix and the SQL-string score projections change no
+    output."""
+    import hashlib
+    import json
+    import os
+
+    import pytest
+
+    from serene_spark.registry import load_all
+
+    if os.path.basename(sf_dir.rstrip("/")) != "sf0.001":
+        pytest.skip("digests are pinned at sf0.001")
+    queries = load_all()
+    got = {}
+    for name in ("semantic_type_predict", "predict_scores_customer", "ssd_suggest_supplier"):
+        rows = sorted([repr(v) for v in r] for r in queries[name].spark(spark, sf_dir).collect())
+        got[name] = hashlib.sha256(json.dumps(rows).encode()).hexdigest()[:16]
+    assert got == {
+        "semantic_type_predict": "028d5bf2d7b0055a",
+        "predict_scores_customer": "bc0ac177fb3358f0",
+        "ssd_suggest_supplier": "eddcd2f157c72d1f",
+    }

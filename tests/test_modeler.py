@@ -4,6 +4,8 @@ of constructed alignment graphs; expected suggested structures)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from serene_spark.modeler import (
@@ -21,6 +23,7 @@ from serene_spark.modeler.octopus import (
     ssd_semantic_type_labels,
     train_octopus,
 )
+from serene_spark.modeler.museum import museum_dir
 from serene_spark.modeler.suggest import filter_predictions
 
 
@@ -200,6 +203,9 @@ def test_alignment_export_realign_roundtrip():
     assert dot.count(" -> ") == ag.graph.number_of_edges()
 
 
+@pytest.mark.skipif(
+    not os.path.isdir(museum_dir("crm")), reason="reference museum corpus not mounted"
+)
 def test_realign_equals_fresh_construction():
     """Dropping a model and realigning == constructing fresh from the
     reduced set (KarmaBuildAlignmentGraph.scala:190-216 semantics)."""

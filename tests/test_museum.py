@@ -1,8 +1,8 @@
 """Museum-29 REAL-data validation (round-4 top item).
 
 Every test here reads the reference's OWN benchmark artifacts read-only —
-the 29 Karma model JSONs per flavor under
-/root/reference/modeler/src/test/resources/karma/museum — and asserts the
+the 29 Karma model JSONs per flavor under the reference checkout's
+modeler/src/test/resources/karma/museum — and asserts the
 properties the reference's MuseumSpec.scala checks, plus leave-one-out
 suggestion quality gates the reference exercises through
 AlignmentGraphSpec/SuggestModel workloads. Nothing is copied into the repo.

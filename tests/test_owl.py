@@ -168,8 +168,9 @@ def test_real_preloaded_ontologies_parse():
 
     import pytest
 
-    base = ("/root/reference/modeler/src/test/resources/karma/museum/"
-            "museum-29-edm/preloaded-ontologies")
+    from serene_spark.modeler.museum import museum_dir
+
+    base = os.path.join(museum_dir("edm"), "preloaded-ontologies")
     if not os.path.isdir(base):
         pytest.skip("reference museum ontologies not mounted")
     from serene_spark.modeler.owl import load_ontology
