@@ -1,7 +1,7 @@
 """serene_spark — a PySpark-native rebuild of the NICTA/serene data-integration
 engine, extended with large-scale training-data pipeline operators.
 
-The reference (/root/reference) is a single-node Scala/Finch platform for
+The reference is a single-node Scala/Finch platform for
 semantic schema matching: per-column profiling features feeding a Spark MLlib
 random forest (matcher/), plus a Karma-based semantic modeler (modeler/).
 This package re-expresses the same computations Spark-first:
@@ -13,8 +13,8 @@ This package re-expresses the same computations Spark-first:
 - the ML pipeline is ``pyspark.ml`` (StringIndexer -> VectorAssembler ->
   RandomForestClassifier -> IndexToString), mirroring
   matcher/.../train/TrainMlibSemanticTypeClassifier.scala:202-231;
-- scale extensions (dedup, similarity search, text analysis, multimodal
-  plumbing) are built on the same DataFrame primitives.
+- scale extensions (relational and event analytics, dedup, similarity
+  search, text analysis) are built on the same DataFrame primitives.
 
 Every public operator is registered in :mod:`serene_spark.registry` with an
 equivalent DuckDB oracle SQL string used by the correctness harness.

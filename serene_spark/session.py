@@ -30,6 +30,13 @@ _RUNTIME_CONFS = {
 }
 
 
+def default_driver_memory() -> str:
+    """Half of this host's physical RAM, as a ``spark.driver.memory`` value:
+    a heap at or above physical RAM turns a driver OOM into an OS kill."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{ram // 2 // 2**20}m"
+
+
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally-owned session."""
     for k, v in _RUNTIME_CONFS.items():
@@ -52,7 +59,8 @@ def get_spark(app_name: str = "serene-spark", cpus: int | str | None = None) -> 
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.driver.memory", os.environ.get("SERENE_SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SERENE_SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
     )

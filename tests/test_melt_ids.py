@@ -1,7 +1,7 @@
 """melt_ids (int-column-id melt, guide §2.3 narrower shuffle keys) must be a
 pure re-keying of melt: mapping ids back through the returned CASE expression
 reproduces the string melt exactly, so every per-column aggregate downstream
-is unchanged by construction. Pinned here directly (the 363-query parity
+is unchanged by construction. Pinned here directly (the full parity
 sweep pins the aggregates end to end)."""
 
 from __future__ import annotations
