@@ -13,8 +13,8 @@ This package re-expresses the same computations Spark-first:
 - the ML pipeline is ``pyspark.ml`` (StringIndexer -> VectorAssembler ->
   RandomForestClassifier -> IndexToString), mirroring
   matcher/.../train/TrainMlibSemanticTypeClassifier.scala:202-231;
-- scale extensions (relational and event analytics, dedup, similarity
-  search, text analysis) are built on the same DataFrame primitives.
+- scale extensions (dedup, similarity search, text analysis, multimodal
+  plumbing) are built on the same DataFrame primitives.
 
 Every public operator is registered in :mod:`serene_spark.registry` with an
 equivalent DuckDB oracle SQL string used by the correctness harness.

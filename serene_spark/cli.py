@@ -252,8 +252,8 @@ def cmd_query(args) -> int:
     df = queries[args.name].spark(_spark(), args.sf_dir)
     if args.out:
         # stream partition-by-partition: toPandas() would materialize the
-        # whole result on the driver (a dense per-user series can run to
-        # ~1M rows at sf0.1) — toLocalIterator holds one partition at a time
+        # whole result on the driver (ts_gapfill_locf is ~1M rows at sf0.1,
+        # more at higher sf) — toLocalIterator holds one partition at a time
         import csv as _csv
 
         with open(args.out, "w", newline="", encoding="utf-8") as fh:

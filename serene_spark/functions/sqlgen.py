@@ -111,6 +111,23 @@ def shl(dialect: str, a: str, b: str) -> str:
     return f"shiftleft({a}, {b})"
 
 
+def shr(dialect: str, a: str, b: str) -> str:
+    """Bitwise shift-right — Spark spells it ``shiftright``, DuckDB ``>>``."""
+    if dialect == DUCKDB:
+        return f"(({a}) >> ({b}))"
+    return f"shiftright({a}, {b})"
+
+
+def agg_ordered(dialect: str, val: str, order_by: str, sep: str) -> str:
+    """String-concat aggregate with deterministic element order."""
+    if dialect == DUCKDB:
+        return f"string_agg({val}, '{sep}' ORDER BY {order_by})"
+    return (
+        f"array_join(transform(array_sort(collect_list(struct({order_by} AS o, {val} AS v))),"
+        f" x -> x.v), '{sep}')"
+    )
+
+
 def count_chars(dialect: str, expr: str, chars_sql: str) -> str:
     """Count of characters from a fixed set present in ``expr``.
 
@@ -247,3 +264,14 @@ def mat(dialect: str) -> str:
     Use on every multiply-referenced base and every iteration-segment
     terminal in dialect-shared generators."""
     return "MATERIALIZED " if dialect == DUCKDB else ""
+
+
+def variant_expr(dialect: str, user_col: str = "user_id") -> str:
+    """The engine-wide deterministic A/B arm assignment: md5 of the user id,
+    first 8 hex digits, mod 2.  ONE definition — ab_test_conversion,
+    ab_sequential_msprt, qte_deciles, ab_cuped_adjusted and their tests all
+    split on exactly this expression."""
+    str_t = "STRING" if dialect == SPARK else "VARCHAR"
+    return (
+        f"{hex_to_int(dialect, f'substr(md5(CAST({user_col} AS {str_t})), 1, 8)')} % 2"
+    )

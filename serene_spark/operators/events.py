@@ -2,8 +2,9 @@
 as-of join.
 
 The reference has no streaming/temporal operators (SURVEY §2.12); these are
-the engine's scale extensions over the `events` table, oracle-checked in
-batch form.
+the engine's scale extensions over the `events` table. The same logic runs
+under Structured Streaming in serene_spark/streaming/ (readStream + watermark);
+here the batch form is oracle-checked.
 
 Scale notes: tumbling windows are single-shuffle partial aggs; sessionization
 partitions by user (one shuffle, no driver state); the as-of join is a tagged
@@ -20,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from serene_spark.catalog import compose_with, load_table, register_views, run_materialized
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, epoch_us, explode_seq, idiv
+from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, explode_seq, idiv
 from serene_spark.registry import register
 
 TUMBLING_SQL = """
@@ -43,8 +44,10 @@ register(
 
 # Trending top-k: rank WITHIN each window (hour-keyed window function — a
 # keyed shuffle over the already-reduced hourly relation, never a global
-# sort). Ranks are not incrementally maintainable, so re-ranking the tiny
-# aggregate relation is the scale-correct split of work.
+# sort). The streaming twin computes the same hourly counts incrementally
+# and applies this exact rank read-side (ranks are not incrementally
+# maintainable; re-ranking the tiny aggregate relation is the scale-correct
+# split of work — serene_spark/streaming/events_stream.py:trending_rank_sql).
 TRENDING_TOP_K = 3
 
 TRENDING_SQL = f"""
@@ -455,7 +458,7 @@ def sliding_counts_sql(dialect: str) -> str:
     run: every event belongs to exactly 4 windows, generated by an offset
     explode (k = 0..3), so there is no self-join and no per-row Python.
     Window starts are emitted as epoch seconds (BIGINT) — timezone-free.
-    The streaming form would be ``F.window(ts, '1 hour', '15 minutes')``.
+    The streaming twin is ``F.window(ts, '1 hour', '15 minutes')``.
     """
     es = epoch_s(dialect, "ts")
     bucket = idiv(dialect, "es", 900)
@@ -576,6 +579,8 @@ def attribution_prologue(dialect: str, pairs_select: str) -> str:
     models (and their tests) cannot desynchronize on what a "touch" is.
     ``pairs_select`` is the model-specific projection (it may use the
     ``p``/``c`` aliases and its own epoch expressions)."""
+    from serene_spark.functions.sqlgen import epoch_us
+
     cus = epoch_us(dialect, "c.ts")
     pus = epoch_us(dialect, "p.ts")
     return f"""
@@ -596,7 +601,9 @@ pairs AS (
 def attribution_sql(dialect: str) -> str:
     """Last-touch click attribution: each purchase is credited to the same
     user's most recent click within the preceding hour (ties broken by
-    highest click_id).
+    highest click_id). The streaming twin
+    (streaming/events_stream.attribution_pairs) runs the identical pair join
+    as a watermarked stream-stream join; here the batch form is oracled.
 
     Scale shape: the pair join is an equi-join on user_id with a bounded
     time-range residual — at 100 TB both sides would be additionally
@@ -604,6 +611,8 @@ def attribution_sql(dialect: str) -> str:
     a user's full history never co-locates; per-purchase last-touch is one
     window partitioned by the high-cardinality purchase key.
     """
+    from serene_spark.functions.sqlgen import epoch_us
+
     cus = epoch_us(dialect, "c.ts")
     pus = epoch_us(dialect, "p.ts")
     return attribution_prologue(dialect, f"""p.event_id AS purchase_id, p.user_id,
@@ -696,6 +705,8 @@ def attribution_decay_sql(dialect: str) -> str:
     the parity gate would surface it loudly, not silently.  Same bounded
     pair join as the other two models.
     """
+    from serene_spark.functions.sqlgen import epoch_us
+
     cus = epoch_us(dialect, "c.ts")
     pus = epoch_us(dialect, "p.ts")
     return attribution_prologue(dialect, f"""p.event_id AS purchase_id, p.user_id, p.value,
@@ -814,18 +825,6 @@ register(
 # --- Session entry/exit routes + bounce rate --------------------------------
 
 
-def _sortkey(dialect: str) -> str:
-    """Total-order tie-break key: zero-padded epoch micros then event_id.
-    String compare == numeric compare because both fields are fixed-width."""
-    us = epoch_us(dialect, "ts")
-    # 20-char pads cover the full BIGINT range on BOTH fields: lpad
-    # TRUNCATES over-width input, which would silently break the total
-    # order for ids >= 10^width
-    return f"lpad(CAST({us} AS STRING), 20, '0') || lpad(CAST(event_id AS STRING), 20, '0')" \
-        if dialect == SPARK else \
-        f"lpad(CAST({us} AS VARCHAR), 20, '0') || lpad(CAST(event_id AS VARCHAR), 20, '0')"
-
-
 def session_routes_sql(dialect: str) -> str:
     """Web-analytics session routing: per (entry event type, exit event
     type) route, session counts, bounce share (single-event sessions),
@@ -841,7 +840,8 @@ def session_routes_sql(dialect: str) -> str:
     user-keyed window; everything after is a (route)-keyed agg over the
     session-cardinality relation.
     """
-    from serene_spark.functions.sqlgen import arg_max_by, arg_min_by
+    from serene_spark.functions.sqlgen import arg_max_by, arg_min_by, epoch_us
+    from serene_spark.operators.timeseries import _sortkey
 
     key = _sortkey(dialect)
     return f"""

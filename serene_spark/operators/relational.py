@@ -603,7 +603,7 @@ def hierarchy_rollup_sql(dialect: str) -> str:
     dedup across iterations), which is EXACTLY correct on a tree — each
     node reaches each ancestor along one path, so no row multiplicity can
     occur; a cyclic or DAG-shaped closure would need the iterative
-    DataFrame loop (dedup_clusters), which remains the
+    DataFrame loops (dedup_clusters / cc_large_star), which remain the
     production shape for general graphs.  Depth is bounded by the key
     width (4 levels at sf0.1).  Decimal-exact balance sums.
     """

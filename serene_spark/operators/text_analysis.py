@@ -944,8 +944,9 @@ def tokenizer_fertility_sql(dialect: str) -> str:
     per 100 chars, and each language's fertility RATIO to the corpus's
     cheapest language.  Languages whose text fragments into more subwords
     per character pay more sequence length for the same content — the
-    effect behind multilingual token-budget skew.  Exact integer counts;
-    divisions at the edge.
+    effect behind multilingual token-budget skew (and the quantitative
+    companion of fairness_quality_by_lang's selection-rate audit).  Exact
+    integer counts; divisions at the edge.
 
     Scale: one scan -> per-language sums (constant keys)."""
     subword = re_extract_all_count(

@@ -64,3 +64,85 @@ def has_cartesian(df: DataFrame) -> bool:
 
 def broadcast_join_count(df: DataFrame) -> int:
     return plan_text(df).count("BroadcastHashJoin")
+
+
+# -- skew-join config advisory ------------------------------------------------
+#
+# Constants MEASURED by tools/bench_skew.py at sf10 (BASELINE.md round-9
+# skew section). Two contract facts about Spark's OptimizeSkewedJoin:
+#
+# 1. The detector compares COMPRESSED map-output bytes, not rows. After
+#    Catalyst prunes a join input to a narrow (key, agg-residue) tuple,
+#    the hot partition's repeated keys + low-entropy residue LZ4-compress
+#    it to ~2.6x the median although it holds 17x the rows (measured:
+#    11.1 MB vs 4.3 MB at 12M hot rows) — so a narrow-residue workload
+#    needs skewedPartitionFactor lowered toward the COMPRESSED ratio,
+#    while a wide-row workload splits at stock settings.
+# 2. The factor test is against the MEDIAN partition: a key owning share
+#    s of the fact, hashed over P shuffle partitions, lands a partition
+#    at roughly (1 + s*P)x the median ROWS — a 10% key over 64
+#    partitions is only ~4x and stock factor-5 correctly declines.
+NARROW_RESIDUE_BYTE_DISCOUNT = 2.6 / 17.0
+STOCK_SKEW_FACTOR = 5.0
+
+
+def skew_join_advisory(
+    stats_rows,
+    n_shuffle_partitions: int = 32,
+    stock_factor: float = STOCK_SKEW_FACTOR,
+) -> list[dict]:
+    """Config advisory from ``join_key_skew`` stats rows: for every join
+    key with a dominant value (hot partition above ``stock_factor`` x the
+    median in ROWS), estimate whether stock AQE will actually split it
+    once compression and pruning shrink the bytes, and recommend the
+    ``spark.sql.adaptive.skewJoin.skewedPartitionFactor`` bound that
+    makes the narrow-residue case fire.
+
+    ``stats_rows``: rows shaped like the registered ``join_key_skew``
+    output (join_key, n_rows, max_rows_per_key, ...). Returns one
+    advisory dict per dominant key (empty list = stock settings fine),
+    with the estimated row and narrow-residue byte ratios vs the median
+    partition and the recommended factor (20% below the estimated
+    compressed ratio, floored at 2 — factor must sit strictly below the
+    byte ratio to trigger the split)."""
+    out = []
+    for r in stats_rows:
+        n_rows = r["n_rows"]
+        hot = r["max_rows_per_key"]
+        if not n_rows:
+            continue
+        share = hot / n_rows
+        if share >= 1.0:
+            share = 1.0 - 1e-9
+        # median partition holds ~(1-s)·n/P rows (the hot key's rows all
+        # land in ONE partition and contribute nothing to the others);
+        # the hot partition holds s·n plus its own median-sized residue:
+        # ratio = 1 + s·P/(1-s) — the naive 1 + s·P underestimates badly
+        # for dominant keys (s=0.5, P=16: 17x true vs 9x naive)
+        row_ratio = 1.0 + share * n_shuffle_partitions / (1.0 - share)
+        if row_ratio <= stock_factor:
+            continue  # not dominant: stock AQE correctly declines
+        byte_ratio = 1.0 + (row_ratio - 1.0) * NARROW_RESIDUE_BYTE_DISCOUNT
+        rec = max(2, int(byte_ratio * 0.8))
+        out.append({
+            "join_key": r["join_key"],
+            "hot_key_share": round(hot / n_rows, 4),
+            "row_ratio_vs_median": round(row_ratio, 2),
+            "narrow_residue_byte_ratio": round(byte_ratio, 2),
+            "splits_at_stock_if_wide_rows": row_ratio > stock_factor,
+            "splits_at_stock_if_narrow_residue": byte_ratio > stock_factor,
+            "recommended_skew_factor": rec,
+            "advisory": (
+                f"{r['join_key']}: hot key owns "
+                f"{100 * hot / n_rows:.1f}% of rows -> ~{row_ratio:.0f}x "
+                f"median partition rows over {n_shuffle_partitions} "
+                "partitions. Wide-row joins split at stock AQE; if the "
+                "join residue is narrow (key + a few numeric cols), "
+                "compressed bytes under-read row skew ~"
+                f"{1 / NARROW_RESIDUE_BYTE_DISCOUNT:.1f}x — set "
+                f"skewedPartitionFactor<={rec} (and keep "
+                "skewedPartitionThresholdInBytes below the hot "
+                "partition's compressed size) for the split to fire."
+            ),
+        })
+    return out

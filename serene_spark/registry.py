@@ -2,7 +2,7 @@
 
 Every operator registers (a) a PySpark callable ``(spark, sf_dir) -> DataFrame``
 and (b) an equivalent DuckDB oracle SQL string (or None for ops that are not
-SQL-expressible — ML — which the driver checks rows-only).
+SQL-expressible — ML, streaming — which the driver checks rows-only).
 ``__spark_entry__.py`` derives ``queries()`` / ``oracle_sql()`` from here.
 
 Oracle-parity conventions (both engines MUST follow them):
@@ -77,6 +77,72 @@ def load_all() -> dict[str, Query]:
         "serene_spark.operators.ingest_sample",
         "serene_spark.operators.transform",
         "serene_spark.operators.pair_features",
+        # extension operators: on no benchmark workload, bench headliner
+        # or driver sample; each keeps its own tests
+        "serene_spark.operators.curation",
+        "serene_spark.operators.boilerplate",
+        "serene_spark.operators.substring_dedup",
+        "serene_spark.operators.packing",
+        "serene_spark.operators.sketches",
+        "serene_spark.operators.stats",
+        "serene_spark.operators.cdc",
+        "serene_spark.operators.quality_checks",
+        "serene_spark.operators.matview",
+        "serene_spark.operators.timeseries",
+        "serene_spark.operators.entity_resolution",
+        "serene_spark.operators.importance",
+        "serene_spark.operators.skyline",
+        "serene_spark.operators.graph_rank",
+        "serene_spark.operators.graph_analytics",
+        "serene_spark.operators.retrieval",
+        "serene_spark.operators.clustering",
+        "serene_spark.operators.contrastive",
+        "serene_spark.operators.sequence",
+        "serene_spark.operators.corpus_stats",
+        "serene_spark.operators.prep",
+        "serene_spark.operators.drift",
+        "serene_spark.operators.vocab",
+        "serene_spark.multimodal.binary_ops",
+        "serene_spark.operators.experiments",
+        "serene_spark.operators.stats_extra",
+        "serene_spark.operators.survival",
+        "serene_spark.operators.forecast",
+        "serene_spark.operators.hypothesis_tests",
+        "serene_spark.operators.basket",
+        "serene_spark.operators.recsys",
+        "serene_spark.operators.infotheory",
+        "serene_spark.operators.coreset",
+        "serene_spark.operators.hybrid_search",
+        "serene_spark.operators.bootstrap",
+        "serene_spark.operators.sharding",
+        "serene_spark.operators.attribution_markov",
+        "serene_spark.operators.regression",
+        "serene_spark.operators.geospatial",
+        "serene_spark.operators.multivariate",
+        "serene_spark.operators.attribution_rules",
+        "serene_spark.operators.feature_eng",
+        "serene_spark.operators.estimation",
+        "serene_spark.operators.interval_join",
+        "serene_spark.operators.elasticity",
+        "serene_spark.operators.embedding_audit",
+        "serene_spark.operators.phonetic",
+        "serene_spark.operators.lorenz",
+        "serene_spark.operators.forecast_backtest",
+        "serene_spark.operators.bitemporal",
+        "serene_spark.operators.sampling_design",
+        "serene_spark.operators.causal",
+        "serene_spark.operators.order_stats",
+        "serene_spark.operators.conformal",
+        "serene_spark.operators.wasserstein",
+        "serene_spark.operators.rank_corr",
+        "serene_spark.operators.test_batteries",
+        "serene_spark.operators.price_volume",
+        "serene_spark.operators.governance_ops",
+        "serene_spark.operators.flow_metrics",
+        "serene_spark.operators.panel",
+        "serene_spark.operators.ops_research",
+        "serene_spark.operators.qte",
+        "serene_spark.operators.cuped",
         # core / Serene: modeler, ML pipeline and loaders
         "serene_spark.modeler.octopus",
         "serene_spark.modeler.report_fixture",
@@ -86,6 +152,9 @@ def load_all() -> dict[str, Query]:
         "serene_spark.ml.homeseekers_fixture",
         "serene_spark.ml.homeseekers_real",
         "serene_spark.ml.bagging",
+        # extension operator (the quality_* classifier queries)
+        "serene_spark.ml.quality_classifier",
+        # core loader
         "serene_spark.sources.xml_loader",
     ):
         importlib.import_module(mod)

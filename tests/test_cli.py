@@ -128,20 +128,20 @@ def test_cli_transform(fixture_csv, capsys, spark):
 def test_cli_list_queries_and_run(tmp_path, capsys):
     from serene_spark.cli import main
 
-    assert main(["list-queries", "--grep", "q6_"]) == 0
+    assert main(["list-queries", "--grep", "skyline"]) == 0
     out = capsys.readouterr().out
-    assert "q6_forecast_revenue" in out and "oracle" in out
+    assert "skyline_parts" in out and "oracle" in out
 
-    csv_path = str(tmp_path / "q6.csv")
-    assert main(["query", "q6_forecast_revenue", "--out", csv_path]) == 0
+    csv_path = str(tmp_path / "skyline.csv")
+    assert main(["query", "skyline_parts", "--out", csv_path]) == 0
     import pandas as pd
 
     df = pd.read_csv(csv_path)
-    assert set(df.columns) == {"revenue"}
-    assert len(df) == 1
+    assert set(df.columns) == {"p_partkey", "p_retailprice", "p_size"}
+    assert len(df) >= 1
 
     # unknown name: non-zero exit + suggestion
-    assert main(["query", "q6_forecast"]) == 2
+    assert main(["query", "skyline"]) == 2
     assert "did you mean" in capsys.readouterr().err
 
 

@@ -158,10 +158,10 @@ def test_canonical_select_invariants(spark, sf_dir):
 
 
 def test_exact_baselines_refuse_data_scale_input(spark):
-    """The intentionally-quadratic baseline (dedup_ngram_jaccard) refuses
-    corpora above EXACT_BASELINE_MAX_DOCS and points at its bucketed scale
-    sibling — the same contract as the train-collect guard in
-    ml/pipeline.py."""
+    """The intentionally-quadratic baselines (dedup_ngram_jaccard,
+    source_similarity) refuse corpora above EXACT_BASELINE_MAX_DOCS and
+    point at their bucketed scale siblings — the same contract as the
+    train-collect guard in ml/pipeline.py."""
     import pytest as _pytest
 
     from serene_spark.operators.dedup import guard_exact_baseline
@@ -186,6 +186,7 @@ def test_guarded_runners_still_pass_at_test_scale(spark, sf_dir):
 
     qs = load_all()
     assert qs["dedup_ngram_jaccard"].spark(spark, sf_dir).count() > 0
+    assert qs["source_similarity"].spark(spark, sf_dir).count() > 0
 
 
 def test_hot_bucket_cap_bounds_candidates_and_keeps_connectivity(spark):

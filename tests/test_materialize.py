@@ -129,10 +129,10 @@ CLUSTER_SMOKE = textwrap.dedent("""
     from serene_spark.registry import load_all
     qs = load_all()
     sf = "/root/testdata/sf0.001"
-    # headline queries that route through materialize(): the iterative CC
-    # loop, the LSH verified pipeline, and a run_materialized op
+    # headline queries that route through materialize(): iterative CC +
+    # pagerank loops, the LSH verified pipeline, and a run_materialized op
     for name in ("dedup_lsh_verified", "dedup_clusters",
-                 "profile_scalar_customer"):
+                 "pagerank_converged", "profile_scalar_customer"):
         if name not in qs:
             continue
         n = qs[name].spark(spark, sf).count()

@@ -2,7 +2,7 @@
 
 The parity gate's one structural blind spot: Spark query and DuckDB
 oracle are generated from the SAME dialect-shimmed SQL
-(functions/sqlgen.py), so a shared semantic bug passes parity by
+(functions/sqlgen.py), so a shared semantic bug passes 362/362 parity by
 construction. These laws are derived from the operators' CLAIMED
 semantics, not from the shared SQL, so they fail when both engines agree
 on the wrong answer:
@@ -22,10 +22,12 @@ on the wrong answer:
   keeper);
 * **equivariance / self-consistency raw checks** — time-shifting events
   by exactly one hour shifts tumbling windows and leaves sessionization
-  unchanged; downsampling hits the documented per-class target exactly.
+  unchanged; connected-component labels are the component minimum; BM25
+  ranks are the dense descending order of the scores; downsampling hits
+  the documented per-class target exactly.
 
-Coverage: 18 operators x >= 3 laws, spanning profiling, relational,
-events, dedup, text analysis, similarity and resampling families.
+Coverage: 20 operators x >= 3 laws, spanning profiling, sketches, dedup,
+text analysis, retrieval, resampling, packing, and graph families.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from serene_spark.registry import load_all
 
 SF = "/root/testdata/sf0.001"
 TWIN_OFFSET = 10_000_000
+TWIN_OFFSET_17 = 10_000_012  # = 17 * 588_236: preserves doc_id % 17
 
 
 # ---------------------------------------------------------------- harness
@@ -81,6 +84,10 @@ def variant(spark, tmp_path_factory):
         elif kind == "twin_all":  # documents: a content twin for EVERY doc
             out = df.unionAll(
                 df.withColumn("doc_id", F.col("doc_id") + TWIN_OFFSET))
+        elif kind == "twin_all_17":  # twin offset divisible by 17, so a
+            # doc_id % 17 split (decontaminate's bench/train) is preserved
+            out = df.unionAll(
+                df.withColumn("doc_id", F.col("doc_id") + TWIN_OFFSET_17))
         elif kind == "shift1h":  # events: exact one-hour shift
             out = df.withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
         else:  # pragma: no cover
@@ -200,6 +207,27 @@ def test_term_freq_laws(spark, queries, variant):
 
 # --------------------------------------------------------------- sketches
 
+def test_kmv_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "kmv_ndv_users", spark, variant,
+                             "events")
+    # the sketch hashes DISTINCT user-days: full readout dup-invariant
+    _assert_dup_law(queries, "kmv_ndv_users", spark, variant,
+                    "events", base, x2=())
+
+
+def test_quantile_sketch_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "quantile_sketch_bottomk", spark,
+                             variant, "events")
+    # exact nearest-rank quantiles are dup-invariant, n doubles; the
+    # bottom-k SAMPLE side hashes row identity, so estimates legitimately
+    # move under duplication — excluded, not silently absorbed
+    _assert_dup_law(queries, "quantile_sketch_bottomk", spark, variant,
+                    "events", base, x2=("n",),
+                    exclude=("sample_n", "p50_est", "p50_rel_err",
+                             "p90_est", "p90_rel_err",
+                             "p99_est", "p99_rel_err"))
+
+
 # ----------------------------------------------------------------- events
 
 def test_sessionize_laws(spark, queries, variant):
@@ -293,6 +321,35 @@ def test_lang_id_laws(spark, queries, variant):
 
 # ------------------------------------------------- graph / packing / rank
 
+def test_cc_large_star_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "cc_large_star", spark, variant,
+                             "documents")
+    # large-star/small-star converges to min-id labeling: every cluster
+    # label IS a member of its own cluster and is that cluster's minimum
+    by_cluster = base.groupby("cluster")["doc_id"].agg(["min"])
+    assert (by_cluster.index.values == by_cluster["min"].values).all()
+
+
+def test_epoch_shuffle_plan_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "epoch_shuffle_plan", spark, variant,
+                             "documents")
+    # hash-to-block is a partition of the corpus: per-epoch doc totals
+    # equal the corpus size, for every variant
+    n_docs = load_table(spark, SF, "documents").count()
+    per_epoch = base.groupby("epoch")["n_docs"].sum()
+    assert (per_epoch == n_docs).all()
+
+
+def test_bm25_search_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "bm25_search", spark, variant,
+                             "documents")
+    # rank is the contiguous dense descending order of the scores
+    assert sorted(base["rank"]) == list(range(1, len(base) + 1))
+    by_rank = base.sort_values("rank")
+    assert (by_rank.bm25.diff().dropna() <= 3e-9).all()
+    assert (base.n_terms_matched >= 1).all()
+
+
 def test_similarity_cosine_topk_laws(spark, queries, variant):
     base = _assert_invariant(queries, "similarity_cosine_topk", spark,
                              variant, "embeddings")
@@ -319,6 +376,26 @@ def test_dedup_simhash_laws(spark, queries, variant):
     assert len(hit) == 1 and int(hit.iloc[0].hamming) == 0
 
 
+def test_stratified_sample_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "stratified_sample", spark, variant,
+                             "documents")
+    # the md5-threshold draw is per-doc deterministic: adding twin docs
+    # must not change ANY original doc's selection (subset stability)
+    twin = _run(queries, "stratified_sample", spark,
+                variant("documents", "twin_all"))
+    orig = twin[twin.doc_id < TWIN_OFFSET].reset_index(drop=True)
+    _assert_same(base, orig)
+
+
+def test_shard_assign_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "shard_assign", spark, variant,
+                             "documents")
+    # sharding is a partition of the corpus: doc and char totals conserved
+    docs = pd.read_parquet(f"{SF}/documents.parquet")
+    assert base.n_docs.sum() == len(docs)
+    assert base.total_chars.sum() == docs.n_chars.sum()
+
+
 def test_asof_join_laws(spark, queries, variant):
     # two-sided invariance: permute/split EITHER input relation
     base = _assert_invariant(queries, "asof_join_events_orders", spark,
@@ -326,6 +403,73 @@ def test_asof_join_laws(spark, queries, variant):
     got = _run(queries, "asof_join_events_orders", spark,
                variant("orders", "permute"))
     _assert_same(base, got)
+
+
+def test_hybrid_rrf_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "hybrid_rrf_search", spark, variant,
+                             "documents")
+    # raw arithmetic recheck: rrf_score == 1/(60+rank_lex) + 1/(60+rank_sem)
+    # with a null rank contributing 0 (the operator's COALESCE semantics)
+    from serene_spark.operators.hybrid_search import RRF_K
+
+    lex = base.rank_lex.astype(float)
+    sem = base.rank_sem.astype(float)
+    expect = ((1.0 / (RRF_K + lex)).fillna(0.0)
+              + (1.0 / (RRF_K + sem)).fillna(0.0))
+    np.testing.assert_allclose(base.rrf_score.astype(float), expect,
+                               rtol=3e-6, atol=3e-6)
+    assert sorted(base.pos) == list(range(1, len(base) + 1))
+
+
+def test_kmv_rollup_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "kmv_rollup_users", spark, variant,
+                             "events")
+    # merge lemma self-check carried in the output, plus dup-invariance
+    # (the sketch hashes DISTINCT user-days)
+    assert base.rollup_equal.all()
+    _assert_dup_law(queries, "kmv_rollup_users", spark, variant,
+                    "events", base, x2=())
+
+
+def test_quantile_rollup_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "quantile_sketch_rollup", spark,
+                             variant, "events")
+    assert base.rollup_equals_direct.all()
+
+
+def test_triangle_counts_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "triangle_counts", spark, variant,
+                             "lineitem")
+    # the co-purchase graph is a DISTINCT edge set: duplicating every
+    # fact row changes nothing
+    dup = _run(queries, "triangle_counts", spark,
+               variant("lineitem", "dup"))
+    _assert_same(base, dup)
+    assert base.total_triangles.nunique() == 1  # corpus-level constant
+
+
+def test_pagerank_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "pagerank_converged", spark, variant,
+                             "lineitem")
+    dup = _run(queries, "pagerank_converged", spark,
+               variant("lineitem", "dup"))
+    _assert_same(base, dup)
+    assert (base.pagerank > 0).all()
+
+
+def test_decontaminate_laws(spark, queries, variant):
+    base = _assert_invariant(queries, "decontaminate", spark, variant,
+                             "documents")
+    # per-doc 8-gram overlap vs the doc_id%17 benchmark split: with a
+    # twin offset that PRESERVES the split, benchmark twins stay
+    # benchmark (the gram set is DISTINCT, so unchanged) and train twins
+    # mirror their originals exactly; originals are untouched
+    twin = _run(queries, "decontaminate", spark,
+                variant("documents", "twin_all_17"))
+    orig = twin[twin.doc_id < TWIN_OFFSET_17].reset_index(drop=True)
+    mirror = twin[twin.doc_id >= TWIN_OFFSET_17].reset_index(drop=True)
+    _assert_same(base, orig)
+    _assert_same(base, mirror.assign(doc_id=mirror.doc_id - TWIN_OFFSET_17))
 
 
 def test_resample_downsample_laws(spark, queries, variant):

@@ -36,9 +36,9 @@ def test_spliced_sql_dependency_marks_query_stale():
     qs = load_all()
     cases = [
         # (query, module it splices SQL from at function level)
-        ("gate_agreement_kappa", "serene_spark/operators/text_analysis.py"),
-        ("corpus_select", "serene_spark/operators/dedup.py"),
-        ("pair_nw_customer", "serene_spark/operators/class_features.py"),
+        ("curriculum_plan", "serene_spark/operators/text_analysis.py"),
+        ("split_leakage_audit", "serene_spark/operators/dedup.py"),
+        ("triangle_counts", "serene_spark/operators/graph_rank.py"),
     ]
     for name, dep in cases:
         q = qs[name]
@@ -46,19 +46,19 @@ def test_spliced_sql_dependency_marks_query_stale():
         after = _hash_with_suffix(q, os.path.join(REPO, dep), "\n# staleness-pin\n")
         assert before != after, f"{name} not marked stale by {dep} edit"
     # and an unrelated module does NOT move the hash
-    q = qs["gate_agreement_kappa"]
+    q = qs["curriculum_plan"]
     before = parity._module_hash(q)
     after = _hash_with_suffix(
-        q, os.path.join(REPO, "serene_spark/operators/relational.py"), "\n# x\n"
+        q, os.path.join(REPO, "serene_spark/operators/basket.py"), "\n# x\n"
     )
     assert before == after
 
 
 def test_own_module_still_marks_stale():
     qs = load_all()
-    q = qs["gate_agreement_kappa"]
+    q = qs["basket_part_lift"]
     before = parity._module_hash(q)
     after = _hash_with_suffix(
-        q, os.path.join(REPO, "serene_spark/operators/evaluation.py"), "\n# y\n"
+        q, os.path.join(REPO, "serene_spark/operators/basket.py"), "\n# y\n"
     )
     assert before != after

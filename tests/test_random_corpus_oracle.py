@@ -13,9 +13,11 @@ Covered with full-output value equality on 3 seeds each: exact dedup
 (md5 over the documented normalization, including injected dup groups
 that differ only in case/whitespace), text_quality (token/char/ratio
 formulas + the gate), lang_id (stopword-hit argmax with the documented
-tie-break), q1 pricing (decimal python sums), tumbling hourly counts,
-and textlen stats (count-based ceil(n/2) median, max-count/smallest-tie
-mode) over a random melted customer.
+tie-break), stratified_sample (md5-threshold draw), shard_assign
+(md5-mod-16 partition manifest), KMV NDV sketch (52-bit md5 bottom-K
+over distinct user-days, exercising BOTH the exact-below-K and
+estimator-above-K branches), and textlen stats (count-based ceil(n/2)
+median, max-count/smallest-tie mode) over a random melted customer.
 """
 
 from __future__ import annotations
@@ -53,6 +55,10 @@ def _norm(text: str) -> str:
 
 def _tokens(text: str) -> list[str]:
     return [t for t in re.split(r"[^a-z0-9]+", _norm(text)) if t]
+
+
+def _u01(key) -> float:
+    return int(hashlib.md5(str(key).encode()).hexdigest()[:8], 16) / 2**32
 
 
 def _make_docs(seed: int) -> pd.DataFrame:
@@ -255,6 +261,66 @@ def test_lang_id_vs_python(spark, queries, rand_sf, seed):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
+def test_stratified_sample_vs_python(spark, queries, rand_sf, seed):
+    from serene_spark.operators.curation import SAMPLE_RATES
+
+    docs = _make_docs(seed)
+    u = docs.doc_id.map(_u01)
+    rate = docs.lang.map(lambda lg: SAMPLE_RATES.get(lg, 0.0))
+    want = (docs.assign(u=u.round(6))[u < rate]
+            [["doc_id", "lang", "source", "u"]]
+            .sort_values("doc_id").reset_index(drop=True))
+    assert 0 < len(want) < len(docs)
+    got = _got(queries, "stratified_sample", spark, rand_sf(seed), ["doc_id"])
+    _check(got, want)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_shard_assign_vs_python(spark, queries, rand_sf, seed):
+    from serene_spark.operators.curation import N_SHARDS
+
+    docs = _make_docs(seed)
+    shard = docs.doc_id.map(
+        lambda d: int(hashlib.md5(str(d).encode()).hexdigest()[:8], 16)
+        % N_SHARDS)
+    want = (docs.assign(shard=shard.astype(np.int32)).groupby("shard")
+            .agg(n_docs=("doc_id", "size"), total_chars=("n_chars", "sum"),
+                 first_doc=("doc_id", "min"))
+            .reset_index().sort_values("shard").reset_index(drop=True))
+    got = _got(queries, "shard_assign", spark, rand_sf(seed), ["shard"])
+    _check(got, want)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_kmv_ndv_vs_hashlib(spark, queries, rand_sf, seed):
+    from serene_spark.operators.sketches import KMV_K
+
+    ev = _make_events(seed)
+    secs = ((ev.ts - pd.Timestamp("1970-01-01")).dt.total_seconds()
+            .map(math.floor).astype(np.int64))
+    key = (ev.user_id.astype(str) + "|" + (secs // 86400).astype(str))
+    rows = []
+    estimator_hit = False
+    for etype in sorted(ev.event_type.unique()):
+        keys = set(key[ev.event_type == etype])
+        ndv = len(keys)
+        us = sorted(
+            (int(hashlib.md5(k.encode()).hexdigest()[:13], 16) + 0.5) / 2**52
+            for k in keys)
+        sk = us[:KMV_K]
+        c = len(sk)
+        est = float(c) if c < KMV_K else (KMV_K - 1) / sk[-1]
+        estimator_hit = estimator_hit or c == KMV_K
+        rows.append((etype, ndv, c, round(est, 6),
+                     round(abs(est - ndv) / ndv, 6)))
+    assert estimator_hit  # at least one type exceeds K: estimator branch ran
+    want = pd.DataFrame(rows, columns=[
+        "event_type", "ndv_exact", "sketch_size", "ndv_est", "rel_err"])
+    got = _got(queries, "kmv_ndv_users", spark, rand_sf(seed), ["event_type"])
+    _check(got, want)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
 def test_q1_pricing_vs_decimal_python(spark, queries, rand_sf, seed):
     from decimal import Decimal
 
@@ -339,4 +405,55 @@ def test_textlen_stats_vs_python(spark, queries, rand_sf, seed):
         .sort_values("column_name").reset_index(drop=True))
     got = _got(queries, "textlen_stats_customer", spark, rand_sf(seed),
                ["column_name"])
+    _check(got, want)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_quantile_sketch_vs_python(spark, queries, rand_sf, seed):
+    """Full-output twin of the bottom-K coordinated-sample quantile
+    sketch: md5(event_id) row draw, bottom-256 sample per type, and BOTH
+    the sample and exact count-based p50/p90/p99 (min v with cumcount >=
+    ceil(p*n)) recomputed from scratch on integer cents."""
+    from serene_spark.operators.sketches import QSK_K
+
+    ev = _make_events(seed)
+    rows = []
+    sampled_path = False
+    for etype in sorted(ev.event_type.unique()):
+        sub = ev[ev.event_type == etype]
+        # exact cents (the DECIMAL(18,2) cast) keyed by row
+        cents = [(int(e), round(v * 100)) for e, v in zip(sub.event_id, sub.value)]
+        n = len(cents)
+
+        def qs(cvals):
+            m = len(cvals)
+            counts = Counter(cvals)
+            out = []
+            for p in (0.50, 0.90, 0.99):
+                need, cum = math.ceil(p * m), 0
+                for c in sorted(counts):
+                    cum += counts[c]
+                    if cum >= need:
+                        out.append(c / 100)
+                        break
+            return out
+
+        exact = qs([c for _, c in cents])
+        us = sorted(
+            ((int(hashlib.md5(str(e).encode()).hexdigest()[:13], 16) + 0.5)
+             / 2**52, c) for e, c in cents)
+        sample = [c for _, c in us[:QSK_K]]
+        sampled_path = sampled_path or n > QSK_K
+        est = qs(sample)
+        rows.append((
+            etype, n, len(sample),
+            exact[0], est[0], round(abs(est[0] - exact[0]) / exact[0], 6),
+            exact[1], est[1], round(abs(est[1] - exact[1]) / exact[1], 6),
+            exact[2], est[2], round(abs(est[2] - exact[2]) / exact[2], 6)))
+    assert sampled_path  # at least one type genuinely samples (n > K)
+    want = pd.DataFrame(rows, columns=[
+        "event_type", "n", "sample_n", "p50", "p50_est", "p50_rel_err",
+        "p90", "p90_est", "p90_rel_err", "p99", "p99_est", "p99_rel_err"])
+    got = _got(queries, "quantile_sketch_bottomk", spark, rand_sf(seed),
+               ["event_type"])
     _check(got, want)

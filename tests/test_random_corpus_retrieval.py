@@ -1,24 +1,155 @@
-"""Random-corpus python twin for exact cosine top-k retrieval.
+"""Random-corpus python twins for the retrieval tier.
 
-``similarity_cosine_topk``'s FULL output — neighbors, cosines, ranks — is
-recomputed from scratch with python math on 3 seeded float32 embedding
-tables, each with planted near-duplicate vectors so the top ranks are
-non-trivial.
+``bm25_search`` (Okapi BM25, Lucene non-negative idf) and
+``tfidf_top_terms`` previously had rank-order laws only; here their FULL
+outputs — scores, match counts, ranks — are recomputed from scratch with
+python math/collections on 3 seeded corpora in which the fixed query
+terms appear at varied frequencies (plus query-term-free and token-free
+docs, so the posting/df edges are real).
 """
 
 from __future__ import annotations
 
 import math
+import re
+from collections import Counter
 
 import numpy as np
 import pandas as pd
 import pytest
 
+from serene_spark.operators.retrieval import (
+    BM25_QUERY,
+    BM25_TOP_K,
+    TFIDF_TOP_K,
+)
 from serene_spark.registry import load_all
 
 SEEDS = (7, 23, 91)
-N_VECS = 43
+K1, B = 1.2, 0.75
 
+_FILLER = ["data", "table", "rows", "merge", "column", "plan", "query",
+           "window", "batch", "stream", "join42", "x9"]
+
+
+def _make_docs(seed: int) -> pd.DataFrame:
+    rng = np.random.default_rng(seed + 6000)
+    texts = []
+    for i in range(40):
+        n = int(rng.integers(5, 60))
+        words = list(rng.choice(_FILLER, size=n))
+        # query terms at geometric-ish frequency: some docs dense, many
+        # sparse, some with none
+        for t in BM25_QUERY:
+            reps = int(rng.integers(0, 5)) if i % 3 else 0
+            words += [t] * reps
+        rng.shuffle(words)
+        texts.append(" ".join(words))
+    texts.append("SPARK  Broadcast,shuffle;spark!")  # norm/split edges
+    texts.append("")                                 # token-free doc
+    texts.append("!!! ???")                          # tokens all dropped
+    return pd.DataFrame({
+        "doc_id": np.arange(len(texts), dtype=np.int64),
+        "text": texts,
+        "lang": "en",
+        "source": [f"src{i % 3}" for i in range(len(texts))],
+        "n_chars": [len(t) for t in texts],
+    })
+
+
+def _tokens(text: str) -> list[str]:
+    norm = re.sub(r"[ \t\n\r]+", " ", text.lower()).strip(" ")
+    return [t for t in re.split(r"[^a-z0-9]+", norm) if t]
+
+
+@pytest.fixture(scope="module")
+def retr_sf(tmp_path_factory):
+    root = tmp_path_factory.mktemp("randretr")
+    made: dict[int, str] = {}
+
+    def get(seed: int) -> str:
+        if seed not in made:
+            d = root / f"seed{seed}"
+            d.mkdir()
+            _make_docs(seed).to_parquet(str(d / "documents.parquet"), index=False)
+            made[seed] = str(d)
+        return made[seed]
+
+    return get
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_bm25_vs_python(spark, retr_sf, seed):
+    docs = _make_docs(seed)
+    toks = {r.doc_id: _tokens(r.text) for r in docs.itertuples()}
+    dl = {d: len(t) for d, t in toks.items() if t}   # doc_len drops empty
+    n_docs, total_len = len(dl), sum(dl.values())
+    df = {q: sum(1 for t in toks.values() if q in t) for q in BM25_QUERY}
+    assert 0 < min(df.values()) and max(df.values()) < n_docs  # real idf spread
+
+    # DECIMAL(18,9) contributions summed exactly — rank ties are decided
+    # in the decimal domain like the engines do, not in float
+    from decimal import ROUND_HALF_UP, Decimal
+
+    q9 = Decimal("1E-9")
+    scored = []
+    for d, ts in toks.items():
+        tf = Counter(t for t in ts if t in BM25_QUERY)
+        if not tf:
+            continue
+        score = Decimal(0)
+        for q, f in tf.items():
+            idf = math.log(1 + (n_docs - df[q] + 0.5) / (df[q] + 0.5))
+            norm = f * (K1 + 1) / (
+                f + K1 * (1 - B + B * dl[d] * n_docs / total_len))
+            score += Decimal(repr(idf * norm)).quantize(
+                q9, rounding=ROUND_HALF_UP)
+        scored.append((d, len(tf), score))
+    scored.sort(key=lambda r: (-r[2], r[0]))
+    scored = [(d, m, round(float(s), 6)) for d, m, s in scored]
+    want = pd.DataFrame(
+        [(d, m, s, i + 1) for i, (d, m, s) in enumerate(scored[:BM25_TOP_K])],
+        columns=["doc_id", "n_terms_matched", "bm25", "rank"])
+
+    got = (load_all()["bm25_search"].spark(spark, retr_sf(seed)).toPandas()
+           .sort_values("rank").reset_index(drop=True))
+    assert (got.doc_id.values == want.doc_id.values).all()
+    assert (got.n_terms_matched.values == want.n_terms_matched.values).all()
+    assert (got["rank"].values == want["rank"].values).all()
+    np.testing.assert_allclose(got.bm25, want.bm25, rtol=0, atol=1.5e-6)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_tfidf_top_terms_vs_python(spark, retr_sf, seed):
+    docs = _make_docs(seed)
+    toks = {r.doc_id: _tokens(r.text) for r in docs.itertuples()}
+    tf = {d: Counter(t) for d, t in toks.items() if t}
+    n = len(tf)
+    df = Counter()
+    for c in tf.values():
+        df.update(c.keys())
+    rows = []
+    for d, c in tf.items():
+        terms = sorted(
+            ((round(f * math.log(n / df[t]), 6), t) for t, f in c.items()),
+            key=lambda x: (-x[0], x[1]))
+        for i, (v, t) in enumerate(terms[:TFIDF_TOP_K]):
+            rows.append((d, t, v, i + 1))
+    want = (pd.DataFrame(rows, columns=["doc_id", "term", "tfidf", "rank"])
+            .sort_values(["doc_id", "rank"]).reset_index(drop=True))
+
+    got = (load_all()["tfidf_top_terms"].spark(spark, retr_sf(seed)).toPandas()
+           .sort_values(["doc_id", "rank"]).reset_index(drop=True))
+    assert len(got) == len(want)
+    assert (got.doc_id.values == want.doc_id.values).all()
+    assert (got.term.values == want.term.values).all()
+    assert (got["rank"].values == want["rank"].values).all()
+    np.testing.assert_allclose(got.tfidf, want.tfidf, rtol=0, atol=1.5e-6)
+
+
+# ------------------------------------------------------------------
+# similarity + fusion twins on the same dirs, with a generated
+# float32 embeddings table (vec_ids aligned to doc_ids, as in testdata)
 
 def _make_embeddings(seed: int, n: int) -> "pa.Table":
     import pyarrow as pa
@@ -48,20 +179,16 @@ def _emb_f64(sf: str) -> dict:
 
 
 @pytest.fixture(scope="module")
-def retr_emb_sf(tmp_path_factory):
-    """seed -> dir holding a generated embeddings.parquet."""
+def retr_emb_sf(retr_sf):
+    """seed -> dir from retr_sf, with embeddings.parquet added."""
     import pyarrow.parquet as pq
 
-    root = tmp_path_factory.mktemp("randretr")
-    made: dict[int, str] = {}
-
     def get(seed: int) -> str:
-        if seed not in made:
-            d = root / f"seed{seed}"
-            d.mkdir()
-            pq.write_table(_make_embeddings(seed, N_VECS), str(d / "embeddings.parquet"))
-            made[seed] = str(d)
-        return made[seed]
+        d = retr_sf(seed)
+        if not (pd.io.common.os.path.exists(f"{d}/embeddings.parquet")):
+            n = len(_make_docs(seed))
+            pq.write_table(_make_embeddings(seed, n), f"{d}/embeddings.parquet")
+        return d
 
     return get
 
@@ -103,3 +230,78 @@ def test_cosine_topk_vs_python(spark, retr_emb_sf, seed):
     assert (got.neighbor_id.values == want.neighbor_id.values).all()
     assert (got.rk.values == want.rk.values).all()
     np.testing.assert_allclose(got.cosine, want.cosine, rtol=0, atol=1.5e-6)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_hybrid_rrf_vs_python(spark, retr_emb_sf, seed):
+    from serene_spark.operators.hybrid_search import (
+        CAND_DEPTH,
+        QUERY_TERMS,
+        RRF_K,
+        RRF_TOP_K,
+        SCALE,
+    )
+
+    sf = retr_emb_sf(seed)
+    docs = _make_docs(seed)
+    toks = {r.doc_id: _tokens(r.text) for r in docs.itertuples()}
+
+    # lexical ranker: tf-idf over the pruned postings
+    n_docs = sum(1 for t in toks.values() if t)
+    tf = {d: Counter(t for t in ts if t in QUERY_TERMS)
+          for d, ts in toks.items()}
+    tf = {d: c for d, c in tf.items() if c}
+    df = Counter()
+    for c in tf.values():
+        df.update(c.keys())
+    # DECIMAL(28,9) contributions summed exactly: lex-score ties must be
+    # decided in the decimal domain like the engines do, not in float
+    from decimal import ROUND_HALF_UP, Decimal
+
+    q9 = Decimal("1E-9")
+    lex_scores = {
+        d: sum((Decimal(repr(f * math.log(n_docs / df[q])))
+                .quantize(q9, rounding=ROUND_HALF_UP) for q, f in c.items()),
+               Decimal(0))
+        for d, c in tf.items()}
+    lex_rank = {d: i + 1 for i, d in enumerate(sorted(
+        lex_scores, key=lambda d: (-lex_scores[d], d))) if i < CAND_DEPTH}
+
+    # semantic ranker: micro-unit-quantized cosine to the min-vec_id query
+    emb = _emb_f64(sf)
+    xq = {v: [math.floor(x * SCALE) for x in e] for v, e in emb.items()}
+    q = min(xq)
+    qn = sum(x * x for x in xq[q])
+    sem_scores = {}
+    for v, e in xq.items():
+        if v == q:
+            continue
+        dot = sum(a * b for a, b in zip(e, xq[q]))
+        nrm = sum(a * a for a in e)
+        sem_scores[v] = round(dot / math.sqrt(float(nrm) * qn), 9)
+    sem_rank = {d: i + 1 for i, d in enumerate(sorted(
+        sem_scores, key=lambda d: (-sem_scores[d], d))) if i < CAND_DEPTH}
+
+    fused = []
+    for d in set(lex_rank) | set(sem_rank):
+        rrf = round((1.0 / (RRF_K + lex_rank[d]) if d in lex_rank else 0.0)
+                    + (1.0 / (RRF_K + sem_rank[d]) if d in sem_rank else 0.0), 9)
+        fused.append((d, rrf, lex_rank.get(d), sem_rank.get(d)))
+    fused.sort(key=lambda t: (-t[1], t[0]))
+    want = pd.DataFrame(
+        [(d, round(r, 6), lr, sr, i + 1)
+         for i, (d, r, lr, sr) in enumerate(fused[:RRF_TOP_K])],
+        columns=["doc_id", "rrf_score", "rank_lex", "rank_sem", "pos"])
+    # both rankers really contribute, and at least one one-sided doc exists
+    assert want.rank_lex.notna().any() and want.rank_sem.notna().any()
+
+    got = (load_all()["hybrid_rrf_search"].spark(spark, sf).toPandas()
+           .sort_values("pos").reset_index(drop=True))
+    assert (got.doc_id.values == want.doc_id.values).all()
+    assert (got.pos.values == want.pos.values).all()
+    for col in ("rank_lex", "rank_sem"):
+        g, w = got[col].astype("Float64"), want[col].astype("Float64")
+        assert ((g.isna() == w.isna()).all()
+                and (g.dropna().values == w.dropna().values).all()), col
+    np.testing.assert_allclose(got.rrf_score, want.rrf_score,
+                               rtol=0, atol=1.5e-6)

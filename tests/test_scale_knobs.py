@@ -161,3 +161,21 @@ def test_dedup_clusters_match_networkx(spark, sf_dir):
     got = {r["doc_id"]: r["cluster"] for r in dedup_clusters(spark, sf_dir).collect()}
     assert got == want
     assert any(v != k for k, v in got.items()), "fixture should have real clusters"
+
+
+def test_semdedup_geom_scales_with_corpus():
+    """The in-query k must follow the semdedup_k formula: floor at 16 on the
+    test corpus, growing with n at scale."""
+    import duckdb
+
+    from serene_spark.functions.sqlgen import DUCKDB
+    from serene_spark.operators.curation import semdedup_geom_rel, semdedup_k
+
+    con = duckdb.connect()
+    for n in (500, 4096 * 20, 4096 * 1000):
+        con.execute("CREATE OR REPLACE VIEW embeddings AS "
+                    f"SELECT * FROM range({n}) t(vec_id)")
+        k = con.execute(
+            f"WITH {semdedup_geom_rel(DUCKDB)} SELECT k FROM sem_geom"
+        ).fetchone()[0]
+        assert k == semdedup_k(n), (n, k)

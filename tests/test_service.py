@@ -4,7 +4,6 @@ REST integration-spec layer, DatasetRestAPISpec/OctopusAPISpec style)."""
 from __future__ import annotations
 
 import json
-import os
 import time
 import urllib.request
 
@@ -46,6 +45,8 @@ def test_dataset_endpoints(server, sf_dir):
 
 
 def test_ssd_owl_crud_and_dependent_delete(server):
+    import os
+
     import serene_spark.modeler.octopus as octo
     from serene_spark.storage import ssd_to_json
 
@@ -126,47 +127,40 @@ def test_model_train_flow(server):
     assert _req(server, "POST", "/v1.0/model/999999/train")[0] == 404
 
 
-# q1_pricing_summary's (returnflag, linestatus) groups on the test corpus
-Q1_GROUPS = {("A", "F"), ("A", "O"), ("N", "F"), ("N", "O"), ("R", "F"), ("R", "O")}
-
-
-def _q1_groups(out: dict) -> set:
-    assert out["n_rows"] == len(out["rows"]) == len(Q1_GROUPS)
-    return {(r["l_returnflag"], r["l_linestatus"]) for r in out["rows"]}
-
-
-def test_query_endpoints(server, sf_dir):
+def test_query_endpoints(server):
     """Registered-query surface over HTTP: listing + execution."""
     code, listing = _req(server, "GET", "/v1.0/query")
     assert code == 200
-    assert listing["q1_pricing_summary"]["oracle"] is True
+    assert "skyline_parts" in listing and listing["skyline_parts"]["oracle"] is True
     assert "semantic_type_predict" in listing
     assert listing["semantic_type_predict"]["oracle"] is False  # rows-only
 
     code, out = _req(
         server, "POST", "/v1.0/query/run",
-        {"name": "q1_pricing_summary", "sf_dir": sf_dir},
+        {"name": "dq_constraints_lineitem", "sf_dir": "/root/testdata/sf0.001"},
     )
     assert code == 200
-    assert _q1_groups(out) == Q1_GROUPS
+    assert out["n_rows"] == 8
+    by_name = {r["constraint_name"]: r for r in out["rows"]}
+    assert by_name["quantity_positive"]["violations"] == 0
 
     code, err = _req(server, "POST", "/v1.0/query/run", {"name": "nope"})
     assert code == 404 and "unknown query" in err["error"]
 
 
-def test_query_run_sf_dir_allowlist(server, sf_dir):
+def test_query_run_sf_dir_allowlist(server):
     """POST /v1.0/query/run must reject an sf_dir outside the data root —
     otherwise any HTTP client can read arbitrary parquet paths through the
     engine (round-4 advice item)."""
     code, err = _req(
         server, "POST", "/v1.0/query/run",
-        {"name": "q1_pricing_summary", "sf_dir": "/etc"},
+        {"name": "dq_constraints_lineitem", "sf_dir": "/etc"},
     )
     assert code == 403 and "sf_dir" in err["error"]
     # traversal back under the root prefix must also be rejected
     code, err = _req(
         server, "POST", "/v1.0/query/run",
-        {"name": "q1_pricing_summary", "sf_dir": f"{os.path.dirname(sf_dir)}/../repo"},
+        {"name": "dq_constraints_lineitem", "sf_dir": "/root/testdata/../repo"},
     )
     assert code == 403
 
@@ -187,7 +181,7 @@ def test_concurrent_train_predict_query_load(server, sf_dir):
     def run_query(i: int):
         return _req(
             server, "POST", "/v1.0/query/run",
-            {"name": "q1_pricing_summary", "sf_dir": sf_dir},
+            {"name": "dq_constraints_lineitem", "sf_dir": "/root/testdata/sf0.001"},
         )
 
     def poll_state(i: int):
@@ -210,7 +204,9 @@ def test_concurrent_train_predict_query_load(server, sf_dir):
         assert code in (200, 202), body
     # query results are correct under load, not merely 200
     for code, body in results[:6]:
-        assert _q1_groups(body) == Q1_GROUPS
+        assert body["n_rows"] == 8
+        by_name = {r["constraint_name"]: r for r in body["rows"]}
+        assert by_name["quantity_positive"]["violations"] == 0
 
     import time as _t
     deadline = _t.time() + 600

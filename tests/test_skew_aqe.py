@@ -1,8 +1,11 @@
 """End-to-end AQE skew handling demonstration (judge round-5 item 8).
 
-This test constructs an actually-skewed join under load and pins — via
-the FINAL adaptive plan, not an assumption — that Spark's AQE skew-join
-split engages (``skew=true`` on the sort-merge join node).
+``join_key_skew`` measures skew and ``salted_agg`` provides the
+aggregation-side mitigation; this test constructs an actually-skewed join
+under load and pins — via the FINAL adaptive plan, not an assumption —
+that Spark's AQE skew-join split engages (``skew=true`` on the
+sort-merge join node). The salted-aggregation path is exercised on the
+same skewed relation and pinned exact against the single-shuffle groupBy.
 """
 
 from __future__ import annotations
@@ -14,6 +17,7 @@ from pyspark.sql import functions as F
 # null-key shape that melts a single reducer at 100 TB
 N_ROWS = 2_000_000
 N_KEYS = 2_000
+SF = "/root/testdata/sf0.001"
 
 
 def _skewed_fact(spark):
@@ -73,8 +77,8 @@ def test_aqe_splits_the_skewed_join_partition(aqe_skew_confs):
     # global aggregate downstream: no per-key output-partitioning
     # requirement, so AQE is free to split the hot partition (a same-key
     # groupBy directly after the join would pin the join's partitioning
-    # and AQE would decline the split — that shape wants a salted
-    # two-phase aggregation or forceOptimizeSkewedJoin instead)
+    # and AQE would decline the split — that shape wants salted_agg or
+    # forceOptimizeSkewedJoin instead, noted in sources/layout.py)
     joined = fact.join(dim, "k").agg(
         F.count("*").alias("n"), F.sum("dim_val").alias("s")
     )
@@ -91,3 +95,125 @@ def test_aqe_splits_the_skewed_join_partition(aqe_skew_confs):
     # skew-join split on the sort-merge join node
     final_plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "skew=true" in final_plan, final_plan[:2000]
+
+
+def test_salted_agg_matches_plain_groupby_on_hot_key(spark):
+    """salted_agg over the same skewed relation is exactly the plain
+    groupBy (integer sums: no reassociation slack) — the aggregation-side
+    mitigation AQE does not provide."""
+    from serene_spark.sources.layout import salted_agg
+
+    fact = _skewed_fact(spark).select("k", F.col("v").cast("long").alias("v"))
+    expected = {
+        (r.k): (r.n, r.s, r.mx)
+        for r in fact.groupBy("k")
+        .agg(F.count("v").alias("n"), F.sum("v").alias("s"), F.max("v").alias("mx"))
+        .collect()
+    }
+    got = {
+        (r.k): (r.n, r.s, r.mx)
+        for r in salted_agg(
+            fact, ["k"], {"n": "count:v", "s": "sum:v", "mx": "max:v"}, n_salt=16
+        ).collect()
+    }
+    assert got == expected
+    assert got[7][0] == N_ROWS // 2 + N_ROWS // N_KEYS
+
+
+def test_skew_join_advisory_fires_on_dominant_key(spark):
+    """skew_join_advisory (plans/explain_audit.py) encodes the two
+    bench_skew.py config-contract findings: it fires on the skewed
+    fixture's dominant key (hot partition >> stock factor in ROWS),
+    warns that a narrow residue under-reads in compressed BYTES, and
+    recommends a factor below the estimated compressed ratio — while
+    staying silent on evenly-distributed keys (stock AQE is correct
+    there, lowering the factor would only fragment healthy joins)."""
+    from serene_spark.plans.explain_audit import (
+        NARROW_RESIDUE_BYTE_DISCOUNT,
+        skew_join_advisory,
+    )
+
+    fact = _skewed_fact(spark)
+    stats = (
+        fact.groupBy("k").count()
+        .agg(
+            F.lit("fact.k").alias("join_key"),
+            F.sum("count").alias("n_rows"),
+            F.max("count").alias("max_rows_per_key"),
+        )
+        .collect()
+    )
+    out = skew_join_advisory(stats, n_shuffle_partitions=16)
+    assert len(out) == 1
+    adv = out[0]
+    assert adv["join_key"] == "fact.k"
+    # fixture: one key owns ~50% -> the median partition holds only the
+    # OTHER half spread over 16, so the hot one is ~17x it (1 + sP/(1-s))
+    assert 0.49 <= adv["hot_key_share"] <= 0.51
+    assert 16.0 <= adv["row_ratio_vs_median"] <= 18.0
+    # narrow-residue byte estimate: 1 + (ratio-1) * measured discount
+    expect_bytes = 1 + (adv["row_ratio_vs_median"] - 1) * NARROW_RESIDUE_BYTE_DISCOUNT
+    assert abs(adv["narrow_residue_byte_ratio"] - expect_bytes) < 0.02
+    assert adv["splits_at_stock_if_wide_rows"] is True
+    # ~2.2x compressed < stock factor 5: the decline bench_skew measured
+    assert adv["splits_at_stock_if_narrow_residue"] is False
+    assert 2 <= adv["recommended_skew_factor"] < adv["narrow_residue_byte_ratio"]
+    assert "skewedPartitionFactor" in adv["advisory"]
+
+    # an even key distribution yields NO advisory
+    even = [{"join_key": "orders.o_custkey", "n_rows": 1_000_000,
+             "max_rows_per_key": 120}]
+    assert skew_join_advisory(even, n_shuffle_partitions=16) == []
+
+
+def test_explain_skew_advisory_registered_surface(spark, tmp_path):
+    """The advisory is reachable from the PUBLIC surface: the registered
+    ``explain_skew_advisory`` query runs join_key_skew and emits one
+    advisory row per dominant key. Pinned on a crafted corpus whose
+    events table has one user owning ~60% of rows (fires on
+    events.user_id), and empty-with-stable-schema on the even testdata."""
+    import os
+
+    from serene_spark.catalog import TABLES, load_table
+    from serene_spark.registry import load_all
+
+    q = load_all()["explain_skew_advisory"]
+
+    # the advisory reads the SESSION's shuffle-partition count by design
+    # (the ratio is vs the median partition of THIS session's shuffles);
+    # pin it so a conf left behind by another test can't move the
+    # firing threshold under pytest's random ordering
+    keep = spark.conf.get("spark.sql.shuffle.partitions", None)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        # stock sf0.001: keys are even — no advisory, schema still stable
+        base = q.spark(spark, SF)
+        assert base.count() == 0
+        assert base.columns[:3] == ["join_key", "hot_key_share",
+                                    "row_ratio_vs_median"]
+
+        d = tmp_path / "skewed_sf"
+        d.mkdir()
+        for t in TABLES:
+            if t != "events":
+                os.symlink(f"{SF}/{t}.parquet", str(d / f"{t}.parquet"))
+        ev = load_table(spark, SF, "events")
+        hot = ev.withColumn("user_id", F.lit(424242))
+        (ev.unionAll(hot).unionAll(hot)  # hot user owns ~2/3 of tripled rows
+         .write.mode("overwrite").parquet(str(d / "events.parquet")))
+
+        out = {r.join_key: r.asDict()
+               for r in q.spark(spark, str(d)).collect()}
+        assert "events.user_id" in out
+        adv = out["events.user_id"]
+        assert 0.60 <= adv["hot_key_share"] <= 0.72
+        assert adv["splits_at_stock_if_wide_rows"] is True
+        assert adv["recommended_skew_factor"] >= 2
+        assert "skewedPartitionFactor" in adv["advisory"]
+        # lineitem/orders keys stay even in the crafted corpus: no false fire
+        assert "lineitem.l_orderkey" not in out
+    finally:
+        if keep is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", keep)
+        else:
+            spark.conf.unset("spark.sql.shuffle.partitions")

@@ -18,6 +18,7 @@ import pytest
 
 from serene_spark.functions import sqlgen as g
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
+from serene_spark.operators.clustering import _tdiv
 
 # --- the shared value battery -------------------------------------------------
 
@@ -76,9 +77,10 @@ def _compare(engines, table: str, exprs_fn) -> None:
 
 
 def test_integer_division_shims(engines):
-    # idiv documents nonneg-only use
+    # idiv documents nonneg-only use; _tdiv must agree everywhere
     _compare(engines, "__shim_ints", lambda d: [
         f"CAST({g.idiv(d, 'abs(a)', 'b')} AS BIGINT) AS nonneg_idiv",
+        f"CAST({_tdiv(d, 'a', 'b')} AS BIGINT) AS tdiv",
         f"CAST({g.idiv(d, 'abs(a)', 'b')} * b + abs(a) % b AS BIGINT) AS recompose",
     ])
 
@@ -87,6 +89,7 @@ def test_bit_shims(engines):
     _compare(engines, "__shim_ints", lambda d: [
         f"CAST({g.bxor(d, 'abs(a) % 65536', 'b % 65536')} AS BIGINT) AS x",
         f"CAST({g.shl(d, 'abs(a) % 1024', 'b % 16')} AS BIGINT) AS sl",
+        f"CAST({g.shr(d, 'abs(a)', 'b % 16')} AS BIGINT) AS sr",
     ])
 
 
@@ -145,6 +148,7 @@ def test_explode_seq_shim(engines):
 def test_agg_ordered_shims(engines):
     def exprs(d):
         return [
+            g.agg_ordered(d, "s", "id", "~") + " AS cat",
             g.arr_join(d, g.arr_agg_ordered(d, "s", "id"), "~") + " AS arr_cat",
             g.arg_min_by(d, "s", "id") + " AS first_s",
             g.arg_max_by(d, "s", "id") + " AS last_s",

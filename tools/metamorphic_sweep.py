@@ -62,7 +62,7 @@ def main() -> int:
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     ap.add_argument("--include-rows-only", action="store_true",
-                    help="also sweep queries with no oracle (ML "
+                    help="also sweep queries with no oracle (ML/streaming "
                     "runners may be legitimately nondeterministic)")
     args = ap.parse_args()
 

@@ -83,8 +83,8 @@ def _module_file(name: str) -> str | None:
 def _dep_closure(path: str) -> tuple[str, ...]:
     """Transitive serene_spark imports of a source file, BY SOURCE TEXT —
     runtime dict inspection would miss function-level imports, which is
-    exactly how cross-module SQL splicing happens (gate_agreement_kappa
-    splices text_quality_sql, corpus_select splices dedup_exact_sql): an
+    exactly how cross-module SQL splicing happens (curriculum_plan splices
+    text_quality_sql, split_leakage_audit splices lsh_verified_sql): an
     edit to the spliced module must mark the dependent queries stale."""
     import re
 

@@ -19,10 +19,11 @@ across engines); everything else is reported.
 
 Zero-row escalation (round 10): a query with no output rows at the sweep
 SF is not type-checkable there, and silently skipping it is a blind spot
-(a DECIMAL-vs-DOUBLE bug in a round-9 operator was exactly the class
-this sweep catches).  Such queries are retried at sf0.01 and finally against a
+(the round-9 ``runs_test_daily`` DECIMAL bug was exactly the class this
+sweep catches).  Such queries are retried at sf0.01 and finally against a
 MICRO fixture — the sf0.001 corpus plus engineered rows that give the
-always-empty screens output (an exact-duplicate embedding for
+always-empty screens output (an exact-duplicate order pair for
+``duplicate_payments``; an exact-duplicate embedding for
 ``dedup_embedding_cosine``), built on demand from copies of real rows so
 every dtype matches the driver corpus.  A query empty even on the micro
 fixture is still reported as skipped — loudly, so the fixture gets
@@ -81,7 +82,16 @@ def _ensure_micro() -> str:
     for t in TABLES:
         src = os.path.join(MICRO_BASE, f"{t}.parquet")
         dst = os.path.join(out, f"{t}.parquet")
-        if t == "embeddings":
+        if t == "orders":
+            # two copies of a real order under fresh keys: same customer,
+            # same exact amount, gap 0 days -> a duplicate-payment pair
+            df = pd.read_parquet(src)
+            a, b = df.iloc[[0]].copy(), df.iloc[[0]].copy()
+            mx = df["o_orderkey"].max()
+            a["o_orderkey"] = mx + 1
+            b["o_orderkey"] = mx + 2
+            pd.concat([df, a, b], ignore_index=True).to_parquet(dst, index=False)
+        elif t == "embeddings":
             # an exact copy of a real vector under a fresh id: cosine 1.0
             # in the same sign bucket -> an embedding near-dup pair
             df = pd.read_parquet(src)
