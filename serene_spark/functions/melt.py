@@ -15,8 +15,12 @@ maps nulls to "" (FeatureExtractor.scala:98-101); ``melt`` does the same with
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from serene_spark.catalog import load_table
 
 
 def _num_partitions(df: DataFrame) -> int:
@@ -81,6 +85,19 @@ def spread(
     return df
 
 
+def _stack(df: DataFrame, cols: list[str], keys: list[str]) -> DataFrame:
+    """The shared melt body: ``(key, value)`` rows, one per cell of
+    ``cols``, the key being the SQL literal in ``keys``."""
+    pairs = ", ".join(
+        f"{k}, coalesce(cast(`{c}` as string), '')" for k, c in zip(keys, cols)
+    )
+    # project before spreading so the repartition shuffle never carries
+    # columns the melt doesn't need (explicit, not left to ColumnPruning)
+    return spread(df.select(*[f"`{c}`" for c in cols]), probe=df).select(
+        F.expr(f"stack({len(cols)}, {pairs}) as (column_name, value)")
+    )
+
+
 def melt(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Return ``(column_name: string, value: string)`` for the given columns.
 
@@ -89,12 +106,7 @@ def melt(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     downstream parallelize even from a single-file source.
     """
     cols = columns or df.columns
-    pairs = ", ".join(f"'{c}', coalesce(cast(`{c}` as string), '')" for c in cols)
-    # project before spreading so the repartition shuffle never carries
-    # columns the melt doesn't need (explicit, not left to ColumnPruning)
-    return spread(df.select(*[f"`{c}`" for c in cols]), probe=df).select(
-        F.expr(f"stack({len(cols)}, {pairs}) as (column_name, value)")
-    )
+    return _stack(df, cols, [f"'{c}'" for c in cols])
 
 
 def melt_ids(df: DataFrame, columns: list[str] | None = None) -> tuple[DataFrame, str]:
@@ -112,18 +124,30 @@ def melt_ids(df: DataFrame, columns: list[str] | None = None) -> tuple[DataFrame
     ids must never escape into a query result.
     """
     cols = columns or df.columns
-    pairs = ", ".join(
-        f"{i}, coalesce(cast(`{c}` as string), '')" for i, c in enumerate(cols)
-    )
-    long_df = spread(df.select(*[f"`{c}`" for c in cols]), probe=df).select(
-        F.expr(f"stack({len(cols)}, {pairs}) as (column_name, value)")
-    )
+    long_df = _stack(df, cols, [str(i) for i in range(len(cols))])
     name_case = (
         "CASE column_name "
         + " ".join(f"WHEN {i} THEN '{c}'" for i, c in enumerate(cols))
         + " END"
     )
     return long_df, name_case
+
+
+def run_over_melt(
+    spark: SparkSession, sf_dir: str, table: str, statement: Callable[[str], str]
+) -> DataFrame:
+    """The runner of every registered per-column profiling query: melt
+    ``table`` with :func:`melt_ids`, register it as the temp view
+    ``__serene_long_{table}``, run ``statement(view)`` and map the int
+    column ids of the result back to names.
+
+    The ids stay the group-by key through every aggregation (guide §2.3)
+    and are mapped back only on the final ≤#columns-row projection.
+    """
+    view = f"__serene_long_{table}"
+    long_df, name_case = melt_ids(load_table(spark, sf_dir, table))
+    long_df.createOrReplaceTempView(view)
+    return spark.sql(statement(view)).withColumn("column_name", F.expr(name_case))
 
 
 def melt_sql(table: str, columns: tuple[str, ...], value_exprs: dict[str, str] | None = None) -> str:

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from serene_spark.catalog import load_table
 from serene_spark.functions.melt import melt, melt_ids
-from serene_spark.functions.sqlgen import SPARK
+from serene_spark.functions.sqlgen import SPARK, rx
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
 
@@ -46,6 +46,110 @@ CV_IMPURITIES = ("entropy", "gini")
 TRAIN_COLLECT_MAX = 100_000
 
 
+def staged_hist_sql(long_rel: str, needs_numeric: bool = True) -> str:
+    """The statement :func:`profile_features_from_long` stages: the
+    (column, value) histogram of ``long_rel`` (profile_scalar.hist_sql),
+    plus, when the numeric family is gated in, the NUM_PAT test as an
+    ``isnum`` flag and the parsed ``num``. Folding the parse into the
+    staged histogram runs the regex once per distinct value and leaves the
+    numeric counts a plain filter over the checkpoint: no second
+    materialization, no repeated regex, no extra exchange."""
+    # operator modules are imported on use: importing one registers its
+    # queries, and the registry order is load_all()'s import order
+    from serene_spark.operators.profile_scalar import hist_sql
+    from serene_spark.operators.profile_textstats import NUM_DECIMAL, NUM_PAT
+
+    if not needs_numeric:
+        return f"SELECT * FROM ({hist_sql(long_rel)}) h"
+    isnum = rx(SPARK, "trim(value)", NUM_PAT)
+    return (
+        f"SELECT column_name, value, cnt, ne, isnum, "
+        f"CASE WHEN isnum = 1 THEN {NUM_DECIMAL} END AS num "
+        f"FROM (SELECT h.*, CASE WHEN {isnum} THEN 1 ELSE 0 END AS isnum "
+        f"FROM ({hist_sql(long_rel)}) h) hn"
+    )
+
+
+def fused_profile_sql(
+    hist_rel: str,
+    needs_textlen: bool = True,
+    needs_char_entropy: bool = True,
+    needs_numeric: bool = True,
+) -> str:
+    """Every gated feature family in ONE statement over the staged
+    histogram ``hist_rel`` (:func:`staged_hist_sql`).
+
+    Each family is a count-weighted sum over the same (column, value)
+    histogram, so the data-scale work is the histogram alone; everything
+    here is sized by distinct values per column. Each family runs its
+    one-pass Spark form (profile_scalar.scalar_onepass_sql,
+    profile_textstats.textlen_onepass_body / numeric_onepass_body) and
+    joins on column_name (LEFT joins: a column with no numeric values has
+    NULL numeric stats, which the caller's -1 coalesce turns into the
+    reference sentinel). tests/test_profile_fused.py pins the result to
+    the four standalone DuckDB oracle statements joined on column_name.
+    """
+    from serene_spark.operators.profile_chardist import CHAR_COUNTS, SHANNON_CHAR_ENTROPY
+    from serene_spark.operators.profile_scalar import scalar_onepass_sql
+    from serene_spark.operators.profile_textstats import (
+        numeric_onepass_body,
+        textlen_onepass_body,
+    )
+
+    ctes = [f"scalar_out AS (WITH {scalar_onepass_sql(SPARK, hist_rel)})"]
+    cols = ["s.*"]
+    joins = []
+
+    if needs_textlen:
+        # (column, len) -> count: SUM(cnt) per length is identical to
+        # counting raw rows (profile_textstats.len_counts_sql)
+        ctes.append(f"""lcounts AS (
+  SELECT column_name, CAST(length(value) AS BIGINT) AS len,
+         CAST(SUM(cnt) AS BIGINT) AS c
+  FROM {hist_rel} GROUP BY column_name, length(value)
+)""")
+        ctes.append(f"tl_out AS ({textlen_onepass_body('lcounts')})")
+        cols += ["t.mean_len", "t.median_len", "t.mode_len", "t.min_len", "t.max_len"]
+        joins.append("LEFT JOIN tl_out t ON s.column_name = t.column_name")
+
+    if needs_char_entropy:
+        # char explode over DISTINCT values only, weighted by cnt
+        # (profile_chardist._chars_rel semantics; ne=1 = its NONEMPTY filter)
+        ctes.append(f"""chars AS (
+  SELECT column_name, explode(split(value, '')) AS ch, cnt AS vcnt FROM {hist_rel} WHERE ne = 1
+)""")
+        ctes.append(f"ccounts AS (\n  {CHAR_COUNTS}\n)")
+        ctes.append(f"""ce_out AS (
+  SELECT column_name,
+       {SHANNON_CHAR_ENTROPY}
+  FROM ccounts GROUP BY column_name
+)""")
+        cols.append("e.shannon_char_entropy")
+        joins.append("LEFT JOIN ce_out e ON s.column_name = e.column_name")
+
+    if needs_numeric:
+        # (column, num) -> count as a filter over the staged parse. Not
+        # grouped by num: every consumer is a sum/min/max over (num, c)
+        # (duplicate string forms of one numeric merge inside SUM), and the
+        # in-bucket cumulative window's default RANGE frame gives tied nums
+        # one cumulative count, exactly as a grouped relation would
+        ctes.append(f"""ncounts AS (
+  SELECT column_name, num, cnt AS c FROM {hist_rel} WHERE isnum = 1
+)""")
+        ctes.append(f"nm_out AS (WITH {numeric_onepass_body('ncounts')})")
+        cols += ["n.mean_num", "n.median_num", "n.min_num", "n.max_num"]
+        joins.append("LEFT JOIN nm_out n ON s.column_name = n.column_name")
+
+    return (
+        "WITH "
+        + ",\n".join(ctes)
+        + "\nSELECT "
+        + ", ".join(cols)
+        + "\nFROM scalar_out s\n"
+        + "\n".join(joins)
+    )
+
+
 def profile_features_from_long(
     spark: SparkSession, long_df: DataFrame, settings=None, name_case: str | None = None
 ) -> DataFrame:
@@ -53,8 +157,8 @@ def profile_features_from_long(
 
     Scalar features, text-length stats, char entropy, and numeric stats all
     derive from one materialized (column, value) histogram in a single fused
-    statement (profile_fused.py; left joins, -1 fill: absent numerics mirror
-    the reference's sentinel, FeatureExtractor.scala:778-839).
+    statement (:func:`fused_profile_sql`; left joins, -1 fill: absent
+    numerics mirror the reference's sentinel, FeatureExtractor.scala:778-839).
 
     ``settings`` (a ``FeatureSettings``, SURVEY §2.12) gates which features
     are computed: ungated aggregations are never joined (the plan shrinks,
@@ -73,17 +177,12 @@ def profile_features_from_long(
     projections) analyzes and optimizes a leaf instead of re-planning the
     profiler. Callers need no further ``cache()``/``materialize()``.
     """
-    from serene_spark.operators.profile_fused import fused_profile_sql
-    from serene_spark.operators.profile_scalar import hist_sql
-    from serene_spark.operators.profile_textstats import NUM_PAT
-    from serene_spark.functions.sqlgen import rx
-
     # One data-scale pass: reduce the long relation to its (column, value)
-    # histogram, materialize THAT once (Spark inlines CTEs, so the six
-    # downstream consumers would otherwise recompute the shuffle), and derive
-    # every gated feature family from it in a single fused statement
-    # (profile_fused.py). PER-CALL view names: service.py serves each POST
-    # /train on its own thread, and a shared name would let one call's
+    # histogram, materialize THAT once (Spark inlines CTEs, so the
+    # downstream consumers would otherwise recompute the shuffle), and
+    # derive every gated feature family from it in a single fused
+    # statement. PER-CALL view names: service.py serves each POST /train on
+    # its own thread, and a shared name would let one call's
     # createOrReplaceTempView interleave with another's spark.sql parse,
     # silently training on the wrong data. spark.sql resolves views eagerly
     # at analysis, so both views are dropped before returning — the
@@ -92,53 +191,23 @@ def profile_features_from_long(
     tag = uuid.uuid4().hex
     view = f"__serene_feat_long_{tag}"
     hist_view = f"__serene_feat_hist_{tag}"
-    ncnt_view = f"__serene_feat_ncnt_{tag}"
     needs_numeric = settings is None or settings.needs_numeric
     long_df.createOrReplaceTempView(view)
     try:
-        # the numeric family reads its (column, num) counts three times
-        # (per-column stats, bucket totals, in-bucket median pass). r12
-        # materialized a grouped ncounts relation as a SECOND checkpoint,
-        # which the driver measured as a warm-rep regression at local[32]
-        # (per-checkpoint AQE/stage-scheduling cost > the saved regex
-        # scans). r13: fold the NUM_PAT parse INTO the hist checkpoint as
-        # two extra columns — the regex still runs once per distinct value,
-        # and ncounts becomes a plain filter VIEW over the checkpointed
-        # hist: no second materialization, no repeated regex, no extra
-        # exchange. Skipping ncounts' GROUP BY num is value-identical:
-        # every consumer is a sum/min/max over (num, c) (duplicate string
-        # forms of one numeric merge inside SUM), and the in-bucket
-        # cumulative window uses the default RANGE frame, so tied nums
-        # share one cumulative count exactly as the grouped form did.
-        hist_stmt = f"SELECT * FROM ({hist_sql(view)}) h"
-        if needs_numeric:
-            isnum = rx(SPARK, "trim(value)", NUM_PAT)
-            hist_stmt = (
-                f"SELECT column_name, value, cnt, ne, isnum, "
-                f"CASE WHEN isnum = 1 THEN CAST(trim(value) AS DECIMAL(28,10)) END AS num "
-                f"FROM (SELECT h.*, CASE WHEN {isnum} THEN 1 ELSE 0 END AS isnum "
-                f"FROM ({hist_sql(view)}) h) hn"
-            )
-        spark.sql(hist_stmt).transform(materialize).createOrReplaceTempView(hist_view)
-        if needs_numeric:
-            spark.sql(
-                f"SELECT column_name, num, cnt AS c FROM {hist_view} WHERE isnum = 1"
-            ).createOrReplaceTempView(ncnt_view)
+        spark.sql(staged_hist_sql(view, needs_numeric)).transform(
+            materialize
+        ).createOrReplaceTempView(hist_view)
         out = spark.sql(
             fused_profile_sql(
                 hist_view,
-                SPARK,
                 needs_textlen=settings is None or settings.needs_textlen,
                 needs_char_entropy=settings is None or settings.needs_char_entropy,
                 needs_numeric=needs_numeric,
-                ncounts_src=ncnt_view if needs_numeric else None,
             )
         ).transform(materialize)
     finally:
         spark.catalog.dropTempView(view)
         spark.catalog.dropTempView(hist_view)
-        if needs_numeric:
-            spark.catalog.dropTempView(ncnt_view)
 
     if settings is None:
         feature_cols = [c for c in out.columns if c != "column_name"]
@@ -233,6 +302,7 @@ def train_semantic_classifier(
         featuresCol="features",
     )
     pipeline = Pipeline(stages=[indexer, assembler, rf])
+    estimator = pipeline
     if do_cross_validation:
         from pyspark.ml.evaluation import MulticlassClassificationEvaluator
         from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
@@ -247,7 +317,7 @@ def train_semantic_classifier(
         evaluator = MulticlassClassificationEvaluator(
             labelCol="label", predictionCol="prediction", metricName="f1"
         )
-        cv = CrossValidator(
+        estimator = CrossValidator(
             estimator=pipeline,
             estimatorParamMaps=grid,
             evaluator=evaluator,
@@ -255,9 +325,14 @@ def train_semantic_classifier(
             seed=CV_SEED,
             parallelism=4,
         )
-        model = cv.fit(ordered).bestModel
-    else:
-        model = pipeline.fit(ordered)
+    # the cached training frame lives for the fit only: the service trains
+    # many times on one long-lived session
+    try:
+        model = estimator.fit(ordered)
+    finally:
+        ordered.unpersist()
+    if do_cross_validation:
+        model = model.bestModel
     label_converter = IndexToString(
         inputCol="prediction",
         outputCol="predicted_class",
@@ -514,9 +589,6 @@ def _fixture_fingerprint() -> str:
 
     import pyspark
 
-    from serene_spark.operators.profile_fused import fused_profile_sql
-    from serene_spark.operators.profile_scalar import hist_sql
-
     payload = "\n".join([
         inspect.getsource(make_fixture_long),
         inspect.getsource(_fixture_values),
@@ -527,8 +599,9 @@ def _fixture_fingerprint() -> str:
         inspect.getsource(profile_features_from_long),
         inspect.getsource(feature_columns),
         repr(FIXTURE_CLASSES),
-        hist_sql("__fp__"),
-        fused_profile_sql("__fp__", SPARK),
+        # the two statements the pipeline submits, with every family on
+        staged_hist_sql("__fp__"),
+        fused_profile_sql("__fp__"),
         f"rf={RF_TREES}/{RF_TREES_SMALL}/{RF_DEPTH}/{RF_SEED}",
         pyspark.__version__,
     ])

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from serene_spark.catalog import COLUMNS, load_table, register_views
 from serene_spark.functions.melt import melt, melt_sql
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq, rr, split_re
+from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode, explode_seq, rr, split_re
 from serene_spark.operators.profile_chardist import chardist_sql
 from serene_spark.operators.profile_typeinfer import typeinfer_sql
 from serene_spark.registry import register
@@ -88,10 +88,9 @@ def term_freq_sql(long_rel: str, dialect: str) -> str:
     strip non-alphanumerics, drop empties, L2-normalize counts."""
     tok = split_re(dialect, "lower(value)", "[\\n ,]+")
     clean = rr(dialect, "tok", "[^a-z0-9]")
-    if dialect == DUCKDB:
-        toks_rel = f"SELECT column_name, unnest({tok}) AS tok FROM {long_rel} AS lr WHERE {NONEMPTY}"
-    else:
-        toks_rel = f"SELECT column_name, explode({tok}) AS tok FROM {long_rel} AS lr WHERE {NONEMPTY}"
+    toks_rel = (
+        f"SELECT column_name, {explode(dialect, tok)} AS tok FROM {long_rel} AS lr WHERE {NONEMPTY}"
+    )
     return f"""
 WITH toks AS ({toks_rel}),
 terms AS (

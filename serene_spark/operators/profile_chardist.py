@@ -18,14 +18,24 @@ the fixed alphabet are zeros by construction).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import COLUMNS, load_table
-from serene_spark.functions.melt import melt_ids, melt_sql
+from serene_spark.catalog import COLUMNS
+from serene_spark.functions.melt import melt_sql, run_over_melt
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
 from serene_spark.registry import register
 
 NONEMPTY = "length(trim(value)) > 0"
+
+# (column, char) -> count over a ``chars`` (column_name, ch, vcnt) relation
+CHAR_COUNTS = """SELECT column_name, ch, CAST(SUM(vcnt) AS BIGINT) AS cnt
+  FROM chars WHERE length(ch) > 0 GROUP BY column_name, ch"""
+
+# normalized Shannon char entropy of one column's (ch, cnt) rows:
+# -(sum p*log2 p) / log2(98) with p = cnt/total, via the order-insensitive
+# identity  -sum p log2 p = log2(tot) - (sum c*log2 c)/tot
+SHANNON_CHAR_ENTROPY = """round(
+         (log2(CAST(SUM(cnt) AS DOUBLE))
+          - SUM(CAST(cnt AS DOUBLE) * log2(CAST(cnt AS DOUBLE))) / SUM(cnt)
+         ) / log2(98.0), 6) AS shannon_char_entropy"""
 
 
 def _chars_rel(long_rel: str, dialect: str) -> str:
@@ -52,8 +62,7 @@ def chardist_sql(long_rel: str, dialect: str) -> str:
     return f"""
 WITH chars AS ({_chars_rel(long_rel, dialect)}),
 counts AS (
-  SELECT column_name, ch, CAST(SUM(vcnt) AS BIGINT) AS cnt
-  FROM chars WHERE length(ch) > 0 GROUP BY column_name, ch
+  {CHAR_COUNTS}
 ),
 norms AS (
   SELECT column_name, sqrt(CAST(SUM(cnt * cnt) AS DOUBLE)) AS l2
@@ -66,42 +75,18 @@ FROM counts c JOIN norms n ON c.column_name = n.column_name
 
 
 def char_entropy_sql(long_rel: str, dialect: str) -> str:
-    """Per column: total/distinct chars + normalized Shannon char-entropy.
-
-    shannon = -(sum p*log2 p) / log2(98)  with p = cnt/total, computed via the
-    order-insensitive identity  -sum p log2 p = log2(tot) - (sum c*log2 c)/tot.
-    """
+    """Per column: total/distinct chars + normalized Shannon char-entropy."""
     return f"""
 WITH chars AS ({_chars_rel(long_rel, dialect)}),
 counts AS (
-  SELECT column_name, ch, CAST(SUM(vcnt) AS BIGINT) AS cnt
-  FROM chars WHERE length(ch) > 0 GROUP BY column_name, ch
+  {CHAR_COUNTS}
 )
 SELECT column_name,
        CAST(SUM(cnt) AS BIGINT) AS total_chars,
        CAST(COUNT(*) AS BIGINT) AS n_distinct_chars,
-       round(
-         (log2(CAST(SUM(cnt) AS DOUBLE))
-          - SUM(CAST(cnt AS DOUBLE) * log2(CAST(cnt AS DOUBLE))) / SUM(cnt)
-         ) / log2(98.0), 6) AS shannon_char_entropy
+       {SHANNON_CHAR_ENTROPY}
 FROM counts GROUP BY column_name
 """
-
-
-def _spark_over_melt(sql_fn, table: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        view = f"__serene_long_{table}"
-        # int column ids through the explode/count passes (guide §2.3),
-        # mapped back to names in the final small projection
-        long_df, name_case = melt_ids(load_table(spark, sf_dir, table))
-        long_df.createOrReplaceTempView(view)
-        return spark.sql(sql_fn(view, SPARK)).withColumn(
-            "column_name", F.expr(name_case)
-        )
-
-    return run
 
 
 for _t in ("customer", "documents"):
@@ -109,9 +94,17 @@ for _t in ("customer", "documents"):
         f"chardist_{_t}",
         oracle=chardist_sql(melt_sql(_t, COLUMNS[_t]), DUCKDB),
         doc=f"SURVEY §2.4 char-dist-features: L2-normalized char frequencies of `{_t}`",
-    )(_spark_over_melt(chardist_sql, _t))
+    )(
+        lambda spark, sf_dir, t=_t: run_over_melt(
+            spark, sf_dir, t, lambda v: chardist_sql(v, SPARK)
+        )
+    )
     register(
         f"char_entropy_{_t}",
         oracle=char_entropy_sql(melt_sql(_t, COLUMNS[_t]), DUCKDB),
         doc=f"SURVEY §2.3 shannon-entropy (normalized char entropy) of `{_t}`",
-    )(_spark_over_melt(char_entropy_sql, _t))
+    )(
+        lambda spark, sf_dir, t=_t: run_over_melt(
+            spark, sf_dir, t, lambda v: char_entropy_sql(v, SPARK)
+        )
+    )

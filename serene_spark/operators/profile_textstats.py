@@ -18,15 +18,17 @@ restricted to decimal-castable forms (no exponents) for exactness.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-from serene_spark.catalog import COLUMNS, load_table
-from serene_spark.functions.melt import melt_ids, melt_sql
+from serene_spark.catalog import COLUMNS
+from serene_spark.functions.melt import melt_sql, run_over_melt
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, rx
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
 
 NUM_PAT = "^[+-]?([0-9]{1,18}([.][0-9]{0,10})?|[.][0-9]{1,10})$"
+# the exact parse of a NUM_PAT match
+NUM_DECIMAL = "CAST(trim(value) AS DECIMAL(28,10))"
 
 
 def textlen_stats_sql(long_rel: str, dialect: str) -> str:
@@ -48,32 +50,35 @@ def len_counts_sql(long_rel: str) -> str:
 """
 
 
-def textlen_body(counts: str, p: str = "") -> str:
-    """Stats tail over an existing (column, len, c) relation — referenced by
-    three CTEs, so the Spark runner materializes it (CTE-inlining hazard).
-    ``p`` prefixes the CTE names so the tail can be embedded alongside the
-    numeric tail (which uses the same internal names) in one fused statement
-    (profile_fused.py)."""
-    return f"""
-{p}agg AS (
-  SELECT column_name, CAST(SUM(c) AS BIGINT) AS n,
+# per-column length aggregates over a (column, len, c) relation
+_TEXTLEN_AGGS = """SELECT column_name, CAST(SUM(c) AS BIGINT) AS n,
          round(CAST(SUM(len * c) AS DOUBLE) / SUM(c), 6) AS mean_len,
          CAST(MIN(len) AS BIGINT) AS min_len,
-         CAST(MAX(len) AS BIGINT) AS max_len
+         CAST(MAX(len) AS BIGINT) AS max_len"""
+
+
+def textlen_body(counts: str) -> str:
+    """Stats tail over an existing (column, len, c) relation, the form the
+    DuckDB oracle runs; it references ``counts`` three times (DuckDB
+    materializes such CTEs, Spark would inline and recompute them — Spark
+    runs :func:`textlen_onepass_body`)."""
+    return f"""
+agg AS (
+  {_TEXTLEN_AGGS}
   FROM {counts} GROUP BY column_name
 ),
-{p}cum AS (
+cum AS (
   SELECT column_name, len,
          SUM(c) OVER (PARTITION BY column_name ORDER BY len) AS cum_c
   FROM {counts}
 ),
-{p}med AS (
+med AS (
   SELECT cu.column_name, CAST(MIN(cu.len) AS BIGINT) AS median_len
-  FROM {p}cum cu JOIN {p}agg a ON cu.column_name = a.column_name
+  FROM cum cu JOIN agg a ON cu.column_name = a.column_name
   WHERE cu.cum_c >= CAST(ceil(a.n / 2.0) AS BIGINT)
   GROUP BY cu.column_name
 ),
-{p}mode1 AS (
+mode1 AS (
   SELECT column_name, CAST(len AS BIGINT) AS mode_len
   FROM (
     SELECT column_name, len,
@@ -84,9 +89,9 @@ def textlen_body(counts: str, p: str = "") -> str:
 SELECT a.column_name, a.n AS n_values, a.mean_len,
        CASE WHEN a.n < 2 THEN -1 ELSE m.median_len END AS median_len,
        mo.mode_len, a.min_len, a.max_len
-FROM {p}agg a
-JOIN {p}med m ON a.column_name = m.column_name
-JOIN {p}mode1 mo ON a.column_name = mo.column_name
+FROM agg a
+JOIN med m ON a.column_name = m.column_name
+JOIN mode1 mo ON a.column_name = mo.column_name
 """
 
 
@@ -123,10 +128,7 @@ SELECT column_name, n AS n_values, mean_len,
        CAST({mode_fold} AS BIGINT) AS mode_len,
        min_len, max_len
 FROM (
-  SELECT column_name, CAST(SUM(c) AS BIGINT) AS n,
-         round(CAST(SUM(len * c) AS DOUBLE) / SUM(c), 6) AS mean_len,
-         CAST(MIN(len) AS BIGINT) AS min_len,
-         CAST(MAX(len) AS BIGINT) AS max_len,
+  {_TEXTLEN_AGGS},
          sort_array(collect_list(struct(len, c))) AS lc
   FROM {counts} GROUP BY column_name
 ) a
@@ -143,21 +145,45 @@ def numeric_stats_sql(long_rel: str, dialect: str) -> str:
 
 def num_counts_sql(long_rel: str, dialect: str) -> str:
     """(column, numeric value) -> count: the one data-scale aggregation."""
-    num = "CAST(trim(value) AS DECIMAL(28,10))"
     return f"""
-  SELECT column_name, {num} AS num, CAST(COUNT(*) AS BIGINT) AS c
+  SELECT column_name, {NUM_DECIMAL} AS num, CAST(COUNT(*) AS BIGINT) AS c
   FROM {long_rel} AS lr
   WHERE {rx(dialect, 'trim(value)', NUM_PAT)}
-  GROUP BY column_name, {num}
+  GROUP BY column_name, {NUM_DECIMAL}
 """
 
 
 N_MED_BUCKETS = 1024
 
 
-def numeric_body(counts: str, p: str = "") -> str:
-    """Stats tail over an existing (column, num, c) relation (``p`` prefixes
-    CTE names for embedding — see textlen_body).
+def _bucket(stats: str, num: str) -> str:
+    """Median bucket of ``num`` given its column's min/max in ``stats``.
+    Double arithmetic: the exact decimal->double conversion is identical
+    in both engines and monotone, which is all bucketing needs."""
+    return (
+        f"CASE WHEN {stats}.max_num = {stats}.min_num THEN 0 "
+        f"ELSE LEAST({N_MED_BUCKETS - 1}, GREATEST(0, CAST(FLOOR("
+        f"(CAST({num} AS DOUBLE) - {stats}.min_num) / ({stats}.max_num - {stats}.min_num) "
+        f"* {N_MED_BUCKETS}) AS INT))) END"
+    )
+
+
+def _numeric_agg(counts: str) -> str:
+    """Per-column numeric stats CTE over a (column, num, c) relation."""
+    return f"""
+agg AS (
+  SELECT column_name, CAST(SUM(c) AS BIGINT) AS n_numeric,
+         round(CAST(SUM(num * c) AS DOUBLE) / SUM(c), 6) AS mean_num,
+         CAST(MIN(num) AS DOUBLE) AS min_num,
+         CAST(MAX(num) AS DOUBLE) AS max_num,
+         CAST(ceil(SUM(c) / 2.0) AS BIGINT) AS target_rank
+  FROM {counts} GROUP BY column_name
+),"""
+
+
+def numeric_body(counts: str) -> str:
+    """Stats tail over an existing (column, num, c) relation, the form the
+    DuckDB oracle runs (Spark runs :func:`numeric_onepass_body`).
 
     Unlike text lengths, distinct NUMERIC values can be row-cardinality
     (prices): a cumulative window partitioned by column_name would sort
@@ -169,64 +195,48 @@ def numeric_body(counts: str, p: str = "") -> str:
     containing the target rank, then (2) cumulate ONLY that bucket's values
     (~1/{N_MED_BUCKETS} of the relation).  Same answer, no large sort.
     """
-    # bucket arithmetic on DOUBLE casts: exact decimal->double conversion is
-    # identical in both engines and monotone, which is all bucketing needs
-    width = (
-        f"CASE WHEN a.max_num = a.min_num THEN 0 "
-        f"ELSE LEAST({N_MED_BUCKETS - 1}, GREATEST(0, CAST(FLOOR("
-        f"(CAST(num AS DOUBLE) - a.min_num) / (a.max_num - a.min_num) "
-        f"* {N_MED_BUCKETS}) AS INT))) END"
-    )
-    return f"""
-{p}agg AS (
-  SELECT column_name, CAST(SUM(c) AS BIGINT) AS n_numeric,
-         round(CAST(SUM(num * c) AS DOUBLE) / SUM(c), 6) AS mean_num,
-         CAST(MIN(num) AS DOUBLE) AS min_num,
-         CAST(MAX(num) AS DOUBLE) AS max_num,
-         CAST(ceil(SUM(c) / 2.0) AS BIGINT) AS target_rank
-  FROM {counts} GROUP BY column_name
+    return _numeric_agg(counts) + f"""
+bucketed AS (
+  SELECT cc.column_name, cc.num, cc.c, {_bucket('a', 'num')} AS bkt
+  FROM {counts} AS cc JOIN agg a ON cc.column_name = a.column_name
 ),
-{p}bucketed AS (
-  SELECT cc.column_name, cc.num, cc.c, {width} AS bkt
-  FROM {counts} AS cc JOIN {p}agg a ON cc.column_name = a.column_name
-),
-{p}bcum AS (
+bcum AS (
   SELECT column_name, bkt, SUM(bc) OVER (
            PARTITION BY column_name ORDER BY bkt) AS cum_c,
          SUM(bc) OVER (PARTITION BY column_name ORDER BY bkt) - bc AS cum_before
   FROM (
     SELECT column_name, bkt, SUM(c) AS bc
-    FROM {p}bucketed GROUP BY column_name, bkt
+    FROM bucketed GROUP BY column_name, bkt
   ) b
 ),
-{p}medbkt AS (
+medbkt AS (
   -- the bucket where the cumulative count first reaches the target rank
   SELECT bc.column_name, MIN(bc.bkt) AS bkt
-  FROM {p}bcum bc JOIN {p}agg a ON bc.column_name = a.column_name
+  FROM bcum bc JOIN agg a ON bc.column_name = a.column_name
   WHERE bc.cum_c >= a.target_rank
   GROUP BY bc.column_name
 ),
-{p}inbkt AS (
+inbkt AS (
   -- cumulative counts over the median bucket's values only
   SELECT b.column_name, b.num,
          mb2.cum_before + SUM(b.c) OVER (
            PARTITION BY b.column_name ORDER BY b.num) AS cum_c
-  FROM {p}bucketed b
-  JOIN {p}medbkt m ON b.column_name = m.column_name AND b.bkt = m.bkt
-  JOIN {p}bcum mb2 ON b.column_name = mb2.column_name AND b.bkt = mb2.bkt
+  FROM bucketed b
+  JOIN medbkt m ON b.column_name = m.column_name AND b.bkt = m.bkt
+  JOIN bcum mb2 ON b.column_name = mb2.column_name AND b.bkt = mb2.bkt
 ),
-{p}med AS (
+med AS (
   SELECT cu.column_name, CAST(MIN(cu.num) AS DOUBLE) AS median_num
-  FROM {p}inbkt cu JOIN {p}agg a ON cu.column_name = a.column_name
+  FROM inbkt cu JOIN agg a ON cu.column_name = a.column_name
   WHERE cu.cum_c >= a.target_rank
   GROUP BY cu.column_name
 )
 SELECT a.column_name, a.n_numeric, a.mean_num, m.median_num, a.min_num, a.max_num
-FROM {p}agg a JOIN {p}med m ON a.column_name = m.column_name
+FROM agg a JOIN med m ON a.column_name = m.column_name
 """
 
 
-def numeric_onepass_body(counts: str, p: str = "") -> str:
+def numeric_onepass_body(counts: str) -> str:
     """Spark-only physical form of :func:`numeric_body`.
 
     Same two-level exact-median algorithm (bucket → in-bucket), same
@@ -250,19 +260,6 @@ def numeric_onepass_body(counts: str, p: str = "") -> str:
     Integer/decimal arithmetic identical to ``numeric_body``; the bucket
     arithmetic is the same double expression. Parity vs the
     numeric_body-built DuckDB oracle pins equality."""
-    width = (
-        f"CASE WHEN a.max_num = a.min_num THEN 0 "
-        f"ELSE LEAST({N_MED_BUCKETS - 1}, GREATEST(0, CAST(FLOOR("
-        f"(CAST(num AS DOUBLE) - a.min_num) / (a.max_num - a.min_num) "
-        f"* {N_MED_BUCKETS}) AS INT))) END"
-    )
-    # same expression over the median-bucket row (stats carried in m.*)
-    width_m = (
-        f"CASE WHEN m.max_num = m.min_num THEN 0 "
-        f"ELSE LEAST({N_MED_BUCKETS - 1}, GREATEST(0, CAST(FLOOR("
-        f"(CAST(cc.num AS DOUBLE) - m.min_num) / (m.max_num - m.min_num) "
-        f"* {N_MED_BUCKETS}) AS INT))) END"
-    )
     medb_fold = """aggregate(sort_array(collect_list(struct(bkt, bc))),
              named_struct('cum', CAST(0 AS BIGINT), 'bkt', CAST(NULL AS INT), 'before', CAST(0 AS BIGINT)),
              (acc, x) -> CASE
@@ -270,16 +267,8 @@ def numeric_onepass_body(counts: str, p: str = "") -> str:
                WHEN acc.cum + x.bc >= target_rank
                  THEN named_struct('cum', acc.cum + x.bc, 'bkt', x.bkt, 'before', acc.cum)
                ELSE named_struct('cum', acc.cum + x.bc, 'bkt', CAST(NULL AS INT), 'before', CAST(0 AS BIGINT)) END)"""
-    return f"""
-{p}agg AS (
-  SELECT column_name, CAST(SUM(c) AS BIGINT) AS n_numeric,
-         round(CAST(SUM(num * c) AS DOUBLE) / SUM(c), 6) AS mean_num,
-         CAST(MIN(num) AS DOUBLE) AS min_num,
-         CAST(MAX(num) AS DOUBLE) AS max_num,
-         CAST(ceil(SUM(c) / 2.0) AS BIGINT) AS target_rank
-  FROM {counts} GROUP BY column_name
-),
-{p}medb AS (
+    return _numeric_agg(counts) + f"""
+medb AS (
   -- single chain: bucket totals (grouped on the recomputed bucket id)
   -- cumulated per column by one fold → the median bucket, the cumulative
   -- count before it, and the per-column stats carried through
@@ -294,15 +283,15 @@ def numeric_onepass_body(counts: str, p: str = "") -> str:
              MIN(min_num) AS min_num, MIN(max_num) AS max_num,
              MIN(target_rank) AS target_rank
       FROM (
-        SELECT cc.column_name, cc.num, cc.c, {width} AS bkt,
+        SELECT cc.column_name, cc.num, cc.c, {_bucket('a', 'num')} AS bkt,
                a.n_numeric, a.mean_num, a.min_num, a.max_num, a.target_rank
-        FROM {counts} AS cc JOIN {p}agg a ON cc.column_name = a.column_name
+        FROM {counts} AS cc JOIN agg a ON cc.column_name = a.column_name
       ) bk GROUP BY column_name, bkt
     ) bt
     GROUP BY column_name, n_numeric, mean_num, min_num, max_num, target_rank
   ) f
 ),
-{p}inbkt AS (
+inbkt AS (
   -- cumulative counts over the median bucket's values only; the bucket id
   -- is re-derived from medb's min/max (same deterministic expression), so
   -- the counts relation is read once here instead of via a shared
@@ -312,54 +301,24 @@ def numeric_onepass_body(counts: str, p: str = "") -> str:
          m.cum_before + SUM(cc.c) OVER (
            PARTITION BY cc.column_name ORDER BY cc.num) AS cum_c
   FROM {counts} AS cc
-  JOIN {p}medb m ON cc.column_name = m.column_name AND ({width_m}) = m.bkt
+  JOIN medb m ON cc.column_name = m.column_name AND ({_bucket('m', 'cc.num')}) = m.bkt
 )
 SELECT column_name, MIN(n_numeric) AS n_numeric, MIN(mean_num) AS mean_num,
        CAST(MIN(num) AS DOUBLE) AS median_num,
        MIN(min_num) AS min_num, MIN(max_num) AS max_num
-FROM {p}inbkt
+FROM inbkt
 WHERE cum_c >= target_rank
 GROUP BY column_name
 """
 
 
-def _make(counts_fn, body_fn, table: str, tag: str):
-    """Materialized runner: the stats tail references the counts relation in
-    three CTEs and Spark inlines CTEs, so the data-scale (column, value)
-    aggregation is computed once via eager localCheckpoint."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        view = f"__serene_long_{table}"
-        # int column ids through the counts pass and the stats tail (guide
-        # §2.3), mapped back to names in the final ≤#columns-row projection
-        long_df, name_case = melt_ids(load_table(spark, sf_dir, table))
-        long_df.createOrReplaceTempView(view)
-        rel = f"__serene_{tag}_{table}"
-        spark.sql(counts_fn(view)).transform(materialize).createOrReplaceTempView(rel)
-        return spark.sql("WITH " + body_fn(rel)).withColumn(
-            "column_name", F.expr(name_case)
-        )
-
-    return run
-
-
-def _make_textlen(table: str):
-    """Single-statement runner: the one-pass body references counts once,
-    so no materialization (and no checkpoint job) is needed."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        view = f"__serene_long_{table}"
-        long_df, name_case = melt_ids(load_table(spark, sf_dir, table))
-        long_df.createOrReplaceTempView(view)
-        return spark.sql(
-            f"WITH counts AS ({len_counts_sql(view)})" + textlen_onepass_body("counts")
-        ).withColumn("column_name", F.expr(name_case))
-
-    return run
+def _numeric_statement(spark: SparkSession, table: str, view: str) -> str:
+    """The stats tail references the counts relation in three CTEs and
+    Spark inlines CTEs, so the data-scale (column, num) aggregation is
+    computed once via eager localCheckpoint."""
+    rel = f"__serene_numcnt_{table}"
+    spark.sql(num_counts_sql(view, SPARK)).transform(materialize).createOrReplaceTempView(rel)
+    return "WITH " + numeric_onepass_body(rel)
 
 
 for _t in ("customer", "part", "documents"):
@@ -367,11 +326,21 @@ for _t in ("customer", "part", "documents"):
         f"textlen_stats_{_t}",
         oracle=textlen_stats_sql(melt_sql(_t, COLUMNS[_t]), DUCKDB),
         doc=f"SURVEY §2.4 stats-of-text-length over `{_t}`",
-    )(_make_textlen(_t))
+    )(
+        # the one-pass body references counts once: no materialization
+        lambda spark, sf_dir, t=_t: run_over_melt(
+            spark, sf_dir, t,
+            lambda v: f"WITH counts AS ({len_counts_sql(v)})" + textlen_onepass_body("counts"),
+        )
+    )
 
 for _t in ("customer", "lineitem"):
     register(
         f"numeric_stats_{_t}",
         oracle=numeric_stats_sql(melt_sql(_t, COLUMNS[_t]), DUCKDB),
         doc=f"SURVEY §2.4 stats-of-numerical-type over `{_t}`",
-    )(_make(lambda v: num_counts_sql(v, SPARK), numeric_onepass_body, _t, "numcnt"))
+    )(
+        lambda spark, sf_dir, t=_t: run_over_melt(
+            spark, sf_dir, t, lambda v: _numeric_statement(spark, t, v)
+        )
+    )

@@ -21,10 +21,8 @@ Divergences, by design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import COLUMNS, load_table
-from serene_spark.functions.melt import melt_ids, melt_sql
+from serene_spark.catalog import COLUMNS
+from serene_spark.functions.melt import melt_sql, run_over_melt
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, rx
 from serene_spark.registry import register
 
@@ -107,6 +105,20 @@ def classify_expr(dialect: str, value: str = "trim(value)") -> str:
     END"""
 
 
+def _typed_votes(long_rel: str, dialect: str) -> str:
+    """Body of the ``typed`` CTE (per-row type of each non-empty value) and
+    the ``votes`` CTE after it: (column, type) -> count."""
+    return f"""  SELECT column_name, {classify_expr(dialect)} AS inferred
+  FROM {long_rel} AS lr
+  WHERE length(trim(value)) > 0
+),
+votes AS (
+  SELECT column_name, inferred, CAST(COUNT(*) AS BIGINT) AS votes
+  FROM typed GROUP BY column_name, inferred
+),
+"""
+
+
 def typeinfer_sql(long_rel: str, dialect: str) -> str:
     """Majority-vote inferred type per column, with vote counts."""
     return f"""
@@ -116,15 +128,7 @@ WITH typed AS (
   -- the shuffle. (A (column, value) histogram first was measured SLOWER on
   -- mostly-distinct columns — the extra wide shuffle outweighs running the
   -- regex cascade once per distinct value.)
-  SELECT column_name, {classify_expr(dialect)} AS inferred
-  FROM {long_rel} AS lr
-  WHERE length(trim(value)) > 0
-),
-votes AS (
-  SELECT column_name, inferred, CAST(COUNT(*) AS BIGINT) AS votes
-  FROM typed GROUP BY column_name, inferred
-),
-tot AS (
+{_typed_votes(long_rel, dialect)}tot AS (
   SELECT column_name, CAST(SUM(votes) AS BIGINT) AS n FROM votes GROUP BY column_name
 ),
 ranked AS (
@@ -161,15 +165,7 @@ def typeinfer_onepass_sql(long_rel: str, dialect: str) -> str:
     ) + " END"
     return f"""
 WITH typed AS (
-  SELECT column_name, {classify_expr(dialect)} AS inferred
-  FROM {long_rel} AS lr
-  WHERE length(trim(value)) > 0
-),
-votes AS (
-  SELECT column_name, inferred, CAST(COUNT(*) AS BIGINT) AS votes
-  FROM typed GROUP BY column_name, inferred
-),
-top AS (
+{_typed_votes(long_rel, dialect)}top AS (
   SELECT column_name,
          MAX(STRUCT(votes, {tiebreak} AS nr, inferred)) AS w,
          CAST(SUM(votes) AS BIGINT) AS n
@@ -181,25 +177,13 @@ FROM top
 """
 
 
-def _make(table: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        view = f"__serene_long_{table}"
-        # int column ids through the cascade/vote (guide §2.3), mapped back
-        # to names in the final ≤#columns-row projection
-        long_df, name_case = melt_ids(load_table(spark, sf_dir, table))
-        long_df.createOrReplaceTempView(view)
-        return spark.sql(typeinfer_onepass_sql(view, SPARK)).withColumn(
-            "column_name", F.expr(name_case)
-        )
-
-    return run
-
-
 for _t in ("customer", "orders", "events", "lineitem"):
     register(
         f"typeinfer_{_t}",
         oracle=typeinfer_sql(melt_sql(_t, COLUMNS[_t]), DUCKDB),
         doc=f"SURVEY §2.4 inferred-data-type majority vote over `{_t}`",
-    )(_make(_t))
+    )(
+        lambda spark, sf_dir, t=_t: run_over_melt(
+            spark, sf_dir, t, lambda v: typeinfer_onepass_sql(v, SPARK)
+        )
+    )

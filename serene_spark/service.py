@@ -373,7 +373,6 @@ def _make_handler(svc: SereneService):
             body = self._body()
             name = body.get("name", "")
             from serene_spark.registry import load_all
-            from serene_spark.session import get_spark
 
             queries = load_all()
             if name not in queries:
@@ -396,7 +395,7 @@ def _make_handler(svc: SereneService):
             # on the shared session, so concurrent requests would silently
             # read each other's corpus — serialize build+collect
             with _QUERY_LOCK:
-                df = queries[name].spark(get_spark(), sf_dir)
+                df = queries[name].spark(svc.spark, sf_dir)
                 rows = [r.asDict() for r in df.limit(limit).collect()]
             self._send(200, {"name": name, "n_rows": len(rows),
                              "rows": json.loads(json.dumps(rows, default=str))})

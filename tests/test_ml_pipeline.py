@@ -207,6 +207,25 @@ def test_train_collect_guard(spark, monkeypatch):
         pl.train_semantic_classifier(spark, big)
 
 
+def test_train_leaves_no_cached_frame(spark):
+    """Training caches its single-partition training frame for the fit
+    only: on a long-lived session (the HTTP service) each train must leave
+    the persistent-RDD count as it found it."""
+    from serene_spark.ml.pipeline import RF_TREES_SMALL, train_semantic_classifier
+
+    small = spark.range(12).selectExpr(
+        "CAST(id AS STRING) AS column_name",
+        "CASE WHEN id % 3 = 0 THEN 'a' WHEN id % 3 = 1 THEN 'b' ELSE 'c' END AS class",
+        "CAST(id % 3 AS DOUBLE) AS f1",
+        "CAST(id AS DOUBLE) AS f2",
+    )
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    before = persistent.size()
+    model, _ = train_semantic_classifier(spark, small)
+    assert model.stages[-1].getNumTrees == RF_TREES_SMALL
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == before
+
+
 def test_fixture_model_disk_cache_parity(spark, tmp_path, monkeypatch):
     """The disk-cached fixture pipeline predicts IDENTICALLY to a freshly
     trained one — the cache is a pure persistence tier, never a semantic

@@ -9,6 +9,7 @@ import urllib.request
 
 import pytest
 
+from serene_spark.catalog import COLUMNS
 from serene_spark.service import SereneService, start_server
 
 
@@ -146,6 +147,24 @@ def test_query_endpoints(server):
 
     code, err = _req(server, "POST", "/v1.0/query/run", {"name": "nope"})
     assert code == 404 and "unknown query" in err["error"]
+
+
+def test_query_run_keeps_session_conf(server, spark, sf_dir):
+    """POST /v1.0/query/run runs on the service's own session and leaves its
+    SQL conf alone (a builder ``getOrCreate()`` would re-apply the
+    builder's options, shuffle partitions among them)."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")  # a value no session builder here picks
+    try:
+        code, out = _req(
+            server, "POST", "/v1.0/query/run", {"name": "profile_scalar_nation", "sf_dir": sf_dir}
+        )
+        assert code == 200
+        assert {r["column_name"] for r in out["rows"]} == set(COLUMNS["nation"])
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_query_run_sf_dir_allowlist(server):
