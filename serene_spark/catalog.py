@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from serene_spark.functions.sqlgen import SPARK
 from serene_spark.session import tune_session
 
 TABLES = (
@@ -149,6 +150,20 @@ def register_views(
         if spread:
             df = _spread(df, key_cols=SPREAD_KEYS.get(t))
         df.createOrReplaceTempView(t)
+
+
+def sql_runner(sql_fn, tables: tuple[str, ...], spread: bool = False):
+    """Registry callable for a query that is one Spark SQL statement: bind
+    ``tables`` as views, then run ``sql_fn(SPARK)`` (built on every run)."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir, tables, spread=spread)
+        return spark.sql(sql_fn(SPARK))
+
+    # the query belongs to the module that defines its SQL: tools/parity.py
+    # hashes that module's imports to tell which queries an edit makes stale
+    run.__module__ = sql_fn.__module__
+    return run
 
 
 def compose_with(bases: list[tuple[str, str]], tail_sql: str) -> str:

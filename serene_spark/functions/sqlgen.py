@@ -69,6 +69,13 @@ def split_re(dialect: str, expr: str, pat: str) -> str:
     return f"split({expr}, '{pat}')"
 
 
+def split_chars(dialect: str, expr: str) -> str:
+    """Split a string into an array of its characters."""
+    if dialect == DUCKDB:
+        return f"string_split({expr}, '')"
+    return f"split({expr}, '')"
+
+
 def explode_seq(dialect: str, lo: str | int, hi_incl: str) -> str:
     """Generate one row per integer in [lo, hi_incl] (select-list generator)."""
     if dialect == DUCKDB:

@@ -21,8 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import SPARK
+from serene_spark.catalog import sql_runner
 from serene_spark.operators.text_analysis import text_quality_sql
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
@@ -53,11 +52,9 @@ import os
 TRAIN_PARTITIONS = int(os.environ.get("SERENE_QUALITY_TRAIN_PARTITIONS", "8"))
 
 
-def quality_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature relation: text_quality_sql's continuous features + the rule
-    gate as the weak label."""
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    return spark.sql(text_quality_sql(SPARK))
+# Feature relation ``(spark, sf_dir) -> DataFrame``: text_quality_sql's
+# continuous features + the rule gate as the weak label.
+quality_frame = sql_runner(text_quality_sql, ("documents",), spread=True)
 
 
 def train_quality_model(spark: SparkSession, sf_dir: str):

@@ -23,7 +23,7 @@ materialized as an array.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, register_views, run_materialized
+from serene_spark.catalog import compose_with, run_materialized, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us
 from serene_spark.registry import register
 
@@ -97,21 +97,13 @@ ORDER BY channel
 """
 
 
-def _runner(sql: str):
-    def run(spark, sf_dir):
-        register_views(spark, sf_dir, ("events",))
-        return spark.sql(sql)
-
-    return run
-
-
 register(
     "attribution_position_u",
     oracle=_position_sql(DUCKDB),
     doc="U-shaped (40/20/40) position-based multi-touch attribution over "
     "the engine-wide journey definition; exact-rational credits quantized "
     "to 12 dp and decimal-summed per channel",
-)(_runner(_position_sql(SPARK)))
+)(sql_runner(_position_sql, ("events",)))
 
 register(
     "attribution_time_decay",
@@ -119,7 +111,7 @@ register(
     doc=f"Time-decay attribution (half-life {HALF_LIFE_DAYS} days) against "
     "the conversion instant, normalized per conversion, 12-dp-quantized "
     "decimal channel sums",
-)(_runner(_decay_sql(SPARK)))
+)(sql_runner(_decay_sql, ("events",)))
 
 
 # --- exact Shapley attribution (4-channel coalition game) --------------------

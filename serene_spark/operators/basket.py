@@ -15,10 +15,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us, idiv
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_us, idiv
 from serene_spark.registry import register
 
 MIN_SUPPORT = 3  # orders containing the pair (63 pairs at sf0.01, 433 at sf0.001)
@@ -93,25 +91,17 @@ FROM cum
 """
 
 
-def _q(sql_fn, tables):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "basket_part_lift",
     oracle=basket_lift_sql(DUCKDB),
     doc=f"association rules over order baskets: support/confidence/lift "
     f"for part pairs co-ordered >= {MIN_SUPPORT} times; in-basket "
     "candidate generation, never catalog-squared",
-)(_q(basket_lift_sql, ("lineitem",)))
+)(sql_runner(basket_lift_sql, ("lineitem",)))
 
 register(
     "conversion_lag_quantiles",
     oracle=conversion_lag_sql(DUCKDB),
     doc="exact p50/p90 view->purchase latency via the count-histogram "
     "quantile over per-user first-conversion lags",
-)(_q(conversion_lag_sql, ("events",)))
+)(sql_runner(conversion_lag_sql, ("events",)))

@@ -31,12 +31,9 @@ Scale shapes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
-    SPARK,
     agg_ordered,
     arr_filter_nonempty,
     arr_join,
@@ -157,19 +154,11 @@ FROM documents d LEFT JOIN (
 """
 
 
-def _docs_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("documents",), spread=True)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register("boilerplate_strip", oracle=boilerplate_strip_sql(DUCKDB),
          doc=f"CCNet-style boilerplate removal: drop word {SEG_W}-gram segments "
          f"repeating in >= {BOILER_DF} docs, reconstruct kept text")(
-    _docs_query(boilerplate_strip_sql))
+    sql_runner(boilerplate_strip_sql, ("documents",), spread=True))
 register("segment_dedup", oracle=segment_dedup_sql(DUCKDB),
          doc="corpus-wide first-occurrence segment dedup manifest "
          "(exact paragraph dedup, arXiv:2107.06499)")(
-    _docs_query(segment_dedup_sql))
+    sql_runner(segment_dedup_sql, ("documents",), spread=True))

@@ -24,10 +24,8 @@ decimal-exact sums of those rounded means.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq, hex_to_int
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, explode_seq, hex_to_int
 from serene_spark.registry import register
 
 B_REPS = 100
@@ -108,18 +106,10 @@ FROM folded f CROSS JOIN point p
 """
 
 
-def _orders_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("orders",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "bootstrap_ci_revenue",
     oracle=bootstrap_sql(DUCKDB),
     doc=f"Poisson-bootstrap percentile CI + SE for mean order value: "
     f"{B_REPS} replicates materialized in ONE scan via independent "
     "deterministic Poisson(1) weights — no global resampling coordination",
-)(_orders_query(bootstrap_sql))
+)(sql_runner(bootstrap_sql, ("orders",)))

@@ -24,9 +24,7 @@ once on the key.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us
 from serene_spark.registry import register
 
@@ -86,20 +84,12 @@ WHERE op <> 'D'
 """
 
 
-def _events_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("events",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register("cdc_latest_state", oracle=cdc_latest_state_sql(DUCKDB),
          doc="CDC/MERGE apply: latest op per key wins, DELETE-latest keys "
-         "absent (lakehouse upsert semantics)")(_events_query(cdc_latest_state_sql))
+         "absent (lakehouse upsert semantics)")(sql_runner(cdc_latest_state_sql, ("events",)))
 register("scd2_history", oracle=scd2_history_sql(DUCKDB),
          doc="SCD type-2 dimension history: versioned rows with "
-         "[valid_from, valid_to) and is_current flags")(_events_query(scd2_history_sql))
+         "[valid_from, valid_to) and is_current flags")(sql_runner(scd2_history_sql, ("events",)))
 
 
 # --- Erasure cascade (right-to-be-forgotten planning) -----------------------
@@ -142,14 +132,9 @@ SELECT 'lineitem', CAST((SELECT n FROM n_li) AS BIGINT)
 """
 
 
-def _erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("customer", "orders", "lineitem"))
-    return spark.sql(erasure_cascade_sql(SPARK))
-
-
 register("erasure_cascade_plan", oracle=erasure_cascade_sql(DUCKDB),
          doc="right-to-be-forgotten planner: per-table delete counts along "
-         "the customer->orders->lineitem FK closure, one atomic statement")(_erasure)
+         "the customer->orders->lineitem FK closure, one atomic statement")(sql_runner(erasure_cascade_sql, ("customer", "orders", "lineitem")))
 
 
 # --- Point-in-time (SCD2 temporal) lookup -----------------------------------
@@ -224,12 +209,7 @@ WHERE is_fact = 1
 """
 
 
-def _pit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(scd2_point_in_time_sql(SPARK))
-
-
 register("scd2_point_in_time", oracle=scd2_point_in_time_sql(DUCKDB),
          doc="point-in-time join: each purchase enriched with its user's "
          "CDC state at purchase time (live/deleted/none), tagged-union "
-         "window — one shuffle, no pair materialization")(_pit)
+         "window — one shuffle, no pair materialization")(sql_runner(scd2_point_in_time_sql, ("events",)))

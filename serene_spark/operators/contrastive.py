@@ -24,10 +24,8 @@ ANN).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, bxor, explode_seq, shl
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, bxor, explode_seq, shl
 from serene_spark.operators.similarity import (
     ann_geom_rel,
     bucket_expr,
@@ -97,14 +95,9 @@ WHERE (role = 'negative' AND rk <= {NEG_K}) OR (role = 'positive' AND rk = 1)
 """
 
 
-def _contrastive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("embeddings",), spread=True)
-    return spark.sql(contrastive_sql(SPARK))
-
-
 register(
     "contrastive_pairs",
     oracle=contrastive_sql(DUCKDB),
     doc=f"contrastive mining: top-{NEG_K} hardest cross-label negatives + "
     "hardest same-label positive per anchor via the bucketed ANN join",
-)(_contrastive)
+)(sql_runner(contrastive_sql, ("embeddings",), spread=True))

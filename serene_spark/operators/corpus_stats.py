@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import compose_with, register_views, run_materialized
+from serene_spark.catalog import compose_with, register_views, run_materialized, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq, hex_to_int
 from serene_spark.operators.curation import grams_rel
 from serene_spark.operators.text_analysis import tokens_rel
@@ -424,18 +424,13 @@ FROM mom
 """
 
 
-def _zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    return spark.sql(zipf_fit_sql(SPARK))
-
-
 register(
     "zipf_fit_tokens",
     oracle=zipf_fit_sql(DUCKDB),
     doc=f"Zipf exponent via log-log least squares over the top-{ZIPF_TOP_N} "
     "token ranks (deterministic rank, decimal-summed log moments): the "
     "vocabulary-concentration summary beside the CMS heavy hitters",
-)(_zipf)
+)(sql_runner(zipf_fit_sql, ("documents",), spread=True))
 
 
 # --- Heaps-law fit: vocabulary growth against corpus size -------------------
@@ -506,15 +501,10 @@ FROM mom
 """
 
 
-def _heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    return spark.sql(heaps_fit_sql(SPARK))
-
-
 register(
     "heaps_fit_tokens",
     oracle=heaps_fit_sql(DUCKDB),
     doc="Heaps-law vocabulary-growth exponent via log-log least squares "
     "over the doc-ordered (corpus size, vocabulary size) curve — the "
     "capacity-planning twin of the Zipf fit (per-type state growth)",
-)(_heaps)
+)(sql_runner(heaps_fit_sql, ("documents",), spread=True))

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -404,61 +404,35 @@ FROM pairs GROUP BY drop_id
 """
 
 
-def _docs_query(sql_fn, spread: bool = True):
-    """``spread=False`` for map-only/key-hash queries: the round-robin
-    repartition only pays when there is per-row text compute to
-    parallelize from a single-file local input (decontaminate's gram
-    explode, snapshot-delta's full-text md5) — for a doc_id-keyed filter it
-    is a pure-overhead shuffle (and Spark pushes the filter below it)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("documents",), spread=spread)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
-def _customer_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("customer",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
-def _embeddings_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("embeddings",), spread=True)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
+# spread=True only where there is per-row text compute to parallelize from a
+# single-file local input (decontaminate's gram explode, snapshot-delta's
+# full-text md5); for map-only/key-hash queries the round-robin repartition
+# is a pure-overhead shuffle (and Spark pushes the filter below it).
 register("decontaminate", oracle=decontaminate_sql(DUCKDB),
          doc=f"benchmark decontamination: word {GRAM_K}-gram overlap vs the "
-         "held-out subset, per-doc contamination flag")(_docs_query(decontaminate_sql))
+         "held-out subset, per-doc contamination flag")(sql_runner(decontaminate_sql, ("documents",), spread=True))
 register("stratified_sample", oracle=stratified_sample_sql(DUCKDB),
          doc="per-language stratified sample via deterministic md5 threshold "
-         "(map-only, engine-independent draw)")(_docs_query(stratified_sample_sql, spread=False))
+         "(map-only, engine-independent draw)")(sql_runner(stratified_sample_sql, ("documents",)))
 register("corpus_mix_plan", oracle=corpus_mix_plan_sql(DUCKDB),
          doc="mixture planning: per-language take under an equal-weight "
-         "budget with availability caps")(_docs_query(corpus_mix_plan_sql, spread=False))
+         "budget with availability caps")(sql_runner(corpus_mix_plan_sql, ("documents",)))
 register("temperature_mix_plan", oracle=temperature_mix_sql(DUCKDB),
          doc="temperature-based language mixing (p ~ n^0.7, Conneau & "
          "Lample): shares, upsample ratios, budgeted takes, repeat "
-         "factors")(_docs_query(temperature_mix_sql, spread=False))
+         "factors")(sql_runner(temperature_mix_sql, ("documents",)))
 register("snapshot_delta_dedup", oracle=snapshot_delta_sql(DUCKDB),
          doc="incremental dedup: new-crawl docs anti-joined against the old "
-         "snapshot's fingerprint index")(_docs_query(snapshot_delta_sql))
+         "snapshot's fingerprint index")(sql_runner(snapshot_delta_sql, ("documents",), spread=True))
 register("shard_assign", oracle=shard_assign_sql(DUCKDB),
          doc=f"deterministic {N_SHARDS}-way hash sharding manifest "
-         "(global training shuffle)")(_docs_query(shard_assign_sql, spread=False))
+         "(global training shuffle)")(sql_runner(shard_assign_sql, ("documents",)))
 register("pii_scan_customer", oracle=pii_scan_sql(DUCKDB),
          doc="PII scan + digit redaction over customer contact columns "
-         "(map-only regex)")(_customer_query(pii_scan_sql))
+         "(map-only regex)")(sql_runner(pii_scan_sql, ("customer",)))
 register("semdedup", oracle=semdedup_sql(DUCKDB),
          doc="semantic dedup (SemDeDup): within-cluster near-dup drop list "
-         "over embeddings")(_embeddings_query(semdedup_sql))
+         "over embeddings")(sql_runner(semdedup_sql, ("embeddings",), spread=True))
 
 
 # --- curriculum ordering ------------------------------------------------------
@@ -513,18 +487,13 @@ FROM scored s
 """
 
 
-def _curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(curriculum_plan_sql(SPARK))
-
-
 register(
     "curriculum_plan",
     oracle=curriculum_plan_sql(DUCKDB),
     doc="curriculum stages by quality quantile (stage 0 = most natural "
     "first) + deterministic within-stage shuffle key; window-free over "
     "the corpus — boundaries from the count-histogram quantile",
-)(_curriculum)
+)(sql_runner(curriculum_plan_sql, ("documents",)))
 
 
 EXEMPLARS_PER_SOURCE = 3
@@ -555,7 +524,7 @@ register(
     doc=f"deterministic {EXEMPLARS_PER_SOURCE}-exemplar sample per source "
     "(md5-ordered keyed rank — uniform, engine-independent, never a "
     "partition-order LIMIT)",
-)(_docs_query(exemplars_sql, spread=False))
+)(sql_runner(exemplars_sql, ("documents",)))
 
 
 # --- Source-level quality profile: the host/domain filtering stage ----------

@@ -33,7 +33,7 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -863,14 +863,6 @@ def dedup_simhash_pairs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"WITH {simhash_pairs_body(SPARK, '__serene_sim')}")
 
 
-def _sql_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("documents",), spread=True)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 # Exact-quadratic baselines refuse data-scale corpora (same refuse-and-
 # point-at-the-scale-sibling contract as train_semantic_classifier's
 # TRAIN_COLLECT_MAX guard in ml/pipeline.py): the probe is one parquet
@@ -908,13 +900,13 @@ def _guarded_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 register("dedup_exact", oracle=dedup_exact_sql(DUCKDB),
-         doc="exact dedup: normalized-text hash groups with keeper doc id")(_sql_query(dedup_exact_sql))
+         doc="exact dedup: normalized-text hash groups with keeper doc id")(sql_runner(dedup_exact_sql, ("documents",), spread=True))
 register("dedup_ngram_jaccard", oracle=ngram_jaccard_sql(DUCKDB),
          doc=f"char-{SHINGLE_K}-gram Jaccard near-dup pairs (exact quadratic "
              f"baseline; refuses corpora > {EXACT_BASELINE_MAX_DOCS} docs — "
              f"use dedup_lsh_verified at scale)")(_guarded_ngram_jaccard)
 register("minhash_signatures", oracle=minhash_signatures_sql(DUCKDB),
-         doc=f"{N_MINHASH}-permutation MinHash signatures (md5-min portable hashing)")(_sql_query(minhash_signatures_sql))
+         doc=f"{N_MINHASH}-permutation MinHash signatures (md5-min portable hashing)")(sql_runner(minhash_signatures_sql, ("documents",), spread=True))
 register("dedup_minhash_lsh", oracle=minhash_lsh_sql(DUCKDB),
          doc=f"MinHash LSH banded candidate pairs + estimated Jaccard (scale path; "
              f"signatures materialized once; band geometry PLANNER-TUNED per corpus "
@@ -1075,7 +1067,7 @@ register(
     f"table that picks the band_size knob before a dedup run (and that "
     f"the default dedup_minhash_lsh/dedup_lsh_verified runners consult "
     f"automatically via plan_band_size)",
-)(_sql_query(lsh_geometry_planner_sql))
+)(sql_runner(lsh_geometry_planner_sql, ("documents",), spread=True))
 
 
 _PLANNED_BAND_SIZE: dict[tuple[str, float], int] = {}
@@ -1139,7 +1131,7 @@ register("dedup_lsh_hot_buckets", oracle=hot_bucket_report_sql(DUCKDB),
          doc=f"per-band LSH bucket-size audit vs the hot-bucket cap "
              f"({LSH_BUCKET_CAP}): bucket counts, max size, capped buckets "
              f"and docs under the star-pairing overflow policy")(
-    _sql_query(hot_bucket_report_sql))
+    sql_runner(hot_bucket_report_sql, ("documents",), spread=True))
 def _clusters_oracle() -> str:
     """DuckDB oracle for the iterative Spark loop: connected components as a
     WITH RECURSIVE transitive closure (cluster id = min reachable doc_id).
@@ -1262,7 +1254,7 @@ register("dedup_canonical_select", oracle=_canonical_oracle(),
     dedup_canonical_select)
 register("simhash_signatures", oracle=simhash_signatures_sql(DUCKDB),
          doc="64-bit SimHash signatures (4 x 16-bit words) via md5-hex bit "
-             "voting")(_sql_query(simhash_signatures_sql))
+             "voting")(sql_runner(simhash_signatures_sql, ("documents",), spread=True))
 register("dedup_simhash_pairs", oracle=simhash_pairs_sql(DUCKDB),
          doc="SimHash near-dup pairs: pigeonhole-chunked 64-bit signatures, "
              "hamming <= 3 (signatures materialized once)")(dedup_simhash_pairs_spark)

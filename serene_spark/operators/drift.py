@@ -24,9 +24,7 @@ bin relations.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import compose_with, register_views, run_materialized
+from serene_spark.catalog import compose_with, run_materialized, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, explode_seq
 from serene_spark.registry import register
 
@@ -231,28 +229,12 @@ ORDER BY day
 """
 
 
-def _events_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("events",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
-def _orders_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("orders",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "drift_ks_events",
     oracle=drift_ks_sql(DUCKDB),
     doc="Kolmogorov-Smirnov drift statistic per event type between the "
     "training window and current slice — integer-exact maximization",
-)(_events_query(drift_ks_sql))
+)(sql_runner(drift_ks_sql, ("events",)))
 
 register(
     "cusum_daily_revenue",
@@ -268,7 +250,7 @@ register(
     oracle=drift_psi_sql(DUCKDB),
     doc=f"Population Stability Index over {PSI_BINS} shared equi-width "
     "bins, Laplace-smoothed, decimal-exact term sums",
-)(_events_query(drift_psi_sql))
+)(sql_runner(drift_psi_sql, ("events",)))
 
 
 def mad_outliers_sql(dialect: str) -> str:

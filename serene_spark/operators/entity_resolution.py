@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
 from serene_spark.registry import register
 
@@ -161,11 +161,6 @@ def _er_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(er_match_sql(SPARK))
 
 
-def _er_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("customer",))
-    return spark.sql(er_blocking_stats_sql(SPARK))
-
-
 register(
     "er_match_customer",
     oracle=er_match_sql(DUCKDB),
@@ -178,7 +173,7 @@ register(
     oracle=er_blocking_stats_sql(DUCKDB),
     doc="record-linkage blocking audit: per-block candidate counts "
     "(the N² -> Σ block² reduction)",
-)(_er_blocking)
+)(sql_runner(er_blocking_stats_sql, ("customer",)))
 
 
 # --- Fellegi-Sunter probabilistic linkage ------------------------------------

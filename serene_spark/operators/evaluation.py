@@ -23,9 +23,7 @@ the whole matcher-eval path oracle-checkable end-to-end.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
 from serene_spark.operators.text_analysis import lang_id_sql
 from serene_spark.registry import register
@@ -108,28 +106,12 @@ FROM tagged GROUP BY split, cls
 """
 
 
-def _docs_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("documents",), spread=True)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
-def _customer_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("customer",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register("eval_confusion_matrix", oracle=confusion_matrix_sql(DUCKDB),
-         doc="SURVEY §2.11 confusion matrix (lang-ID predictions vs gold lang)")(_docs_query(confusion_matrix_sql))
+         doc="SURVEY §2.11 confusion matrix (lang-ID predictions vs gold lang)")(sql_runner(confusion_matrix_sql, ("documents",), spread=True))
 register("eval_prf1", oracle=prf1_sql(DUCKDB),
-         doc="SURVEY §2.11 per-class precision/recall/F1 from the confusion matrix")(_docs_query(prf1_sql))
+         doc="SURVEY §2.11 per-class precision/recall/F1 from the confusion matrix")(sql_runner(prf1_sql, ("documents",), spread=True))
 register("eval_holdout_split", oracle=holdout_split_sql(DUCKDB),
-         doc="SURVEY §2.11 deterministic-hash 70/30 train/test partitioner (stratification counts)")(_customer_query(holdout_split_sql))
+         doc="SURVEY §2.11 deterministic-hash 70/30 train/test partitioner (stratification counts)")(sql_runner(holdout_split_sql, ("customer",)))
 
 
 # --- Inter-rater agreement (Cohen's kappa) -----------------------------------
@@ -201,4 +183,4 @@ register(
     doc="Cohen's kappa between the text_quality and doc_repetition gates — "
     "chance-corrected inter-rater agreement of the two document screens "
     "(2x2 cells, marginals, p_o, p_e, kappa)",
-)(_docs_query(kappa_gates_sql))
+)(sql_runner(kappa_gates_sql, ("documents",), spread=True))

@@ -20,7 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from serene_spark.catalog import compose_with, load_table, register_views, run_materialized
+from serene_spark.catalog import (
+    compose_with,
+    load_table,
+    register_views,
+    run_materialized,
+    sql_runner,
+)
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, explode_seq, idiv
 from serene_spark.registry import register
 
@@ -873,11 +879,6 @@ ORDER BY entry_type, exit_type
 """
 
 
-def _session_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(session_routes_sql("spark"))
-
-
 register(
     "session_entry_exit",
     oracle=session_routes_sql("duckdb"),
@@ -885,4 +886,4 @@ register(
     "session counts + bounce share + mean events/span; same 30-min "
     "session definition as events_sessionize, deterministic total-order "
     "entry/exit keys",
-)(_session_routes)
+)(sql_runner(session_routes_sql, ("events",)))

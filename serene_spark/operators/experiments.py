@@ -21,9 +21,7 @@ engine's determinism conventions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import compose_with, register_views, run_materialized
+from serene_spark.catalog import compose_with, run_materialized, sql_runner
 from serene_spark.functions.sqlgen import variant_expr, DUCKDB, SPARK, epoch_s, epoch_us, explode_seq, hex_to_int, idiv
 from serene_spark.registry import register
 
@@ -114,27 +112,19 @@ FROM by_clock b JOIN overall o ON b.event_type = o.event_type
 """
 
 
-def _events_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("events",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "ab_test_conversion",
     oracle=ab_test_sql(DUCKDB),
     doc="A/B readout: per-variant view->purchase conversion + pooled "
     "two-proportion z-test (doubles as the A/A calibration check)",
-)(_events_query(ab_test_sql))
+)(sql_runner(ab_test_sql, ("events",)))
 
 register(
     "events_seasonality",
     oracle=seasonality_sql(DUCKDB),
     doc="hour-of-day multiplicative seasonal index per event type (the "
     "expected-load baseline profile)",
-)(_events_query(seasonality_sql))
+)(sql_runner(seasonality_sql, ("events",)))
 
 
 WEEK_US = 7 * 24 * HOUR_US
@@ -194,7 +184,7 @@ register(
     oracle=clv_cohort_sql(DUCKDB),
     doc="LTV curves: cumulative purchase revenue per user by weekly signup "
     "cohort and account age (the payback readout beside retention)",
-)(_events_query(clv_cohort_sql))
+)(sql_runner(clv_cohort_sql, ("events",)))
 
 
 def dow_seasonality_sql(dialect: str) -> str:
@@ -229,7 +219,7 @@ register(
     doc="day-of-week multiplicative seasonal index per event type (integer "
     "epoch-day arithmetic, no engine DAYOFWEEK divergence); the weekly "
     "cycle beside the hour-of-day profile",
-)(_events_query(dow_seasonality_sql))
+)(sql_runner(dow_seasonality_sql, ("events",)))
 
 
 RFM_BINS = 5
@@ -295,14 +285,6 @@ FROM per_cust
 """
 
 
-def _orders_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("orders",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "rfm_segments",
     oracle=rfm_sql(DUCKDB),
@@ -351,7 +333,7 @@ register(
     oracle=revenue_mom_sql(DUCKDB),
     doc="month-over-month revenue deltas (LAG over the month-cardinality "
     "relation; first month NULL, not zero)",
-)(_orders_query(revenue_mom_sql))
+)(sql_runner(revenue_mom_sql, ("orders",)))
 
 
 # --- A/B power analysis -----------------------------------------------------
@@ -430,7 +412,7 @@ register(
     doc="two-proportion sample-size adequacy for the A/B test: required n "
     "per arm at 2/5/10/20% relative MDE (alpha=.05, 80% power) vs the "
     "current allocation — splices the exact ab_test arm construction",
-)(_events_query(ab_power_sql))
+)(sql_runner(ab_power_sql, ("events",)))
 
 
 def new_vs_returning_sql(dialect: str) -> str:
@@ -465,7 +447,7 @@ register(
     oracle=new_vs_returning_sql(DUCKDB),
     doc="daily new vs returning actives (first-day attribution via one "
     "keyed agg; conservation pinned: sum(new) = distinct users)",
-)(_events_query(new_vs_returning_sql))
+)(sql_runner(new_vs_returning_sql, ("events",)))
 
 
 # --- always-valid sequential test (mSPRT) ------------------------------------
@@ -568,4 +550,4 @@ register(
     "Johari et al. 2017) on the event-value mean difference: cumulative "
     "per-arm decimal moments per day, running-max likelihood, peeking-"
     "safe p-value; windows over the day-cardinality relation only",
-)(_events_query(msprt_sql))
+)(sql_runner(msprt_sql, ("events",)))

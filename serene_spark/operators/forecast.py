@@ -36,10 +36,8 @@ Independent non-SQL reference: pure-python Holt in tests/test_forecast.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, explode_seq
 from serene_spark.registry import register
 
 ALPHA = "0.3"
@@ -241,13 +239,6 @@ ORDER BY month_key
 """
 
 
-def _holt_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("orders",))
-    # single statement, no recursion, no materialization: the fold reads the
-    # series exactly once (see holt_fold_sql)
-    return spark.sql(holt_fold_sql(SPARK))
-
-
 register(
     "holt_forecast_monthly",
     oracle=holt_sql(DUCKDB),
@@ -255,7 +246,7 @@ register(
     "WITH RECURSIVE on the month-cardinality series (9-dp re-quantized "
     "each step so float drift cannot compound across engines); "
     f"in-sample one-step forecasts + {HORIZON}-month horizon",
-)(_holt_run)
+)(sql_runner(holt_fold_sql, ("orders",)))
 
 
 # ---------------------------------------- Holt-Winters (additive, season 7)
@@ -507,12 +498,6 @@ ORDER BY day
 """
 
 
-def _hw_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("events",))
-    # single statement, no recursion, no materialization (holt_winters_fold_sql)
-    return spark.sql(holt_winters_fold_sql(SPARK))
-
-
 register(
     "holt_winters_daily",
     oracle=holt_winters_sql(DUCKDB),
@@ -520,4 +505,4 @@ register(
     "WITH RECURSIVE carrying a rotating 7-slot seasonal register, 9-dp "
     "re-quantized per step; classical first/second-week init, in-sample "
     f"one-step forecasts + {HW_HORIZON}-day seasonal horizon",
-)(_hw_run)
+)(sql_runner(holt_winters_fold_sql, ("events",)))

@@ -39,10 +39,8 @@ geotagged corpora (the multimodal/metadata story).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, idiv
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, idiv
 from serene_spark.registry import register
 
 EARTH_RADIUS_KM = 6371.0088
@@ -109,21 +107,13 @@ ORDER BY nation
 """
 
 
-def _sql_query(sql: str, tables: tuple[str, ...]):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(sql)
-
-    return run
-
-
 register(
     "geo_nation_bbox",
     oracle=BBOX_SQL,
     doc="Per-nation customer bounding box + centroid over deterministic "
     "key-derived coordinates; BIGINT millidegree sums so the centroid is "
     "aggregation-order exact",
-)(_sql_query(BBOX_SQL, ("customer", "nation")))
+)(sql_runner(lambda _d: BBOX_SQL, ("customer", "nation")))
 
 
 # ------------------------------------------------- nearest supplier (dim NN)
@@ -160,7 +150,7 @@ register(
     doc="Nearest supplier per customer by haversine: supplier is a "
     "broadcast dim, so the candidate pass is broadcast-NL over a "
     "constant-size side; deterministic (ROUND(d,4), suppkey) winner",
-)(_sql_query(NEAREST_SQL, ("customer", "supplier")))
+)(sql_runner(lambda _d: NEAREST_SQL, ("customer", "supplier")))
 
 
 # ------------------------------------------------------- grid-cell pair join
@@ -230,4 +220,4 @@ register(
     "(integer millidegree binning, 3x3 probe neighborhood, antimeridian "
     "wrap) + exact haversine filter; oracle is the brute-force all-pairs "
     "join, so parity proves the grid candidate path drops no pair",
-)(_sql_query(_grid_pairs_sql(SPARK), ("customer",)))
+)(sql_runner(_grid_pairs_sql, ("customer",)))

@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
 from serene_spark.operators.graph_rank import edges_sql
 from serene_spark.registry import register
@@ -404,11 +404,6 @@ ORDER BY degree
 """
 
 
-def _degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("lineitem", "orders"))
-    return spark.sql(degree_hist_sql(SPARK))
-
-
 register(
     "graph_degree_hist",
     oracle=degree_hist_sql(DUCKDB),
@@ -416,4 +411,4 @@ register(
     "exponent estimator over the top-k degrees (k = max(5, n/10)); exact "
     "integer degrees, 12-dp-quantized decimal ln sums, degenerate-tail "
     "NULL guard",
-)(_degree_hist)
+)(sql_runner(degree_hist_sql, ("lineitem", "orders")))

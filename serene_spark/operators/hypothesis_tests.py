@@ -35,9 +35,7 @@ tests/test_hypothesis_tests.py (scipy is not in the container).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import compose_with, register_views, run_materialized
+from serene_spark.catalog import compose_with, register_views, run_materialized, sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -171,14 +169,6 @@ FROM stat
 """
 
 
-def _q(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("events",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "chisq_type_dow",
     oracle=chisq_sql(DUCKDB),
@@ -194,7 +184,7 @@ register(
     doc="Mann-Whitney U (tie-corrected normal approximation) comparing "
     "event values across two types via the per-value count histogram "
     "in doubled-rank BIGINT units — ranks never assigned per row",
-)(_q(mwu_sql))
+)(sql_runner(mwu_sql, ("events",)))
 
 
 # --- Benford first-digit conformity audit -----------------------------------
@@ -272,14 +262,6 @@ SELECT CAST(d AS INT) AS digit,
 FROM cells
 ORDER BY d
 """
-
-
-def _orders_q(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("orders",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
 
 
 register(
@@ -471,7 +453,7 @@ register(
     doc="Lilliefors-corrected KS goodness-of-fit of inter-purchase gaps "
     "against the fitted exponential: both-sides-of-step D over the "
     "distinct-gap relation, estimated-parameter critical value emitted",
-)(_q(gof_exponential_sql))
+)(sql_runner(gof_exponential_sql, ("events",)))
 
 
 GOF_MIN_EXP = 5.0
@@ -565,7 +547,7 @@ register(
     doc="Chi-square GoF of hourly purchase counts vs the fitted Poisson: "
     "ln k! as a quantized cumulative spine sum, expected<5 tail merged "
     "(textbook rule), zero-purchase hours counted as k=0 observations",
-)(_q(gof_poisson_sql))
+)(sql_runner(gof_poisson_sql, ("events",)))
 
 
 def runs_test_sql(dialect: str) -> str:

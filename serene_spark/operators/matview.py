@@ -30,10 +30,8 @@ guarantees upstream (deletes route to the CDC path, operators/cdc.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us, idiv
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_us, idiv
 from serene_spark.registry import register
 
 # snapshot/delta boundary: mid-corpus so both sides are non-trivial and
@@ -162,14 +160,6 @@ FROM merged
 """
 
 
-def _events_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("events",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "matview_incremental_hourly",
     # oracle = FULL RECOMPUTE: parity proves incremental merge == recompute
@@ -177,7 +167,7 @@ register(
     doc="incremental materialized-view maintenance: hourly per-type "
     "aggregate snapshot merged with delta partials; oracle is the full "
     "recompute, so parity checks the maintenance identity itself",
-)(_events_query(matview_incremental_sql))
+)(sql_runner(matview_incremental_sql, ("events",)))
 
 
 # --- Retractable aggregate maintenance (updates + deletes) ------------------
@@ -273,4 +263,4 @@ register(
     doc="retractable aggregate maintenance under updates + deletes: "
     "signed (live_after - live_before) deltas summed once over the "
     "changelog, proven equal to the latest-state recompute by parity",
-)(_events_query(retractable_delta_sql))
+)(sql_runner(retractable_delta_sql, ("events",)))

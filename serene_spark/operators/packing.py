@@ -27,10 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
-    SPARK,
     arr_filter_nonempty,
     arr_len,
     explode_seq,
@@ -141,28 +140,20 @@ ORDER BY shard
 """
 
 
-def _docs_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("documents",), spread=True)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "sequence_pack_manifest",
     oracle=pack_manifest_sql(DUCKDB),
     doc=f"GPT-style concat-and-split packing manifest: per-document token "
     f"offsets and spanned {SEQ_LEN}-token training sequences, shard-local "
     "cumsum (no global window)",
-)(_docs_query(pack_manifest_sql))
+)(sql_runner(pack_manifest_sql, ("documents",), spread=True))
 
 register(
     "sequence_pack_stats",
     oracle=pack_stats_sql(DUCKDB),
     doc="per-shard packing accounting: sequence counts, tail padding, "
     "packing efficiency, boundary-crossing documents",
-)(_docs_query(pack_stats_sql))
+)(sql_runner(pack_stats_sql, ("documents",), spread=True))
 
 
 # --- the full corpus-build composition ---------------------------------------
@@ -376,7 +367,7 @@ register(
     f"{DOCS_PER_BLOCK} docs/block derived in-query) emitted as "
     "per-(epoch, block) loader rows — resumable-training data order with "
     "no global sort (hash bucket + partition-local order)",
-)(_docs_query(epoch_shuffle_plan_sql))
+)(sql_runner(epoch_shuffle_plan_sql, ("documents",), spread=True))
 
 register(
     "epoch_shuffle_audit",
@@ -385,4 +376,4 @@ register(
     "1/n_blocks expectation (batch decorrelation) + per-epoch block-size "
     "balance (loader imbalance) — group-cardinality arithmetic over the "
     "assignment relation",
-)(_docs_query(epoch_shuffle_audit_sql))
+)(sql_runner(epoch_shuffle_audit_sql, ("documents",), spread=True))

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us, hex_to_int, idiv
 from serene_spark.registry import register
 
@@ -148,41 +148,33 @@ GROUP BY source, bin_id
 """
 
 
-def _q(sql_fn, tables):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "ts_ewma_hourly",
     oracle=ts_ewma_sql(DUCKDB),
     doc=f"EWMA-smoothed hourly rates per event type (alpha {EWMA_ALPHA}, "
     f"{EWMA_WINDOW}h truncated window, decimal-exact weighted sums)",
-)(_q(ts_ewma_sql, ("events",)))
+)(sql_runner(ts_ewma_sql, ("events",)))
 
 register(
     "winsorize_events",
     oracle=winsorize_sql(DUCKDB),
     doc="winsorization: clamp value to exact per-type [p01, p99] via the "
     "count-based histogram quantile",
-)(_q(winsorize_sql, ("events",)))
+)(sql_runner(winsorize_sql, ("events",)))
 
 register(
     "group_split_documents",
     oracle=group_split_sql(DUCKDB),
     doc="leakage-safe train/val/test split: deterministic 80/10/10 "
     "assignment by SOURCE hash, map-only",
-)(_q(group_split_sql, ("documents",)))
+)(sql_runner(group_split_sql, ("documents",)))
 
 register(
     "compaction_plan",
     oracle=compaction_plan_sql(DUCKDB),
     doc="small-file compaction planner: running-size bin packing per "
     "source partition toward a target group size",
-)(_q(compaction_plan_sql, ("documents",)))
+)(sql_runner(compaction_plan_sql, ("documents",)))
 
 
 # --- split-leakage audit -----------------------------------------------------

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from serene_spark.catalog import COLUMNS
 from serene_spark.functions.melt import melt_sql, run_over_melt
-from serene_spark.functions.sqlgen import DUCKDB, SPARK
+from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode, split_chars
 from serene_spark.registry import register
 
 NONEMPTY = "length(trim(value)) > 0"
@@ -46,15 +46,8 @@ def _chars_rel(long_rel: str, dialect: str) -> str:
         f"SELECT column_name, value, CAST(COUNT(*) AS BIGINT) AS vcnt "
         f"FROM {long_rel} AS lr WHERE {NONEMPTY} GROUP BY column_name, value"
     )
-    if dialect == DUCKDB:
-        return (
-            f"SELECT column_name, unnest(string_split(value, '')) AS ch, vcnt "
-            f"FROM ({vhist}) vh"
-        )
-    return (
-        f"SELECT column_name, explode(split(value, '')) AS ch, vcnt "
-        f"FROM ({vhist}) vh"
-    )
+    ch = explode(dialect, split_chars(dialect, "value"))
+    return f"SELECT column_name, {ch} AS ch, vcnt FROM ({vhist}) vh"
 
 
 def chardist_sql(long_rel: str, dialect: str) -> str:

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.melt import melt_sql
 from serene_spark.functions.sqlgen import (
     DUCKDB,
@@ -193,14 +193,6 @@ def dq_fk_orphans_sql(dialect: str) -> str:
 _DQ_TABLES = ("orders", "lineitem", "customer", "supplier", "part", "nation", "region")
 
 
-def _q(sql_fn, tables):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 def _dq_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serene_spark.catalog import load_table
     from serene_spark.functions.melt import melt
@@ -225,14 +217,14 @@ register(
     oracle=dq_constraints_sql(DUCKDB),
     doc="declarative row-constraint suite over lineitem (domains, ranges, "
     "completeness) as CASE-counts in a single aggregation",
-)(_q(dq_constraints_sql, ("lineitem",)))
+)(sql_runner(dq_constraints_sql, ("lineitem",)))
 
 register(
     "dq_fk_orphans",
     oracle=dq_fk_orphans_sql(DUCKDB),
     doc="referential-integrity audit: orphan counts for every FK edge of "
     "the star schema via broadcast anti-joins",
-)(_q(dq_fk_orphans_sql, _DQ_TABLES))
+)(sql_runner(dq_fk_orphans_sql, _DQ_TABLES))
 
 
 # --- k-anonymity / l-diversity audit (privacy governance) -------------------
@@ -295,21 +287,13 @@ ORDER BY nation, segment, balance_band
 """
 
 
-def _customer_q(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("customer",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "k_anonymity_audit",
     oracle=k_anonymity_sql(DUCKDB),
     doc=f"k-anonymity (k={KANON_K}) + l-diversity (l={LDIV_L}) audit over "
     "quasi-identifier classes (nation x segment x balance band): class "
     "sizes, sensitive diversity, row-level re-identification exposure",
-)(_customer_q(k_anonymity_sql))
+)(sql_runner(k_anonymity_sql, ("customer",)))
 
 
 # --- Duplicate-payment detection (fraud/ops audit) --------------------------
@@ -349,21 +333,13 @@ ORDER BY custkey, orderkey_1, orderkey_2
 """
 
 
-def _orders_q(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("orders",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "duplicate_payments",
     oracle=duplicate_payments_sql(DUCKDB),
     doc=f"duplicate-payment screen: same customer + same exact amount "
     f"within {DUP_PAY_WINDOW_DAYS} days, equi-joined on (customer, "
     "amount) — never an inequality join; canonical pair order",
-)(_orders_q(duplicate_payments_sql))
+)(sql_runner(duplicate_payments_sql, ("orders",)))
 
 
 # --- Cross-table consistency audit ------------------------------------------
@@ -431,14 +407,6 @@ FROM joined
 """
 
 
-def _orders_lineitem_q(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("orders", "lineitem"))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "dq_cross_table",
     oracle=dq_cross_table_sql(DUCKDB),
@@ -446,7 +414,7 @@ register(
     "without lines, header-vs-lines total reconciliation (the corpus "
     "honestly fails it: totals are generated independently) — one "
     "keyed agg + one join, no data-scale pairs",
-)(_orders_lineitem_q(dq_cross_table_sql))
+)(sql_runner(dq_cross_table_sql, ("orders", "lineitem")))
 
 
 # --- Differentially-private count release (privacy governance) --------------
@@ -557,7 +525,7 @@ register(
     "is derived from the public group key (deterministic md5 inverse-CDF) "
     "so the parity gate checks the arithmetic; production keys the hash "
     "with a secret per-release salt",
-)(_customer_q(dp_release_sql))
+)(sql_runner(dp_release_sql, ("customer",)))
 
 
 def dp_release_counts_salted(
@@ -592,7 +560,7 @@ register(
     "mean |noise| vs the analytic 1/eps) — never leaves the review "
     "boundary. Same DEMO-determinism caveat: public-key md5 noise, "
     "invertible by construction, oracle-checkable by design",
-)(_customer_q(dp_release_audit_sql))
+)(sql_runner(dp_release_audit_sql, ("customer",)))
 
 
 # --- DP median release (exponential mechanism) -------------------------------
@@ -693,4 +661,4 @@ register(
     "the EXPONENTIAL mechanism (McSherry-Talwar 2007) — selection queries "
     "need candidate sampling, not value noise; deterministic md5 draw, "
     "decimal-exact cumulative weights; released beside the exact median",
-)(_customer_q(dp_median_sql))
+)(sql_runner(dp_median_sql, ("customer",)))

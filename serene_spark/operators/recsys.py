@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, idiv
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
@@ -296,21 +296,13 @@ FROM wide
 """
 
 
-def _lineitem_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("lineitem",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "abc_pareto_parts",
     oracle=abc_pareto_sql(DUCKDB),
     doc="ABC (Pareto) part classification by cumulative revenue share; "
     "windows only over the catalog-sized part relation, exact decimal "
     "class boundaries",
-)(_lineitem_query(abc_pareto_sql))
+)(sql_runner(abc_pareto_sql, ("lineitem",)))
 
 register(
     "item_item_cosine",
@@ -325,15 +317,7 @@ register(
     oracle=wilson_sql(DUCKDB),
     doc=f"Wilson lower-bound ranking of part return rates (z=1.96, "
     f"n >= {WILSON_MIN_N}); small-n flukes cannot out-rank established rates",
-)(_lineitem_query(wilson_sql))
-
-
-def _li_part_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("lineitem", "part"))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
+)(sql_runner(wilson_sql, ("lineitem",)))
 
 
 register(
@@ -342,14 +326,14 @@ register(
     doc="ABC (revenue) x XYZ (quarterly-demand CV over the full quarter "
     "spine) inventory classification matrix; shared ABC body, decimal-"
     "exact moments",
-)(_lineitem_query(abc_xyz_sql))
+)(sql_runner(abc_xyz_sql, ("lineitem",)))
 
 register(
     "did_promo_revenue",
     oracle=did_promo_sql(DUCKDB),
     doc=f"difference-in-differences on promo parts split at {DID_CUT}; "
     "null-intervention corpus makes it an A/A calibration (estimate ~ 0)",
-)(_li_part_query(did_promo_sql))
+)(sql_runner(did_promo_sql, ("lineitem", "part")))
 
 
 def event_study_sql(dialect: str) -> str:

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq, hex_to_int, idiv
 from serene_spark.registry import register
 
@@ -272,14 +272,6 @@ JOIN numbered n ON n.column_name = c.column_name AND n.rn = c.rn
 """
 
 
-def _sql_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("customer",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 def _bagging_spark(strategy: str | None):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from serene_spark.catalog import load_table
@@ -294,19 +286,19 @@ def _bagging_spark(strategy: str | None):
 
 
 register("resample_upsample_max", oracle=upsample_to_max_sql(DUCKDB),
-         doc="SURVEY §2.8 UpsampleToMax (deterministic-cyclic) on customer/mktsegment")(_sql_query(upsample_to_max_sql))
+         doc="SURVEY §2.8 UpsampleToMax (deterministic-cyclic) on customer/mktsegment")(sql_runner(upsample_to_max_sql, ("customer",)))
 register("resample_to_mean", oracle=resample_to_mean_sql(DUCKDB),
-         doc="SURVEY §2.8 ResampleToMean: up AND down to the mean class count")(_sql_query(resample_to_mean_sql))
+         doc="SURVEY §2.8 ResampleToMean: up AND down to the mean class count")(sql_runner(resample_to_mean_sql, ("customer",)))
 register("resample_upsample_mean", oracle=upsample_to_mean_sql(DUCKDB),
-         doc="SURVEY §2.8 UpsampleToMean: up only, larger classes untouched")(_sql_query(upsample_to_mean_sql))
+         doc="SURVEY §2.8 UpsampleToMean: up only, larger classes untouched")(sql_runner(upsample_to_mean_sql, ("customer",)))
 register("resample_downsample_median", oracle=resample_to_median_sql(DUCKDB),
          doc="SURVEY §2.8 ResampleToMedian: up AND down to the median class count "
-             "(reference-exact median: middle element, or integer mean of middles)")(_sql_query(resample_to_median_sql))
+             "(reference-exact median: middle element, or integer mean of middles)")(sql_runner(resample_to_median_sql, ("customer",)))
 register("resample_upsample_median", oracle=upsample_to_median_sql(DUCKDB),
-         doc="SURVEY §2.8 UpsampleToMedian: up only to the median class count")(_sql_query(upsample_to_median_sql))
+         doc="SURVEY §2.8 UpsampleToMedian: up only to the median class count")(sql_runner(upsample_to_median_sql, ("customer",)))
 register("resample_cap_unknown_half", oracle=cap_unknown_sql(DUCKDB),
          doc="SURVEY §2.8 CapUnknownToHalf: unknown-labeled rows capped at the "
-             "known-set size (first rows in key order)")(_sql_query(cap_unknown_sql))
+             "known-set size (first rows in key order)")(sql_runner(cap_unknown_sql, ("customer",)))
 register("resample_bagging", oracle=bagging_sql(DUCKDB),
          doc="SURVEY §2.8 Bagging: per-column bags sampled with replacement (deterministic hash)")(_bagging_spark(None))
 register("resample_bagging_max", oracle=bagging_sql(DUCKDB, "max"),

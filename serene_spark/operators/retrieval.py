@@ -34,10 +34,8 @@ surface; these are engine extensions for the training-data-pipeline family
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB
 from serene_spark.operators.curation import grams_rel
 from serene_spark.operators.text_analysis import tokens_rel
 from serene_spark.registry import register
@@ -172,28 +170,20 @@ GROUP BY sg.source
 """
 
 
-def _q(sql_fn, tables):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "bm25_search",
     oracle=bm25_sql(DUCKDB),
     doc=f"Okapi BM25 top-{BM25_TOP_K} over documents for query "
     f"{' '.join(BM25_QUERY)}; inverted-index plan (posting lists pruned "
     "before scoring), decimal-exact score sums",
-)(_q(bm25_sql, ("documents",)))
+)(sql_runner(bm25_sql, ("documents",)))
 
 register(
     "tfidf_top_terms",
     oracle=tfidf_sql(DUCKDB),
     doc=f"per-document top-{TFIDF_TOP_K} TF-IDF keywords; doc-keyed rank "
     "window, no global sort",
-)(_q(tfidf_sql, ("documents",)))
+)(sql_runner(tfidf_sql, ("documents",)))
 
 register(
     "ngram_novelty",
@@ -201,7 +191,7 @@ register(
     doc="per-source word-8-gram novelty vs lexicographically-earlier "
     "sources — the incremental-crawl value estimate behind "
     "snapshot_delta_dedup",
-)(_q(novelty_sql, ("documents",)))
+)(sql_runner(novelty_sql, ("documents",)))
 
 
 NDCG_K = 10
@@ -273,7 +263,7 @@ register(
     doc=f"NDCG@{NDCG_K} / MRR audit of the BM25 ranking against "
     "independent capped-tf graded relevance (2^rel-1 gains, log2 "
     "discounts); the measured-error convention for the search stack",
-)(_q(ndcg_sql, ("documents",)))
+)(sql_runner(ndcg_sql, ("documents",)))
 
 
 CTFIDF_TOP = 5
@@ -331,4 +321,4 @@ register(
     doc=f"Class-based TF-IDF (BERTopic statistic): top-{CTFIDF_TOP} "
     "DISTINCTIVE terms per source — in-class tf times ln(1 + avg-class-"
     "len / corpus-freq); exact integer counts, ln at the edge",
-)(_q(class_tfidf_sql, ("documents",)))
+)(sql_runner(class_tfidf_sql, ("documents",)))

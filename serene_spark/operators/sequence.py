@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us, explode_seq, idiv
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
@@ -99,27 +99,19 @@ WHERE n >= 12
 """
 
 
-def _events_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("events",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "event_transitions",
     oracle=transitions_sql(DUCKDB),
     doc="per-user Markov transition matrix: P(next event_type | event_type) "
     "with counts, LEAD over time-ordered streams",
-)(_events_query(transitions_sql))
+)(sql_runner(transitions_sql, ("events",)))
 
 register(
     "events_hourly_anomalies",
     oracle=anomalies_sql(DUCKDB),
     doc=f"hourly rate anomalies: z-score vs trailing {TRAIL}h baseline per "
     "event type from integer-exact window sums",
-)(_events_query(anomalies_sql))
+)(sql_runner(anomalies_sql, ("events",)))
 
 
 N_POWER_ITER = 3  # unrolled power-iteration steps (oracle-checkable)
@@ -316,14 +308,14 @@ register(
     oracle=funnel_windowed_sql(DUCKDB),
     doc="windowed funnel conversion: purchases within 24h of the first "
     "view, single-scan conditional-MIN shape",
-)(_events_query(funnel_windowed_sql))
+)(sql_runner(funnel_windowed_sql, ("events",)))
 
 register(
     "rolling_active_users",
     oracle=rolling_active_sql(DUCKDB),
     doc="DAU/WAU/stickiness per day via the user-day explode (no "
     "COUNT-DISTINCT windows)",
-)(_events_query(rolling_active_sql))
+)(sql_runner(rolling_active_sql, ("events",)))
 
 
 PATH_TOP_K = 25
@@ -370,4 +362,4 @@ register(
     doc=f"top-{PATH_TOP_K} 3-step event paths across user streams (double "
     "LEAD, path-keyed agg, TakeOrdered top-k) — the multi-step sibling of "
     "the Markov transition matrix",
-)(_events_query(path_3gram_sql))
+)(sql_runner(path_3gram_sql, ("events",)))

@@ -26,10 +26,8 @@ from __future__ import annotations
 
 from math import lcm
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq, hex_to_int, idiv
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, explode_seq, hex_to_int, idiv
 from serene_spark.registry import register
 
 S_OLD = 16
@@ -103,18 +101,10 @@ SELECT strategy, n_keys, n_moved, moved_frac, theoretical_frac FROM (
 """
 
 
-def _orders_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("orders",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "consistent_hash_rebalance",
     oracle=rebalance_sql(DUCKDB),
     doc=f"re-shard movement audit {S_OLD}->{S_NEW}: measured moved "
     "fraction under modulo vs consistent-ring placement beside the "
     "theoretical floor; constant vnode table, map-side argmin per key",
-)(_orders_query(rebalance_sql))
+)(sql_runner(rebalance_sql, ("orders",)))

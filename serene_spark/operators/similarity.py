@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -401,14 +401,6 @@ FROM embeddings e JOIN cent_arr g ON e.label = g.label
 """
 
 
-def _sql_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("embeddings",), spread=True)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 # --- Product quantization (ADC) ------------------------------------------
 
 PQ_M = 8          # subspaces (64-dim embedding -> 8 subvectors of 8 dims)
@@ -517,7 +509,7 @@ FROM ranked WHERE rk <= {top_k}
 
 
 register("similarity_cosine_topk", oracle=cosine_topk_sql(DUCKDB),
-         doc="brute-force cosine top-5 for 10 query vectors (exact ANN baseline)")(_sql_query(cosine_topk_sql))
+         doc="brute-force cosine top-5 for 10 query vectors (exact ANN baseline)")(sql_runner(cosine_topk_sql, ("embeddings",), spread=True))
 register("similarity_ann_bucketed", oracle=ann_bucketed_sql(DUCKDB),
          doc="sign-quantization-bucketed ANN top-5 (equi-join candidates; scale "
              "path; bucket width derived in-query from corpus size via "
@@ -525,11 +517,11 @@ register("similarity_ann_bucketed", oracle=ann_bucketed_sql(DUCKDB),
              "near-isotropic sf10 corpus but 0.59 on the clustered corpus "
              "(within-cluster cos ~0.8, the real-text-embedding geometry; "
              "BASELINE.md ANN ledger v2); re-measure with "
-             "tools/bench_ann_recall.py on your corpus")(_sql_query(ann_bucketed_sql))
+             "tools/bench_ann_recall.py on your corpus")(sql_runner(ann_bucketed_sql, ("embeddings",), spread=True))
 register("knn_label_vote", oracle=knn_label_vote_sql(DUCKDB),
-         doc="k-NN majority-label prediction over embedding cosine neighbors")(_sql_query(knn_label_vote_sql))
+         doc="k-NN majority-label prediction over embedding cosine neighbors")(sql_runner(knn_label_vote_sql, ("embeddings",), spread=True))
 register("dedup_embedding_cosine", oracle=embedding_neardup_sql(DUCKDB),
-         doc="embedding-cosine near-duplicate pairs (bucketed candidates, cosine >= 0.95)")(_sql_query(embedding_neardup_sql))
+         doc="embedding-cosine near-duplicate pairs (bucketed candidates, cosine >= 0.95)")(sql_runner(embedding_neardup_sql, ("embeddings",), spread=True))
 register("similarity_ivf", oracle=ivf_search_sql(DUCKDB),
          doc="IVF-Flat ANN top-5: deterministic coarse centroids, inverted-list "
              "equi-join candidates, n_probe-tunable recall (scale path #2). "
@@ -538,7 +530,7 @@ register("similarity_ivf", oracle=ivf_search_sql(DUCKDB),
              "clustered corpus, and k=256/nprobe=16 reaches 0.98 at a 6% "
              "scan (BASELINE.md ANN ledger v2) — IVF's bucketing assumption "
              "holds exactly when the corpus is clustered, as real text "
-             "embeddings are; size k ~ sqrt(N)")(_sql_query(ivf_search_sql))
+             "embeddings are; size k ~ sqrt(N)")(sql_runner(ivf_search_sql, ("embeddings",), spread=True))
 def ivf_scaled_sql(dialect: str) -> str:
     """Scale-ADAPTIVE IVF-Flat: the coarse-quantizer geometry is derived
     IN-QUERY from the corpus size — k = 2^floor(log2(sqrt(N))) centroids
@@ -611,12 +603,12 @@ register("similarity_ivf_scaled", oracle=ivf_scaled_sql(DUCKDB),
              "the quantizer refines automatically at 100x data and the "
              "adaptive geometry itself is oracle-checked; ~25% scan fraction "
              "at every N with candidate quality rising with k "
-             "(BASELINE.md ANN ledger)")(_sql_query(ivf_scaled_sql))
+             "(BASELINE.md ANN ledger)")(sql_runner(ivf_scaled_sql, ("embeddings",), spread=True))
 
 
 register("embedding_centroid_dist", oracle=centroid_dist_sql(DUCKDB),
          doc="per-label centroid distance + outlier rank (embedding quality / "
-             "mislabel scan)")(_sql_query(centroid_dist_sql))
+             "mislabel scan)")(sql_runner(centroid_dist_sql, ("embeddings",), spread=True))
 PQ_RERANK_POOL = 50  # ADC candidates re-ranked exactly (10% of the parity
                      # corpus). COST scales with the pool, not the corpus —
                      # but so does RECALL: a constant pool decays as the
@@ -662,11 +654,11 @@ register("similarity_pq_adc", oracle=pq_adc_sql(DUCKDB),
              "corpora — 8x16 codes are too coarse alone) — raw ADC ranking "
              "is a candidate GENERATOR, never a final answer; use "
              "similarity_pq_rerank with a corpus-proportional pool "
-             "(BASELINE.md ANN ledger v2)")(_sql_query(pq_adc_sql))
+             "(BASELINE.md ANN ledger v2)")(sql_runner(pq_adc_sql, ("embeddings",), spread=True))
 register("similarity_pq_rerank", oracle=pq_rerank_sql(DUCKDB),
          doc="PQ production shape: ADC candidate pool + exact cosine re-rank "
              "of the pool only (recall pinned vs exact top-k by pytest). "
              "RECALL FLAG: a CONSTANT pool decays with corpus size (0.07 at "
              "sf10 with pool 50; 0.35 isotropic / 0.96 clustered with pool "
              "1000 — BASELINE.md ANN ledger v2); size PQ_RERANK_POOL "
-             "proportional to the corpus")(_sql_query(pq_rerank_sql))
+             "proportional to the corpus")(sql_runner(pq_rerank_sql, ("embeddings",), spread=True))

@@ -25,9 +25,7 @@ are pinned by pytest against the exact baselines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
+from serene_spark.catalog import sql_runner
 from serene_spark.registry import register
 
 QUANTILE_ACCURACY = 10000  # rank error <= 1/accuracy = 0.01%
@@ -69,26 +67,18 @@ GROUP BY event_type
 """
 
 
-def _events_query(sql: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("events",))
-        return spark.sql(sql)
-
-    return run
-
-
 register("approx_distinct_users",
          doc="HyperLogLog distinct users per event type (sketch twin of the "
          "exact n_users baseline; rows-only, error bound pinned by pytest)")(
-    _events_query(APPROX_DISTINCT_SQL))
+    sql_runner(lambda _d: APPROX_DISTINCT_SQL, ("events",)))
 register("hll_rollup_users",
          doc="persisted-sketch rollup: daily HLL sketches unioned to event "
          "type without rescanning raw data (rows-only)")(
-    _events_query(HLL_ROLLUP_SQL))
+    sql_runner(lambda _d: HLL_ROLLUP_SQL, ("events",)))
 register("approx_quantiles_value",
          doc="mergeable quantile sketch per event type (twin of the exact "
          "events_value_quantiles; rows-only)")(
-    _events_query(APPROX_QUANTILES_SQL))
+    sql_runner(lambda _d: APPROX_QUANTILES_SQL, ("events",)))
 
 
 # --- KMV / theta sketch: the ORACLE-CHECKED distinct-count sketch -----------
@@ -256,16 +246,6 @@ ORDER BY s.ta, s.tb
 """
 
 
-def _events_sql_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from serene_spark.functions.sqlgen import SPARK
-
-        register_views(spark, sf_dir, ("events",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 def _duckdb_oracle(sql_fn):
     from serene_spark.functions.sqlgen import DUCKDB
 
@@ -277,14 +257,14 @@ register("kmv_ndv_users",
          doc=f"KMV bottom-{KMV_K} distinct-user sketch per event type — the "
          "oracle-checked NDV sketch (portable md5 hashes, unlike the "
          "engine-native HLL registers); estimator audited against exact "
-         "NDV in-row")(_events_sql_query(kmv_ndv_sql))
+         "NDV in-row")(sql_runner(kmv_ndv_sql, ("events",)))
 register("kmv_set_ops_users",
          oracle=_duckdb_oracle(kmv_set_ops_sql),
          doc="theta-sketch set operations over the KMV sketches: per event-"
          "type pair, union NDV from the merged bottom-K and intersection "
          "via the in-both Jaccard share — audience overlap without a "
          "distinct pair shuffle; exact audit columns ride along")(
-    _events_sql_query(kmv_set_ops_sql))
+    sql_runner(kmv_set_ops_sql, ("events",)))
 
 
 def kmv_rollup_sql(dialect: str) -> str:
@@ -360,7 +340,7 @@ register("kmv_rollup_users",
          f"bottom-{KMV_K} KMV partials merged to per-type sketches beside "
          "the direct sketch — the merge-lemma equality emitted and "
          "parity-verified, the KMV twin of hll_rollup_users")(
-    _events_sql_query(kmv_rollup_sql))
+    sql_runner(kmv_rollup_sql, ("events",)))
 
 
 # --- bottom-k coordinated-sample quantile sketch ------------------------------
@@ -465,7 +445,7 @@ register(
     "lemma applied to quantiles, unlike the engine-native rows-only "
     "approx_quantiles_value); p50/p90/p99 estimates beside the exact "
     "quantiles with relative-error audit columns",
-)(_events_sql_query(quantile_sketch_sql))
+)(sql_runner(quantile_sketch_sql, ("events",)))
 
 
 def quantile_sketch_rollup_sql(dialect: str) -> str:
@@ -551,4 +531,4 @@ register(
     "(p50/p90/p99 do not pre-aggregate; the coordinated sample does, "
     "exactly, by the merge lemma); rolled-up and direct estimates emitted "
     "with the equality flag, all oracle-checked",
-)(_events_sql_query(quantile_sketch_rollup_sql))
+)(sql_runner(quantile_sketch_rollup_sql, ("events",)))

@@ -25,16 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import (
-    DUCKDB,
-    SPARK,
-    epoch_s,
-    explode_seq,
-    idiv,
-    shl,
-    shr,
-)
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_s, explode_seq, idiv, shl, shr
 from serene_spark.registry import QUERIES, register
 
 HIST_BUCKETS = 16
@@ -150,26 +142,18 @@ FROM (
 """
 
 
-def _table_query(sql_fn, tables):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(sql_fn(SPARK) if callable(sql_fn) else sql_fn)
-
-    return run
-
-
 register("equi_depth_histogram", oracle=equi_depth_histogram_sql(DUCKDB),
          doc=f"ANALYZE-style {HIST_BUCKETS}-bucket equi-depth histogram of "
          "l_extendedprice (two-phase: distinct-value reduce, then window)")(
-    _table_query(equi_depth_histogram_sql, ("lineitem",)))
+    sql_runner(equi_depth_histogram_sql, ("lineitem",)))
 register("zorder_manifest", oracle=zorder_manifest_sql(DUCKDB),
          doc="Morton/Z-order clustering manifest over (custkey, order day) "
          "with per-file bounding boxes (the OPTIMIZE ZORDER layout)")(
-    _table_query(zorder_manifest_sql, ("orders",)))
+    sql_runner(zorder_manifest_sql, ("orders",)))
 register("ndv_sketch_lineitem",
          doc="one-pass per-column HLL NDV + null counts (ANALYZE TABLE "
          "sketch pass; rows-only, error pinned by pytest)")(
-    _table_query(ndv_sketch_sql("lineitem"), ("lineitem",)))
+    sql_runner(lambda _d: ndv_sketch_sql("lineitem"), ("lineitem",)))
 
 
 N_SKIP_PROBES = 16  # per-dimension probe workload for the skip estimate
@@ -270,7 +254,7 @@ register("zorder_skip_estimate", oracle=zorder_skip_sql(DUCKDB),
          "single-column sort: avg fraction of files a range predicate "
          f"must scan, {N_SKIP_PROBES} probes per dimension, both layouts "
          "at equal file count; all probe arithmetic manifest-scale")(
-    _table_query(zorder_skip_sql, ("orders",)))
+    sql_runner(zorder_skip_sql, ("orders",)))
 
 
 SEL_PRED_PRICE = 30000  # range predicate for the selectivity-estimate audit
@@ -357,7 +341,7 @@ register("cbo_estimate_audit", oracle=cbo_audit_sql(DUCKDB),
          "estimates vs exact actuals with relative error — measures the "
          "ANALYZE statistics this module builds; formula error isolated "
          "from sketch error")(
-    _table_query(cbo_audit_sql, ("customer", "orders", "lineitem")))
+    sql_runner(cbo_audit_sql, ("customer", "orders", "lineitem")))
 
 
 SKEW_KEYS = (
@@ -407,7 +391,7 @@ register("join_key_skew", oracle=join_skew_sql(DUCKDB),
          doc="per-join-key skew report (n_keys, mean/max/p99 rows per key, "
          "skew factor) — the measurement behind the salting/AQE-skew "
          "decision; one keyed agg per column, then metadata-scale math")(
-    _table_query(join_skew_sql, ("lineitem", "orders", "events")))
+    sql_runner(join_skew_sql, ("lineitem", "orders", "events")))
 
 
 _ADVISORY_SCHEMA = (

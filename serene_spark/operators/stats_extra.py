@@ -17,9 +17,7 @@ concentration measures (Gini coefficient + ABC classification).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import compose_with, register_views, run_materialized
+from serene_spark.catalog import compose_with, run_materialized, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq
 from serene_spark.registry import register
 
@@ -135,20 +133,12 @@ GROUP BY abc_class
 """
 
 
-def _q(sql_fn, tables):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "corr_lineitem",
     oracle=corr_sql(DUCKDB),
     doc="Pearson correlation matrix over lineitem measures from ONE scan "
     "of decimal-exact moment sums, index-explode reshape",
-)(_q(corr_sql, ("lineitem",)))
+)(sql_runner(corr_sql, ("lineitem",)))
 
 register(
     "customer_spend_concentration",
@@ -246,4 +236,4 @@ register(
     doc="per-segment Tukey boxplot stats: exact count-histogram quartiles "
     "(never percentile_cont's divergent interpolation), 1.5-IQR "
     "whiskers, histogram-counted outliers",
-)(_q(boxplot_sql, ("orders", "customer")))
+)(sql_runner(boxplot_sql, ("orders", "customer")))

@@ -32,12 +32,9 @@ pair-keyed aggregation — the same banded discipline as MinHash-LSH
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
-    SPARK,
     arr_filter_nonempty,
     arr_join,
     arr_len,
@@ -142,25 +139,17 @@ FROM df_hist h CROSS JOIN doc_cov c
 """
 
 
-def _docs_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("documents",), spread=True)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "substring_dedup_pairs",
     oracle=substring_pairs_sql(DUCKDB),
     doc=f"exact-substring dedup (arXiv:2107.06499 ExactSubstr as a k-gram "
     f"chain): document pairs sharing >= {K_GRAM}-token exact runs, with "
     "longest-overlap length via diagonal gaps-and-islands",
-)(_docs_query(substring_pairs_sql))
+)(sql_runner(substring_pairs_sql, ("documents",), spread=True))
 
 register(
     "substring_overlap_stats",
     oracle=substring_stats_sql(DUCKDB),
     doc="corpus accounting for the exact-substring tier, incl. the explicit "
     f"count of grams dropped by the df > {MAX_DF} cap",
-)(_docs_query(substring_stats_sql))
+)(sql_runner(substring_stats_sql, ("documents",), spread=True))

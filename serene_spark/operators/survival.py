@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, idiv
 from serene_spark.registry import register
 
@@ -117,14 +117,6 @@ def km_segment_sql(dialect: str) -> str:
     return _km_sql(dialect, stratified=True)
 
 
-def _q(sql_fn, tables):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "km_order_gap",
     oracle=km_overall_sql(DUCKDB),
@@ -132,14 +124,14 @@ register(
     "gaps observed, last-order gaps right-censored at the horizon; "
     "product-limit via decimal-summed 12-dp log terms over the "
     "duration histogram (calendar-bounded, never data-scale)",
-)(_q(km_overall_sql, ("orders",)))
+)(sql_runner(km_overall_sql, ("orders",)))
 
 register(
     "km_order_gap_by_segment",
     oracle=km_segment_sql(DUCKDB),
     doc="segment-stratified Kaplan-Meier repurchase curves (broadcast "
     "customer-dim join, per-segment windows over the same one scan)",
-)(_q(km_segment_sql, ("orders", "customer")))
+)(sql_runner(km_segment_sql, ("orders", "customer")))
 
 
 # ----------------------------------------------------------- log-rank test
@@ -331,4 +323,4 @@ register(
     "durations (same risk-set relation as KM), with the Fleming-"
     "Harrington exp(-H) survival emitted for cross-checking the "
     "product-limit curve",
-)(_q(nelson_aalen_sql, ("orders",)))
+)(sql_runner(nelson_aalen_sql, ("orders",)))

@@ -16,7 +16,7 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -284,22 +284,14 @@ FROM fp GROUP BY fingerprint
 """
 
 
-def _sql_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("documents",), spread=True)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register("text_quality", oracle=text_quality_sql(DUCKDB),
-         doc="quality scoring: token/punct/digit/stopword ratios + pass flag")(_sql_query(text_quality_sql))
+         doc="quality scoring: token/punct/digit/stopword ratios + pass flag")(sql_runner(text_quality_sql, ("documents",), spread=True))
 register("lang_id", oracle=lang_id_sql(DUCKDB),
-         doc="language-ID via per-language stopword hits with argmax")(_sql_query(lang_id_sql))
+         doc="language-ID via per-language stopword hits with argmax")(sql_runner(lang_id_sql, ("documents",), spread=True))
 register("token_stats", oracle=token_stats_sql(DUCKDB),
-         doc="token counting: whitespace tokens, distinct, TTR, regex words")(_sql_query(token_stats_sql))
+         doc="token counting: whitespace tokens, distinct, TTR, regex words")(sql_runner(token_stats_sql, ("documents",), spread=True))
 register("doc_fingerprint", oracle=fingerprint_sql(DUCKDB),
-         doc="bag-of-words fingerprint (md5 of sorted distinct tokens) dedup groups")(_sql_query(fingerprint_sql))
+         doc="bag-of-words fingerprint (md5 of sorted distinct tokens) dedup groups")(sql_runner(fingerprint_sql, ("documents",), spread=True))
 
 
 def _dup_fold(arr: str) -> str:
@@ -449,7 +441,7 @@ LEFT JOIN g3s t3 ON d.doc_id = t3.doc_id
 
 register("doc_repetition", oracle=repetition_sql(DUCKDB),
          doc="Gopher-style repetition signals: dup-token / top-2gram / "
-             "dup-3gram fractions + gate")(_sql_query(repetition_sql))
+             "dup-3gram fractions + gate")(sql_runner(repetition_sql, ("documents",), spread=True))
 
 
 def lang_model_sql(dialect: str) -> str:
@@ -505,7 +497,7 @@ FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
 
 register("lang_model_score", oracle=lang_model_sql(DUCKDB),
          doc="corpus-trained char-bigram LM score per doc (gibberish / OOD "
-             "detector)")(_sql_query(lang_model_sql))
+             "detector)")(sql_runner(lang_model_sql, ("documents",), spread=True))
 
 
 def corpus_select_sql(dialect: str, per_lang_cap: int = 100) -> str:
@@ -762,7 +754,7 @@ FROM idx
 
 
 register("doc_chunks", oracle=doc_chunks_sql(DUCKDB),
-         doc="overlapping token-window chunking (context-window packing prep)")(_sql_query(doc_chunks_sql))
+         doc="overlapping token-window chunking (context-window packing prep)")(sql_runner(doc_chunks_sql, ("documents",), spread=True))
 
 
 # BPE-ish token estimate: letter runs, digit runs, and punctuation runs count
@@ -784,7 +776,7 @@ FROM documents
 
 
 register("bpe_token_estimate", oracle=bpe_estimate_sql(DUCKDB),
-         doc="BPE-ish pre-tokenization run counts vs whitespace tokens")(_sql_query(bpe_estimate_sql))
+         doc="BPE-ish pre-tokenization run counts vs whitespace tokens")(sql_runner(bpe_estimate_sql, ("documents",), spread=True))
 
 
 def corpus_chunks_sql(dialect: str) -> str:
@@ -871,7 +863,7 @@ register("readability_scores", oracle=readability_sql(DUCKDB),
          doc="Flesch reading-ease + Flesch-Kincaid grade per document via "
              "deterministic regex counting (vowel-group syllables, "
              "terminator-run sentences with a >=1 guard)")(
-    _sql_query(readability_sql))
+    sql_runner(readability_sql, ("documents",), spread=True))
 
 
 def langid_confusion_sql(dialect: str) -> str:
@@ -934,7 +926,7 @@ register(
     doc="lang_id self-audit vs the corpus's ground-truth lang column: "
     "confusion matrix, per-class recall shares, overall accuracy — "
     "the measured-error convention applied to the text classifier",
-)(_sql_query(langid_confusion_sql))
+)(sql_runner(langid_confusion_sql, ("documents",), spread=True))
 
 
 def tokenizer_fertility_sql(dialect: str) -> str:
@@ -990,4 +982,4 @@ register(
     doc="Per-language tokenizer fertility: subword tokens per word, "
     "subwords per 100 chars, and each language's token-cost ratio vs the "
     "corpus's cheapest — the multilingual budget-skew table",
-)(_sql_query(tokenizer_fertility_sql))
+)(sql_runner(tokenizer_fertility_sql, ("documents",), spread=True))

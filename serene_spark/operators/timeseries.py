@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import compose_with, register_views, run_materialized
+from serene_spark.catalog import compose_with, register_views, run_materialized, sql_runner
 from serene_spark.functions.sqlgen import (
     mat,
     DUCKDB,
@@ -118,27 +118,19 @@ GROUP BY event_type, 2
 """
 
 
-def _events_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("events",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "ts_gapfill_locf",
     oracle=ts_gapfill_sql(DUCKDB),
     doc="hourly gap-filled per-user series with last-observation-carried-"
     "forward; grid generated per-user span (never users x calendar)",
-)(_events_query(ts_gapfill_sql))
+)(sql_runner(ts_gapfill_sql, ("events",)))
 
 register(
     "ts_ohlc_daily",
     oracle=ts_ohlc_sql(DUCKDB),
     doc="daily OHLC downsample per event type with deterministic "
     "(epoch, event_id) open/close tie-break",
-)(_events_query(ts_ohlc_sql))
+)(sql_runner(ts_ohlc_sql, ("events",)))
 
 
 # --- Autocorrelation + classical seasonal decomposition ---------------------
@@ -311,14 +303,6 @@ ORDER BY m.month_key
 """
 
 
-def _orders_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("orders",))
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "ts_acf_daily",
     oracle=ts_acf_sql(DUCKDB),
@@ -334,7 +318,7 @@ register(
     doc="classical additive decomposition of monthly revenue: centered "
     "MA(12) trend (half-weight ends), mean-centered monthly seasonal "
     "index, residual; edge months NULL, never extrapolated",
-)(_orders_query(ts_decompose_sql))
+)(sql_runner(ts_decompose_sql, ("orders",)))
 
 
 def trend_mk_sql(dialect: str) -> str:

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -247,28 +247,12 @@ GROUP BY i
 """
 
 
-def _docs_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("documents",), spread=True)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
-def _emb_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ("embeddings",), spread=True)
-        return spark.sql(sql_fn(SPARK))
-
-    return run
-
-
 register(
     "bpe_top_merges",
     oracle=bpe_top_merges_sql(DUCKDB),
     doc=f"BPE training-round statistic: top-{TOP_MERGES} adjacent token-pair "
     "frequencies (the round's merge candidates), distributed TakeOrdered",
-)(_docs_query(bpe_top_merges_sql))
+)(sql_runner(bpe_top_merges_sql, ("documents",), spread=True))
 
 
 # --- PMI collocations (Church & Hanks, CL 1990) ------------------------------
@@ -351,14 +335,14 @@ register(
     f"token pairs by pointwise mutual information, count >= {PMI_MIN_COUNT} "
     "guard against the low-count explosion; exact integer counts, ln at "
     "the edge",
-)(_docs_query(pmi_collocations_sql))
+)(sql_runner(pmi_collocations_sql, ("documents",), spread=True))
 
 register(
     "embedding_dim_stats",
     oracle=embedding_dim_stats_sql(DUCKDB),
     doc="per-dimension embedding audit: mean/std/min/max/zero-fraction "
     "with decimal-exact moment sums",
-)(_emb_query(embedding_dim_stats_sql))
+)(sql_runner(embedding_dim_stats_sql, ("embeddings",), spread=True))
 
 
 # --- int8 scalar quantization audit (the memory tier below PQ) --------------
@@ -430,7 +414,7 @@ register(
     doc="per-dimension INT8 scalar-quantization audit: round-half-up codes "
     "and reconstruction error in exact integer numerator space, measured "
     "against the step/2 bound round-to-nearest guarantees",
-)(_emb_query(embedding_sq8_audit_sql))
+)(sql_runner(embedding_sq8_audit_sql, ("embeddings",), spread=True))
 
 
 # --- term burstiness (Church & Gale 1995) ------------------------------------
@@ -490,7 +474,7 @@ register(
     doc=f"Church-Gale term burstiness: variance-to-mean ratio of per-doc "
     f"counts with zero-count docs entering the moments analytically (no "
     f"absent-doc join); top-{BURST_TOP} burstiest terms",
-)(_docs_query(term_burstiness_sql))
+)(sql_runner(term_burstiness_sql, ("documents",), spread=True))
 
 
 # --- PPMI spectral embedding (oracle-exact iterative linear algebra) ---------

@@ -16,8 +16,10 @@ framework in this container):
   parallel futures), poll state, predict → ranked SSD suggestions.
 
 The service is an API *skin*: every endpoint delegates to the same operators
-the driver contract uses. Spark work happens on the session passed in; HTTP
-threads only enqueue/poll.
+the driver contract uses, on the session passed in. Model and octopus
+training run on background threads; the HTTP thread only starts and polls
+them. Octopus predict and alignment (including the restore after a restart),
+``/query/run`` and the dataset routes run their Spark work on the HTTP thread.
 """
 
 from __future__ import annotations
@@ -52,6 +54,9 @@ class SereneService:
         self.octopi = OctopusStorage(f"{storage_root}/octopi")
         self._model_states: dict[int, dict] = {}
         self._octopus_runs: dict[int, object] = {}
+        # held across each get-or-create of the two dicts above, so
+        # concurrent requests share one entry (one restore, one train)
+        self._lock = threading.Lock()
 
     # -- datasets ------------------------------------------------------------
 
@@ -114,10 +119,10 @@ class SereneService:
     def train_model(self, eid: int) -> tuple[int, dict]:
         if self.models.get(eid) is None:
             return 404, {"error": "not found"}
-        state = self._model_states.get(eid, {})
-        if state.get("status") == "busy":
-            return 202, {"id": eid, "status": "busy"}
-        self._model_states[eid] = {"status": "busy", "message": ""}
+        with self._lock:
+            if self._model_states.get(eid, {}).get("status") == "busy":
+                return 202, {"id": eid, "status": "busy"}
+            self._model_states[eid] = {"status": "busy", "message": ""}
 
         def run():
             try:
@@ -146,18 +151,27 @@ class SereneService:
             return 404, {"error": "not found"}
         from serene_spark.modeler.orchestrate import Octopus
 
-        run = self._octopus_runs.get(eid)
-        if run is None:
-            run = Octopus(self.spark, self.sf_dir, storage=self.octopi, octopus_id=eid)
-            self._octopus_runs[eid] = run
+        with self._lock:
+            run = self._octopus_runs.get(eid)
+            if run is None:
+                run = Octopus(self.spark, self.sf_dir, storage=self.octopi, octopus_id=eid)
+                self._octopus_runs[eid] = run
         run.train()
         return 202, {"id": eid, "status": run.state.status.value}
+
+    def _octopus_run(self, eid: int):
+        """The in-memory run of octopus ``eid``, restored from disk on first
+        use after a restart (the reference reads the cached alignment graph
+        at predict, KarmaBuildAlignmentGraph.scala:75-82); None when it was
+        never aligned."""
+        with self._lock:
+            return self._octopus_runs.get(eid) or self._restore_octopus(eid)
 
     def _restore_octopus(self, eid: int):
         """Rebuild a COMPLETE run from the persisted alignment graph (a fresh
         process has no in-memory runs). The lobster RF is retrained — the
         alignment, which the reference persists precisely because it is the
-        expensive half to rebuild, comes from disk."""
+        expensive half to rebuild, comes from disk. Called under the lock."""
         from serene_spark.modeler.octopus import ONTOLOGY, train_lobster
         from serene_spark.modeler.orchestrate import Octopus, Status, TrainState
 
@@ -194,7 +208,7 @@ class SereneService:
         over HTTP instead of a shared filesystem."""
         if self.octopi.get(eid) is None:
             return 404, {"error": "not found"}
-        run = self._octopus_runs.get(eid) or self._restore_octopus(eid)
+        run = self._octopus_run(eid)
         if run is None:
             return 404, {"error": "not found"}
         run.wait(timeout=600)
@@ -209,14 +223,9 @@ class SereneService:
     def predict_octopus(self, eid: int) -> tuple[int, dict]:
         if self.octopi.get(eid) is None:
             return 404, {"error": "not found"}
-        run = self._octopus_runs.get(eid)
+        run = self._octopus_run(eid)
         if run is None:
-            # restart path: rebuild the run from the on-disk alignment cache
-            # (the reference reads the cached alignment graph at predict,
-            # KarmaBuildAlignmentGraph.scala:75-82) and retrain the lobster
-            run = self._restore_octopus(eid)
-            if run is None:
-                return 404, {"error": "not found"}
+            return 404, {"error": "not found"}
         run.wait(timeout=600)
         if run.state.status.value != "complete":
             return 409, {"error": f"octopus not trained: {run.state.status.value}"}

@@ -169,35 +169,6 @@ class ModelStorage(Storage):
         return PipelineModel.load(mdir), classes
 
 
-def alignment_to_json(alignment) -> dict:
-    return {
-        "nodes": [{"uri": u, "label": d["label"]} for u, d in sorted(alignment.graph.nodes(data=True))],
-        "edges": [
-            {"u": u, "v": v, "label": lbl, "weight": w}
-            for u, v, lbl, w in sorted(
-                (u, v, d["label"], d["weight"])
-                for u, v, _k, d in alignment.graph.edges(keys=True, data=True)
-            )
-        ],
-        "linkCounts": [
-            {"u": u, "v": v, "label": lbl, "n": n}
-            for (u, v, lbl), n in sorted(alignment._link_counts.items())
-        ],
-    }
-
-
-def alignment_from_json(d: dict, ontology):
-    from serene_spark.modeler.alignment import AlignmentGraph
-
-    g = AlignmentGraph(ontology)
-    for n in d["nodes"]:
-        g.graph.add_node(n["uri"], label=n["label"])
-    for e in d["edges"]:
-        g.graph.add_edge(e["u"], e["v"], key=e["label"], label=e["label"], weight=e["weight"])
-    g._link_counts = {(c["u"], c["v"], c["label"]): c["n"] for c in d["linkCounts"]}
-    return g
-
-
 class OctopusStorage(Storage):
     """Octopus store with the trained alignment graph cached on disk between
     train and predict (OctopusStorage.scala:110); ``delete_alignment`` is the
@@ -211,12 +182,14 @@ class OctopusStorage(Storage):
 
     def cache_alignment(self, eid: int, alignment) -> None:
         with open(self._alignment_path(eid), "w", encoding="utf-8") as f:
-            json.dump(alignment_to_json(alignment), f, sort_keys=True)
+            f.write(alignment.export_json())
 
     def load_alignment(self, eid: int, ontology):
+        from serene_spark.modeler.alignment import AlignmentGraph
+
         try:
             with open(self._alignment_path(eid), encoding="utf-8") as f:
-                return alignment_from_json(json.load(f), ontology)
+                return AlignmentGraph.import_json(f.read(), ontology)
         except FileNotFoundError:
             return None
 

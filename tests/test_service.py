@@ -235,3 +235,37 @@ def test_concurrent_train_predict_query_load(server, sf_dir):
             break
         _t.sleep(2)
     assert state["status"] == "complete", state
+
+
+def test_concurrent_restore_trains_lobster_once(tmp_path, monkeypatch):
+    """After a restart, concurrent alignment requests on an octopus with a
+    cached alignment share one restore: the lobster is retrained once, not
+    once per request. No Spark: the lobster trainer is a stub."""
+    import concurrent.futures as cf
+    import threading
+
+    import serene_spark.modeler.octopus as octo
+
+    calls = []
+    calls_lock = threading.Lock()
+
+    def slow_lobster(spark, sf_dir):
+        with calls_lock:
+            calls.append(sf_dir)
+        time.sleep(0.5)
+        return None, []
+
+    monkeypatch.setattr(octo, "train_lobster", slow_lobster)
+    svc = SereneService(None, "unused-sf-dir", str(tmp_path))
+    eid = svc.octopi.add({"ssds": [], "owls": []})
+    svc.octopi.cache_alignment(eid, octo.train_octopus())
+    srv = start_server(svc)
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    try:
+        with cf.ThreadPoolExecutor(max_workers=2) as ex:
+            results = list(ex.map(
+                lambda _: _req(base, "GET", f"/v1.0/octopus/{eid}/alignment"), range(2)))
+    finally:
+        srv.shutdown()
+    assert [code for code, _ in results] == [200, 200], results
+    assert len(calls) == 1

@@ -71,6 +71,7 @@ def test_octopus_alignment_cache(tmp_path):
     terminals = ["Customer1", "Region1"]
     assert back.steiner_tree(terminals) == alignment.steiner_tree(terminals)
     assert back._link_counts == alignment._link_counts
+    assert back.export_json() == alignment.export_json()
 
     store.delete_alignment(eid)
     assert store.load_alignment(eid, ONTOLOGY) is None
