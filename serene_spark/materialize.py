@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import logging
 import tempfile
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
@@ -62,6 +63,9 @@ def _has_checkpoint_dir(spark) -> bool:
 CHECKPOINT_DIR_ENV = "SERENE_CHECKPOINT_DIR"
 
 CONSTRAINT_PROP_CONF = "spark.sql.constraintPropagation.enabled"
+# Held across each constraint_propagation_off scope: two overlapping scopes
+# would otherwise restore in the wrong order and leave the pass off for good.
+_CONSTRAINT_PROP_LOCK = threading.RLock()
 
 
 @contextmanager
@@ -83,14 +87,17 @@ def constraint_propagation_off(spark):
     optimization happens inside the scope, the barrier leaves a leaf
     relation behind, and every downstream plan compiles with the pass back
     ON (keeping its join-pushdown benefits everywhere else). The previous
-    conf value is restored even on error.
+    conf value is restored even on error. Scopes on other threads wait for
+    the open one to close. The conf is session-global, so a query compiled
+    on another thread while a scope is open still runs without the pass.
     """
-    prev = spark.conf.get(CONSTRAINT_PROP_CONF)
-    spark.conf.set(CONSTRAINT_PROP_CONF, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(CONSTRAINT_PROP_CONF, prev)
+    with _CONSTRAINT_PROP_LOCK:
+        prev = spark.conf.get(CONSTRAINT_PROP_CONF)
+        spark.conf.set(CONSTRAINT_PROP_CONF, "false")
+        try:
+            yield
+        finally:
+            spark.conf.set(CONSTRAINT_PROP_CONF, prev)
 
 
 def materialize(df: DataFrame) -> DataFrame:

@@ -21,12 +21,27 @@ import json
 import os
 import random
 import shutil
+import threading
 from collections.abc import Callable
 from typing import Any, Generic, TypeVar
 
 T = TypeVar("T")
 
 MAX_ID = 2**31 - 1  # Integer.MAX_VALUE (Generic.scala:28)
+
+
+def _write_atomic(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` in one step: write a temporary file in
+    the same directory, then rename it over ``path``. A concurrent reader
+    sees the old file or the new one, never a torn one."""
+    tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"
+    try:
+        with open(tmp, "w", encoding="utf-8") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 class Storage(Generic[T]):
@@ -67,8 +82,7 @@ class Storage(Generic[T]):
     def add(self, value: T, eid: int | None = None) -> int:
         eid = self.gen_id() if eid is None else eid
         os.makedirs(self._dir(eid), exist_ok=True)
-        with open(self._data_path(eid), "w", encoding="utf-8") as f:
-            json.dump(self._to_json(value), f, sort_keys=True)
+        _write_atomic(self._data_path(eid), json.dumps(self._to_json(value), sort_keys=True))
         return eid
 
     def get(self, eid: int) -> T | None:
@@ -155,8 +169,8 @@ class ModelStorage(Storage):
     def save_model(self, eid: int, model, classes: list[str]) -> None:
         mdir = os.path.join(self._dir(eid), "model")
         model.write().overwrite().save(mdir)
-        with open(os.path.join(self._dir(eid), "classes.json"), "w", encoding="utf-8") as f:
-            json.dump({"classes": list(classes)}, f)
+        _write_atomic(os.path.join(self._dir(eid), "classes.json"),
+                     json.dumps({"classes": list(classes)}))
 
     def load_model(self, eid: int):
         from pyspark.ml import PipelineModel
@@ -181,8 +195,7 @@ class OctopusStorage(Storage):
         return os.path.join(self._dir(eid), "alignment.json")
 
     def cache_alignment(self, eid: int, alignment) -> None:
-        with open(self._alignment_path(eid), "w", encoding="utf-8") as f:
-            f.write(alignment.export_json())
+        _write_atomic(self._alignment_path(eid), alignment.export_json())
 
     def load_alignment(self, eid: int, ontology):
         from serene_spark.modeler.alignment import AlignmentGraph

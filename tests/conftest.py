@@ -123,6 +123,7 @@ _SLOW_TESTS = frozenset((
     "test_service.py::test_concurrent_train_predict_query_load",
     "test_service.py::test_model_train_flow",
     "test_service.py::test_octopus_train_predict_flow",
+    "test_session.py::test_cds_archive_round_trip",
     "test_storage.py::test_model_storage_roundtrip",
     "test_storage.py::test_orchestrator_caches_alignment",
     "test_streaming.py::test_stateful_sessionize_matches_batch",

@@ -206,3 +206,35 @@ def test_full_bench_set_survives_multi_executor_cluster():
                        capture_output=True, text=True, timeout=1200,
                        cwd=os.path.dirname(os.path.dirname(__file__)))
     assert "CLUSTER_BENCH_OK" in r.stdout, r.stdout[-2000:] + r.stderr[-4000:]
+
+
+def test_overlapping_constraint_propagation_scopes_restore_the_conf(spark):
+    """Two threads' scopes forced to overlap: the second enters only after
+    the first has left, so the conf ends at its original value (without the
+    lock the second saves ``"false"`` and restores it last)."""
+    import threading
+
+    before = spark.conf.get(CONSTRAINT_PROP_CONF)
+    a_in, b_entering, b_in, a_out = (threading.Event() for _ in range(4))
+
+    def first():
+        with constraint_propagation_off(spark):
+            a_in.set()
+            b_entering.wait(5)
+            b_in.wait(1)  # set at once unless the scopes are serialized
+        a_out.set()
+
+    def second():
+        a_in.wait(5)
+        b_entering.set()
+        with constraint_propagation_off(spark):
+            b_in.set()
+            a_out.wait(5)
+
+    threads = [threading.Thread(target=f) for f in (first, second)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(15)
+    assert not any(t.is_alive() for t in threads)
+    assert spark.conf.get(CONSTRAINT_PROP_CONF) == before

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import random
 
 from serene_spark.storage import (
@@ -125,3 +126,17 @@ def test_orchestrator_caches_alignment(spark, sf_dir, tmp_path):
     assert cached.steiner_tree(["Customer1", "Region1"]) == oct_.alignment.steiner_tree(
         ["Customer1", "Region1"]
     )
+
+
+def test_failed_update_keeps_the_old_record(tmp_path):
+    """An update whose value cannot be serialized raises and leaves the
+    stored record as it was, with no temporary file behind."""
+    store = Storage(str(tmp_path / "things"), rng=random.Random(3))
+    eid = store.add({"x": 1})
+    try:
+        store.update(eid, {"x": object()})
+        raise AssertionError("serializing an object() must raise")
+    except TypeError:
+        pass
+    assert store.get(eid) == {"x": 1}
+    assert os.listdir(tmp_path / "things" / str(eid)) == ["data.json"]
