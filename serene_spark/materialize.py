@@ -108,7 +108,13 @@ def materialize(df: DataFrame) -> DataFrame:
     location without touching caller code — the deployment-level switch
     for the staged/pushdown-barrier paths, whose barriers are semantically
     required (localCheckpoint data dies with an executor at cluster
-    scale; a reliable dir makes the same barrier fault-tolerant)."""
+    scale; a reliable dir makes the same barrier fault-tolerant).
+
+    The checkpoint leaf forgets its partitioning: it reports
+    ``UnknownPartitioning``, even over one partition, so every aggregate,
+    window or join above it plans a shuffle of its own. A caller that
+    knows the result is small can re-state what it is (see
+    ``ml.pipeline.profile_features_from_long``)."""
     import os
 
     spark = df.sparkSession

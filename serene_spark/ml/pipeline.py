@@ -176,6 +176,17 @@ def profile_features_from_long(
     staged, every consumer (joins, ``PipelineModel`` stages, the score
     projections) analyzes and optimizes a leaf instead of re-planning the
     profiler. Callers need no further ``cache()``/``materialize()``.
+
+    One-partition histograms. AQE coalesces any histogram smaller than one
+    advisory partition to a single partition, but the checkpoint leaf
+    reports ``UnknownPartitioning`` (see :func:`materialize`), so the fused
+    statement would re-shuffle that one partition for every aggregate,
+    window and join (7 exchanges on a 100-row table). Read through
+    ``coalesce(1)``, the leaf reports ``SinglePartition``, which satisfies
+    all of them: the plan keeps its broadcasts and runs no shuffle, and a
+    warm request runs 8 Spark jobs instead of 15. The partition count is
+    read from the checkpoint's RDD, which starts no job. A histogram of
+    more partitions keeps the shuffles, and with them its parallelism.
     """
     # One data-scale pass: reduce the long relation to its (column, value)
     # histogram, materialize THAT once (Spark inlines CTEs, so the
@@ -194,9 +205,10 @@ def profile_features_from_long(
     needs_numeric = settings is None or settings.needs_numeric
     long_df.createOrReplaceTempView(view)
     try:
-        spark.sql(staged_hist_sql(view, needs_numeric)).transform(
-            materialize
-        ).createOrReplaceTempView(hist_view)
+        hist = spark.sql(staged_hist_sql(view, needs_numeric)).transform(materialize)
+        if hist.rdd.getNumPartitions() == 1:
+            hist = hist.coalesce(1)
+        hist.createOrReplaceTempView(hist_view)
         out = spark.sql(
             fused_profile_sql(
                 hist_view,

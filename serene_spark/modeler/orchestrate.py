@@ -92,7 +92,8 @@ class Octopus:
     def _merge(self, lobster_fut: Future, align_fut: Future) -> None:
         """The reference's ``processPaths`` four-way outcome merge
         (OctopusInterface.scala:219-311): each half succeeds or fails
-        independently; the octopus is COMPLETE only if both succeeded."""
+        independently; the octopus is COMPLETE only if both succeeded and
+        the alignment is cached."""
         lobster_err = align_err = None
         try:
             model, classes = lobster_fut.result()
@@ -105,6 +106,15 @@ class Octopus:
             align_err = f"Modeler failed: {exc}"
             alignment = None
 
+        # The alignment is on disk before COMPLETE is published: pollers
+        # read the state without the lock, and a caller that sees
+        # ``complete`` may read the cached alignment at once.
+        persist = self.storage is not None and self.octopus_id is not None
+        if align_err is None and lobster_err is None and persist:
+            try:
+                self.storage.cache_alignment(self.octopus_id, alignment)
+            except Exception as exc:  # noqa: BLE001
+                align_err = f"Caching the alignment failed: {exc}"
         with self._lock:
             if lobster_err is None:
                 self.model, self.classes = model, classes
@@ -114,11 +124,9 @@ class Octopus:
             if align_err is None and lobster_err is None:
                 self.alignment = alignment
                 self.state = TrainState(Status.COMPLETE)
-                if self.storage is not None and self.octopus_id is not None:
-                    self.storage.cache_alignment(self.octopus_id, alignment)
             else:
                 self.alignment = None  # deleteAlignmetDir analogue
-                if self.storage is not None and self.octopus_id is not None:
+                if persist:
                     self.storage.delete_alignment(self.octopus_id)
                 self.state = TrainState(
                     Status.ERROR, "; ".join(m for m in (lobster_err, align_err) if m)

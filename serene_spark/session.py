@@ -14,8 +14,12 @@ the archive as its JVM exits, and every later start maps it; that roughly
 halves the engine's set-up time. The recording start is slower, and its
 exit waits ~20 s for the JVM to write the archive, once. The archive lives in
 a per-user cache, ``CDS_ROOT``, keyed by the java binary, Spark's jars and
-the driver heap. It holds the classes its recording process loaded (~175 MB
-for a perfbench process); delete the directory to rebuild it.
+the driver heap. It holds only the classes its recording process loaded,
+and nothing refreshes it, so the first process on a host decides what
+every later start maps (107 MB after a fast test subset, 175 MB after a
+perfbench run, 204 MB after the full test suite); classes outside it are
+read from the jars on every start. To rebuild it, delete the ``cds/``
+directory and run the widest workload once, e.g. the full test suite.
 
 JDK 17 writes no archive while a non-empty directory is on the class path,
 and the Spark launcher puts its conf dir there first. So the archive is used
@@ -54,6 +58,10 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # AQE numbers codegen stages anew on every query, and the stage id is
+    # part of each generated class's name; without it, a repeated request
+    # generates identical code, which Spark's compile cache can serve.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 # Per-user cache of the driver JVM's class-data-sharing archives, and the

@@ -3,24 +3,77 @@
 DuckDB oracle statements (scalar, text length, char entropy, numeric)
 joined on column_name, with the matrix's -1 fill for absent values; and
 its feature gating must drop whole families from the fused statement, not
-just from the projection."""
+just from the projection. Both histogram branches are covered: the
+one-partition histogram (what AQE leaves for any histogram under one
+advisory partition) and a multi-partition one, forced by turning AQE's
+partition coalescing off."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pandas as pd
+import pytest
 
 from serene_spark.catalog import COLUMNS, load_table
 from serene_spark.functions.melt import melt_ids, melt_sql
 from serene_spark.functions.sqlgen import DUCKDB
+from serene_spark.ml import pipeline
 from serene_spark.ml.pipeline import profile_features_from_long
 from serene_spark.operators.profile_chardist import char_entropy_sql
 from serene_spark.operators.profile_scalar import profile_scalar_sql
 from serene_spark.operators.profile_textstats import numeric_stats_sql, textlen_stats_sql
 
 
+COALESCE_CONF = "spark.sql.adaptive.coalescePartitions.enabled"
+SHUFFLE_NODES = ("ShuffleExchange", "ShuffleQueryStage")
+
+
 def _fused(spark, sf_dir: str, table: str) -> pd.DataFrame:
     long_df, name_case = melt_ids(load_table(spark, sf_dir, table))
     return profile_features_from_long(spark, long_df, name_case=name_case).toPandas()
+
+
+@contextmanager
+def _histograms(spark, partitions: str):
+    """Run the block with one-partition histograms (the default: AQE
+    coalesces these small ones to one partition) or multi-partition ones
+    (AQE's coalescing off keeps every shuffle partition), i.e. on either
+    branch of profile_features_from_long."""
+    prev = spark.conf.get(COALESCE_CONF)
+    spark.conf.set(COALESCE_CONF, str(partitions == "one").lower())
+    try:
+        yield
+    finally:
+        spark.conf.set(COALESCE_CONF, prev)
+
+
+def _traced_fused(spark, sf_dir: str, table: str, monkeypatch):
+    """The staged histogram's partition count, the fused statement's
+    executed plan, and the jobs started between the two barriers (the
+    partition check, the view, the fused statement's analysis)."""
+    sc = spark.sparkContext
+    group = "profile-fused-between-barriers"
+    real = pipeline.materialize
+    hist, fused, between = [], [], []
+
+    def spy(df):
+        if hist:  # the fused statement
+            between.extend(sc.statusTracker().getJobIdsForGroup(group))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            fused.append(df)
+            return real(df)
+        hist.append(real(df))
+        sc.setJobGroup(group, group)
+        return hist[0]
+
+    monkeypatch.setattr(pipeline, "materialize", spy)
+    try:
+        _fused(spark, sf_dir, table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = fused[0]._jdf.queryExecution().executedPlan().toString()
+    return hist[0].rdd.getNumPartitions(), plan, between
 
 
 def _four_way(duck, table: str) -> pd.DataFrame:
@@ -46,14 +99,39 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.astype({c: float for c in df.columns if c != "column_name"}).fillna(-1.0)
 
 
-def test_fused_equals_four_way_customer(spark, sf_dir, duck):
-    a, b = _norm(_fused(spark, sf_dir, "customer")), _norm(_four_way(duck, "customer"))
-    pd.testing.assert_frame_equal(a, b)
+BRANCHES = pytest.mark.parametrize("partitions", ["one", "multi"])
 
 
-def test_fused_equals_four_way_orders(spark, sf_dir, duck):
-    a, b = _norm(_fused(spark, sf_dir, "orders")), _norm(_four_way(duck, "orders"))
-    pd.testing.assert_frame_equal(a, b)
+@BRANCHES
+def test_fused_equals_four_way_customer(spark, sf_dir, duck, partitions):
+    with _histograms(spark, partitions):
+        a = _norm(_fused(spark, sf_dir, "customer"))
+    pd.testing.assert_frame_equal(a, _norm(_four_way(duck, "customer")))
+
+
+@BRANCHES
+def test_fused_equals_four_way_orders(spark, sf_dir, duck, partitions):
+    with _histograms(spark, partitions):
+        a = _norm(_fused(spark, sf_dir, "orders"))
+    pd.testing.assert_frame_equal(a, _norm(_four_way(duck, "orders")))
+
+
+def test_one_partition_histogram_plans_no_shuffle(spark, sf_dir, monkeypatch):
+    with _histograms(spark, "one"):
+        parts, plan, between = _traced_fused(spark, sf_dir, "customer", monkeypatch)
+    assert parts == 1
+    assert between == [], "the partition check or the view started a Spark job"
+    assert "BroadcastQueryStage" in plan
+    assert not any(node in plan for node in SHUFFLE_NODES), plan
+
+
+def test_multi_partition_histogram_keeps_its_plan(spark, sf_dir, monkeypatch):
+    with _histograms(spark, "multi"):
+        parts, plan, between = _traced_fused(spark, sf_dir, "customer", monkeypatch)
+    assert parts > 1
+    assert between == []
+    assert "ShuffleQueryStage" in plan
+    assert "Coalesce" not in plan, plan
 
 
 def test_fused_gating_drops_families(spark, sf_dir, monkeypatch):
