@@ -177,16 +177,21 @@ def profile_features_from_long(
     projections) analyzes and optimizes a leaf instead of re-planning the
     profiler. Callers need no further ``cache()``/``materialize()``.
 
-    One-partition histograms. AQE coalesces any histogram smaller than one
-    advisory partition to a single partition, but the checkpoint leaf
-    reports ``UnknownPartitioning`` (see :func:`materialize`), so the fused
-    statement would re-shuffle that one partition for every aggregate,
-    window and join (7 exchanges on a 100-row table). Read through
-    ``coalesce(1)``, the leaf reports ``SinglePartition``, which satisfies
-    all of them: the plan keeps its broadcasts and runs no shuffle, and a
-    warm request runs 8 Spark jobs instead of 15. The partition count is
-    read from the checkpoint's RDD, which starts no job. A histogram of
-    more partitions keeps the shuffles, and with them its parallelism.
+    One-partition histograms. AQE leaves a small histogram in one
+    partition: under Spark's default
+    ``spark.sql.adaptive.coalescePartitions.parallelismFirst=true`` it
+    coalesces towards ``minPartitionSize`` (1 MB) spread over the default
+    parallelism, not towards the advisory size, so a histogram of up to
+    about 1 MB of shuffle output ends in one partition and a larger one in
+    several. The checkpoint leaf reports ``UnknownPartitioning`` (see
+    :func:`materialize`), so the fused statement would re-shuffle that one
+    partition for every aggregate, window and join (7 exchanges on a
+    100-row table). Read through ``coalesce(1)``, the leaf reports
+    ``SinglePartition``, which satisfies all of them: the plan keeps its
+    broadcasts and runs no shuffle, and a warm request runs 8 Spark jobs
+    instead of 15. The partition count is read from the checkpoint's RDD,
+    which starts no job. A histogram of more partitions keeps the
+    shuffles, and with them its parallelism.
     """
     # One data-scale pass: reduce the long relation to its (column, value)
     # histogram, materialize THAT once (Spark inlines CTEs, so the

@@ -58,10 +58,6 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # AQE numbers codegen stages anew on every query, and the stage id is
-    # part of each generated class's name; without it, a repeated request
-    # generates identical code, which Spark's compile cache can serve.
-    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 # Per-user cache of the driver JVM's class-data-sharing archives, and the

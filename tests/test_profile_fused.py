@@ -4,9 +4,9 @@ DuckDB oracle statements (scalar, text length, char entropy, numeric)
 joined on column_name, with the matrix's -1 fill for absent values; and
 its feature gating must drop whole families from the fused statement, not
 just from the projection. Both histogram branches are covered: the
-one-partition histogram (what AQE leaves for any histogram under one
-advisory partition) and a multi-partition one, forced by turning AQE's
-partition coalescing off."""
+one-partition histogram (what AQE leaves for a histogram of up to about
+1 MB of shuffle output, as these are) and a multi-partition one, forced by
+turning AQE's partition coalescing off."""
 
 from __future__ import annotations
 
@@ -39,7 +39,9 @@ def _histograms(spark, partitions: str):
     """Run the block with one-partition histograms (the default: AQE
     coalesces these small ones to one partition) or multi-partition ones
     (AQE's coalescing off keeps every shuffle partition), i.e. on either
-    branch of profile_features_from_long."""
+    branch of profile_features_from_long. A tiny advisory partition size
+    would not split them: under the default ``parallelismFirst`` AQE
+    ignores it and coalesces towards the 1 MB ``minPartitionSize``."""
     prev = spark.conf.get(COALESCE_CONF)
     spark.conf.set(COALESCE_CONF, str(partitions == "one").lower())
     try:
