@@ -152,12 +152,31 @@ def register_views(
         df.createOrReplaceTempView(t)
 
 
-def sql_runner(sql_fn, tables: tuple[str, ...], spread: bool = False):
-    """Registry callable for a query that is one Spark SQL statement: bind
-    ``tables`` as views, then run ``sql_fn(SPARK)`` (built on every run)."""
+def sql_runner(sql_fn, tables: tuple[str, ...], spread: bool = False, stages=None):
+    """Registry callable for a SQL-defined query: bind ``tables`` as views,
+    stage each ``(view, statement)`` of ``stages(SPARK)`` in order, then run
+    ``sql_fn(SPARK)`` (both built on every run).
+
+    A stage is run, materialized and bound as ``view``, so a later stage
+    or the final statement may read it. Catalyst inlines a CTE at EVERY
+    reference site, so a tail that reads a base relation k times re-derives
+    its whole input pipeline — including the parquet scan — k times
+    (measured: 148 scans for the triangle wedge chain, 102 for
+    Mann-Kendall's pairwise ranks). One eager materialization per base caps
+    the fact-table cost at one scan however often the tail refers to it
+    (localCheckpoint under local[*], reliable checkpoint on a cluster — see
+    serene_spark.materialize).
+    """
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_views(spark, sf_dir, tables, spread=spread)
+        if stages is not None:
+            # looked up per run, so a wrapper installed on the module
+            # (perfbench's tracer) sees every stage
+            from serene_spark.materialize import materialize
+
+            for view, statement in stages(SPARK):
+                materialize(spark.sql(statement)).createOrReplaceTempView(view)
         return spark.sql(sql_fn(SPARK))
 
     # the query belongs to the module that defines its SQL: tools/parity.py
@@ -169,39 +188,17 @@ def sql_runner(sql_fn, tables: tuple[str, ...], spread: bool = False):
 def compose_with(bases: list[tuple[str, str]], tail_sql: str) -> str:
     """Single-statement SQL from base CTE bodies + a tail that starts with
     WITH — the oracle-side composition for operators whose Spark runner
-    materializes the bases (``run_materialized``)."""
+    stages the bases (``cte_stages``)."""
     heads = ",\n".join(body for _, body in bases)
     t = tail_sql.lstrip()
     assert t.startswith("WITH "), t[:40]
     return f"\nWITH {heads},\n{t[len('WITH '):]}"
 
 
-def run_materialized(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: tuple[str, ...],
-    bases: list[tuple[str, str]],
-    tail_sql: str,
-    spread: bool = False,
-):
-    """Materialize each base CTE once (localCheckpoint + temp view), then
-    run the tail against the views.
-
-    Catalyst inlines a CTE at EVERY reference site, so a tail that reads a
-    base relation k times re-derives its whole input pipeline — including
-    the parquet scan — k times (measured this session: 148 scans for the
-    triangle wedge chain, 102 for Mann-Kendall's pairwise ranks).  One
-    eager materialization per base caps the fact-table cost at one scan
-    regardless of how many times the tail refers to it (localCheckpoint
-    under local[*], reliable checkpoint on a cluster — see
-    serene_spark.materialize).  Bases are materialized in order, so later
-    bases may reference earlier views.
-    """
-    from serene_spark.materialize import materialize
-
-    register_views(spark, sf_dir, tables, spread=spread)
-    for view, body in bases:
-        materialize(
-            spark.sql(f"WITH {body} SELECT * FROM {view}")
-        ).createOrReplaceTempView(view)
-    return spark.sql(tail_sql)
+def cte_stages(bases_fn):
+    """``stages=`` for ``sql_runner`` from the CTE bases ``compose_with``
+    inlines: base ``(view, body)`` is staged as
+    ``WITH {body} SELECT * FROM {view}``."""
+    return lambda dialect: [
+        (view, f"WITH {body} SELECT * FROM {view}") for view, body in bases_fn(dialect)
+    ]

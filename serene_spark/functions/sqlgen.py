@@ -262,8 +262,8 @@ def mat(dialect: str) -> str:
     """DuckDB-only ``AS MATERIALIZED`` CTE hint (returns "" for Spark).
 
     The Spark runner materializes multiply-referenced or chain-segment
-    bases as localCheckpoint views (catalog.run_materialized), so its SQL
-    never needs — and does not support — the keyword.  The DuckDB oracle
+    bases as localCheckpoint views (catalog.sql_runner's ``stages``), so its
+    SQL never needs — and does not support — the keyword.  The DuckDB oracle
     is one statement, and DuckDB 1.0 inlines single-reference CTEs: a
     deep iteration chain or a many-reference base re-inlines its whole
     input pipeline at every site (attribution_markov measured 58s -> 0.2s

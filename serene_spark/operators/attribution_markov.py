@@ -33,9 +33,7 @@ reduce is a sessionization-cost pass, the chain math is free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import compose_with, run_materialized
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us
 from serene_spark.registry import register
 
@@ -48,7 +46,7 @@ START = "__start"
 def _mat(dialect: str) -> str:
     """DuckDB-only ``AS MATERIALIZED`` hint for multiply-referenced base
     CTEs.  The Spark runner materializes bases as localCheckpoint views
-    (run_materialized), so its SQL never needs — and doesn't support —
+    (``catalog.cte_stages``), so its SQL never needs — and doesn't support —
     the keyword; but the single-statement DuckDB oracle re-inlines every
     reference, and with ``strans`` read 13 times (12 iteration levels +
     p_start) the events window scan re-ran 13x (58s measured at sf0.01 →
@@ -319,8 +317,7 @@ register(
     f"probability drop when the channel is removed from the journey chain, "
     f"{N_ABS_ITER} unrolled decimal-exact absorption iterations; one LEAD "
     "pass, then states-squared chain math",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",),
-    chain_bases(SPARK) + scenario_bases(SPARK),
-    "WITH " + absorption_fold_body() + ",\n"
-    + markov_attribution_tail_sql(SPARK).lstrip().removeprefix("WITH ")))
+)(sql_runner(
+    lambda d: "WITH " + absorption_fold_body() + ",\n"
+    + markov_attribution_tail_sql(d).lstrip().removeprefix("WITH "),
+    ("events",), stages=cte_stages(lambda d: chain_bases(d) + scenario_bases(d))))

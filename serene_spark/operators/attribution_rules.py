@@ -23,8 +23,8 @@ materialized as an array.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized, sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_us
 from serene_spark.registry import register
 
 HALF_LIFE_DAYS = 7.0
@@ -224,5 +224,4 @@ register(
     "(v(S) = conversions with touch set contained in S): integer-exact "
     "16-coalition evaluation, factorial-weighted exact sum, efficiency "
     "axiom residual emitted",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), _shapley_bases(SPARK), _shapley_sql(SPARK)))
+)(sql_runner(_shapley_sql, ("events",), stages=cte_stages(_shapley_bases)))

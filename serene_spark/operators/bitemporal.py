@@ -28,8 +28,8 @@ construction.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us, explode_seq, idiv, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_us, explode_seq, idiv, mat
 from serene_spark.registry import register
 
 N_POINTS = 4
@@ -92,7 +92,4 @@ register(
     "'as known then' (txn-time filtered) vs 'as known now' knowledge; "
     "live-key count + value sum per cell — the delta is the late-data "
     "correction; constant-size audit grid, one keyed window",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("events",)),
-    spark.sql(_bitemporal_sql(SPARK)),
-)[1])
+)(sql_runner(_bitemporal_sql, ("events",)))

@@ -26,8 +26,8 @@ relation.  Nothing data-scale shuffles more than once.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.operators.regression import LOGIT_MU, LOGIT_W, _newton_step
 from serene_spark.registry import register
 
@@ -151,8 +151,7 @@ register(
     f"integer-rank quintiles, treated-weighted pooled ATT beside the naive "
     "difference (the gap = measured confounding bias); single-arm strata "
     "excluded from pooling with NULL att_stratum",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), _bases(SPARK), _tail(SPARK)))
+)(sql_runner(_tail, ("events",), stages=cte_stages(_bases)))
 
 
 def _balance_tail(dialect: str) -> str:
@@ -249,5 +248,4 @@ register(
     "raw vs after stratification (treated-weighted within-stratum "
     "differences over the raw pooled SD) — the table a PSM report must "
     "print before its ATT is believed; |SMD|<0.1 is the conventional bar",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), _bases(SPARK), _balance_tail(SPARK)))
+)(sql_runner(_balance_tail, ("events",), stages=cte_stages(_bases)))

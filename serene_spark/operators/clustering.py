@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import compose_with, register_views, run_materialized
+from serene_spark.catalog import compose_with, cte_stages, register_views, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, element_at, explode_seq, idiv
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
@@ -140,19 +140,13 @@ FROM cm{N_ITER} c LEFT JOIN sizes s ON c.cid = s.cid
 """
 
 
-def _kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_materialized(
-        spark, sf_dir, ("embeddings",), kmeans_pm_bases(SPARK), kmeans_tail_sql(SPARK)
-    )
-
-
 register(
     "kmeans_embeddings",
     oracle=kmeans_sql(DUCKDB),
     doc=f"Lloyd's k-means (K={K}, {N_ITER} unrolled iterations) over "
     "embeddings in integer micro-units — bit-exact assignments and "
     "centroids, broadcast-assignment plan shape",
-)(_kmeans)
+)(sql_runner(kmeans_tail_sql, ("embeddings",), stages=cte_stages(kmeans_pm_bases)))
 
 
 # --- convergence-looped sibling ----------------------------------------------
@@ -324,17 +318,11 @@ FROM cohesion co JOIN separation s ON co.cid = s.cid
 """
 
 
-def _kmeans_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_materialized(
-        spark, sf_dir, ("embeddings",), kmeans_pm_bases(SPARK),
-        kmeans_quality_tail_sql(SPARK)
-    )
-
-
 register(
     "kmeans_cluster_quality",
     oracle=kmeans_quality_sql(DUCKDB),
     doc="per-cluster cohesion (mean within-cluster squared distance) vs "
     "separation (nearest other centroid) for the final k-means model — "
     "integer-exact, assignments recomputed against final centroids",
-)(_kmeans_quality)
+)(sql_runner(kmeans_quality_tail_sql, ("embeddings",),
+             stages=cte_stages(kmeans_pm_bases)))

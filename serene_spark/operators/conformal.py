@@ -22,8 +22,8 @@ rank arithmetic run on constants / the distinct-residual relation.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.operators.regression import _inv3, _solve3
 from serene_spark.registry import register
 
@@ -117,5 +117,4 @@ register(
     "revenue OLS: deterministic orderkey%3 train/calibrate/test folds, "
     "conformal quantile by histogram rank selection, and the coverage "
     "guarantee MEASURED on unseen rows beside the nominal level",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("lineitem",), _bases(SPARK), _tail(SPARK)))
+)(sql_runner(_tail, ("lineitem",), stages=cte_stages(_bases)))

@@ -33,12 +33,9 @@ recurrence is identical.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, element_at, explode_seq
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, element_at, explode_seq
 from serene_spark.registry import register
-from serene_spark.materialize import materialize
 
 KC_K = 5
 DIM = 64
@@ -59,7 +56,7 @@ def _dist_rel(name: str, sel: str) -> str:
 
 def pm_prologue_sql(dialect: str) -> str:
     """The quantized-melt CTE body (shared with the Spark-side
-    materialization — see ``_kcenter``)."""
+    materialization — see ``_kcenter_bases``)."""
     x = element_at(dialect, "embedding", "i")
     return f"""pm AS (
   SELECT vec_id, i AS d,
@@ -104,19 +101,13 @@ FROM ({" UNION ALL ".join(selects)}) u
 """
 
 
+def _kcenter_bases(dialect: str) -> list[tuple[str, str]]:
+    return [("pm", pm_prologue_sql(dialect))]
+
+
 def kcenter_sql(dialect: str) -> str:
     """Full single-statement form (the DuckDB oracle)."""
-    tail = kcenter_tail_sql(dialect)
-    assert tail.startswith("\nWITH ")
-    return f"\nWITH {pm_prologue_sql(dialect)},\n{tail[len('WITH ') + 1:]}"
-
-
-def _kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("embeddings",))
-    spark.sql(
-        f"WITH {pm_prologue_sql(SPARK)} SELECT * FROM pm"
-    ).transform(materialize).createOrReplaceTempView("pm")
-    return spark.sql(kcenter_tail_sql(SPARK))
+    return compose_with(_kcenter_bases(dialect), kcenter_tail_sql(dialect))
 
 
 register(
@@ -126,4 +117,4 @@ register(
     "exemplars over embeddings with the monotone coverage-radius curve; "
     "integer-exact, so the iterative greedy trajectory is oracle-checked "
     "bit-for-bit",
-)(_kcenter)
+)(sql_runner(kcenter_tail_sql, ("embeddings",), stages=cte_stages(_kcenter_bases)))

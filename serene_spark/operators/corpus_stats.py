@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import compose_with, register_views, run_materialized, sql_runner
+from serene_spark.catalog import compose_with, cte_stages, register_views, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq, hex_to_int
 from serene_spark.operators.curation import grams_rel
 from serene_spark.operators.text_analysis import tokens_rel
@@ -122,15 +122,6 @@ def source_similarity_oracle_sql(dialect: str) -> str:
     )
 
 
-def _cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    toks = spark.sql(
-        f"WITH {tokens_rel(SPARK)} SELECT * FROM tokens"
-    ).transform(materialize)
-    toks.createOrReplaceTempView("__cms_tokens")
-    return spark.sql(cms_tail_sql(SPARK, "__cms_tokens"))
-
-
 def _source_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serene_spark.operators.dedup import guard_exact_baseline
 
@@ -150,7 +141,9 @@ register(
     doc=f"Count-Min sketch in SQL ({CMS_D}x{CMS_W} grid): estimates vs "
     f"exact counts for the top-{TOP_N} tokens, overestimate-only by "
     "construction",
-)(_cms)
+)(sql_runner(
+    lambda d: cms_tail_sql(d, "__cms_tokens"), ("documents",), spread=True,
+    stages=lambda d: [("__cms_tokens", f"WITH {tokens_rel(d)} SELECT * FROM tokens")]))
 
 register(
     "source_similarity",
@@ -225,22 +218,15 @@ def source_minhash_oracle_sql(dialect: str) -> str:
     )
 
 
-def _source_sim_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    grams = spark.sql(
-        f"WITH {grams_rel(SPARK)} SELECT * FROM grams"
-    ).transform(materialize)
-    grams.createOrReplaceTempView("__simmh_grams")
-    return spark.sql(source_minhash_tail_sql(SPARK, "__simmh_grams"))
-
-
 register(
     "source_similarity_minhash",
     oracle=source_minhash_oracle_sql(DUCKDB),
     doc=f"MinHash scale sibling of source_similarity: {SRC_MH_PERMS}-perm "
     "per-source signatures (one wide MIN agg), matching-minima Jaccard "
     "estimate; estimator error vs the exact twin pinned in tests",
-)(_source_sim_minhash)
+)(sql_runner(
+    lambda d: source_minhash_tail_sql(d, "__simmh_grams"), ("documents",), spread=True,
+    stages=lambda d: [("__simmh_grams", f"WITH {grams_rel(d)} SELECT * FROM grams")]))
 
 
 # --- Bloom filter in SQL ----------------------------------------------------
@@ -344,20 +330,13 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_probed,
 FROM verdicts
 """
 
-def _bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_materialized(
-        spark, sf_dir, ("orders", "customer"), bloom_bases(SPARK),
-        bloom_tail_sql(SPARK)
-    )
-
-
 register(
     "bloom_filter_stats",
     oracle=bloom_stats_sql(DUCKDB),
     doc=f"Bloom filter in SQL ({BLOOM_K} hashes, {BLOOM_M} bits) over "
     "orders' customer keys probed against all customers: zero false "
     "negatives, FPR vs ground truth — the runtime-filter pruning pattern",
-)(_bloom)
+)(sql_runner(bloom_tail_sql, ("orders", "customer"), stages=cte_stages(bloom_bases)))
 
 
 # --- Zipf-law fit over the token frequency distribution ---------------------

@@ -24,8 +24,8 @@ in one pass; the estimator algebra runs on constants.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, register_views, run_materialized
-from serene_spark.functions.sqlgen import variant_expr, DUCKDB, SPARK, epoch_us, idiv, mat
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import variant_expr, DUCKDB, epoch_us, idiv, mat
 from serene_spark.registry import register
 
 
@@ -128,8 +128,7 @@ register(
     "theta-adjustment of the A/B metric with the raw and adjusted "
     "differences AND variances emitted — the reduction is measured, not "
     "assumed",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), _cuped_bases(SPARK), _cuped_tail(SPARK)))
+)(sql_runner(_cuped_tail, ("events",), stages=cte_stages(_cuped_bases)))
 
 
 def _icc_sql(dialect: str) -> str:
@@ -174,7 +173,4 @@ register(
     doc="ICC(1) of order value within nation clusters from the ANOVA mean "
     "squares + the Kish design effect 1+(m-1)ICC — the cluster-sampling "
     "counterpart of neyman_allocation",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders", "customer")),
-    spark.sql(_icc_sql(SPARK)),
-)[1])
+)(sql_runner(_icc_sql, ("orders", "customer")))

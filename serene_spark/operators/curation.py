@@ -27,12 +27,9 @@ Scale shapes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views, sql_runner
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
-    SPARK,
     arr_filter_nonempty,
     arr_join,
     arr_len,
@@ -46,7 +43,6 @@ from serene_spark.functions.sqlgen import (
 )
 from serene_spark.operators.text_analysis import NORM
 from serene_spark.registry import register
-from serene_spark.materialize import materialize
 
 GRAM_K = 8  # word n-gram width for decontamination (the common 8-13 range)
 BENCH_MOD = 17  # doc_id % 17 == 0 -> held-out "benchmark" subset
@@ -640,17 +636,11 @@ ORDER BY p.source
 """
 
 
-def _source_quality_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    for view, sql in source_quality_base_views(SPARK):
-        spark.sql(sql).transform(materialize).createOrReplaceTempView(view)
-    return spark.sql(source_quality_tail_sql(SPARK))
-
-
 register(
     "source_quality_profile",
     oracle=source_quality_sql(DUCKDB),
     doc="per-source curation profile (host-level filtering stage): quality "
     "pass rate, exact-dup rate (non-keeper docs), language spread + "
     "majority, mean length, keep/drop decision at documented thresholds",
-)(_source_quality_materialized)
+)(sql_runner(source_quality_tail_sql, ("documents",), spread=True,
+             stages=source_quality_base_views))

@@ -853,14 +853,12 @@ WHERE {hamming} <= {max_hamming}
 """
 
 
-def dedup_simhash_pairs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized runner: the pigeonhole tail references the signature
-    relation 8 times (4 chunk projections x 2 join sides) — same Spark
-    CTE-inlining hazard as the LSH tail."""
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    sim = spark.sql(f"WITH {simhash_rel(SPARK)} SELECT * FROM sim").transform(materialize)
-    sim.createOrReplaceTempView("__serene_sim")
-    return spark.sql(f"WITH {simhash_pairs_body(SPARK, '__serene_sim')}")
+# Staged runner: the pigeonhole tail references the signature relation 8
+# times (4 chunk projections x 2 join sides) — same Spark CTE-inlining
+# hazard as the LSH tail.
+dedup_simhash_pairs_spark = sql_runner(
+    lambda d: f"WITH {simhash_pairs_body(d, '__serene_sim')}", ("documents",), spread=True,
+    stages=lambda d: [("__serene_sim", f"WITH {simhash_rel(d)} SELECT * FROM sim")])
 
 
 # Exact-quadratic baselines refuse data-scale corpora (same refuse-and-
@@ -1331,20 +1329,13 @@ WHERE CAST(c AS DOUBLE) / (n1.n_sh + n2.n_sh - c) >= {t}
 """
 
 
-def _prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    # one shingling pass, consumed by freq/ranked/verify/counts (4 refs)
-    sh = spark.sql(
-        f"WITH {shingles_rel(SPARK)} SELECT * FROM shingles"
-    ).transform(materialize)
-    sh.createOrReplaceTempView("__pf_shingles")
-    return spark.sql("WITH " + prefix_filter_tail_sql("__pf_shingles", SPARK))
-
-
 register("dedup_prefix_filter", oracle=ngram_jaccard_sql(DUCKDB, threshold=PF_THRESHOLD),
          doc=f"EXACT Jaccard>={PF_THRESHOLD} pairs via AllPairs/PPJoin prefix "
          "filtering — oracle is the naive quadratic join, so parity proves "
-         "the filter lossless")(_prefix_filter)
+         "the filter lossless")(sql_runner(
+    lambda d: "WITH " + prefix_filter_tail_sql("__pf_shingles", d), ("documents",), spread=True,
+    # one shingling pass, consumed by freq/ranked/verify/counts (4 refs)
+    stages=lambda d: [("__pf_shingles", f"WITH {shingles_rel(d)} SELECT * FROM shingles")]))
 
 
 # --- containment (asymmetric) verification -----------------------------------
@@ -1500,27 +1491,20 @@ WHERE CAST(e.n_common AS DOUBLE) / n1.n_sh >= {CONTAIN_THRESHOLD}
 """
 
 
-def _containment_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized runner: shingles checkpointed ONCE (the tail references
-    the relation six times — inlined CTEs would shingle the corpus six
-    times over)."""
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    sh = spark.sql(
-        f"WITH {shingles_rel(SPARK)} SELECT * FROM shingles"
-    ).transform(materialize)
-    sh.createOrReplaceTempView("__serene_bkshingles")
-    return spark.sql(
-        "WITH " + containment_bottomk_tail(SPARK, "__serene_bkshingles")
-    )
-
-
 register(
     "dedup_containment_bottomk",
     oracle=containment_bottomk_sql(DUCKDB),
     doc=f"bottom-{BK_K} sketch probe for EXTREME-size-skew containment — "
     "the tier the Jaccard-tuned LSH bands cannot reach; estimate gates, "
     "exact containment verifies (recall-only df cap documented)",
-)(_containment_bottomk)
+)(sql_runner(
+    lambda d: "WITH " + containment_bottomk_tail(d, "__serene_bkshingles"),
+    ("documents",), spread=True,
+    # shingles checkpointed ONCE: the tail references the relation six
+    # times, and inlined CTEs would shingle the corpus six times over
+    stages=lambda d: [
+        ("__serene_bkshingles", f"WITH {shingles_rel(d)} SELECT * FROM shingles"),
+    ]))
 
 
 # --- MinHash estimator-error audit -------------------------------------------

@@ -24,8 +24,8 @@ bin relations.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized, sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, explode_seq
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_s, explode_seq
 from serene_spark.registry import register
 
 from serene_spark.operators.matview import SPLIT_TS  # shared snapshot boundary
@@ -242,8 +242,7 @@ register(
     doc="CUSUM changepoint over daily revenue: standardized bridge path "
     "from decimal-exact moments, argmax day = change-point estimate, "
     "Kolmogorov 1.358 critical value on max|S|/sqrt(n)",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("orders",), cusum_bases(SPARK), cusum_tail_sql(SPARK)))
+)(sql_runner(cusum_tail_sql, ("orders",), stages=cte_stages(cusum_bases)))
 
 register(
     "drift_psi_events",
@@ -330,5 +329,4 @@ register(
     doc="robust daily-revenue outliers: modified z-score via EXACT "
     "count-histogram median and MAD (50% breakdown — outliers cannot "
     "drag the threshold), |z| > 3.5 Iglewicz-Hoaglin gate",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("orders",), mad_bases(SPARK), mad_tail_sql(SPARK)))
+)(sql_runner(mad_tail_sql, ("orders",), stages=cte_stages(mad_bases)))

@@ -22,8 +22,8 @@ keyed on p_type (constant cardinality).  Nothing else shuffles.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 
@@ -59,7 +59,4 @@ register(
     doc="Per-part-type log-log price elasticity: grouped closed-form simple "
     "regression over six 9-dp-quantized decimal moment sums per group; "
     "slope = elasticity, with intercept and Pearson r^2",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("lineitem", "part")),
-    spark.sql(_elasticity_sql(SPARK)),
-)[1])
+)(sql_runner(_elasticity_sql, ("lineitem", "part")))

@@ -22,8 +22,8 @@ constant-size relation.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.operators.vocab import emb_dims_rel
 from serene_spark.registry import register
 
@@ -71,7 +71,4 @@ register(
     doc=f"Per-dimension Fisher/ANOVA-F separability of embeddings across "
     f"label classes: micro-unit-quantized exact integer moments from one "
     f"scan, top-{TOP_DIMS} most separable dimensions with eta^2",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("embeddings",), spread=True),
-    spark.sql(_fisher_sql(SPARK)),
-)[1])
+)(sql_runner(_fisher_sql, ("embeddings",), spread=True))

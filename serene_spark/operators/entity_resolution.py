@@ -454,7 +454,4 @@ register(
     "of both ER sources: rank-bucket EQUI-join candidates, fixture-truth "
     "recall and the all-pairs reduction emitted beside er_blocking_stats' "
     "hash blocks",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("customer",)),
-    spark.sql(er_sorted_neighborhood_sql(SPARK)),
-)[1])
+)(sql_runner(er_sorted_neighborhood_sql, ("customer",)))

@@ -27,8 +27,8 @@ over user_id).  The estimator algebra runs on constants.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 
@@ -84,10 +84,7 @@ register(
     "exact decimal leave-one-out means off the per-nation (n, sum) "
     "relation, (g-1)/g grouped SE; theta_loo spread is the influence "
     "diagnostic",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders", "customer", "nation")),
-    spark.sql(_jackknife_sql(SPARK)),
-)[1])
+)(sql_runner(_jackknife_sql, ("orders", "customer", "nation")))
 
 
 def _capture_sql(dialect: str) -> str:
@@ -125,7 +122,4 @@ register(
     doc="Chapman bias-corrected Lincoln-Petersen estimate of the user "
     "population from click/view captures + Seber SE; emits the true "
     "distinct-user count beside the estimate (self-reported error)",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("events",)),
-    spark.sql(_capture_sql(SPARK)),
-)[1])
+)(sql_runner(_capture_sql, ("events",)))

@@ -21,13 +21,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from serene_spark.catalog import (
+    TABLES,
     compose_with,
+    cte_stages,
     load_table,
     register_views,
-    run_materialized,
     sql_runner,
 )
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, explode_seq, idiv
+from serene_spark.functions.sqlgen import DUCKDB, epoch_s, explode_seq, idiv
 from serene_spark.registry import register
 
 TUMBLING_SQL = """
@@ -80,7 +81,7 @@ register(
     doc=f"top-{TRENDING_TOP_K} trending event types per hour (hour-keyed "
     "rank over the reduced hourly relation; streaming twin re-ranks the "
     "incrementally-maintained counts read-side)",
-)(lambda spark, sf_dir: (register_views(spark, sf_dir), spark.sql(TRENDING_SQL))[1])
+)(sql_runner(lambda _d: TRENDING_SQL, TABLES))
 
 
 # --- JSON extraction (dialect-divergent: get_json_object vs json_extract_string)
@@ -107,7 +108,7 @@ register(
     "events_json_stats",
     oracle=JSON_ORACLE_SQL,
     doc="semi-structured access: JSON property extraction + aggregation",
-)(lambda spark, sf_dir: (register_views(spark, sf_dir), spark.sql(JSON_SPARK_SQL))[1])
+)(sql_runner(lambda _d: JSON_SPARK_SQL, TABLES))
 
 
 # --- Sessionization (30-minute inactivity gap), DataFrame API on the Spark side
@@ -529,19 +530,19 @@ register(
     "events_sliding_15m",
     oracle=sliding_counts_sql(DUCKDB),
     doc="1h/15m sliding-window counts via offset explode (no self-join)",
-)(lambda spark, sf_dir: (register_views(spark, sf_dir), spark.sql(sliding_counts_sql(SPARK)))[1])
+)(sql_runner(sliding_counts_sql, TABLES))
 
 register(
     "events_value_quantiles",
     oracle=value_quantiles_sql(DUCKDB),
     doc="exact count-based p50/p90/p99 of value per event_type",
-)(lambda spark, sf_dir: (register_views(spark, sf_dir), spark.sql(value_quantiles_sql(SPARK)))[1])
+)(sql_runner(value_quantiles_sql, TABLES))
 
 register(
     "events_funnel",
     oracle=FUNNEL_SQL,
     doc="view->click->purchase funnel: first-occurrence ordering per user",
-)(lambda spark, sf_dir: (register_views(spark, sf_dir), spark.sql(FUNNEL_SQL))[1])
+)(sql_runner(lambda _d: FUNNEL_SQL, TABLES))
 
 
 def retention_sql(dialect: str) -> str:
@@ -572,7 +573,7 @@ register(
     "events_retention_cohorts",
     oracle=retention_sql(DUCKDB),
     doc="weekly retention cohort matrix (first-activity week x week offset)",
-)(lambda spark, sf_dir: (register_views(spark, sf_dir), spark.sql(retention_sql(SPARK)))[1])
+)(sql_runner(retention_sql, TABLES))
 
 
 ATTRIBUTION_WINDOW_S = 3600  # last-touch lookback: 1 hour
@@ -644,7 +645,7 @@ register(
     oracle=attribution_sql(DUCKDB),
     doc="last-touch click attribution within a 1-hour lookback (batch form "
     "of the stream-stream join twin)",
-)(lambda spark, sf_dir: (register_views(spark, sf_dir), spark.sql(attribution_sql(SPARK)))[1])
+)(sql_runner(attribution_sql, TABLES))
 
 
 def attribution_linear_sql(dialect: str) -> str:
@@ -688,7 +689,7 @@ register(
     doc="multi-touch linear attribution: purchase value split equally "
     "across the lookback window's clicks, per-click revenue rollup with "
     "decimal-exact credit sums",
-)(lambda spark, sf_dir: (register_views(spark, sf_dir), spark.sql(attribution_linear_sql(SPARK)))[1])
+)(sql_runner(attribution_linear_sql, TABLES))
 
 
 DECAY_HALF_LIFE_S = 900  # 15-minute half-life for time-decay credit
@@ -744,7 +745,7 @@ register(
     doc=f"time-decay attribution ({DECAY_HALF_LIFE_S}s half-life), "
     "per-purchase normalized so value conserves; completes the "
     "last-touch/linear/decay model family",
-)(lambda spark, sf_dir: (register_views(spark, sf_dir), spark.sql(attribution_decay_sql(SPARK)))[1])
+)(sql_runner(attribution_decay_sql, TABLES))
 
 
 RETENTION_DAYS = (1, 7, 14)
@@ -823,9 +824,8 @@ register(
     doc=f"D{'/D'.join(str(n) for n in RETENTION_DAYS)} daily retention per "
     "first-activity-day cohort (exact-day definition); two keyed "
     "aggregations over the reduced user-day relation",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), retention_days_bases(SPARK),
-    retention_days_tail_sql(SPARK)))
+)(sql_runner(retention_days_tail_sql, ("events",),
+    stages=cte_stages(retention_days_bases)))
 
 
 # --- Session entry/exit routes + bounce rate --------------------------------

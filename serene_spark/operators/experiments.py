@@ -21,8 +21,8 @@ engine's determinism conventions.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized, sql_runner
-from serene_spark.functions.sqlgen import variant_expr, DUCKDB, SPARK, epoch_s, epoch_us, explode_seq, hex_to_int, idiv
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import variant_expr, DUCKDB, epoch_s, epoch_us, explode_seq, idiv
 from serene_spark.registry import register
 
 HOUR_US = 3600 * 1_000_000
@@ -291,8 +291,7 @@ register(
     doc=f"RFM segmentation: recency/frequency/monetary {RFM_BINS}-quantile "
     "scores per customer via the count-histogram quantile (never NTILE — "
     "divergent tie handling); r inverted so 5 = most recent",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("orders",), rfm_bases(SPARK), rfm_tail_sql(SPARK)))
+)(sql_runner(rfm_tail_sql, ("orders",), stages=cte_stages(rfm_bases)))
 
 
 def revenue_mom_sql(dialect: str) -> str:

@@ -24,8 +24,8 @@ broadcast 1-row global relation).  Nothing shuffles at data scale.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 SMOOTH_M = 20
@@ -59,10 +59,7 @@ register(
     doc=f"m-estimate smoothed mean-target encoding (m={SMOOTH_M}) of "
     "event_type against value: exact decimal sums + integer counts, "
     "rare categories shrink to the global mean",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("events",)),
-    spark.sql(_target_encode_sql(SPARK)),
-)[1])
+)(sql_runner(_target_encode_sql, ("events",)))
 
 
 def _woe_sql(dialect: str) -> str:
@@ -110,10 +107,7 @@ register(
     doc="Weight-of-evidence per discount bin against the returned label + "
     "total information value: exact integer shares, ln only at the edge, "
     "degenerate bins NULL and excluded from IV",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("lineitem",)),
-    spark.sql(_woe_sql(SPARK)),
-)[1])
+)(sql_runner(_woe_sql, ("lineitem",)))
 
 
 def _eb_sql(dialect: str) -> str:
@@ -179,7 +173,4 @@ register(
     "within-variance + method-of-moments between-variance (floored at 0), "
     "per-brand shrink factors and shrunk means — the estimated-prior "
     "sibling of the fixed-m target encoder",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("part",)),
-    spark.sql(_eb_sql(SPARK)),
-)[1])
+)(sql_runner(_eb_sql, ("part",)))

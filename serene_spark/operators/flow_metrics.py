@@ -25,8 +25,8 @@ over the user-week relation, then a week agg.  No data-scale windows.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, register_views, run_materialized
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, idiv, mat
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_s, idiv, mat
 from serene_spark.registry import register
 
 
@@ -97,8 +97,7 @@ register(
     doc="Little's law L = lambda*W checked on the order pipeline: "
     "time-averaged WIP, arrival rate, mean time-in-system and the "
     "identity gap emitted (exactly zero for the complete window)",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("orders", "lineitem"), _little_bases(SPARK), _little_tail(SPARK)))
+)(sql_runner(_little_tail, ("orders", "lineitem"), stages=cte_stages(_little_bases)))
 
 
 def _growth_sql(dialect: str) -> str:
@@ -181,7 +180,4 @@ register(
     doc="SaaS growth-accounting ledger over weekly purchase revenue: "
     "new / resurrected / expansion / contraction / churned flows with "
     "the conservation residual emitted (exact decimals - zero)",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("events",)),
-    spark.sql(_growth_sql(SPARK)),
-)[1])
+)(sql_runner(_growth_sql, ("events",)))

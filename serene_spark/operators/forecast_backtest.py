@@ -27,8 +27,8 @@ relation.  At 100 TB the fact scan dominates and nothing else grows.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq, mat
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, explode_seq, mat
 from serene_spark.registry import register
 
 H_MAX = 3
@@ -104,5 +104,4 @@ register(
     "baseline forecasters over monthly revenue: per (model, horizon 1-3) "
     "MAPE + MAE with 12-dp-quantized decimal error sums; zero-actual "
     "months excluded from MAPE only",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("orders",), _bases(SPARK), _tail(SPARK)))
+)(sql_runner(_tail, ("orders",), stages=cte_stages(_bases)))

@@ -28,8 +28,8 @@ hourly agg → two running-window sums over the HOUR-cardinality spine.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, explode_seq, idiv, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_s, explode_seq, idiv, mat
 from serene_spark.registry import register
 
 FOUR_FIFTHS = 0.8
@@ -74,10 +74,7 @@ register(
     doc="Disparate-impact audit of the text_quality gate across languages: "
     "pass rates, ratio to the top group, EEOC four-fifths flag — the "
     "filter's mix skew measured before it ships",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("documents",), spread=True),
-    spark.sql(_fairness_sql(SPARK)),
-)[1])
+)(sql_runner(_fairness_sql, ("documents",), spread=True))
 
 
 def burn_fold_sql(dialect: str, hourly_body: str) -> str:
@@ -147,7 +144,4 @@ register(
     f"{BURN_SHORT_H}h and {BURN_LONG_H}h rolling burn rates vs the "
     f"{SLO_TARGET} SLO over the zero-filled hour spine; the page fires "
     "only when BOTH windows burn hot",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("events",)),
-    spark.sql(_burn_sql(SPARK)),
-)[1])
+)(sql_runner(_burn_sql, ("events",)))

@@ -109,21 +109,15 @@ def triangle_sql(dialect: str) -> str:
     return f"\nWITH {edges_sql(dialect).lstrip()},\n{tail[len('WITH ') + 1:]}"
 
 
-def _triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("lineitem", "orders"))
-    spark.sql(
-        f"WITH {edges_sql(SPARK)} SELECT src, dst FROM edges"
-    ).transform(materialize).createOrReplaceTempView("edges")
-    return spark.sql(triangle_tail_sql(SPARK))
-
-
 register(
     "triangle_counts",
     oracle=triangle_sql(DUCKDB),
     doc="exact triangle counts on the supplier co-purchase graph via "
     "degree-ordered orientation (hub-safe wedge join); top-20 nodes + "
     "global count",
-)(_triangles)
+)(sql_runner(triangle_tail_sql, ("lineitem", "orders"), stages=lambda d: [
+    ("edges", f"WITH {edges_sql(d)} SELECT src, dst FROM edges"),
+]))
 
 
 # --- large-star / small-star connected components ---------------------------

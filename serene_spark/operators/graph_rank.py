@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
@@ -113,24 +113,21 @@ def pagerank_sql(dialect: str) -> str:
     )
 
 
-def _pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("lineitem", "orders", "supplier"))
-    edges = spark.sql(
-        f"WITH {edges_sql(SPARK)} SELECT * FROM edges"
-    ).transform(materialize)
-    edges.createOrReplaceTempView("edges")
-    spark.sql("SELECT s_suppkey AS node FROM supplier").transform(materialize).createOrReplaceTempView("nodes")
-    # degs is small but referenced per iteration; it derives from the
-    # materialized edges view so each reference is one tiny agg
-    return spark.sql(pagerank_tail_sql("edges"))
-
-
 register(
     "pagerank_suppliers",
     oracle=pagerank_sql(DUCKDB),
     doc=f"PageRank ({N_ITER} unrolled power iterations, damping {DAMPING}) "
     "over the supplier co-purchase graph; decimal-exact rank sums",
-)(_pagerank)
+)(sql_runner(
+    lambda _d: pagerank_tail_sql("edges"),
+    ("lineitem", "orders", "supplier"),
+    # degs is small but referenced per iteration; it derives from the
+    # materialized edges view so each reference is one tiny agg
+    stages=lambda d: [
+        ("edges", f"WITH {edges_sql(d)} SELECT * FROM edges"),
+        ("nodes", "SELECT s_suppkey AS node FROM supplier"),
+    ],
+))
 
 
 # --- convergence-looped sibling ----------------------------------------------

@@ -30,13 +30,10 @@ ranker, and the matryoshka truncated-dimension recall audit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, element_at, explode_seq
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, element_at, explode_seq
 from serene_spark.operators.text_analysis import tokens_rel
 from serene_spark.registry import register
-from serene_spark.materialize import materialize
 
 RRF_K = 60
 CAND_DEPTH = 50
@@ -191,25 +188,8 @@ def matryoshka_sql(dialect: str) -> str:
     return f"\nWITH {_pm_rel(dialect).lstrip()},\n{tail[len('WITH ') + 1:]}"
 
 
-def _materialize_pm(spark: SparkSession) -> None:
-    spark.sql(
-        f"WITH {_pm_rel(SPARK).lstrip().rstrip()} SELECT * FROM pm"
-    ).transform(materialize).createOrReplaceTempView("pm")
-
-
-def _rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents", "embeddings"))
-    spark.sql(
-        f"WITH {tokens_rel(SPARK).lstrip()} SELECT * FROM tokens"
-    ).transform(materialize).createOrReplaceTempView("tokens")
-    _materialize_pm(spark)
-    return spark.sql(rrf_tail_sql(SPARK))
-
-
-def _matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("embeddings",))
-    _materialize_pm(spark)
-    return spark.sql(matryoshka_tail_sql(SPARK))
+def _pm_stage(dialect: str) -> tuple[str, str]:
+    return ("pm", f"WITH {_pm_rel(dialect).strip()} SELECT * FROM pm")
 
 
 register(
@@ -218,7 +198,10 @@ register(
     doc=f"reciprocal-rank fusion (K={RRF_K}) of a pruned-posting lexical "
     "ranker and an integer-exact embedding-cosine ranker; fusion cost "
     "bounded by candidate depth, never corpus size",
-)(_rrf)
+)(sql_runner(rrf_tail_sql, ("documents", "embeddings"), stages=lambda d: [
+    ("tokens", f"WITH {tokens_rel(d).lstrip()} SELECT * FROM tokens"),
+    _pm_stage(d),
+]))
 
 register(
     "matryoshka_recall",
@@ -226,4 +209,4 @@ register(
     doc=f"truncated-dimension retrieval recall audit over dim prefixes "
     f"{MRL_DIMS}: per-query top-{MRL_K} by integer-exact dot product vs "
     "full-dimension ground truth, fixed query sample",
-)(_matryoshka)
+)(sql_runner(matryoshka_tail_sql, ("embeddings",), stages=lambda d: [_pm_stage(d)]))

@@ -35,10 +35,9 @@ tests/test_hypothesis_tests.py (scipy is not in the container).
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, register_views, run_materialized, sql_runner
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
-    SPARK,
     epoch_s,
     epoch_us,
     explode_seq,
@@ -175,8 +174,7 @@ register(
     doc="Pearson chi-square independence of event type vs day-of-week: "
     "complete margin-cross grid with zero cells, integer-exact "
     "expected counts, decimal-summed contributions",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), chisq_bases(SPARK), chisq_tail_sql(SPARK)))
+)(sql_runner(chisq_tail_sql, ("events",), stages=cte_stages(chisq_bases)))
 
 register(
     "mannwhitney_value",
@@ -270,8 +268,7 @@ register(
     doc="Benford first-digit conformity audit over order totals: "
     "representation-exact digit extraction (never log10+FLOOR), "
     "chi-square distance + Nigrini MAD conformity bands",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("orders",), benford_bases(SPARK), benford_tail_sql(SPARK)))
+)(sql_runner(benford_tail_sql, ("orders",), stages=cte_stages(benford_bases)))
 
 
 # --- Kruskal-Wallis k-sample rank test --------------------------------------
@@ -378,8 +375,7 @@ register(
     doc="Kruskal-Wallis H across all event types (k-sample MWU sibling): "
     "doubled-rank BIGINT algebra over the value histogram, tie-corrected, "
     "chi-square(k-1) decision from a fixed critical table",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), kruskal_bases(SPARK), kruskal_tail_sql(SPARK)))
+)(sql_runner(kruskal_tail_sql, ("events",), stages=cte_stages(kruskal_bases)))
 
 
 # --- goodness of fit vs a FITTED continuous distribution ---------------------
@@ -619,7 +615,4 @@ register(
     doc="Wald-Wolfowitz runs test of daily revenue around its exact-rank "
     "median (median-equal days excluded): run boundaries from one LAG, "
     "conditional-null z with continuity correction",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders",)),
-    spark.sql(runs_test_sql(SPARK)),
-)[1])
+)(sql_runner(runs_test_sql, ("orders",)))

@@ -29,9 +29,7 @@ convention, cf. lang_model_score).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -41,7 +39,6 @@ from serene_spark.functions.sqlgen import (
 )
 from serene_spark.operators.text_analysis import NORM
 from serene_spark.registry import register
-from serene_spark.materialize import materialize
 
 N_BUCKETS = 128
 # target-domain proxy: the "curated" sources whose distribution we want the
@@ -115,22 +112,18 @@ def dsir_oracle_sql(dialect: str) -> str:
     )
 
 
-def _dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    # materialize the tokenize pass once — the tail references it twice and
-    # Catalyst inlines shared CTEs (cluster analog: checkpoint/Delta table)
-    dbc = spark.sql(doc_bucket_counts_sql(SPARK)).transform(materialize)
-    dbc.createOrReplaceTempView("__dsir_dbc")
-    return spark.sql(dsir_tail_sql("__dsir_dbc"))
-
-
 register(
     "dsir_importance",
     oracle=dsir_oracle_sql(DUCKDB),
     doc="DSIR importance weighting: hashed-unigram target-vs-raw "
     "log-likelihood ratio per document with Laplace smoothing; "
     "single tokenize pass, broadcast bucket model",
-)(_dsir)
+)(sql_runner(
+    lambda _d: dsir_tail_sql("__dsir_dbc"), ("documents",), spread=True,
+    # materialize the tokenize pass once — the tail references it twice and
+    # Catalyst inlines shared CTEs (cluster analog: checkpoint/Delta table)
+    stages=lambda d: [("__dsir_dbc", doc_bucket_counts_sql(d))],
+))
 
 
 SAMPLE_FRAC = 0.25  # importance-resample target fraction
@@ -219,21 +212,18 @@ def dsir_weighted_sample_oracle_sql(dialect: str) -> str:
     )
 
 
-def _dsir_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    dbc = spark.sql(doc_bucket_counts_sql(SPARK)).transform(materialize)
-    dbc.createOrReplaceTempView("__dsirws_dbc")
-    # keyed is consumed by three selection stages — materialize it too, or
-    # Catalyst re-runs the scoring aggregation per consumer
-    keyed = spark.sql(keyed_sql("__dsirws_dbc", SPARK)).transform(materialize)
-    keyed.createOrReplaceTempView("__dsirws_keyed")
-    return spark.sql("WITH " + selection_sql("__dsirws_keyed").lstrip())
-
-
 register(
     "dsir_weighted_sample",
     oracle=dsir_weighted_sample_oracle_sql(DUCKDB),
     doc=f"DSIR importance resampling: A-Res weighted sample (frac "
     f"{SAMPLE_FRAC}) with weights exp(llr_avg), threshold-quantile "
     "selection (no global sort)",
-)(_dsir_weighted_sample)
+)(sql_runner(
+    lambda _d: "WITH " + selection_sql("__dsirws_keyed").lstrip(), ("documents",), spread=True,
+    # keyed is consumed by three selection stages — materialize it too, or
+    # Catalyst re-runs the scoring aggregation per consumer
+    stages=lambda d: [
+        ("__dsirws_dbc", doc_bucket_counts_sql(d)),
+        ("__dsirws_keyed", keyed_sql("__dsirws_dbc", d)),
+    ],
+))

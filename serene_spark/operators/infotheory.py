@@ -22,12 +22,9 @@ sum (the drift_psi convention); log2 goes through the dialect shim.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, log2
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, log2
 from serene_spark.registry import register
-from serene_spark.materialize import materialize
 
 AXES = ("status", "priority", "oyear")
 PAIRS = (("status", "priority"), ("status", "oyear"), ("priority", "oyear"))
@@ -96,19 +93,13 @@ WITH {",".join(rels)}
 """
 
 
+def _mutual_info_bases(dialect: str) -> list[tuple[str, str]]:
+    return [("cube0", cube_prologue_sql(dialect))]
+
+
 def mutual_info_sql(dialect: str) -> str:
     """Full single-statement form (the DuckDB oracle)."""
-    tail = mutual_info_tail_sql(dialect)
-    assert tail.startswith("\nWITH ")
-    return f"\nWITH {cube_prologue_sql(dialect)},\n{tail[len('WITH ') + 1:]}"
-
-
-def _mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("orders",))
-    spark.sql(
-        f"WITH {cube_prologue_sql(SPARK)} SELECT * FROM cube0"
-    ).transform(materialize).createOrReplaceTempView("cube0")
-    return spark.sql(mutual_info_tail_sql(SPARK))
+    return compose_with(_mutual_info_bases(dialect), mutual_info_tail_sql(dialect))
 
 
 register(
@@ -117,4 +108,4 @@ register(
     doc="pairwise mutual information + normalized MI between the orders "
     "categorical axes, all pairs derived from ONE contingency cube scan; "
     "12-dp decimal-exact term sums",
-)(_mutual_info)
+)(sql_runner(mutual_info_tail_sql, ("orders",), stages=cte_stages(_mutual_info_bases)))

@@ -28,8 +28,8 @@ multi-chunk intervals, bounded by chunks-per-interval.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, register_views, run_materialized
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, explode_seq, idiv, mat
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_s, explode_seq, idiv, mat
 from serene_spark.registry import register
 
 N_WINDOWS = 12
@@ -109,5 +109,4 @@ register(
     "generated promo windows via 30-day chunk bucketing + equi-join + "
     "exact overlap filter; oracle is the brute-force theta-join, so "
     "parity proves the chunked candidate path is lossless",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("orders", "lineitem"), _bases(SPARK), _spark_tail(SPARK)))
+)(sql_runner(_spark_tail, ("orders", "lineitem"), stages=cte_stages(_bases)))

@@ -19,8 +19,8 @@ share divisions.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 N_BUCKETS = 10
@@ -73,7 +73,4 @@ register(
     doc="Lorenz concentration curve of customer revenue: deterministic "
     "integer-rank deciles (never NTILE), exact decimal sums, cumulative "
     "revenue share + equality-diagonal gap per decile",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders",)),
-    spark.sql(_lorenz_sql(SPARK)),
-)[1])
+)(sql_runner(_lorenz_sql, ("orders",)))

@@ -30,8 +30,8 @@ tests/test_multivariate.py.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.operators.regression import _inv3
 from serene_spark.registry import register
 
@@ -94,10 +94,7 @@ register(
     "(quantity, extendedprice, discount): decimal-exact moment sums from "
     "one scan, explicit 3x3 cofactor inverse, map-only scoring pass "
     "against the broadcast 1-row stats relation, deterministic top-k",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("lineitem",)),
-    spark.sql(_maha_sql(SPARK)),
-)[1])
+)(sql_runner(_maha_sql, ("lineitem",)))
 
 
 # ------------------------------------------------------------- 2-D PCA
@@ -165,7 +162,4 @@ register(
     doc="Closed-form 2x2 PCA of per-user (ln(1+clicks), ln(1+views)): "
     "9-dp-quantized decimal moment sums, eigenvalues/variance-explained/"
     "sign-fixed PC1 loadings as one SQL expression",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("events",)),
-    spark.sql(_pca_sql(SPARK)),
-)[1])
+)(sql_runner(_pca_sql, ("events",)))

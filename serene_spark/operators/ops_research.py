@@ -23,8 +23,8 @@ cohort-keyed counts.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, idiv, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_s, idiv, mat
 from serene_spark.registry import register
 
 CU = 3.0  # underage (lost margin) per unit
@@ -79,10 +79,7 @@ register(
     "demand-quantile via histogram rank selection, with the expected "
     "under/overage units and daily cost at that level evaluated on the "
     "demand distribution itself",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders",)),
-    spark.sql(_newsvendor_sql(SPARK)),
-)[1])
+)(sql_runner(_newsvendor_sql, ("orders",)))
 
 
 def _wilson(p_hat: str, n: str) -> tuple[str, str, str]:
@@ -140,7 +137,4 @@ register(
     doc="Weekly first-purchase cohort repeat rate with Wilson score intervals "
     "(the binomial CI that survives small cohorts and extreme rates); "
     "exact integer counts, closed-form z-algebra at the edge",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("events",)),
-    spark.sql(_retention_sql(SPARK)),
-)[1])
+)(sql_runner(_retention_sql, ("events",)))

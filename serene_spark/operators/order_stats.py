@@ -21,8 +21,8 @@ a global row sort.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 Z_975 = 1.959964
@@ -76,10 +76,7 @@ register(
     "value (binomial ranks, large-n z form): one histogram scan + one "
     "cumulative window over distinct values, rank-targeted selection — "
     "never a global sort",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders",)),
-    spark.sql(_median_ci_sql(SPARK)),
-)[1])
+)(sql_runner(_median_ci_sql, ("orders",)))
 
 
 def _wmedian_sql(dialect: str) -> str:
@@ -122,7 +119,4 @@ register(
     doc="Quantity-weighted median unit price via the histogram + cumulative-"
     "weight rank selection (no global sort), emitted beside the row median "
     "- the small-order bias made visible",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("lineitem",)),
-    spark.sql(_wmedian_sql(SPARK)),
-)[1])
+)(sql_runner(_wmedian_sql, ("lineitem",)))

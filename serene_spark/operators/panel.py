@@ -25,8 +25,8 @@ constant-size closed form.  No demeaned intermediate, no join back.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 _X = "CAST(l_discount AS DECIMAL(18,2))"
@@ -84,7 +84,4 @@ register(
     "part fixed effects, computed from per-entity exact-decimal sums "
     "without materializing demeaned rows; pooled slope emitted beside it "
     "(the gap = measured entity-heterogeneity bias)",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("lineitem",)),
-    spark.sql(_fe_sql(SPARK)),
-)[1])
+)(sql_runner(_fe_sql, ("lineitem",)))

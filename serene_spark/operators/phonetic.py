@@ -30,8 +30,8 @@ Scale: map-only key computation + one constant-cardinality keyed agg.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, rr, split_re
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, rr, split_re
 from serene_spark.registry import register
 
 # a..z minus h,w (dropped), aligned code digits
@@ -86,7 +86,4 @@ register(
     doc="Soundex phonetic blocking over part-name head nouns: portable "
     "translate+regex Soundex (h/w rule, vowel separators, first-letter "
     "dedup), block sizes + distinct-noun counts as blocking-quality stats",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("part",)),
-    spark.sql(_blocks_sql(SPARK)),
-)[1])
+)(sql_runner(_blocks_sql, ("part",)))

@@ -27,8 +27,8 @@ runs on the part-cardinality relation.  Per-part effect terms are
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 _MI = ("(CAST(EXTRACT(YEAR FROM l_shipdate) AS BIGINT) * 12"
@@ -113,8 +113,7 @@ register(
     "effects over common parts + new and lost part revenue, with the "
     "additive identity's residual emitted (zero up to the stated 6-dp "
     "quantization)",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("lineitem",), _bases(SPARK), _bridge_tail(SPARK)))
+)(sql_runner(_bridge_tail, ("lineitem",), stages=cte_stages(_bases)))
 
 
 def _fisher_tail(dialect: str) -> str:
@@ -145,5 +144,4 @@ register(
     doc="Laspeyres / Paasche / Fisher price indices over the common-part "
     "basket of the last two shipment months; 6-dp-quantized decimal "
     "basket sums",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("lineitem",), _bases(SPARK), _fisher_tail(SPARK)))
+)(sql_runner(_fisher_tail, ("lineitem",), stages=cte_stages(_bases)))

@@ -22,8 +22,8 @@ and reduces the session relation to 10 bins.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized
-from serene_spark.functions.sqlgen import variant_expr, DUCKDB, SPARK, hex_to_int, mat
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import variant_expr, DUCKDB, mat
 from serene_spark.operators.regression import (
     N_NEWTON,
     logit_feature_bases,
@@ -80,8 +80,7 @@ register(
     doc="Quantile treatment effects at deciles between the A/B arms: both "
     "arms' exact-rank quantiles from per-arm value histograms, differenced "
     "— WHERE the distribution moved, not just whether the mean did",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), _qte_bases(SPARK), _qte_tail(SPARK)))
+)(sql_runner(_qte_tail, ("events",), stages=cte_stages(_qte_bases)))
 
 
 N_CAL_BINS = 10
@@ -124,7 +123,5 @@ register(
     doc="Reliability table of the oracle-exact logistic fit: 10 fixed-width "
     "probability bins with observed vs mean predicted rate and per-bin "
     "Brier contributions — the GLM family's calibration measured",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",),
-    logit_feature_bases(SPARK) + logit_newton_bases(SPARK),
-    _cal_tail(SPARK)))
+)(sql_runner(_cal_tail, ("events",),
+    stages=cte_stages(lambda d: logit_feature_bases(d) + logit_newton_bases(d))))

@@ -20,8 +20,8 @@ data.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 
@@ -80,5 +80,4 @@ register(
     doc="Spearman rank correlation of quantity vs extendedprice with exact "
     "integer-arithmetic tie midranks from value histograms (never "
     "RANK/NTILE tie conventions); exact decimal rank moments",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("lineitem",), _spearman_bases(SPARK), _spearman_sql(SPARK)))
+)(sql_runner(_spearman_sql, ("lineitem",), stages=cte_stages(_spearman_bases)))

@@ -39,8 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
-from serene_spark.catalog import register_views, sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, idiv
+from serene_spark.catalog import compose_with, cte_stages, register_views, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, idiv
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
 
@@ -140,19 +140,13 @@ WHERE pos <= {CF_TOP_K}
 """
 
 
+def _item_item_bases(_dialect: str) -> list[tuple[str, str]]:
+    return [("baskets", BASKETS_PROLOGUE)]
+
+
 def item_item_cosine_sql(dialect: str) -> str:
     """Full single-statement form (the DuckDB oracle)."""
-    tail = item_item_tail_sql(dialect)
-    assert tail.startswith("\nWITH ")
-    return f"\nWITH {BASKETS_PROLOGUE},\n{tail[len('WITH ') + 1:]}"
-
-
-def _item_item(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("lineitem",))
-    spark.sql(
-        f"WITH {BASKETS_PROLOGUE} SELECT * FROM baskets"
-    ).transform(materialize).createOrReplaceTempView("baskets")
-    return spark.sql(item_item_tail_sql(SPARK))
+    return compose_with(_item_item_bases(dialect), item_item_tail_sql(dialect))
 
 
 def wilson_sql(dialect: str) -> str:
@@ -310,7 +304,7 @@ register(
     doc=f"item-item CF: cosine on binary basket membership, top-{CF_TOP_K} "
     f"neighbors per part among pairs co-ordered >= {CF_MIN_CO} times; "
     "in-basket candidate generation",
-)(_item_item)
+)(sql_runner(item_item_tail_sql, ("lineitem",), stages=cte_stages(_item_item_bases)))
 
 register(
     "wilson_return_rank",
@@ -387,10 +381,7 @@ register(
     doc="Event-study leads/lags around the DiD cut: per-year treated-minus-"
     "control gaps normalized to the last pre-period — pre-cut coefficients "
     "ARE the parallel-trends diagnostic; A/A calibration on this corpus",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("lineitem", "part")),
-    spark.sql(event_study_sql(SPARK)),
-)[1])
+)(sql_runner(event_study_sql, ("lineitem", "part")))
 
 
 # --- ALS matrix factorization (the distributed recommender) ------------------

@@ -42,10 +42,8 @@ solves are constant-size closed forms, not driver-side loops.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import compose_with, register_views, run_materialized
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq, mat
+from serene_spark.catalog import TABLES, compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, explode_seq, mat
 from serene_spark.registry import register
 
 TT_SIDE_A = "click"
@@ -111,8 +109,7 @@ register(
     doc=f"Welch two-sample t-test on value ({TT_SIDE_A} vs {TT_SIDE_B}): "
     "decimal-exact (n, Σx, Σx²) per side from one scan, closed-form t + "
     "Welch–Satterthwaite df",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), ttest_bases(SPARK), ttest_tail_sql(SPARK)))
+)(sql_runner(ttest_tail_sql, ("events",), stages=cte_stages(ttest_bases)))
 
 
 # ------------------------------------------------------------ one-way ANOVA
@@ -181,9 +178,7 @@ register(
     oracle=anova_sql(DUCKDB),
     doc="one-way ANOVA of value across event types: per-group decimal-exact "
     "moments from one scan, 12-dp-quantized SSW/SSB decimal sums, F + eta^2",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), anova_groups_bases(SPARK),
-    anova_tail_sql(SPARK)))
+)(sql_runner(anova_tail_sql, ("events",), stages=cte_stages(anova_groups_bases)))
 
 
 def tukey_sql(dialect: str) -> str:
@@ -228,9 +223,7 @@ register(
     doc="Tukey HSD post-hoc after the one-way ANOVA: studentized-range q per "
     "type pair from the spliced group-moment relation (pair cross is "
     "group-cardinality squared, never data-scale)",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), anova_groups_bases(SPARK),
-    tukey_sql(SPARK)))
+)(sql_runner(tukey_sql, ("events",), stages=cte_stages(anova_groups_bases)))
 
 
 # ------------------------------------------------------- OLS with inference
@@ -332,10 +325,7 @@ register(
     doc="OLS with inference: revenue ~ quantity + discount on lineitem; ten "
     "decimal-exact moments from one scan, closed-form 3x3 normal-equation "
     "solve with std errors, t-stats, R^2",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir),
-    spark.sql(ols_sql(SPARK)),
-)[1])
+)(sql_runner(ols_sql, TABLES))
 
 
 # -------------------------------------------- logistic regression (Newton)
@@ -499,10 +489,8 @@ register(
     f"by {N_NEWTON} unrolled Newton/IRLS steps: 12-dp-quantized decimal "
     "gradient/Hessian sums per step, closed-form 3x3 solve, 9-dp beta — "
     "oracle-exact optimization trajectory; engine-wide session splice",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",),
-    logit_feature_bases(SPARK) + logit_newton_bases(SPARK),
-    logit_tail_sql(SPARK)))
+)(sql_runner(logit_tail_sql, ("events",),
+    stages=cte_stages(lambda d: logit_feature_bases(d) + logit_newton_bases(d))))
 
 
 # ------------------------------------------- Poisson GLM (diurnal counts)
@@ -623,10 +611,8 @@ register(
     f"regressors, {N_POISSON} unrolled Newton steps via the shared GLM "
     "machinery (12-dp decimal gradient/Hessian sums, 9-dp beta) — "
     "deviance/dispersion + fitted cycle amplitude and peak hour",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",),
-    poisson_feature_bases(SPARK) + poisson_newton_bases(SPARK),
-    poisson_tail_sql(SPARK)))
+)(sql_runner(poisson_tail_sql, ("events",),
+    stages=cte_stages(lambda d: poisson_feature_bases(d) + poisson_newton_bases(d))))
 
 
 # ------------------------------------------- OLS residual diagnostics
@@ -780,6 +766,4 @@ register(
     "normality (skew/kurtosis from decimal-exact residual moment sums) + "
     "Breusch-Pagan LM heteroskedasticity (auxiliary e^2 ~ x regression via "
     "the shared 3x3 solve); two scans total, no windows",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("lineitem",), ols_moment_bases(SPARK),
-    ols_diag_tail_sql(SPARK)))
+)(sql_runner(ols_diag_tail_sql, ("lineitem",), stages=cte_stages(ols_moment_bases)))

@@ -20,8 +20,8 @@ relation.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 BUDGET = 10000
@@ -79,7 +79,4 @@ register(
     "budget over order-priority strata vs the proportional baseline, with "
     "both designs' anticipated estimator variances emitted (the design "
     "effect measured, not assumed)",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders",)),
-    spark.sql(_neyman_sql(SPARK)),
-)[1])
+)(sql_runner(_neyman_sql, ("orders",)))

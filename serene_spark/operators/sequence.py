@@ -18,12 +18,9 @@ Scale shapes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views, sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us, explode_seq, idiv
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_us, explode_seq, idiv
 from serene_spark.registry import register
-from serene_spark.materialize import materialize
 
 TRAIL = 24  # trailing window (hours) for the anomaly baseline
 Z_THRESHOLD = 3.0
@@ -133,12 +130,7 @@ def stationary_sql(dialect: str) -> str:
     fixed-point readout (for an ergodic chain the two converge); the
     convergence-looped sibling pattern lives in ``pagerank_converged``.
     """
-    tail = stationary_tail_sql(dialect)
-    assert tail.startswith("\nWITH ")
-    return (
-        f"\nWITH {stationary_pairs_prologue(dialect)},\n"
-        f"{stationary_emp_prologue(dialect)},\n{tail[len('WITH ') + 1:]}"
-    )
+    return compose_with(_stationary_bases(dialect), stationary_tail_sql(dialect))
 
 
 def stationary_pairs_prologue(dialect: str) -> str:
@@ -207,15 +199,9 @@ JOIN emp e ON s.event_type = e.event_type
 """
 
 
-def _markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("events",))
-    spark.sql(
-        f"WITH {stationary_pairs_prologue(SPARK)} SELECT * FROM pairs"
-    ).transform(materialize).createOrReplaceTempView("pairs")
-    spark.sql(
-        f"WITH {stationary_emp_prologue(SPARK)} SELECT * FROM emp"
-    ).transform(materialize).createOrReplaceTempView("emp")
-    return spark.sql(stationary_tail_sql(SPARK))
+def _stationary_bases(dialect: str) -> list[tuple[str, str]]:
+    return [("pairs", stationary_pairs_prologue(dialect)),
+            ("emp", stationary_emp_prologue(dialect))]
 
 
 register(
@@ -224,7 +210,7 @@ register(
     doc=f"stationary distribution of the event-type chain: {N_POWER_ITER} "
     "unrolled decimal-exact power-iteration steps beside the empirical "
     "long-run share",
-)(_markov_stationary)
+)(sql_runner(stationary_tail_sql, ("events",), stages=cte_stages(_stationary_bases)))
 
 
 CONV_WINDOW_US = 24 * 3600 * 1_000_000  # purchase counts if within 24h of view

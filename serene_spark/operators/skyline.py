@@ -28,12 +28,9 @@ identical to the naive semantics — parity proves it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import register_views
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, hex_to_int
 from serene_spark.registry import register
-from serene_spark.materialize import materialize
 
 # dominance criteria over part: minimize price, maximize size
 SAMPLE_MOD = 16  # ~1/16 deterministic sample feeds the pruner
@@ -66,36 +63,37 @@ def _sample_pred(dialect: str) -> str:
     return f"{h} % {SAMPLE_MOD} = 0"
 
 
-def skyline_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-prune-verify skyline (see module docstring)."""
-    register_views(spark, sf_dir, ("part",))
+def _skyline_stages(dialect: str) -> list[tuple[str, str]]:
+    """Sample-prune-verify skyline (see module docstring), steps 1-2."""
     # 1. pruner: the sample's own skyline (tiny² work)
-    pruner = spark.sql(f"""
+    pruner = f"""
         SELECT p_partkey, p_retailprice, p_size
-        FROM (SELECT * FROM part WHERE {_sample_pred(SPARK)}) b
+        FROM (SELECT * FROM part WHERE {_sample_pred(dialect)}) b
         WHERE NOT EXISTS (
-          SELECT 1 FROM (SELECT * FROM part WHERE {_sample_pred(SPARK)}) a
+          SELECT 1 FROM (SELECT * FROM part WHERE {_sample_pred(dialect)}) a
           WHERE {_dominates('a', 'b')}
         )
-    """).transform(materialize)
-    pruner.createOrReplaceTempView("__sky_pruner")
+    """
     # 2. prune the bulk with one broadcast anti-join (map-side)
-    survivors = spark.sql(f"""
+    survivors = f"""
         SELECT p_partkey, p_retailprice, p_size FROM part b
         WHERE NOT EXISTS (
           SELECT 1 FROM __sky_pruner a WHERE {_dominates('a', 'b')}
         )
-    """).transform(materialize)
-    survivors.createOrReplaceTempView("__sky_survivors")
-    # 3. exact verify among survivors only
-    return spark.sql(f"""
+    """
+    return [("__sky_pruner", pruner), ("__sky_survivors", survivors)]
+
+
+def _skyline_verify_sql(_dialect: str) -> str:
+    """Step 3: exact verify among survivors only."""
+    return f"""
         SELECT p_partkey, ROUND(p_retailprice, 6) AS p_retailprice,
                CAST(p_size AS BIGINT) AS p_size
         FROM __sky_survivors b
         WHERE NOT EXISTS (
           SELECT 1 FROM __sky_survivors a WHERE {_dominates('a', 'b')}
         )
-    """)
+    """
 
 
 register(
@@ -103,4 +101,4 @@ register(
     oracle=skyline_naive_sql(DUCKDB),
     doc="skyline (Pareto frontier) of parts on (min price, max size): "
     "sample-prune-verify distributed plan, naive NOT-EXISTS oracle",
-)(skyline_spark)
+)(sql_runner(_skyline_verify_sql, ("part",), stages=_skyline_stages))

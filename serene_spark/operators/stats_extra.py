@@ -17,8 +17,8 @@ concentration measures (Gini coefficient + ABC classification).
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized, sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, explode_seq
 from serene_spark.registry import register
 
 CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -146,9 +146,8 @@ register(
     doc="revenue concentration: ABC classes (80/95 cumulative-share "
     "splits) + Gini coefficient from the grouped Lorenz curve, "
     "zero-revenue customers included",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("customer", "orders"), concentration_bases(SPARK),
-    concentration_tail_sql(SPARK)))
+)(sql_runner(concentration_tail_sql, ("customer", "orders"),
+    stages=cte_stages(concentration_bases)))
 
 
 def boxplot_sql(dialect: str) -> str:

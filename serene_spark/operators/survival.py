@@ -36,10 +36,8 @@ Independent non-SQL reference: pure-python KM in tests/test_survival.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from serene_spark.catalog import sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, idiv
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, epoch_s, idiv
 from serene_spark.registry import register
 
 
@@ -231,18 +229,7 @@ FROM terms
 
 
 def logrank_sql(dialect: str) -> str:
-    from serene_spark.catalog import compose_with
-
     return compose_with(logrank_bases(dialect), logrank_tail_sql(dialect))
-
-
-def _logrank_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from serene_spark.catalog import run_materialized
-
-    return run_materialized(
-        spark, sf_dir, ("orders", "customer"),
-        logrank_bases(SPARK), logrank_tail_sql(SPARK),
-    )
 
 
 register(
@@ -252,7 +239,8 @@ register(
     "repurchase-gap survival (the KM curves' companion test): exact "
     "integer observed counts, 12-dp-quantized decimal expected/variance "
     "sums over the calendar-bounded duration spine",
-)(_logrank_run)
+)(sql_runner(logrank_tail_sql, ("orders", "customer"),
+             stages=cte_stages(logrank_bases)))
 
 
 # --- Nelson-Aalen cumulative hazard ------------------------------------------

@@ -24,8 +24,8 @@ fits run on constant-size relations.
 
 from __future__ import annotations
 
-from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 FDR_Q = 0.05
@@ -99,10 +99,7 @@ register(
     doc="One-vs-rest Welch t battery over event types with Benjamini-"
     "Hochberg FDR adjustment (reverse running-min window over the "
     "battery); p-values via the shared Abramowitz-Stegun erf polynomial",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("events",)),
-    spark.sql(_bh_sql(SPARK)),
-)[1])
+)(sql_runner(_bh_sql, ("events",)))
 
 
 def _gumbel_sql(dialect: str) -> str:
@@ -148,7 +145,4 @@ register(
     doc="Gumbel (EV-I) fit of monthly-maximum order value by method of "
     "moments (sigma = s*sqrt(6)/pi, mu = mean - gamma*sigma) with 12- and "
     "120-month return levels; block maxima from one month-keyed agg",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders",)),
-    spark.sql(_gumbel_sql(SPARK)),
-)[1])
+)(sql_runner(_gumbel_sql, ("orders",)))

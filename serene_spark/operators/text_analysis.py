@@ -16,7 +16,7 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views, sql_runner
+from serene_spark.catalog import sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -32,7 +32,6 @@ from serene_spark.functions.sqlgen import (
 from serene_spark.registry import register
 
 _LOG = logging.getLogger("serene_spark.text_analysis")
-from serene_spark.materialize import materialize
 
 STOPWORDS = {
     "en": ("the", "and", "of", "to", "is", "in", "a", "that", "it", "for"),
@@ -642,19 +641,15 @@ FROM ranked WHERE rk <= {per_lang_cap}
 """
 
 
-def corpus_select_spark_df(spark: SparkSession, sf_dir: str,
-                           per_lang_cap: int = 100) -> DataFrame:
-    """Staged Spark runner for corpus selection: the fused gate projection
-    is MATERIALIZED before the gate filter is applied.  In the one-statement
-    form predicate pushdown moves the fold-heavy WHERE below the spread
-    repartition, serializing all token/gram work into the single-partition
-    scan task (measured 7.2 s serial vs 0.5 s materialized+spread at
-    sf0.01).  The checkpoint is one row per document of small integers."""
-    from serene_spark.materialize import materialize
-
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    materialize(spark.sql(_cs_feat_sql())).createOrReplaceTempView("__cs_feat")
-    return spark.sql("WITH " + _cs_tail_body(SPARK, "__cs_feat", per_lang_cap))
+# Staged Spark runner for corpus selection: the fused gate projection is
+# MATERIALIZED before the gate filter is applied.  In the one-statement form
+# predicate pushdown moves the fold-heavy WHERE below the spread
+# repartition, serializing all token/gram work into the single-partition
+# scan task (measured 7.2 s serial vs 0.5 s materialized+spread at sf0.01).
+# The checkpoint is one row per document of small integers.
+corpus_select_spark_df = sql_runner(
+    lambda d: "WITH " + _cs_tail_body(d, "__cs_feat", 100), ("documents",), spread=True,
+    stages=lambda _d: [("__cs_feat", _cs_feat_sql())])
 
 
 register("corpus_select", oracle=corpus_select_sql(DUCKDB),
@@ -699,16 +694,11 @@ FROM (
 """
 
 
-def _top_tokens_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    rel = "__serene_toptok_tokens"
-    tokens = spark.sql(f"WITH {tokens_rel(SPARK)} SELECT * FROM tokens")
-    tokens.transform(materialize).createOrReplaceTempView(rel)
-    return spark.sql("WITH " + top_tokens_tail(rel))
-
-
+_TOPTOK_REL = "__serene_toptok_tokens"
 register("top_tokens_per_lang", oracle=top_tokens_sql(DUCKDB),
-         doc="exact per-language top-10 token heavy hitters")(_top_tokens_run)
+         doc="exact per-language top-10 token heavy hitters")(sql_runner(
+    lambda _d: "WITH " + top_tokens_tail(_TOPTOK_REL), ("documents",), spread=True,
+    stages=lambda d: [(_TOPTOK_REL, f"WITH {tokens_rel(d)} SELECT * FROM tokens")]))
 
 
 CHUNK_TOKENS = 32   # tokens per chunk (context-window analog)

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import compose_with, register_views, run_materialized, sql_runner
+from serene_spark.catalog import compose_with, cte_stages, register_views, sql_runner
 from serene_spark.functions.sqlgen import (
     mat,
     DUCKDB,
@@ -309,8 +309,7 @@ register(
     doc=f"sample autocorrelation of daily revenue, lags 1..{ACF_MAX_LAG} "
     "(Box-Jenkins constant-denominator estimator over the full calendar "
     "spine; day-keyed lag self-join, calendar-bounded), white-noise band",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("orders",), acf_bases(SPARK), acf_tail_sql(SPARK)))
+)(sql_runner(acf_tail_sql, ("orders",), stages=cte_stages(acf_bases)))
 
 register(
     "ts_decompose_monthly",
@@ -676,8 +675,7 @@ register(
     doc=f"cross-correlation of hourly {CCF_X_TYPE} vs {CCF_Y_TYPE} volume "
     f"at lags 0..{CCF_MAX_LAG}h with the peak-lag flag — the aggregate "
     "lead-lag complement of conversion_lag_quantiles",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), ccf_bases(SPARK), ccf_tail_sql(SPARK)))
+)(sql_runner(ccf_tail_sql, ("events",), stages=cte_stages(ccf_bases)))
 
 
 # ------------------------------------------------- AR(2) via Yule-Walker
@@ -752,8 +750,7 @@ register(
     doc="AR(2) daily-revenue model by Yule-Walker: biased autocovariances "
     "c0..c2 as 9-dp-quantized decimal sums over the ACF's spliced day "
     "spine, closed-form phi1/phi2/sigma2 + stationarity-triangle flag",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("orders",), acf_bases(SPARK), ar2_tail_sql(SPARK)))
+)(sql_runner(ar2_tail_sql, ("orders",), stages=cte_stages(acf_bases)))
 
 
 # --- single-frequency periodogram ---------------------------------------------
@@ -825,10 +822,7 @@ register(
     doc="Goertzel-style single-frequency periodogram at candidate periods "
     "(3.5/7/11/30 days) over mean-centered daily revenue: one scan, one "
     "projection sum per period — seasonality checked without an FFT",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders",)),
-    spark.sql(periodogram_sql(SPARK)),
-)[1])
+)(sql_runner(periodogram_sql, ("orders",)))
 
 
 # --- Hurst exponent (rescaled range) -----------------------------------------
@@ -932,10 +926,7 @@ register(
     "16/32/64/128 days (full blocks only): cumulative-deviation ranges "
     "over population std per block, log-log closed-form slope across "
     "sizes; H~0.5 memoryless, >0.5 persistent",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders",)),
-    spark.sql(hurst_sql(SPARK)),
-)[1])
+)(sql_runner(hurst_sql, ("orders",)))
 
 
 # --- sample entropy -----------------------------------------------------------
@@ -1025,7 +1016,4 @@ register(
     "self-join of the LEAD-templated day series yields both m and m+1 "
     "match counts; calendar-bounded quadratic, stated; degenerate zero-"
     "match case yields NULL",
-)(lambda spark, sf_dir: (
-    register_views(spark, sf_dir, ("orders",)),
-    spark.sql(sampen_sql(SPARK)),
-)[1])
+)(sql_runner(sampen_sql, ("orders",)))

@@ -599,29 +599,19 @@ ORDER BY pos
 """
 
 
-def _ppmi_spectral_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner, three materialization tiers: (1) the two data-scale
+def _ppmi_stages(dialect: str) -> list[tuple[str, str]]:
+    """Spark staging, three materialization tiers: (1) the two data-scale
     token-stream products (unigram + pair counts — the only scans),
     (2) the <= {SPEC_VOCAB}^2 PPMI matrix derived from those views,
-    (3) the iteration tail over the tiny matrix."""
-    register_views(spark, sf_dir, ("documents",))
-    spark.sql(
-        f"WITH {token_pair_block(SPARK)} SELECT tok, c FROM uni"
-    ).transform(materialize).createOrReplaceTempView("__ppmi_uni")
-    spark.sql(
-        f"WITH {token_pair_block(SPARK)} "
-        "SELECT left_tok, right_tok, c_xy FROM pair_counts"
-    ).transform(materialize).createOrReplaceTempView("__ppmi_pc")
-    mx = ppmi_matrix_ctes(SPARK, "__ppmi_uni", "__ppmi_pc")
-    spark.sql(
-        f"WITH {mx} SELECT a, b, w FROM m"
-    ).transform(materialize).createOrReplaceTempView("__ppmi_m")
-    spark.sql(
-        f"WITH {mx} SELECT tok, c FROM vocab"
-    ).transform(materialize).createOrReplaceTempView("__ppmi_vocab")
-    return spark.sql(
-        "WITH " + ppmi_iter_tail(SPARK, "__ppmi_m", "__ppmi_vocab")
-    )
+    (3) the iteration tail over the tiny matrix (the final statement)."""
+    block = token_pair_block(dialect)
+    mx = ppmi_matrix_ctes(dialect, "__ppmi_uni", "__ppmi_pc")
+    return [
+        ("__ppmi_uni", f"WITH {block} SELECT tok, c FROM uni"),
+        ("__ppmi_pc", f"WITH {block} SELECT left_tok, right_tok, c_xy FROM pair_counts"),
+        ("__ppmi_m", f"WITH {mx} SELECT a, b, w FROM m"),
+        ("__ppmi_vocab", f"WITH {mx} SELECT tok, c FROM vocab"),
+    ]
 
 
 register(
@@ -633,4 +623,6 @@ register(
     "checks exactly; decimal-rounded mat-vec, max-normalized iterates; "
     "Spark runner materializes token-stream products + PPMI matrix so the "
     "iteration tail never re-derives the document scan",
-)(_ppmi_spectral_spark)
+)(sql_runner(
+    lambda d: "WITH " + ppmi_iter_tail(d, "__ppmi_m", "__ppmi_vocab"), ("documents",),
+    stages=_ppmi_stages))

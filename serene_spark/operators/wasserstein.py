@@ -19,8 +19,8 @@ the engine-wide exact-quantile shape.
 
 from __future__ import annotations
 
-from serene_spark.catalog import compose_with, run_materialized
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, mat
+from serene_spark.catalog import compose_with, cte_stages, sql_runner
+from serene_spark.functions.sqlgen import DUCKDB, mat
 from serene_spark.registry import register
 
 SIDE_A = "click"
@@ -76,5 +76,4 @@ register(
     "value distributions: closed-form CDF-gap integral over consecutive "
     "distinct values — binless drift in the value's own units; "
     "12-dp-quantized decimal segment sums",
-)(lambda spark, sf_dir: run_materialized(
-    spark, sf_dir, ("events",), _w1_bases(SPARK), _w1_sql(SPARK)))
+)(sql_runner(_w1_sql, ("events",), stages=cte_stages(_w1_bases)))

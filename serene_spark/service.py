@@ -41,6 +41,21 @@ from serene_spark.storage import (
 )
 
 
+class HttpError(Exception):
+    """A request the client must fix: answered with ``code``, not 500."""
+
+    def __init__(self, code: int, message: str):
+        super().__init__(message)
+        self.code = code
+
+
+def _under_data_root(path: str) -> bool:
+    """Whether ``path`` resolves under the data root — otherwise any HTTP
+    client could point the engine at an arbitrary file and read it back
+    through the response."""
+    return os.path.realpath(path).startswith(os.path.realpath(_DATA_ROOT) + os.sep)
+
+
 class SereneService:
     """State + handlers; the HTTP layer below routes into this object."""
 
@@ -60,13 +75,20 @@ class SereneService:
 
     # -- datasets ------------------------------------------------------------
 
-    def create_dataset(self, body: dict) -> dict:
-        path = body["path"]
-        df = (
+    def _read_dataset(self, path):
+        if not isinstance(path, str):
+            raise HttpError(400, "path must be a string")
+        if not _under_data_root(path):
+            raise HttpError(403, f"path must be under {_DATA_ROOT}")
+        return (
             self.spark.read.parquet(path)
             if path.endswith(".parquet")
             else self.spark.read.csv(path, header=True)
         )
+
+    def create_dataset(self, body: dict) -> dict:
+        path = body.get("path")
+        df = self._read_dataset(path)
         eid = self.datasets.add({"path": path, "columns": df.columns})
         return {"id": eid, "path": path, "columns": df.columns}
 
@@ -76,12 +98,7 @@ class SereneService:
             return None
         from serene_spark.operators.ingest_sample import sample_columns_df
 
-        df = (
-            self.spark.read.parquet(meta["path"])
-            if meta["path"].endswith(".parquet")
-            else self.spark.read.csv(meta["path"], header=True)
-        )
-        sample = sample_columns_df(df)
+        sample = sample_columns_df(self._read_dataset(meta["path"]))
         out = dict(meta, id=eid, sample={})
         for r in sample.collect():
             out["sample"].setdefault(r["column_name"], []).append(r["value"])
@@ -248,7 +265,7 @@ class SereneService:
 # temp views on the one shared SparkSession (see run_query)
 _QUERY_LOCK = threading.Lock()
 
-# Root under which POST /v1.0/query/run may read parquet (overridable for
+# Root under which requests may name files to read (overridable for
 # deployments with a different data mount).
 _DATA_ROOT = os.environ.get("SERENE_DATA_ROOT", "/root/testdata")
 
@@ -293,7 +310,13 @@ def _make_handler(svc: SereneService):
 
         def _body(self) -> dict:
             n = int(self.headers.get("Content-Length") or 0)
-            return json.loads(self.rfile.read(n) or b"{}")
+            try:
+                body = json.loads(self.rfile.read(n) or b"{}")
+            except ValueError as exc:  # JSONDecodeError, UnicodeDecodeError
+                raise HttpError(400, f"request body is not JSON: {exc}") from None
+            if not isinstance(body, dict):
+                raise HttpError(400, "request body must be a JSON object")
+            return body
 
         def _dispatch(self, method: str):
             for m, pat, name in _ROUTES:
@@ -306,6 +329,8 @@ def _make_handler(svc: SereneService):
                     getattr(self, name)(
                         *[int(g) if g.isdigit() else g for g in match.groups()]
                     )
+                except HttpError as exc:
+                    self._send(exc.code, {"error": str(exc)})
                 except Exception as exc:  # noqa: BLE001 — surface as HTTP 500
                     self._send(500, {"error": str(exc)})
                 return
@@ -387,17 +412,22 @@ def _make_handler(svc: SereneService):
             if name not in queries:
                 self._send(404, {"error": f"unknown query {name!r}"})
                 return
-            limit = int(body.get("limit", 100))
+            try:
+                limit = int(body.get("limit", 100))
+            except (TypeError, ValueError):
+                limit = -1
+            # checked before the query is built: staged runners checkpoint
+            # under _QUERY_LOCK, and Spark rejects a negative limit only then
+            if limit < 0:
+                self._send(400, {"error": "limit must be an integer >= 0"})
+                return
             # default derives from the data root, so a deployment that sets
             # SERENE_DATA_ROOT keeps a working default instead of 403ing
             # every request that omits sf_dir
             sf_dir = body.get("sf_dir", os.path.join(_DATA_ROOT, "sf0.001"))
             # allowlist: a request-supplied sf_dir must resolve under the
-            # data root — otherwise any HTTP client could point the engine
-            # at an arbitrary parquet path and exfiltrate rows via the
-            # response (round-4 advice item)
-            resolved = os.path.realpath(sf_dir)
-            if not resolved.startswith(os.path.realpath(_DATA_ROOT) + os.sep):
+            # data root (round-4 advice item)
+            if not _under_data_root(sf_dir):
                 self._send(403, {"error": f"sf_dir must be under {_DATA_ROOT}"})
                 return
             # operators bind fixed-name temp views (events, documents, ...)

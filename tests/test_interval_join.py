@@ -41,10 +41,6 @@ def test_interval_candidates_are_equi_joined(spark):
     """The chunked candidate pass must plan as a hash/sort-merge equi-join
     on chunk id — a theta/cartesian join here is exactly what the operator
     exists to avoid."""
-    from serene_spark.operators.interval_join import _bases, _spark_tail
-    from serene_spark.functions.sqlgen import SPARK
-    from serene_spark.catalog import run_materialized
-
-    df = run_materialized(spark, SF, ("orders", "lineitem"), _bases(SPARK), _spark_tail(SPARK))
+    df = load_all()["interval_overlap_promo"].spark(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan

@@ -130,7 +130,7 @@ CLUSTER_SMOKE = textwrap.dedent("""
     qs = load_all()
     sf = "/root/testdata/sf0.001"
     # headline queries that route through materialize(): iterative CC +
-    # pagerank loops, the LSH verified pipeline, and a run_materialized op
+    # pagerank loops, the LSH verified pipeline, and a profiling query
     for name in ("dedup_lsh_verified", "dedup_clusters",
                  "pagerank_converged", "profile_scalar_customer"):
         if name not in qs:

@@ -184,6 +184,40 @@ def test_query_run_sf_dir_allowlist(server):
     assert code == 403
 
 
+def test_dataset_path_allowlist(server):
+    """POST /v1.0/dataset reads the path it is given, so it must hold that
+    path to the same data root as /query/run: any other file would come
+    back as `columns` and as GET's per-column sample."""
+    from serene_spark.service import _DATA_ROOT
+
+    for path in ("/etc/passwd", f"{_DATA_ROOT}/../../etc/passwd"):
+        code, err = _req(server, "POST", "/v1.0/dataset", {"path": path})
+        assert code == 403 and "path" in err["error"], (path, err)
+    assert _req(server, "POST", "/v1.0/dataset", {"path": 5})[0] == 400
+
+
+@pytest.mark.parametrize("limit", ["abc", -1, None])
+def test_query_run_rejects_bad_limit(server, limit):
+    """A limit that is not an integer >= 0 is the client's error (400),
+    found before the query runs — not a 500 from Spark after it."""
+    code, err = _req(server, "POST", "/v1.0/query/run",
+                     {"name": "dq_constraints_lineitem", "limit": limit})
+    assert code == 400 and "limit" in err["error"], err
+
+
+@pytest.mark.parametrize("path", ["/dataset", "/ssd", "/owl", "/model", "/octopus",
+                                  "/query/run"])
+def test_post_body_not_json_is_400(server, path):
+    for raw in (b"{not json", b"[1, 2]", b"\xff"):
+        req = urllib.request.Request(server + "/v1.0" + path, data=raw, method="POST")
+        try:
+            with urllib.request.urlopen(req) as resp:
+                code, body = resp.status, json.loads(resp.read())
+        except urllib.error.HTTPError as e:
+            code, body = e.code, json.loads(e.read())
+        assert code == 400 and "JSON" in body["error"], (raw, body)
+
+
 def test_concurrent_train_predict_query_load(server, sf_dir):
     """Concurrency smoke (round-5 judge item 9): the thread-per-POST
     stdlib skin must survive SIMULTANEOUS train + query/run + CRUD +

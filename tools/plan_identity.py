@@ -23,6 +23,10 @@ in registry order, since some queries reuse session state an earlier one
 left), prints each one whose record differs and exits 1 if any does. ``--sf``
 defaults to ``$SERENE_TEST_SF_DIR``; the tests' sf0.001 corpus keeps a full
 run short.
+
+The fixture-trained classifier is built once before the first record, so
+the queries that predict with it record the same whether the on-disk
+fixture-model cache is empty, stale or current.
 """
 
 from __future__ import annotations
@@ -142,6 +146,7 @@ def main() -> int:
     if not args.sf:
         ap.error("--sf is required when SERENE_TEST_SF_DIR is unset")
 
+    from serene_spark.ml.pipeline import _fixture_model
     from serene_spark.registry import load_all
     from serene_spark.session import get_spark
 
@@ -155,6 +160,7 @@ def main() -> int:
         if recorded else list(queries))
     missing = [n for n in names if n not in queries]
     spark = get_spark("plan_identity", cpus=os.environ.get("SPARK_GRAFT_CPUS", "4"))
+    _fixture_model(spark)  # trained or loaded here, never inside a record
     recorder = Recorder(spark)
     try:
         records = {n: recorder.run(queries[n], spark, args.sf) for n in names if n in queries}
