@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from serene_spark.functions.sqlgen import SPARK
-from serene_spark.session import tune_session
+from serene_spark.session import tune_once
 
 TABLES = (
     "region",
@@ -102,6 +102,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     import os
 
+    tune_once(spark)
     path = f"{sf_dir}/{name}.parquet"
     try:
         key = (spark.sparkContext.applicationId, sf_dir, name, os.path.getmtime(path))
@@ -111,7 +112,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         cached = _TABLE_CACHE.get(key)
         if cached is not None:
             return cached
-    tune_session(spark)
     df = spark.read.parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")

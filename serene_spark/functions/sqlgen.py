@@ -1,7 +1,12 @@
 """Tiny dialect shims for SQL that must run identically on Spark and DuckDB.
 
 Every oracle-checked operator is defined once as SQL text generated through
-these helpers, so both engines execute the *same* logical expression. Rules:
+these helpers, so both engines execute the *same* logical expression. Only
+this module spells a dialect (``tests/test_dialect_forks.py``): where one
+spelling runs on both engines, an operator writes it once (DuckDB reads
+``CAST(x AS STRING)`` as VARCHAR); otherwise it calls a helper here. A fork
+that picks a different algorithm or relation per engine stays in its
+operator, named with its reason in that test's ``ALLOWED``. Rules:
 
 - Patterns must not contain backslashes: Spark SQL string literals treat ``\\``
   as an escape (dropping unknown escapes) while DuckDB keeps it literal, so a
@@ -56,8 +61,6 @@ def re_extract(dialect: str, expr: str, pat: str, group: int) -> str:
 
 
 def log2(dialect: str, expr: str) -> str:
-    if dialect == DUCKDB:
-        return f"log2({expr})"
     return f"log2({expr})"
 
 
@@ -236,6 +239,43 @@ def element_at(dialect: str, arr: str, idx_1based: str | int) -> str:
     if dialect == DUCKDB:
         return f"{arr}[{idx_1based}]"
     return f"element_at({arr}, {idx_1based})"
+
+
+def dot_expr(dialect: str, a: str, b: str) -> str:
+    """Dot product of two numeric arrays over DOUBLEs. DuckDB's builtins loop
+    in index order and Spark runs the same sequential fold, so dot products
+    and ``l2_expr`` agree bit for bit. A ``cosine_expr`` of parallel vectors
+    can land one ulp above 1 on Spark, where DuckDB's never exceeds 1."""
+    if dialect == DUCKDB:
+        return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
+    return (f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), CAST({b} AS ARRAY<DOUBLE>),"
+            " (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
+
+
+def cosine_expr(dialect: str, a: str, b: str) -> str:
+    if dialect == DUCKDB:
+        return f"list_cosine_similarity(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
+    na, nb = (f"sqrt(aggregate(CAST({x} AS ARRAY<DOUBLE>), CAST(0 AS DOUBLE),"
+              " (acc, v) -> acc + v * v))" for x in (a, b))
+    return f"({dot_expr(dialect, a, b)} / ({na} * {nb}))"
+
+
+def l2_expr(dialect: str, a: str, b: str) -> str:
+    """Euclidean distance from numeric array ``a`` to ``b``, an array of DOUBLE."""
+    if dialect == DUCKDB:
+        return f"list_distance(CAST({a} AS DOUBLE[]), {b})"
+    return (
+        f"sqrt(aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), {b},"
+        f" (x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
+    )
+
+
+def utf8_decode(dialect: str, blob: str) -> str:
+    """A binary value decoded as UTF-8 text (DuckDB's ``decode`` takes no
+    charset argument and always reads UTF-8)."""
+    if dialect == DUCKDB:
+        return f"decode({blob})"
+    return f"decode({blob}, 'UTF-8')"
 
 
 def re_extract_all_count(dialect: str, expr: str, pat: str) -> str:

@@ -34,7 +34,7 @@ reduce is a sessionization-cost pass, the chain math is free.
 from __future__ import annotations
 
 from serene_spark.catalog import compose_with, cte_stages, sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us
+from serene_spark.functions.sqlgen import DUCKDB, epoch_us, mat
 from serene_spark.registry import register
 
 N_ABS_ITER = 40
@@ -43,21 +43,10 @@ NULL = "__null"
 START = "__start"
 
 
-def _mat(dialect: str) -> str:
-    """DuckDB-only ``AS MATERIALIZED`` hint for multiply-referenced base
-    CTEs.  The Spark runner materializes bases as localCheckpoint views
-    (``catalog.cte_stages``), so its SQL never needs — and doesn't support —
-    the keyword; but the single-statement DuckDB oracle re-inlines every
-    reference, and with ``strans`` read 13 times (12 iteration levels +
-    p_start) the events window scan re-ran 13x (58s measured at sf0.01 →
-    1.5s with the hint)."""
-    return "MATERIALIZED " if dialect == DUCKDB else ""
-
-
 def chain_bases(dialect: str) -> list[tuple[str, str]]:
     """The data-scale half: journeys → transition counts (states²)."""
     us = epoch_us(dialect, "ts")
-    m = _mat(dialect)
+    m = mat(dialect)
     counts = f"""fp AS (
   SELECT user_id, MIN({us}) AS fp_us
   FROM events WHERE event_type = 'purchase' GROUP BY user_id
@@ -124,8 +113,7 @@ def scenario_bases(dialect: str) -> list[tuple[str, str]]:
     level re-inlined the whole scenario x probability chain — plan depth
     grew with iterations and planning time exploded (121s measured; 5s
     materialized)."""
-    str_t = "STRING" if dialect == SPARK else "VARCHAR"
-    m = _mat(dialect)
+    m = mat(dialect)
     channels = f"""channels AS {m}(
   SELECT DISTINCT src AS ch FROM counts WHERE src <> '{START}'
 )"""
@@ -136,7 +124,7 @@ def scenario_bases(dialect: str) -> list[tuple[str, str]]:
   FROM counts
 ),
 scenarios AS (
-  SELECT 'base' AS scenario, CAST(NULL AS {str_t}) AS removed
+  SELECT 'base' AS scenario, CAST(NULL AS STRING) AS removed
   UNION ALL
   SELECT ch AS scenario, ch AS removed FROM channels
 ),
@@ -166,7 +154,7 @@ def absorption_bases(dialect: str) -> list[tuple[str, str]]:
     planning depth constant — each segment is 10 tiny broadcast joins
     over the checkpointed ``strans`` view and one scenarios-x-states
     checkpoint — so iteration count scales linearly (40 levels ≈ 7s)."""
-    m = _mat(dialect)
+    m = mat(dialect)
     out: list[tuple[str, str]] = []
     lo = 1
     while lo <= N_ABS_ITER:

@@ -24,7 +24,7 @@ materialized as an array.
 from __future__ import annotations
 
 from serene_spark.catalog import compose_with, cte_stages, sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, epoch_us
+from serene_spark.functions.sqlgen import DUCKDB, epoch_us, explode_seq, mat
 from serene_spark.registry import register
 
 HALF_LIFE_DAYS = 7.0
@@ -126,14 +126,9 @@ def _shapley_bases(dialect: str) -> list[tuple[str, str]]:
     the tail references v four times (contribs v0/v1 + two efficiency
     scalar subqueries), and an inlined CTE would re-derive the events
     scan per reference on both engines."""
-    from serene_spark.functions.sqlgen import mat
-
     m = mat(dialect)
     us = epoch_us(dialect, "ts")
-    if dialect == DUCKDB:
-        seq16 = "unnest(range(0, 16))"
-    else:
-        seq16 = "explode(sequence(0, 15))"
+    seq16 = explode_seq(dialect, 0, "15")
     bit_cases = " + ".join(
         f"{bit} * MAX(CASE WHEN event_type = '{ch}' THEN 1 ELSE 0 END)"
         for ch, bit in _CH_BITS

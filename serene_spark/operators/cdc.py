@@ -25,7 +25,7 @@ once on the key.
 from __future__ import annotations
 
 from serene_spark.catalog import sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us
+from serene_spark.functions.sqlgen import DUCKDB, epoch_us
 from serene_spark.registry import register
 
 
@@ -159,12 +159,8 @@ def scd2_point_in_time_sql(dialect: str) -> str:
     inclusive.
     """
     us = epoch_us(dialect, "ts")
-    key = (
-        "lpad(CAST(ts_us AS STRING), 20, '0') || lpad(CAST(row_id AS STRING), 20, '0')"
-        if dialect == SPARK
-        else "lpad(CAST(ts_us AS VARCHAR), 20, '0') || lpad(CAST(row_id AS VARCHAR), 20, '0')"
-    )
-    val = ("CAST(value AS STRING)" if dialect == SPARK else "CAST(value AS VARCHAR)")
+    key = "lpad(CAST(ts_us AS STRING), 20, '0') || lpad(CAST(row_id AS STRING), 20, '0')"
+    val = "CAST(value AS STRING)"
     return f"""
 WITH ops AS (
   SELECT user_id, event_id AS row_id, {us} AS ts_us,

@@ -25,12 +25,8 @@ ANN).
 from __future__ import annotations
 
 from serene_spark.catalog import sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, bxor, explode_seq, shl
-from serene_spark.operators.similarity import (
-    ann_geom_rel,
-    bucket_expr,
-    cosine_expr,
-)
+from serene_spark.functions.sqlgen import DUCKDB, bxor, cosine_expr, explode_seq, shl
+from serene_spark.operators.similarity import ann_geom_rel, bucket_expr
 from serene_spark.registry import register
 
 N_ANCHORS = 10

@@ -42,11 +42,7 @@ TOP_N = 20   # probe the exact top-N tokens
 
 def _cms_bucket(dialect: str) -> str:
     """Row-salted bucket: md5('<row>:' || token) % W."""
-    cat = (
-        "CAST(i AS STRING) || ':' || tok"
-        if dialect == SPARK
-        else "CAST(i AS VARCHAR) || ':' || tok"
-    )
+    cat = "CAST(i AS STRING) || ':' || tok"
     return f"{hex_to_int(dialect, f'substr(md5({cat}), 1, 8)')} % {CMS_W}"
 
 
@@ -256,10 +252,8 @@ def bloom_bases(dialect: str) -> list[tuple[str, str]]:
     """Materialization bases: member_keys is the ONE orders scan (the k
     build arms and the ground-truth join all read the distinct-key view);
     probe positions build once instead of once per tail reference."""
-    str_t = "STRING" if dialect == SPARK else "VARCHAR"
-
     def pos(i: int, expr: str) -> str:
-        h = hex_to_int(dialect, f"substr(md5('{i}:' || CAST({expr} AS {str_t})), 1, 8)")
+        h = hex_to_int(dialect, f"substr(md5('{i}:' || CAST({expr} AS STRING)), 1, 8)")
         return f"{h} % {BLOOM_M}"
 
     build_arms = "\n  UNION ALL\n".join(

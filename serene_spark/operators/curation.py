@@ -34,6 +34,7 @@ from serene_spark.functions.sqlgen import (
     arr_join,
     arr_len,
     arr_slice,
+    cosine_expr,
     explode_seq,
     hex_to_int,
     re_extract_all_count,
@@ -362,8 +363,6 @@ def semdedup_sql(dialect: str,
     assignment is a broadcast nested-loop over k tiny centroids (no corpus
     shuffle).
     """
-    from serene_spark.operators.similarity import cosine_expr
-
     cos_assign = cosine_expr(dialect, "v.embedding", "cen.centroid")
     cos_pair = cosine_expr(dialect, "a.embedding", "b.embedding")
     return f"""

@@ -103,14 +103,17 @@ pairs AS (
 )"""
 
 
+def _jaro(dialect: str) -> str:
+    """Jaro similarity of the candidate pair's names: DuckDB's builtin, and
+    on Spark this module's Arrow UDF (registered by the runners)."""
+    if dialect == DUCKDB:
+        return "jaro_similarity(d.d_name, c.c_name_norm)"
+    return "__er_jaro(d.d_name, c.c_name_norm)"
+
+
 def er_match_sql(dialect: str) -> str:
-    jaro = (
-        "jaro_similarity(d.d_name, c.c_name_norm)"
-        if dialect == DUCKDB
-        else "__er_jaro(d.d_name, c.c_name_norm)"
-    )
     return f"""
-{_pairs_sql(dialect, jaro)},
+{_pairs_sql(dialect, _jaro(dialect))},
 ranked AS (
   SELECT dirty_id, c_custkey, score,
          ROW_NUMBER() OVER (PARTITION BY dirty_id
@@ -199,16 +202,11 @@ def er_fellegi_sunter_sql(dialect: str) -> str:
 
     Scale: the gamma relation is the blocked candidate set (Σ block², never
     N²); everything downstream is an 8-row pattern table."""
-    jaro = (
-        "jaro_similarity(d.d_name, c.c_name_norm)"
-        if dialect == DUCKDB
-        else "__er_jaro(d.d_name, c.c_name_norm)"
-    )
     return f"""
 WITH {dirty_rel(dialect)},
 {clean_rel(dialect)},
 gamma AS (
-  SELECT CASE WHEN {jaro} >= {FS_NAME_T} THEN 1 ELSE 0 END AS g_name,
+  SELECT CASE WHEN {_jaro(dialect)} >= {FS_NAME_T} THEN 1 ELSE 0 END AS g_name,
          CASE WHEN abs(d.d_bal - c.c_acctbal) <= {FS_BAL_T} THEN 1 ELSE 0 END
            AS g_bal,
          CASE WHEN d.d_seg = c.c_seg THEN 1 ELSE 0 END AS g_seg,
@@ -318,6 +316,7 @@ def er_jw_sql(dialect: str) -> str:
         pair = ("SELECT d.dirty_id, c.c_custkey,\n"
                 "         ROUND(jaro_similarity(d.d_name, c.c_name_norm), 6) AS jaro,\n"
                 "         ROUND(jaro_winkler_similarity(d.d_name, c.c_name_norm), 6) AS jaro_winkler")
+        tail = ""
     else:
         # ONE Arrow UDF returns [jaro, jw]: the Winkler boost reuses the
         # quadratic Jaro base instead of recomputing it per pair
@@ -325,8 +324,7 @@ def er_jw_sql(dialect: str) -> str:
                 "         ROUND(jj[0], 6) AS jaro, ROUND(jj[1], 6) AS jaro_winkler\n"
                 "  FROM (SELECT d.dirty_id, c.c_custkey,\n"
                 "               __er_jjw(d.d_name, c.c_name_norm) AS jj")
-    tail = ("" if dialect == DUCKDB
-            else ") inner_scored")
+        tail = ") inner_scored"
     return f"""
 WITH {dirty_rel(dialect)},
 {clean_rel(dialect)},

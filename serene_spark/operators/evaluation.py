@@ -24,7 +24,7 @@ the whole matcher-eval path oracle-checkable end-to-end.
 from __future__ import annotations
 
 from serene_spark.catalog import sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, SPARK
+from serene_spark.functions.sqlgen import DUCKDB
 from serene_spark.operators.text_analysis import lang_id_sql
 from serene_spark.registry import register
 
@@ -92,9 +92,7 @@ def holdout_split_sql(dialect: str) -> str:
     Returns per-(split, class) counts — the check that the split is
     reproducible and roughly stratified, without materializing row lists.
     """
-    key_hex = "substr(md5(CAST(c_custkey AS VARCHAR)), 1, 4)"
-    if dialect == SPARK:
-        key_hex = "substr(md5(CAST(c_custkey AS STRING)), 1, 4)"
+    key_hex = "substr(md5(CAST(c_custkey AS STRING)), 1, 4)"
     return f"""
 WITH tagged AS (
   SELECT c_mktsegment AS cls,

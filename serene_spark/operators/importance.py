@@ -30,13 +30,7 @@ convention, cf. lang_model_score).
 from __future__ import annotations
 
 from serene_spark.catalog import sql_runner
-from serene_spark.functions.sqlgen import (
-    DUCKDB,
-    SPARK,
-    explode,
-    hex_to_int,
-    split_re,
-)
+from serene_spark.functions.sqlgen import DUCKDB, explode, hex_to_int, split_re
 from serene_spark.operators.text_analysis import NORM
 from serene_spark.registry import register
 
@@ -134,7 +128,7 @@ def keyed_sql(dbc_rel: str, dialect: str) -> str:
     selection tail references it from three consumers (coarse histogram,
     fine pass, final projection), and an inlined CTE would re-run the
     scoring aggregation for each."""
-    u = f"({hex_to_int(dialect, 'substr(md5(CAST(doc_id AS ' + ('STRING' if dialect == SPARK else 'VARCHAR') + ')), 1, 8)')} + 1) / 4294967297.0"
+    u = f"({hex_to_int(dialect, 'substr(md5(CAST(doc_id AS STRING)), 1, 8)')} + 1) / 4294967297.0"
     return f"""
 SELECT doc_id, llr_avg,
        ROUND(-LN({u}) * EXP(-llr_avg), 6) AS ares_key

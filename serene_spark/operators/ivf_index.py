@@ -25,13 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from serene_spark.catalog import register_views
-from serene_spark.functions.sqlgen import SPARK
+from serene_spark.functions.sqlgen import SPARK, cosine_expr
 from serene_spark.operators.similarity import (
     N_CENTROIDS,
     N_PROBE,
     N_QUERIES,
     TOP_K,
-    cosine_expr,
     ivf_assign_sql,
     ivf_centroids_sql,
 )

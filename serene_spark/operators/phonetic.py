@@ -31,7 +31,7 @@ Scale: map-only key computation + one constant-cardinality keyed agg.
 from __future__ import annotations
 
 from serene_spark.catalog import sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, rr, split_re
+from serene_spark.functions.sqlgen import DUCKDB, element_at, rr, split_re
 from serene_spark.registry import register
 
 # a..z minus h,w (dropped), aligned code digits
@@ -58,9 +58,7 @@ def soundex_sql(dialect: str, expr: str) -> str:
 
 
 def _blocks_sql(dialect: str) -> str:
-    last_tok = f"""element_at({split_re(dialect, "lower(p_name)", "[^a-z]+")}, -1)"""
-    if dialect == DUCKDB:
-        last_tok = f"""list_extract({split_re(dialect, "lower(p_name)", "[^a-z]+")}, -1)"""
+    last_tok = element_at(dialect, split_re(dialect, "lower(p_name)", "[^a-z]+"), -1)
     key = soundex_sql(dialect, "noun")
     return f"""
 WITH nouns AS (

@@ -111,8 +111,7 @@ WHERE e.value IS NOT NULL
 def group_split_sql(dialect: str) -> str:
     """80/10/10 train/val/test assignment BY SOURCE GROUP (leakage-safe):
     every document inherits its source's deterministic hash bucket."""
-    str_t = "STRING" if dialect == SPARK else "VARCHAR"
-    bucket = f"{hex_to_int(dialect, f'substr(md5(CAST(source AS {str_t})), 1, 8)')} % 10"
+    bucket = f"{hex_to_int(dialect, 'substr(md5(CAST(source AS STRING)), 1, 8)')} % 10"
     train_hi = SPLIT_RATES[0][1] - 1
     val_hi = train_hi + SPLIT_RATES[1][1]
     return f"""

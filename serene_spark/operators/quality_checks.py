@@ -42,6 +42,7 @@ from serene_spark.functions.sqlgen import (
     epoch_s,
     explode_seq,
     hex_to_int,
+    utf8_decode,
 )
 from serene_spark.registry import register
 
@@ -474,10 +475,8 @@ def _dp_counts_sql(dialect: str, audit: bool, salt: str = "") -> str:
         # quotes), so a salt containing ' would fail to parse and a
         # trailing \ could silently swallow the closing quote and change
         # the hashed key. unhex round-trips ANY byte sequence.
-        hx = salt.encode("utf-8").hex()
-        decoded = (f"decode(unhex('{hx}'), 'UTF-8')" if dialect == SPARK
-                   else f"decode(unhex('{hx}'))")
-        key = f"concat({decoded}, '|', {key})"
+        blob = f"unhex('{salt.encode('utf-8').hex()}')"
+        key = f"concat({utf8_decode(dialect, blob)}, '|', {key})"
     u = (f"(({hex_to_int(dialect, f'substr(md5({key}), 1, 8)')})"
          " + 0.5) / 4294967296.0")
     return f"""

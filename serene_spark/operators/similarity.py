@@ -7,10 +7,10 @@ survives 100x data growth (bucket join -> shuffle on bucket key; the query
 side is broadcast when small).
 
 Floating-point parity: embeddings are cast to double and the dot product is
-a *sequential* left-fold (Spark ``aggregate`` on the array; DuckDB
-``list_dot_product``/``list_cosine_similarity`` loop in index order), so both
-engines perform identical IEEE operations; scores are rounded to 6 decimals
-before ranking, with vec_id tie-breaks, making top-k deterministic.
+a *sequential* left-fold (``sqlgen.dot_expr``/``cosine_expr``), so both
+engines perform identical IEEE operations, except that DuckDB never lets a
+cosine exceed 1; scores are rounded to 6 decimals before ranking, with vec_id
+tie-breaks, making top-k deterministic.
 """
 
 from __future__ import annotations
@@ -23,8 +23,11 @@ from serene_spark.functions.sqlgen import (
     SPARK,
     arr_agg_ordered,
     arr_slice,
+    cosine_expr,
+    dot_expr,
     element_at,
     explode_seq,
+    l2_expr,
 )
 from serene_spark.registry import register
 
@@ -62,17 +65,6 @@ def ann_geom_rel(dialect: str) -> str:
         f"CAST(CEIL(LOG2(GREATEST(2.0, COUNT(*) / {ANN_TARGET_BUCKET_SIZE}.0))) AS INT)"
         f")) AS bits FROM embeddings)"
     )
-
-
-def cosine_expr(dialect: str, a: str, b: str) -> str:
-    if dialect == DUCKDB:
-        return f"list_cosine_similarity(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-    # sequential fold in index order — deterministic, Arrow/codegen-friendly
-    da, db = f"CAST({a} AS ARRAY<DOUBLE>)", f"CAST({b} AS ARRAY<DOUBLE>)"
-    dot = f"aggregate(zip_with({da}, {db}, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    na = f"sqrt(aggregate({da}, CAST(0 AS DOUBLE), (acc, v) -> acc + v * v))"
-    nb = f"sqrt(aggregate({db}, CAST(0 AS DOUBLE), (acc, v) -> acc + v * v))"
-    return f"({dot} / ({na} * {nb}))"
 
 
 def cosine_topk_sql(dialect: str) -> str:
@@ -372,13 +364,7 @@ def centroid_dist_sql(dialect: str) -> str:
     """
     v = element_at(dialect, "embedding", "i")
     cent_arr = arr_agg_ordered(dialect, "c", "i")
-    if dialect == DUCKDB:
-        dist = "round(list_distance(CAST(e.embedding AS DOUBLE[]), g.cent), 6)"
-    else:
-        dist = (
-            "round(sqrt(aggregate(zip_with(CAST(e.embedding AS ARRAY<DOUBLE>), g.cent,"
-            " (x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)), 6)"
-        )
+    dist = f"round({l2_expr(dialect, 'e.embedding', 'g.cent')}, 6)"
     return f"""
 WITH dims AS (
   SELECT vec_id, label, CAST({v} AS DOUBLE) AS v, i
@@ -408,17 +394,6 @@ PQ_SUBDIM = 8
 PQ_K = 16         # codewords per subspace
 PQ_QUERIES = N_QUERIES
 PQ_TOP_K = TOP_K
-
-
-def dot_expr(dialect: str, a: str, b: str) -> str:
-    """Plain dot product (shared by the PQ distance algebra)."""
-    if dialect == DUCKDB:
-        return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-    da, db = f"CAST({a} AS ARRAY<DOUBLE>)", f"CAST({b} AS ARRAY<DOUBLE>)"
-    return (
-        f"aggregate(zip_with({da}, {db}, (x, y) -> x * y), "
-        f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
 
 
 def pq_adc_sql(dialect: str, top_k: int = PQ_TOP_K) -> str:

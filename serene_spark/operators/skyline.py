@@ -29,7 +29,7 @@ identical to the naive semantics — parity proves it.
 from __future__ import annotations
 
 from serene_spark.catalog import sql_runner
-from serene_spark.functions.sqlgen import DUCKDB, SPARK, hex_to_int
+from serene_spark.functions.sqlgen import DUCKDB, hex_to_int
 from serene_spark.registry import register
 
 # dominance criteria over part: minimize price, maximize size
@@ -57,9 +57,7 @@ WHERE NOT EXISTS (
 
 
 def _sample_pred(dialect: str) -> str:
-    h = hex_to_int(dialect, "substr(md5(CAST(p_partkey AS "
-                   + ("STRING" if dialect == SPARK else "VARCHAR")
-                   + ")), 1, 8)")
+    h = hex_to_int(dialect, "substr(md5(CAST(p_partkey AS STRING)), 1, 8)")
     return f"{h} % {SAMPLE_MOD} = 0"
 
 

@@ -48,9 +48,7 @@ def _sortkey(dialect: str) -> str:
     # 20-char pads cover the full BIGINT range on BOTH fields: lpad
     # TRUNCATES over-width input, which would silently break the total
     # order for ids >= 10^width
-    return f"lpad(CAST({us} AS STRING), 20, '0') || lpad(CAST(event_id AS STRING), 20, '0')" \
-        if dialect == SPARK else \
-        f"lpad(CAST({us} AS VARCHAR), 20, '0') || lpad(CAST(event_id AS VARCHAR), 20, '0')"
+    return f"lpad(CAST({us} AS STRING), 20, '0') || lpad(CAST(event_id AS STRING), 20, '0')"
 
 
 def ts_gapfill_sql(dialect: str) -> str:

@@ -29,6 +29,7 @@ from serene_spark.catalog import register_views, sql_runner
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
+    arr_len,
     element_at,
     explode_seq,
     mat,
@@ -45,7 +46,7 @@ EMB_DIM = 64
 def bpe_top_merges_sql(dialect: str) -> str:
     """Adjacent-pair frequencies over in-document token order, top-{TOP_MERGES}."""
     toks = split_re(dialect, NORM(dialect), "[^a-z0-9]+")
-    n = "size(toks)" if dialect == SPARK else "len(toks)"
+    n = arr_len(dialect, "toks")
     t_i = element_at(dialect, "toks", "i")
     t_next = element_at(dialect, "toks", "i + 1")
     return f"""
@@ -267,7 +268,7 @@ def token_pair_block(dialect: str) -> str:
     pmi_collocations and ppmi_spectral_embedding so the count definitions
     cannot desync."""
     toks = split_re(dialect, NORM(dialect), "[^a-z0-9]+")
-    n = "size(toks)" if dialect == SPARK else "len(toks)"
+    n = arr_len(dialect, "toks")
     t_i = element_at(dialect, "toks", "i")
     t_next = element_at(dialect, "toks", "i + 1")
     return f"""doc_toks AS (

@@ -12,7 +12,10 @@ Oracle-parity conventions (both engines MUST follow them):
 - DuckDB ``regexp_replace`` takes the ``'g'`` flag (Spark replaces globally by
   default); regexes stick to RE2-compatible syntax with ``[0-9]`` classes;
 - deterministic ordering for any top-k: rank on rounded score with an id
-  tie-break.
+  tie-break;
+- a string cast is spelled ``CAST(x AS STRING)`` in the shared text (DuckDB
+  reads ``STRING`` as VARCHAR); any other spelling that differs between the
+  engines goes through a ``functions/sqlgen.py`` helper.
 """
 
 from __future__ import annotations

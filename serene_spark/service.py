@@ -49,6 +49,13 @@ class HttpError(Exception):
         self.code = code
 
 
+def _string(value, field: str) -> str:
+    """``value`` if it is a string; otherwise the client's error (400)."""
+    if not isinstance(value, str):
+        raise HttpError(400, f"{field} must be a string")
+    return value
+
+
 def _under_data_root(path: str) -> bool:
     """Whether ``path`` resolves under the data root — otherwise any HTTP
     client could point the engine at an arbitrary file and read it back
@@ -76,9 +83,7 @@ class SereneService:
     # -- datasets ------------------------------------------------------------
 
     def _read_dataset(self, path):
-        if not isinstance(path, str):
-            raise HttpError(400, "path must be a string")
-        if not _under_data_root(path):
+        if not _under_data_root(_string(path, "path")):
             raise HttpError(403, f"path must be under {_DATA_ROOT}")
         return (
             self.spark.read.parquet(path)
@@ -405,7 +410,7 @@ def _make_handler(svc: SereneService):
 
         def run_query(self):
             body = self._body()
-            name = body.get("name", "")
+            name = _string(body.get("name", ""), "name")
             from serene_spark.registry import load_all
 
             queries = load_all()
@@ -424,7 +429,8 @@ def _make_handler(svc: SereneService):
             # default derives from the data root, so a deployment that sets
             # SERENE_DATA_ROOT keeps a working default instead of 403ing
             # every request that omits sf_dir
-            sf_dir = body.get("sf_dir", os.path.join(_DATA_ROOT, "sf0.001"))
+            sf_dir = _string(body.get("sf_dir", os.path.join(_DATA_ROOT, "sf0.001")),
+                             "sf_dir")
             # allowlist: a request-supplied sf_dir must resolve under the
             # data root (round-4 advice item)
             if not _under_data_root(sf_dir):

@@ -41,6 +41,7 @@ import shlex
 import shutil
 import subprocess
 import time
+import weakref
 from contextlib import contextmanager, suppress
 
 from pyspark.sql import SparkSession
@@ -59,6 +60,9 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
 }
+
+# Sessions tune_session has tuned.
+_TUNED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 # Per-user cache of the driver JVM's class-data-sharing archives, and the
 # empty conf dir their launches use. Archives depend on the JDK and Spark's
@@ -100,7 +104,14 @@ def tune_session(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:  # conf not settable on this session: keep going
             pass
+    _TUNED.add(spark)
     return spark
+
+
+def tune_once(spark: SparkSession) -> SparkSession:
+    """``tune_session`` unless the session was tuned before, so a conf its
+    caller later scopes on purpose stays set."""
+    return spark if spark in _TUNED else tune_session(spark)
 
 
 def archive_key(java: str, jars_dir: str, heap: str) -> str:

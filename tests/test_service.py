@@ -147,6 +147,8 @@ def test_query_endpoints(server):
 
     code, err = _req(server, "POST", "/v1.0/query/run", {"name": "nope"})
     assert code == 404 and "unknown query" in err["error"]
+    code, err = _req(server, "POST", "/v1.0/query/run", {"name": []})
+    assert code == 400 and "name" in err["error"], err
 
 
 def test_query_run_keeps_session_conf(server, spark, sf_dir):
@@ -182,6 +184,10 @@ def test_query_run_sf_dir_allowlist(server):
         {"name": "dq_constraints_lineitem", "sf_dir": "/root/testdata/../repo"},
     )
     assert code == 403
+    code, err = _req(
+        server, "POST", "/v1.0/query/run", {"name": "dq_constraints_lineitem", "sf_dir": 5}
+    )
+    assert code == 400 and "sf_dir" in err["error"], err
 
 
 def test_dataset_path_allowlist(server):

@@ -39,6 +39,25 @@ def test_live_driver_heap_below_physical_ram(spark):
     assert max_heap < PHYS_RAM
 
 
+def test_load_table_keeps_a_scoped_conf(spark, sf_dir, tmp_path):
+    """load_table tunes a session on its first load only: a conf the caller
+    sets afterwards survives a later cache miss."""
+    import shutil
+
+    from serene_spark.catalog import load_table
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    load_table(spark, sf_dir, "region")
+    shutil.copy(f"{sf_dir}/nation.parquet", tmp_path / "nation.parquet")
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        load_table(spark, str(tmp_path), "nation")
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_default_cpus_fits_the_host(monkeypatch):
     assert default_cpus() == len(os.sched_getaffinity(0))
     monkeypatch.delattr(os, "sched_getaffinity")

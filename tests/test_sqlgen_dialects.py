@@ -70,9 +70,10 @@ def test_split_and_len_dialects(spark):
 
 
 def test_element_at_dialects(spark):
-    expr_s = element_at(SPARK, split_re(SPARK, "s", " "), 1)
-    expr_d = element_at(DUCKDB, split_re(DUCKDB, "s", " "), 1)
-    assert _spark_vals(spark, expr_s) == _duck_vals(expr_d)
+    for idx in (1, -1):  # -1: the last element
+        expr_s = element_at(SPARK, split_re(SPARK, "s", " "), idx)
+        expr_d = element_at(DUCKDB, split_re(DUCKDB, "s", " "), idx)
+        assert _spark_vals(spark, expr_s) == _duck_vals(expr_d), idx
 
 
 def test_idiv_dialects(spark):

@@ -39,6 +39,11 @@ _STRS = _EDGE_STRS + [
     for _ in range(30)
 ]
 _HEXES = ["0", "f", "ff", "0000", "deadbeef", "7fffffff", "123abc", "00ff00ff", "fffffffffffffff"]
+# non-zero vectors of mixed sign and scale (cosine of a zero vector is 0/0)
+_VECS = [
+    ([_rng.uniform(-3, 3) for _ in range(8)], [_rng.uniform(-3, 3) for _ in range(8)])
+    for _ in range(20)
+] + [([1.0, 0.0], [0.0, 1.0]), ([1e-8, 2e8], [3e8, -4e-8]), ([2.5], [-2.5])]
 
 
 @pytest.fixture(scope="module")
@@ -48,18 +53,23 @@ def engines(spark, duck):
             (a, b) for a in _INTS for b in _DIVS
         )
     ]
-    str_rows = list(enumerate(_STRS))
+    str_rows = [(i, s, s.encode("utf-8").hex()) for i, s in enumerate(_STRS)]
     hex_rows = list(enumerate(_HEXES))
+    vec_rows = [(i, u, v) for i, (u, v) in enumerate(_VECS)]
     spark.createDataFrame(int_rows, "id long, a long, b long").createOrReplaceTempView("__shim_ints")
-    spark.createDataFrame(str_rows, "id long, s string").createOrReplaceTempView("__shim_strs")
+    spark.createDataFrame(str_rows, "id long, s string, hx string").createOrReplaceTempView("__shim_strs")
     spark.createDataFrame(hex_rows, "id long, h string").createOrReplaceTempView("__shim_hex")
+    spark.createDataFrame(vec_rows, "id long, u array<double>, v array<double>") \
+        .createOrReplaceTempView("__shim_vecs")
     duck.execute("CREATE OR REPLACE TABLE __shim_ints AS SELECT * FROM (VALUES "
                  + ", ".join(f"({i}, CAST({a} AS BIGINT), CAST({b} AS BIGINT))" for i, a, b in int_rows)
                  + ") t(id, a, b)")
-    duck.execute("CREATE OR REPLACE TABLE __shim_strs(id BIGINT, s VARCHAR)")
-    duck.executemany("INSERT INTO __shim_strs VALUES (?, ?)", str_rows)
+    duck.execute("CREATE OR REPLACE TABLE __shim_strs(id BIGINT, s VARCHAR, hx VARCHAR)")
+    duck.executemany("INSERT INTO __shim_strs VALUES (?, ?, ?)", str_rows)
     duck.execute("CREATE OR REPLACE TABLE __shim_hex(id BIGINT, h VARCHAR)")
     duck.executemany("INSERT INTO __shim_hex VALUES (?, ?)", hex_rows)
+    duck.execute("CREATE OR REPLACE TABLE __shim_vecs(id BIGINT, u DOUBLE[], v DOUBLE[])")
+    duck.executemany("INSERT INTO __shim_vecs VALUES (?, ?, ?)", vec_rows)
     return spark, duck
 
 
@@ -97,6 +107,24 @@ def test_hex_shim(engines):
     _compare(engines, "__shim_hex", lambda d: [
         f"CAST({g.hex_to_int(d, 'h')} AS BIGINT) AS v",
     ])
+    # unhex then UTF-8 decode round-trips every string, multi-byte ones too
+    _compare(engines, "__shim_strs", lambda d: [
+        g.utf8_decode(d, "unhex(hx)") + " AS decoded",
+        f"CAST({g.utf8_decode(d, 'unhex(hx)')} = s AS INT) AS round_trips",
+    ])
+
+
+def test_vector_shims(engines):
+    """Both engines fold in index order over DOUBLEs, so the values are
+    bit-identical, not just close. The one exception is a cosine of
+    parallel vectors: the Spark fold can land one ulp above 1 where DuckDB
+    never exceeds 1, which is why operators round cosines to 6 places."""
+    _compare(engines, "__shim_vecs", lambda d: [
+        g.cosine_expr(d, "u", "v") + " AS cos",
+        g.dot_expr(d, "u", "v") + " AS dot",
+        g.l2_expr(d, "u", "v") + " AS l2",
+        f"round({g.cosine_expr(d, 'u', 'u')}, 6) AS cos_self",
+    ])
 
 
 def test_regex_shims(engines):
@@ -119,11 +147,14 @@ def test_split_and_array_shims(engines):
         # this battery documents the constraint by guarding the probe
         head = (f"CASE WHEN {g.arr_len(d, toks)} > 0 "
                 f"THEN {g.element_at(d, toks, 1)} ELSE '<none>' END")
+        last = (f"CASE WHEN {g.arr_len(d, toks)} > 0 "
+                f"THEN {g.element_at(d, toks, -1)} ELSE '<none>' END")
         return [
             f"CAST({g.arr_len(d, toks)} AS BIGINT) AS n_toks",
             g.arr_join(d, toks, "|") + " AS joined",
             g.arr_join(d, g.arr_slice(d, toks, "1", "2"), "-") + " AS first2",
             head + " AS head",
+            last + " AS last",
         ]
     _compare(engines, "__shim_strs", exprs)
 

@@ -11,7 +11,10 @@ given) and records, per query:
 Per-call uuids (in view names, so also in statements) are normalized away
 everywhere; plans additionally lose expression ids (``#123``), RDD ids
 (``[45]``), MLlib uids (``VectorAssembler_3dd06a16e489``), JVM lambda names
-and the optimizer's ``_common_expr_<n>`` counter.
+and the optimizer's ``_common_expr_<n>`` counter. Two session-wide orders are
+put back into a canonical one: the suffixes of higher-order-function lambda
+variables (``x_17``) are renumbered by first use, and so is each
+distinct-aggregate rewrite's ``gid``, whose Expand rows and columns are sorted.
 
 Record at one commit, then check at another:
 
@@ -52,6 +55,8 @@ _PLAN_IDS = _UUIDS + (
     (re.compile(r"\$\$Lambda[^\s,]*"), "$$Lambda"),
     (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
 )
+_LAMBDA_VAR = re.compile(r"\b(lambda \w+)_(\d+)\b")
+_GID = re.compile(r"gid#N = (\d+)")
 _VIEW_METHODS = (
     "createOrReplaceTempView",
     "createTempView",
@@ -66,9 +71,73 @@ def normalize(text: str, rules=_UUIDS) -> str:
     return text
 
 
+def _renumber_lambdas(plan: str) -> str:
+    """Lambda variables are suffixed by a counter that spans the session."""
+    seen: dict[str, str] = {}
+    return _LAMBDA_VAR.sub(
+        lambda m: f"{m[1]}_{seen.setdefault(m[2], str(len(seen) + 1))}", plan)
+
+
+def _elements(text: str, start: int) -> tuple[list[str], int]:
+    """Top-level elements of the ``[...]`` list opening at ``text[start]``,
+    and the index just past its closing bracket."""
+    depth, elems, begin = 0, [], start + 1
+    for i in range(start, len(text)):
+        ch = text[i]
+        depth += (ch in "([{") - (ch in ")]}")
+        if depth == 0 or (depth == 1 and ch == ","):
+            elems.append(text[begin:i].strip())
+            begin = i + 1
+        if depth == 0:
+            return [e for e in elems if e], i + 1
+    return [e for e in elems if e], len(text)
+
+
+def _by_name(e: str):
+    return e.startswith("gid#"), e
+
+
+def _canonical_gids(plan: str) -> str:
+    """A distinct-aggregate rewrite numbers its groups (``gid``) in hash
+    order, so the numbers and the order of the Expand's rows and columns
+    depend on the session. Renumber each rewrite's gids by first use in
+    its FILTER line, sort the columns of the Aggregate and the Expand below
+    it by name, and sort the Expand's rows by gid."""
+    out, gids = [], {}
+    for line in plan.split("\n"):
+        if "FILTER (WHERE (gid#N = " in line:
+            gids = {}
+            for g in _GID.findall(line):
+                gids.setdefault(g, str(len(gids)))
+            line = _GID.sub(lambda m: f"gid#N = {gids[m[1]]}", line)
+        elif "gid#N" in line and ("Expand [" in line or "Aggregate [" in line):
+            node = "Expand [" if "Expand [" in line else "Aggregate ["
+            head = line.index(node) + len(node) - 1
+            first, i = _elements(line, head)
+            cols, j = _elements(line, i + 2)
+            if node == "Aggregate [":
+                body = f"[{', '.join(sorted(first, key=_by_name))}], " \
+                       f"[{', '.join(sorted(cols, key=_by_name))}]"
+            else:
+                order = sorted(range(len(cols)), key=lambda k: _by_name(cols[k]))
+                at = next(k for k, c in enumerate(cols) if c.startswith("gid#"))
+                rows = []
+                for row_text in first:
+                    row = _elements(row_text, 0)[0]
+                    row[at] = gids.get(row[at], row[at])
+                    rows.append([row[k] for k in order])
+                rows.sort(key=lambda r: int(r[-1]) if r[-1].isdigit() else -1)
+                body = "[" + ", ".join(f"[{', '.join(r)}]" for r in rows) + "], " \
+                       f"[{', '.join(cols[k] for k in order)}]"
+            line = line[:head] + body + line[j:]
+        out.append(line)
+    return "\n".join(out)
+
+
 def optimized_plan(df) -> str:
     try:
-        return normalize(df._jdf.queryExecution().optimizedPlan().toString(), _PLAN_IDS)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return _canonical_gids(_renumber_lambdas(normalize(plan, _PLAN_IDS)))
     except Exception as exc:  # a plan that fails to optimize is itself a record
         return f"<error {type(exc).__name__}>"
 
