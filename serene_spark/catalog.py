@@ -5,9 +5,17 @@ The reference models datasets as a lazy tree of tables -> attributes
 that role, with the column lineage (`name@table@dataset`,
 matcher/.../ingestion/loader/CsvDataLoader.scala:98-102) carried as plain
 ``column_name`` / table-name fields in long format instead of encoded ids.
+
+Every statement the engine runs reads its relations through
+:func:`bound_sql`, bound for that statement only. perfbench's tracer wraps
+``load_table`` and ``materialize`` by attribute where they are defined and
+where they were imported, so the runners call them through those module
+globals.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -129,35 +137,92 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def table_frames(
+    spark: SparkSession,
+    sf_dir: str,
+    tables: tuple[str, ...] = TABLES,
+    spread: bool = False,
+) -> dict[str, DataFrame]:
+    """Corpus tables by name, ready to pass to :func:`bound_sql`.
+
+    ``spread=True`` repartitions under-partitioned inputs first — used by
+    compute-bound operators (shingling, hashing, tokenizing) whose per-row
+    work would otherwise run on one core for single-file local inputs. Scan-
+    bound relational queries keep the raw table so filters/pruning reach the
+    parquet scan without a premature shuffle.
+    """
+    from serene_spark.functions.melt import spread as _spread
+
+    frames = {t: load_table(spark, sf_dir, t) for t in tables}
+    if spread:
+        frames = {t: _spread(df, key_cols=SPREAD_KEYS.get(t)) for t, df in frames.items()}
+    return frames
+
+
 def register_views(
     spark: SparkSession,
     sf_dir: str,
     tables: tuple[str, ...] = TABLES,
     spread: bool = False,
 ) -> None:
-    """Register corpus tables as temp views.
-
-    ``spread=True`` repartitions under-partitioned inputs first — used by
-    compute-bound operators (shingling, hashing, tokenizing) whose per-row
-    work would otherwise run on one core for single-file local inputs. Scan-
-    bound relational queries keep the raw view so filters/pruning reach the
-    parquet scan without a premature shuffle.
-    """
-    from serene_spark.functions.melt import spread as _spread
-
-    for t in tables:
-        df = load_table(spark, sf_dir, t)
-        if spread:
-            df = _spread(df, key_cols=SPREAD_KEYS.get(t))
+    """Register corpus tables as session temp views, for SQL written by
+    hand against the catalog (``bench.py``, tests); the engine binds its
+    inputs with :func:`bound_sql` instead."""
+    for t, df in table_frames(spark, sf_dir, tables, spread).items():
         df.createOrReplaceTempView(t)
 
 
-def sql_runner(sql_fn, tables: tuple[str, ...], spread: bool = False, stages=None):
-    """Registry callable for a SQL-defined query: bind ``tables`` as views,
-    stage each ``(view, statement)`` of ``stages(SPARK)`` in order, then run
-    ``sql_fn(SPARK)`` (both built on every run).
+_WITH = re.compile(r"\A(\s*(?:--[^\n]*\n\s*)*WITH(?:\s+RECURSIVE)?\s+)", re.IGNORECASE)
 
-    A stage is run, materialized and bound as ``view``, so a later stage
+
+def bound_sql(spark: SparkSession, statement: str, frames: dict[str, DataFrame]) -> DataFrame:
+    """Run ``statement`` with each frame it names bound by reference.
+
+    Every relation the engine reads goes through here, so nothing it runs
+    depends on a session-global view name that a concurrent request could
+    replace. Each frame whose name occurs in ``statement`` as a word is
+    prefixed as one CTE, ``name AS (SELECT * FROM {name})``, merged into
+    the statement's own ``WITH`` the way :func:`compose_with` merges bases.
+    The statement's literal braces are escaped and ``spark.sql(text,
+    **frames)`` does the binding: PySpark registers each frame under a
+    fresh ``_pyspark_<uuid>`` view and drops it as soon as the statement is
+    analyzed, so no view outlives the call. The SQL builders keep their
+    plain relation names, which is what the DuckDB oracles read too.
+
+    Only the named frames are bound: each binding costs a view round trip
+    and analysis of the frame's plan (building Q1 at sf0.1 took 22-26 ms
+    binding ``lineitem`` alone, 60-100 ms binding all ten tables).
+    """
+    used = {n: df for n, df in frames.items() if re.search(rf"\b{re.escape(n)}\b", statement)}
+    if not used:
+        return spark.sql(statement)
+    heads = ",\n".join(f"{n} AS (SELECT * FROM {{{n}}})" for n in used)
+    text = statement.replace("{", "{{").replace("}", "}}")
+    m = _WITH.match(text)
+    text = f"{m[1]}{heads},\n{text[m.end():]}" if m else f"WITH {heads}\n{text}"
+    return spark.sql(text, **used)
+
+
+def staged(spark: SparkSession, frames: dict[str, DataFrame], stages) -> dict[str, DataFrame]:
+    """Run each ``(name, statement)`` of ``stages`` in order with
+    :func:`bound_sql`, materialize it and add it to ``frames`` as ``name``,
+    so a later stage may read it. Returns ``frames``."""
+    # looked up per call, so a wrapper installed on the module (perfbench's
+    # tracer) sees every stage
+    from serene_spark.materialize import materialize
+
+    for name, statement in stages:
+        frames[name] = materialize(bound_sql(spark, statement, frames))
+    return frames
+
+
+def sql_runner(sql_fn, tables: tuple[str, ...], spread: bool = False, stages=None):
+    """Registry callable for a SQL-defined query: bind ``tables`` and the
+    result of each ``(name, statement)`` of ``stages(SPARK)`` in order,
+    then run ``sql_fn(SPARK)`` (both built on every run) with
+    :func:`bound_sql`.
+
+    A stage is run, materialized and bound as ``name``, so a later stage
     or the final statement may read it. Catalyst inlines a CTE at EVERY
     reference site, so a tail that reads a base relation k times re-derives
     its whole input pipeline — including the parquet scan — k times
@@ -169,15 +234,9 @@ def sql_runner(sql_fn, tables: tuple[str, ...], spread: bool = False, stages=Non
     """
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables, spread=spread)
-        if stages is not None:
-            # looked up per run, so a wrapper installed on the module
-            # (perfbench's tracer) sees every stage
-            from serene_spark.materialize import materialize
-
-            for view, statement in stages(SPARK):
-                materialize(spark.sql(statement)).createOrReplaceTempView(view)
-        return spark.sql(sql_fn(SPARK))
+        frames = table_frames(spark, sf_dir, tables, spread=spread)
+        return bound_sql(spark, sql_fn(SPARK),
+                         staged(spark, frames, stages(SPARK) if stages else ()))
 
     # the query belongs to the module that defines its SQL: tools/parity.py
     # hashes that module's imports to tell which queries an edit makes stale

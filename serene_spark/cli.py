@@ -139,16 +139,17 @@ def cmd_predict(args) -> int:
 def cmd_evaluate(args) -> int:
     """Confusion matrix + per-class P/R/F1 from a predictions CSV
     (column_name,actual,predicted) — §2.11 metrics over arbitrary input."""
+    from serene_spark.catalog import bound_sql
     from serene_spark.operators.evaluation import prf1_sql  # noqa: F401  (shape reference)
 
     spark = _spark()
-    df = spark.read.csv(args.predictions, header=True)
-    df.createOrReplaceTempView("__cli_pairs")
-    out = spark.sql(
+    out = bound_sql(
+        spark,
         """
         SELECT actual, predicted, CAST(COUNT(*) AS BIGINT) AS n
         FROM __cli_pairs GROUP BY actual, predicted ORDER BY actual, predicted
-        """
+        """,
+        {"__cli_pairs": spark.read.csv(args.predictions, header=True)},
     )
     for row in out.toLocalIterator():
         print(json.dumps(row.asDict(), sort_keys=True))

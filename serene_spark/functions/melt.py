@@ -20,7 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from serene_spark.catalog import load_table
+from serene_spark.catalog import bound_sql, load_table, staged
 
 
 def _num_partitions(df: DataFrame) -> int:
@@ -134,20 +134,31 @@ def melt_ids(df: DataFrame, columns: list[str] | None = None) -> tuple[DataFrame
 
 
 def run_over_melt(
-    spark: SparkSession, sf_dir: str, table: str, statement: Callable[[str], str]
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    statement: Callable[[str], str],
+    stages: Callable[[str], list[tuple[str, str]]] | None = None,
 ) -> DataFrame:
     """The runner of every registered per-column profiling query: melt
-    ``table`` with :func:`melt_ids`, register it as the temp view
-    ``__serene_long_{table}``, run ``statement(view)`` and map the int
-    column ids of the result back to names.
+    ``table`` with :func:`melt_ids`, run the ``stages(view)``
+    (:func:`serene_spark.catalog.staged`) and then ``statement(view)``
+    over it, and map the int column ids of the result back to names.
+
+    ``view`` (``__serene_long_{table}``) is not a session view: the melt
+    and each stage are bound by reference for each statement that names
+    them (:func:`serene_spark.catalog.bound_sql`), so two requests that
+    profile the same table at once never share a relation.
 
     The ids stay the group-by key through every aggregation (guide §2.3)
     and are mapped back only on the final ≤#columns-row projection.
+    ``load_table`` and ``melt_ids`` are called through their module
+    globals, which is where perfbench's tracer wraps them.
     """
     view = f"__serene_long_{table}"
     long_df, name_case = melt_ids(load_table(spark, sf_dir, table))
-    long_df.createOrReplaceTempView(view)
-    return spark.sql(statement(view)).withColumn("column_name", F.expr(name_case))
+    frames = staged(spark, {view: long_df}, stages(view) if stages else ())
+    return bound_sql(spark, statement(view), frames).withColumn("column_name", F.expr(name_case))
 
 
 def melt_sql(table: str, columns: tuple[str, ...], value_exprs: dict[str, str] | None = None) -> str:

@@ -318,7 +318,4 @@ def variant_expr(dialect: str, user_col: str = "user_id") -> str:
     first 8 hex digits, mod 2.  ONE definition — ab_test_conversion,
     ab_sequential_msprt, qte_deciles, ab_cuped_adjusted and their tests all
     split on exactly this expression."""
-    str_t = "STRING" if dialect == SPARK else "VARCHAR"
-    return (
-        f"{hex_to_int(dialect, f'substr(md5(CAST({user_col} AS {str_t})), 1, 8)')} % 2"
-    )
+    return f"{hex_to_int(dialect, f'substr(md5(CAST({user_col} AS STRING)), 1, 8)')} % 2"

@@ -23,8 +23,6 @@ the homeseekers-analog fixture in tests/test_homeseekers.py.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,25 +35,21 @@ def bag_long(
     """(column_name, value) -> (``column#bagK``, value): ``n_bags`` bags of
     ``bag_size`` with-replacement samples per column, deterministic-hash
     membership (ClassImbalanceResampler.scala:186-270 semantics)."""
+    from serene_spark.catalog import bound_sql
     from serene_spark.functions.sqlgen import SPARK
     from serene_spark.operators.resample import bagging_sql
 
-    view = f"__serene_bag_src_{uuid.uuid4().hex}"
-    long_df.createOrReplaceTempView(view)
-    try:
-        bags = spark.sql(
-            bagging_sql(SPARK, None, long_rel=view, n_bags=n_bags, bag_size=bag_size)
-        )
-        out = bags.select(
-            F.concat(
-                F.col("column_name"), F.lit(BAG_SEP), F.col("bag").cast("string")
-            ).alias("column_name"),
-            "value",
-        )
-        # bagging_sql is analyzed eagerly by spark.sql; safe to drop the view
-        return out
-    finally:
-        spark.catalog.dropTempView(view)
+    bags = bound_sql(
+        spark,
+        bagging_sql(SPARK, None, long_rel="__serene_bag_src", n_bags=n_bags, bag_size=bag_size),
+        {"__serene_bag_src": long_df},
+    )
+    return bags.select(
+        F.concat(
+            F.col("column_name"), F.lit(BAG_SEP), F.col("bag").cast("string")
+        ).alias("column_name"),
+        "value",
+    )
 
 
 def split_bag_key(df: DataFrame) -> DataFrame:
@@ -151,19 +145,16 @@ def _register():
         "feature-vector unit the bagged RF trains on)",
     )
     def bag_profile_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from serene_spark.catalog import load_table
+        from serene_spark.catalog import bound_sql, load_table
         from serene_spark.functions.melt import melt
         from serene_spark.operators.resample import BAG_SIZE, NUM_BAGS
 
         bagged = bag_long(
             spark, melt(load_table(spark, sf_dir, "customer")), NUM_BAGS, BAG_SIZE
         )
-        view = f"__serene_bagfeat_{uuid.uuid4().hex}"
-        bagged.createOrReplaceTempView(view)
-        try:
-            return spark.sql(profile_scalar_sql(view, SPARK))
-        finally:
-            spark.catalog.dropTempView(view)
+        return bound_sql(
+            spark, profile_scalar_sql("__serene_bagfeat", SPARK), {"__serene_bagfeat": bagged}
+        )
 
 
 _register()

@@ -16,12 +16,10 @@ vector -> confidence = max prob, predicted class via IndexToString.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from serene_spark.catalog import load_table
+from serene_spark.catalog import bound_sql, load_table
 from serene_spark.functions.melt import melt, melt_ids
 from serene_spark.functions.sqlgen import SPARK, rx
 from serene_spark.registry import register
@@ -192,39 +190,36 @@ def profile_features_from_long(
     instead of 15. The partition count is read from the checkpoint's RDD,
     which starts no job. A histogram of more partitions keeps the
     shuffles, and with them its parallelism.
+
+    Binding. The long relation and the histogram reach their statements
+    through :func:`serene_spark.catalog.bound_sql`, bound for that one
+    statement, never as session views: service.py serves each POST /train
+    on its own thread, and a shared view name would let one call replace
+    another's input before its statement is analyzed. perfbench's tracer
+    wraps this function and ``materialize`` by attribute, so both keep
+    their names and ``materialize`` is called through this module's global.
     """
     # One data-scale pass: reduce the long relation to its (column, value)
     # histogram, materialize THAT once (Spark inlines CTEs, so the
     # downstream consumers would otherwise recompute the shuffle), and
     # derive every gated feature family from it in a single fused
-    # statement. PER-CALL view names: service.py serves each POST /train on
-    # its own thread, and a shared name would let one call's
-    # createOrReplaceTempView interleave with another's spark.sql parse,
-    # silently training on the wrong data. spark.sql resolves views eagerly
-    # at analysis, so both views are dropped before returning — the
-    # checkpoint RDD stays reachable only through the returned DataFrame's
-    # lineage (no catalog pinning, no leak).
-    tag = uuid.uuid4().hex
-    view = f"__serene_feat_long_{tag}"
-    hist_view = f"__serene_feat_hist_{tag}"
+    # statement.
     needs_numeric = settings is None or settings.needs_numeric
-    long_df.createOrReplaceTempView(view)
-    try:
-        hist = spark.sql(staged_hist_sql(view, needs_numeric)).transform(materialize)
-        if hist.rdd.getNumPartitions() == 1:
-            hist = hist.coalesce(1)
-        hist.createOrReplaceTempView(hist_view)
-        out = spark.sql(
-            fused_profile_sql(
-                hist_view,
-                needs_textlen=settings is None or settings.needs_textlen,
-                needs_char_entropy=settings is None or settings.needs_char_entropy,
-                needs_numeric=needs_numeric,
-            )
-        ).transform(materialize)
-    finally:
-        spark.catalog.dropTempView(view)
-        spark.catalog.dropTempView(hist_view)
+    hist = bound_sql(
+        spark, staged_hist_sql("__serene_feat_long", needs_numeric), {"__serene_feat_long": long_df}
+    ).transform(materialize)
+    if hist.rdd.getNumPartitions() == 1:
+        hist = hist.coalesce(1)
+    out = bound_sql(
+        spark,
+        fused_profile_sql(
+            "__serene_feat_hist",
+            needs_textlen=settings is None or settings.needs_textlen,
+            needs_char_entropy=settings is None or settings.needs_char_entropy,
+            needs_numeric=needs_numeric,
+        ),
+        {"__serene_feat_hist": hist},
+    ).transform(materialize)
 
     if settings is None:
         feature_cols = [c for c in out.columns if c != "column_name"]

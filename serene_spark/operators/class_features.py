@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import COLUMNS, load_table
+from serene_spark.catalog import COLUMNS, bound_sql, load_table, sql_runner
 from serene_spark.functions.melt import melt, melt_sql
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
 from serene_spark.operators.profile_chardist import chardist_sql
@@ -165,22 +165,18 @@ def _char_cosine_oracle() -> str:
     return char_cosine_sql(melt_sql(_COSINE_TEST_TABLE, COLUMNS[_COSINE_TEST_TABLE]), pool, DUCKDB)
 
 
+def _cosine_tables(spark: SparkSession, sf_dir: str) -> tuple[dict, dict[str, str], str]:
+    """The melted pool and test tables: ``(frames, pool relation names,
+    test relation name)``."""
+    frames = {f"__serene_ccos_{t}": melt(load_table(spark, sf_dir, t))
+              for t in (*_COSINE_POOL_TABLES, _COSINE_TEST_TABLE)}
+    pool = {t: f"__serene_ccos_{t}" for t in _COSINE_POOL_TABLES}
+    return frames, pool, f"__serene_ccos_{_COSINE_TEST_TABLE}"
+
+
 def _char_cosine_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pool = {}
-    for t in _COSINE_POOL_TABLES:
-        view = f"__serene_ccos_{t}"
-        melt(load_table(spark, sf_dir, t)).createOrReplaceTempView(view)
-        pool[t] = view
-    test_view = f"__serene_ccos_{_COSINE_TEST_TABLE}"
-    melt(load_table(spark, sf_dir, _COSINE_TEST_TABLE)).createOrReplaceTempView(test_view)
-    return spark.sql(char_cosine_sql(test_view, pool, SPARK))
-
-
-def _meta_query(sql_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return spark.sql(sql_fn(SPARK))
-
-    return run
+    frames, pool, test = _cosine_tables(spark, sf_dir)
+    return bound_sql(spark, char_cosine_sql(test, pool, SPARK), frames)
 
 
 # --- score-map reorder (the relational, oracle-checkable face of §2.9) ------
@@ -234,14 +230,8 @@ def _score_map_oracle() -> str:
 
 
 def _score_map_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pool = {}
-    for t in _COSINE_POOL_TABLES:
-        view = f"__serene_smap_{t}"
-        melt(load_table(spark, sf_dir, t)).createOrReplaceTempView(view)
-        pool[t] = view
-    test_view = f"__serene_smap_{_COSINE_TEST_TABLE}"
-    melt(load_table(spark, sf_dir, _COSINE_TEST_TABLE)).createOrReplaceTempView(test_view)
-    return spark.sql(score_map_reorder_sql(test_view, pool, SPARK))
+    frames, pool, test = _cosine_tables(spark, sf_dir)
+    return bound_sql(spark, score_map_reorder_sql(test, pool, SPARK), frames)
 
 
 register("predict_score_map_reorder", oracle=_score_map_oracle(),
@@ -250,9 +240,9 @@ register("predict_score_map_reorder", oracle=_score_map_oracle(),
 
 
 register("class_min_editdist", oracle=min_editdist_sql(DUCKDB),
-         doc="SURVEY §2.5 min-editdistance-from-class-examples (Levenshtein, pivot per class)")(_meta_query(min_editdist_sql))
+         doc="SURVEY §2.5 min-editdistance-from-class-examples (Levenshtein, pivot per class)")(sql_runner(min_editdist_sql, ()))
 register("class_knn_shares", oracle=knn_shares_sql(DUCKDB),
-         doc="SURVEY §2.5 kNN-per-class shares over column names (Levenshtein, k=3)")(_meta_query(knn_shares_sql))
+         doc="SURVEY §2.5 kNN-per-class shares over column names (Levenshtein, k=3)")(sql_runner(knn_shares_sql, ()))
 register("class_char_cosine", oracle=_char_cosine_oracle(),
          doc="SURVEY §2.5 mean char-distribution cosine similarity per class")(_char_cosine_spark)
 

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import compose_with, cte_stages, register_views, sql_runner
+from serene_spark.catalog import bound_sql, compose_with, cte_stages, sql_runner, table_frames
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, element_at, explode_seq, idiv
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
@@ -168,31 +168,31 @@ def kmeans_converged(spark: SparkSession, sf_dir: str, max_iter: int = KMEANS_MA
     """
     from pyspark.sql import functions as F
 
-    register_views(spark, sf_dir, ("embeddings",))
+    frames = table_frames(spark, sf_dir, ("embeddings",))
     x = element_at(SPARK, "embedding", "i")
-    pm = spark.sql(f"""
+    pm = bound_sql(spark, f"""
         SELECT vec_id, i AS d,
                CAST(FLOOR(CAST({x} AS DOUBLE) * {SCALE}) AS BIGINT) AS xq
         FROM (SELECT vec_id, embedding, {explode_seq(SPARK, 1, str(DIM))} AS i
               FROM embeddings) e
-    """).transform(materialize)
-    pm.createOrReplaceTempView("__km_pm")
-    cm = spark.sql(f"""
+    """, frames).transform(materialize)
+    frames["__km_pm"] = pm
+    cm = bound_sql(spark, f"""
         SELECT ii.cid, p.d, p.xq AS cq
         FROM (SELECT vec_id,
                      CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cid
               FROM (SELECT DISTINCT vec_id FROM __km_pm) v) ii
         JOIN __km_pm p ON ii.vec_id = p.vec_id
         WHERE ii.cid < {K}
-    """).transform(materialize)
+    """, frames).transform(materialize)
 
     prev_assign = None
     n_iter = 0
     best = None
     for _ in range(max_iter):
         n_iter += 1
-        cm.createOrReplaceTempView("__km_cm")
-        best = spark.sql(f"""
+        frames["__km_cm"] = cm
+        best = bound_sql(spark, f"""
             SELECT vec_id, cid, dist FROM (
               SELECT p.vec_id, c.cid,
                      SUM((p.xq - c.cq) * (p.xq - c.cq)) AS dist,
@@ -202,9 +202,9 @@ def kmeans_converged(spark: SparkSession, sf_dir: str, max_iter: int = KMEANS_MA
               FROM __km_pm p JOIN __km_cm c ON p.d = c.d
               GROUP BY p.vec_id, c.cid
             ) r WHERE rn = 1
-        """).transform(materialize)
-        best.createOrReplaceTempView("__km_best")
-        cm = spark.sql(f"""
+        """, frames).transform(materialize)
+        frames["__km_best"] = best
+        cm = bound_sql(spark, f"""
             SELECT o.cid, o.d, COALESCE(n.cq, o.cq) AS cq
             FROM __km_cm o LEFT JOIN (
               SELECT b.cid, p.d,
@@ -212,7 +212,7 @@ def kmeans_converged(spark: SparkSession, sf_dir: str, max_iter: int = KMEANS_MA
               FROM __km_best b JOIN __km_pm p ON b.vec_id = p.vec_id
               GROUP BY b.cid, p.d
             ) n ON o.cid = n.cid AND o.d = n.d
-        """).transform(materialize)
+        """, frames).transform(materialize)
         if prev_assign is not None:
             n_changed = (
                 best.alias("n")
@@ -224,8 +224,8 @@ def kmeans_converged(spark: SparkSession, sf_dir: str, max_iter: int = KMEANS_MA
                 break
         prev_assign = best.select("vec_id", "cid")
 
-    cm.createOrReplaceTempView("__km_cm_final")
-    out = spark.sql(f"""
+    frames["__km_cm_final"] = cm
+    out = bound_sql(spark, f"""
         WITH sizes AS (
           SELECT cid, COUNT(*) AS n_points,
                  CAST(SUM(CAST(dist AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS inertia
@@ -236,7 +236,7 @@ def kmeans_converged(spark: SparkSession, sf_dir: str, max_iter: int = KMEANS_MA
                ROUND(CAST(COALESCE(s.inertia, 0) AS DOUBLE)
                      / ({SCALE}.0 * {SCALE}), 6) AS inertia
         FROM __km_cm_final c LEFT JOIN sizes s ON c.cid = s.cid
-    """)
+    """, frames)
     return out, n_iter
 
 

@@ -28,12 +28,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import compose_with, cte_stages, register_views, sql_runner
+from serene_spark.catalog import bound_sql, compose_with, cte_stages, sql_runner, staged, table_frames
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq, hex_to_int
 from serene_spark.operators.curation import grams_rel
 from serene_spark.operators.text_analysis import tokens_rel
 from serene_spark.registry import register
-from serene_spark.materialize import materialize
 
 CMS_D = 4    # hash rows
 CMS_W = 512  # buckets per row
@@ -121,14 +120,10 @@ def source_similarity_oracle_sql(dialect: str) -> str:
 def _source_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serene_spark.operators.dedup import guard_exact_baseline
 
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    guard_exact_baseline(spark, "documents", "source_similarity",
-                         "source_similarity_minhash")
-    grams = spark.sql(
-        f"WITH {grams_rel(SPARK)} SELECT * FROM grams"
-    ).transform(materialize)
-    grams.createOrReplaceTempView("__sim_grams")
-    return spark.sql(source_similarity_tail_sql("__sim_grams"))
+    frames = table_frames(spark, sf_dir, ("documents",), spread=True)
+    guard_exact_baseline(frames["documents"], "source_similarity", "source_similarity_minhash")
+    staged(spark, frames, [("__sim_grams", f"WITH {grams_rel(SPARK)} SELECT * FROM grams")])
+    return bound_sql(spark, source_similarity_tail_sql("__sim_grams"), frames)
 
 
 register(

@@ -33,7 +33,7 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views, sql_runner
+from serene_spark.catalog import bound_sql, sql_runner, staged, table_frames
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -447,21 +447,6 @@ def minhash_lsh_sql(dialect: str, band_size: int = BAND_SIZE,
     return f"WITH {minhash_rel(dialect, N_LSH)},\n{lsh_body(dialect, 'mh', band_size, cap)}"
 
 
-def _materialized_mh(spark: SparkSession, sf_dir: str):
-    """Compute the minhash signatures ONCE and truncate lineage — the LSH
-    tail references the relation ~10 times (8 bands + 2 est-Jaccard joins)
-    and Spark inlines CTEs, so without materialization the whole
-    shingle→minhash pipeline re-runs per reference (plan audit pins this).
-    localCheckpoint at test scale; on a cluster checkpoint to reliable
-    storage or write an intermediate table."""
-    from serene_spark.catalog import register_views
-
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    mh = spark.sql(f"WITH {minhash_rel(SPARK, N_LSH)} SELECT * FROM mh").transform(materialize)
-    mh.createOrReplaceTempView("__serene_mh")
-    return "__serene_mh"
-
-
 def dedup_minhash_lsh_spark(spark: SparkSession, sf_dir: str,
                             band_size: int | None = None) -> DataFrame:
     """Default LSH runner — planner-tuned: when ``band_size`` is not
@@ -473,11 +458,17 @@ def dedup_minhash_lsh_spark(spark: SparkSession, sf_dir: str,
     corpora instead of the fixed geometry's ~n²·J_bg³ blowup."""
     if band_size is None:
         band_size = plan_band_size(spark, sf_dir)
-    mh_rel = _materialized_mh(spark, sf_dir)
-    bands = spark.sql(bands_rel_exploded(mh_rel, band_size)).transform(materialize)
-    bands.createOrReplaceTempView("__serene_mh_bands")
-    return spark.sql(
-        f"WITH {lsh_body(SPARK, mh_rel, band_size, bands_src='__serene_mh_bands')}"
+    # The minhash signatures are computed ONCE and their lineage truncated:
+    # the LSH tail references them ~10 times (8 bands + 2 est-Jaccard
+    # joins) and Spark inlines CTEs, so unstaged the whole shingle→minhash
+    # pipeline re-runs per reference (plan audit pins this).
+    frames = staged(spark, table_frames(spark, sf_dir, ("documents",), spread=True), [
+        ("__serene_mh", f"WITH {minhash_rel(SPARK, N_LSH)} SELECT * FROM mh"),
+        ("__serene_mh_bands", bands_rel_exploded("__serene_mh", band_size)),
+    ])
+    return bound_sql(
+        spark, f"WITH {lsh_body(SPARK, '__serene_mh', band_size, bands_src='__serene_mh_bands')}",
+        frames,
     )
 
 
@@ -595,9 +586,12 @@ def lsh_verified_sql(dialect: str, band_size: int = BAND_SIZE, threshold: float 
     return f"WITH {docsketch_rel(dialect)},{verified_body(dialect, 'docsk', band_size, threshold, cap=cap)}"
 
 
+# the frames _materialized_docsk binds: full sketch, thin sketch, bands
+_DOCSK, _DOCSK_THIN, _DOCSK_BANDS = "__serene_docsk", "__serene_docsk_thin", "__serene_docsk_bands"
+
+
 def _materialized_docsk(spark: SparkSession, sf_dir: str,
-                        view: str,
-                        band_size: int = BAND_SIZE) -> tuple[str, str, str]:
+                        band_size: int = BAND_SIZE) -> dict[str, DataFrame]:
     """Compute the per-doc sketch ONCE and truncate lineage — the LSH
     tails reference it many times (bands + candidate joins + verify) and
     Spark inlines CTEs, so without materialization the whole
@@ -606,7 +600,8 @@ def _materialized_docsk(spark: SparkSession, sf_dir: str,
     doc-length-sized. On a cluster, checkpoint to reliable storage or
     write an intermediate table instead.
 
-    Returns (full_view, thin_view, bands_view): full carries the shingle
+    Returns the frames, with ``_DOCSK``, ``_DOCSK_THIN`` and
+    ``_DOCSK_BANDS`` added to ``documents``: full carries the shingle
     arrays for the exact verify joins; thin is a signature-only
     RE-checkpoint of the full one (derived, so the shingle pipeline still
     runs once) because checkpointed-RDD scans deserialize whole rows and
@@ -615,27 +610,15 @@ def _materialized_docsk(spark: SparkSession, sf_dir: str,
     tail references three times."""
     from pyspark.sql import functions as F
 
-    from serene_spark.catalog import register_views
-
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    sk = spark.sql(
-        f"WITH {docsketch_rel(SPARK)} SELECT * FROM docsk"
-    ).transform(materialize)
-    sk.createOrReplaceTempView(view)
-    thin = sk.select(
+    frames = staged(spark, table_frames(spark, sf_dir, ("documents",), spread=True),
+                    [(_DOCSK, f"WITH {docsketch_rel(SPARK)} SELECT * FROM docsk")])
+    frames[_DOCSK_THIN] = frames[_DOCSK].select(
         "doc_id", *[F.col(f"mh{i}") for i in range(N_LSH)]
     ).transform(materialize)
-    thin_view = f"{view}_thin"
-    thin.createOrReplaceTempView(thin_view)
     # bands materialized too: the per-band UNION is referenced three
     # times by the candidate tail, and compiling 3x its branches is pure
     # plan overhead (measured ~5s at sf0.1)
-    bands = spark.sql(
-        bands_rel_exploded(thin_view, band_size)
-    ).transform(materialize)
-    bands_view = f"{view}_bands"
-    bands.createOrReplaceTempView(bands_view)
-    return view, thin_view, bands_view
+    return staged(spark, frames, [(_DOCSK_BANDS, bands_rel_exploded(_DOCSK_THIN, band_size))])
 
 
 def dedup_lsh_verified_spark(spark: SparkSession, sf_dir: str,
@@ -647,10 +630,9 @@ def dedup_lsh_verified_spark(spark: SparkSession, sf_dir: str,
     verify floor and the raised S-curve inflection."""
     if band_size is None:
         band_size = plan_band_size(spark, sf_dir)
-    rel, thin, bands = _materialized_docsk(spark, sf_dir, "__serene_vdocsk",
-                                           band_size=band_size)
-    return spark.sql(
-        f"WITH {verified_body(SPARK, rel, band_size, mh_rel=thin, bands_src=bands)}")
+    frames = _materialized_docsk(spark, sf_dir, band_size=band_size)
+    body = verified_body(SPARK, _DOCSK, band_size, mh_rel=_DOCSK_THIN, bands_src=_DOCSK_BANDS)
+    return bound_sql(spark, f"WITH {body}", frames)
 
 
 # The scale knob, DEMONSTRATED as a first-class query rather than a
@@ -666,10 +648,10 @@ _, STRICT_BAND_SIZE = lsh_band_geometry(STRICT_TARGET_JACCARD, N_LSH)
 
 
 def dedup_lsh_verified_strict_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rel, thin, bands = _materialized_docsk(
-        spark, sf_dir, "__serene_vsdocsk", band_size=STRICT_BAND_SIZE
-    )
-    return spark.sql(f"WITH {verified_body(SPARK, rel, STRICT_BAND_SIZE, STRICT_VERIFY_THRESHOLD, mh_rel=thin, bands_src=bands)}")
+    frames = _materialized_docsk(spark, sf_dir, band_size=STRICT_BAND_SIZE)
+    body = verified_body(SPARK, _DOCSK, STRICT_BAND_SIZE, STRICT_VERIFY_THRESHOLD,
+                         mh_rel=_DOCSK_THIN, bands_src=_DOCSK_BANDS)
+    return bound_sql(spark, f"WITH {body}", frames)
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -868,33 +850,31 @@ dedup_simhash_pairs_spark = sql_runner(
 EXACT_BASELINE_MAX_DOCS = 50_000
 
 
-def guard_exact_baseline(spark: SparkSession, table: str, op: str,
-                         scale_sibling: str,
+def guard_exact_baseline(docs: DataFrame, op: str, scale_sibling: str,
                          max_docs: int = EXACT_BASELINE_MAX_DOCS) -> None:
     """Refuse a corpus too large for an intentionally-quadratic baseline.
 
     The exact all-pairs operators exist as verification oracles for their
     bucketed scale siblings; on a production corpus their self-join is
     Theta(n^2) candidate pairs and no amount of cluster would save it.
-    A cheap COUNT probe gates them — row-count metadata when the table is
-    a plain parquet-backed view, a narrow count scan otherwise; never a
+    A cheap COUNT probe gates them — row-count metadata when ``docs`` is
+    a plain parquet scan, a narrow count scan otherwise; never a
     text scan — mirroring the train-collect guard at ml/pipeline.py.
     """
-    n = spark.table(table).count()
+    n = docs.count()
     if n > max_docs:
         raise ValueError(
             f"{op} is the exact quadratic baseline (all-pairs self-join) and "
-            f"got {n} {table} rows > {max_docs}. On a data-scale corpus use "
+            f"got {n} documents > {max_docs}. On a data-scale corpus use "
             f"the bucketed scale sibling `{scale_sibling}` instead; the exact "
             f"baseline exists to verify it on samples."
         )
 
 
 def _guarded_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    guard_exact_baseline(spark, "documents", "dedup_ngram_jaccard",
-                         "dedup_lsh_verified")
-    return spark.sql(ngram_jaccard_sql(SPARK))
+    frames = table_frames(spark, sf_dir, ("documents",), spread=True)
+    guard_exact_baseline(frames["documents"], "dedup_ngram_jaccard", "dedup_lsh_verified")
+    return bound_sql(spark, ngram_jaccard_sql(SPARK), frames)
 
 
 register("dedup_exact", oracle=dedup_exact_sql(DUCKDB),
@@ -1100,12 +1080,12 @@ def plan_band_size(spark: SparkSession, sf_dir: str,
     got = _PLANNED_BAND_SIZE.get(key)
     if got is not None:
         return got
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    n_docs = spark.table("documents").count()
+    docs = table_frames(spark, sf_dir, ("documents",), spread=True)
+    n_docs = docs["documents"].count()
     if n_docs < PLANNER_MIN_DOCS:
         choice = BAND_SIZE
     else:
-        rows = sorted(spark.sql(lsh_geometry_planner_sql(SPARK)).collect(),
+        rows = sorted(bound_sql(spark, lsh_geometry_planner_sql(SPARK), docs).collect(),
                       key=lambda r: r["rows_per_band"])
         choice = None
         for r in rows:
@@ -1235,14 +1215,10 @@ def _canonical_oracle() -> str:
 
 def dedup_canonical_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark runner: iterative CC labels (dedup_clusters), materialized once,
-    then the shared selection body over a per-call uuid view."""
-    import uuid
-
-    labels = dedup_clusters(spark, sf_dir).transform(materialize)
-    view = f"__serene_canon_{uuid.uuid4().hex}"
-    labels.createOrReplaceTempView(view)
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    return spark.sql(f"WITH {canonical_select_body(SPARK, view)}")
+    then the shared selection body over them."""
+    frames = table_frames(spark, sf_dir, ("documents",), spread=True)
+    frames["__serene_canon"] = dedup_clusters(spark, sf_dir).transform(materialize)
+    return bound_sql(spark, f"WITH {canonical_select_body(SPARK, '__serene_canon')}", frames)
 
 
 register("dedup_canonical_select", oracle=_canonical_oracle(),
@@ -1385,10 +1361,10 @@ def containment_sql(dialect: str) -> str:
 def dedup_containment_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized runner: same doc-sketch materialization as the Jaccard
     verify (Spark would otherwise recompute the sketch per CTE ref)."""
-    rel, thin, bands = _materialized_docsk(spark, sf_dir, "__serene_cdocsk")
+    frames = _materialized_docsk(spark, sf_dir)
     # the SAME tail the oracle uses, over the materialized relations
-    return spark.sql(
-        f"WITH {containment_tail(SPARK, rel, mh_rel=thin, bands_src=bands)}")
+    body = containment_tail(SPARK, _DOCSK, mh_rel=_DOCSK_THIN, bands_src=_DOCSK_BANDS)
+    return bound_sql(spark, f"WITH {body}", frames)
 
 
 register(
@@ -1548,11 +1524,11 @@ JOIN exact_pairs x ON e.doc_id_1 = x.doc_id_1 AND e.doc_id_2 = x.doc_id_2
 def _minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized runner: shingles + signatures once (the audit reads
     both the estimate and the exact-verify tails)."""
-    rel, thin, bands = _materialized_docsk(spark, sf_dir, "__serene_edocsk")
-    return spark.sql(f"""
-WITH est AS (WITH {lsh_body(SPARK, thin, bands_src=bands)}),
-exact_pairs AS (WITH {verified_body(SPARK, rel, threshold=0.0, mh_rel=thin,
-                                    bands_src=bands)})
+    frames = _materialized_docsk(spark, sf_dir)
+    return bound_sql(spark, f"""
+WITH est AS (WITH {lsh_body(SPARK, _DOCSK_THIN, bands_src=_DOCSK_BANDS)}),
+exact_pairs AS (WITH {verified_body(SPARK, _DOCSK, threshold=0.0, mh_rel=_DOCSK_THIN,
+                                    bands_src=_DOCSK_BANDS)})
 SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
        ROUND(AVG(ABS(e.est_jaccard - x.jaccard)), 6) AS mean_abs_error,
        ROUND(MAX(ABS(e.est_jaccard - x.jaccard)), 6) AS max_abs_error,
@@ -1563,7 +1539,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
          AS frac_within_2se
 FROM est e
 JOIN exact_pairs x ON e.doc_id_1 = x.doc_id_1 AND e.doc_id_2 = x.doc_id_2
-""")
+""", frames)
 
 
 register(

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views, sql_runner
+from serene_spark.catalog import bound_sql, sql_runner, table_frames
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
 from serene_spark.registry import register
 
@@ -155,13 +155,12 @@ def _er_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from serene_spark.operators.pair_features import _jaro
 
-    register_views(spark, sf_dir, ("customer",))
     jaro_udf = pandas_udf(
         lambda a, b: pd.Series([_jaro(x, y) for x, y in zip(a, b)]),
         DoubleType(),
     )
     spark.udf.register("__er_jaro", jaro_udf)
-    return spark.sql(er_match_sql(SPARK))
+    return bound_sql(spark, er_match_sql(SPARK), table_frames(spark, sf_dir, ("customer",)))
 
 
 register(
@@ -279,13 +278,12 @@ def _er_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from serene_spark.operators.pair_features import _jaro
 
-    register_views(spark, sf_dir, ("customer",))
     jaro_udf = pandas_udf(
         lambda a, b: pd.Series([_jaro(x, y) for x, y in zip(a, b)]),
         DoubleType(),
     )
     spark.udf.register("__er_jaro", jaro_udf)
-    return spark.sql(er_fellegi_sunter_sql(SPARK))
+    return bound_sql(spark, er_fellegi_sunter_sql(SPARK), table_frames(spark, sf_dir, ("customer",)))
 
 
 register(
@@ -361,11 +359,10 @@ def _er_jw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, DoubleType
 
-    register_views(spark, sf_dir, ("customer",))
     spark.udf.register("__er_jjw", pandas_udf(
         lambda a, b: pd.Series([_jaro_and_jw(x, y) for x, y in zip(a, b)]),
         ArrayType(DoubleType())))
-    return spark.sql(er_jw_sql(SPARK))
+    return bound_sql(spark, er_jw_sql(SPARK), table_frames(spark, sf_dir, ("customer",)))
 
 
 register(

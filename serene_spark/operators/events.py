@@ -25,7 +25,6 @@ from serene_spark.catalog import (
     compose_with,
     cte_stages,
     load_table,
-    register_views,
     sql_runner,
 )
 from serene_spark.functions.sqlgen import DUCKDB, epoch_s, explode_seq, idiv
@@ -46,7 +45,7 @@ register(
     "events_tumbling_hour",
     oracle=TUMBLING_SQL,
     doc="1-hour tumbling-window aggregation over events (batch form of the streaming op)",
-)(lambda spark, sf_dir: (register_views(spark, sf_dir, ("events",)), spark.sql(TUMBLING_SQL))[1])
+)(sql_runner(lambda _dialect: TUMBLING_SQL, ("events",)))
 
 
 # Trending top-k: rank WITHIN each window (hour-keyed window function — a

@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views, sql_runner
+from serene_spark.catalog import bound_sql, sql_runner, table_frames
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
 from serene_spark.operators.graph_rank import edges_sql
 from serene_spark.registry import register
@@ -313,8 +313,10 @@ def core_numbers(edges: DataFrame, max_rounds: int = KCORE_MAX_ROUNDS):
 
 
 def _kcore_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("lineitem", "orders"))
-    edges = spark.sql(f"WITH {edges_sql(SPARK)} SELECT src, dst FROM edges")
+    edges = bound_sql(
+        spark, f"WITH {edges_sql(SPARK)} SELECT src, dst FROM edges",
+        table_frames(spark, sf_dir, ("lineitem", "orders")),
+    )
     out, _ = core_numbers(edges)
     return out.selectExpr(
         "CAST(node AS BIGINT) AS s_suppkey",

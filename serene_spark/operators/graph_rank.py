@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views, sql_runner
+from serene_spark.catalog import bound_sql, sql_runner, staged, table_frames
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
@@ -154,25 +154,23 @@ def pagerank_converged_run(
     ``max_iter`` sweeps, which the truncation test uses to pin equality with
     the unrolled 3-iteration oracle query.
     """
-    register_views(spark, sf_dir, ("lineitem", "orders", "supplier"))
-    edges = spark.sql(
-        f"WITH {edges_sql(SPARK)} SELECT * FROM edges"
-    ).transform(materialize)
-    edges.createOrReplaceTempView("edges")
-    spark.sql("SELECT s_suppkey AS node FROM supplier").transform(materialize).createOrReplaceTempView("nodes")
-    spark.sql("SELECT COUNT(*) AS cnt FROM nodes").transform(materialize).createOrReplaceTempView("nn")
-    spark.sql(
-        "SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY src"
-    ).transform(materialize).createOrReplaceTempView("degs")
-
-    rank = spark.sql(
+    frames = table_frames(spark, sf_dir, ("lineitem", "orders", "supplier"))
+    staged(spark, frames, [
+        ("edges", f"WITH {edges_sql(SPARK)} SELECT * FROM edges"),
+        ("nodes", "SELECT s_suppkey AS node FROM supplier"),
+        ("nn", "SELECT COUNT(*) AS cnt FROM nodes"),
+        ("degs", "SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY src"),
+    ])
+    rank = bound_sql(
+        spark,
         "SELECT node, CAST(ROUND(1.0 / (SELECT cnt FROM nn), 9) "
-        "AS DECIMAL(18,9)) AS rank FROM nodes"
+        "AS DECIMAL(18,9)) AS rank FROM nodes",
+        frames,
     ).transform(materialize)
     n_iters, delta = 0, float("inf")
     for _ in range(max_iter):
-        rank.createOrReplaceTempView("pr_prev")
-        new_rank = spark.sql(_iter_body("pr_prev")).transform(materialize)
+        frames["pr_prev"] = rank
+        new_rank = bound_sql(spark, _iter_body("pr_prev"), frames).transform(materialize)
         n_iters += 1
         delta = (
             new_rank.alias("a")
@@ -185,8 +183,9 @@ def pagerank_converged_run(
         rank = new_rank
         if tol > 0.0 and delta <= tol:
             break
-    rank.createOrReplaceTempView("pr_final")
-    out = spark.sql(
+    frames["pr_final"] = rank
+    out = bound_sql(
+        spark,
         """
 SELECT n.node AS s_suppkey,
        CAST(COALESCE(d.outdeg, 0) AS BIGINT) AS degree,
@@ -194,7 +193,8 @@ SELECT n.node AS s_suppkey,
 FROM nodes n
 JOIN pr_final r ON n.node = r.node
 LEFT JOIN degs d ON n.node = d.node
-"""
+""",
+        frames,
     )
     return out, n_iters, delta
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import COLUMNS, load_table, register_views
+from serene_spark.catalog import COLUMNS, bound_sql, load_table
 from serene_spark.functions.melt import melt, melt_sql
 from serene_spark.functions.sqlgen import DUCKDB, SPARK
 from serene_spark.registry import register
@@ -52,10 +52,9 @@ def sample_columns_df(df) -> "DataFrame":
     """Server-ingest preview for an arbitrary DataFrame: first 4n rows,
     deterministic 15-value sample per column (DataSetInterface.scala:39-41,
     214-235; the service layer's GET /dataset/:id sample)."""
-    spark = df.sparkSession
     view = "__serene_ingest_any"
-    melt(df.limit(HEAD_ROWS)).createOrReplaceTempView(view)
-    return spark.sql(column_sample_sql(view, SPARK))
+    return bound_sql(df.sparkSession, column_sample_sql(view, SPARK),
+                     {view: melt(df.limit(HEAD_ROWS))})
 
 
 @register(
@@ -65,8 +64,7 @@ def sample_columns_df(df) -> "DataFrame":
     "15-value sample per column (server ingest preview semantics)",
 )
 def ingest_column_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("customer",))
     key = COLUMNS["customer"][0]
     head = load_table(spark, sf_dir, "customer").orderBy(key).limit(HEAD_ROWS)
-    melt(head).createOrReplaceTempView("__serene_ingest_head")
-    return spark.sql(column_sample_sql("__serene_ingest_head", SPARK))
+    view = "__serene_ingest_head"
+    return bound_sql(spark, column_sample_sql(view, SPARK), {view: melt(head)})

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from serene_spark.catalog import register_views
+from serene_spark.catalog import bound_sql, table_frames
 from serene_spark.functions.sqlgen import SPARK, cosine_expr
 from serene_spark.operators.similarity import (
     N_CENTROIDS,
@@ -48,19 +48,17 @@ def build_ivf_index(
     as a ``_centroids`` sibling — it is part of the index).  ``vectors``
     overrides the corpus (an initial-load subset; later batches arrive via
     ``upsert_ivf_index``)."""
-    if vectors is not None:
-        vectors.createOrReplaceTempView("embeddings")
-    else:
-        register_views(spark, sf_dir, ("embeddings",))
+    frames = (table_frames(spark, sf_dir, ("embeddings",)) if vectors is None
+              else {"embeddings": vectors})
     # the assignment rule is ivf_assign_sql — the SAME definition the inline
     # search and the Lloyd loop use, so bit-identity is structural
-    assigned = spark.sql(f"""
+    assigned = bound_sql(spark, f"""
 WITH centroids AS ({ivf_centroids_sql(SPARK, k)})
 {ivf_assign_sql(SPARK)}
-""")
+""", frames)
     assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(index_path)
-    spark.sql(
-        f"SELECT centroid_id, centroid FROM ({ivf_centroids_sql(SPARK, k)}) c"
+    bound_sql(
+        spark, f"SELECT centroid_id, centroid FROM ({ivf_centroids_sql(SPARK, k)}) c", frames
     ).write.mode("overwrite").parquet(index_path + "_centroids")
 
 
@@ -79,12 +77,10 @@ def search_ivf_index(
     (dynamic partition pruning would do this join-side on a cluster; the
     literal filter makes the pruning visible and testable in local mode).
     """
-    register_views(spark, sf_dir, ("embeddings",))
-    spark.read.parquet(index_path + "_centroids").createOrReplaceTempView(
-        "__ivf_centroids"
-    )
+    frames = table_frames(spark, sf_dir, ("embeddings",))
+    frames["__ivf_centroids"] = spark.read.parquet(index_path + "_centroids")
     cos_probe = cosine_expr(SPARK, "q.embedding", "cen.centroid")
-    probes = spark.sql(f"""
+    probes = bound_sql(spark, f"""
 SELECT vec_id, centroid_id FROM (
   SELECT q.vec_id, cen.centroid_id,
          ROW_NUMBER() OVER (PARTITION BY q.vec_id
@@ -93,9 +89,9 @@ SELECT vec_id, centroid_id FROM (
   FROM embeddings q CROSS JOIN __ivf_centroids cen
   WHERE q.vec_id < {N_QUERIES}
 ) p WHERE rk <= {n_probe}
-""")
+""", frames)
     probes = probes.cache()  # consumed twice: driver id-list + final join
-    probes.createOrReplaceTempView("__ivf_probes")
+    frames["__ivf_probes"] = probes
     probed_ids = sorted({r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()})
     if not probed_ids:  # empty query set: empty result, not malformed SQL
         return spark.createDataFrame(
@@ -104,13 +100,12 @@ SELECT vec_id, centroid_id FROM (
 
     # .isin on the scan is what drives the partition pruning; the join's
     # equi-condition on centroid_id needs no second literal copy
-    lists = (
+    frames["__ivf_lists"] = (
         spark.read.parquet(index_path)
         .filter(F.col("centroid_id").isin(probed_ids))
     )
-    lists.createOrReplaceTempView("__ivf_lists")
     cos_exact = cosine_expr(SPARK, "q.embedding", "l.embedding")
-    out = spark.sql(f"""
+    out = bound_sql(spark, f"""
 WITH scored AS (
   SELECT /*+ BROADCAST(p) */ p.vec_id AS query_id, l.vec_id AS neighbor_id,
          round({cos_exact}, 6) AS cosine
@@ -126,7 +121,7 @@ FROM (
                             ORDER BY cosine DESC, neighbor_id ASC) AS rk
   FROM scored
 ) r WHERE rk <= {top_k}
-""")
+""", frames)
     return out
 
 
@@ -154,14 +149,10 @@ def upsert_ivf_index(spark: SparkSession, index_path: str, delta: DataFrame) -> 
     delta lands in (dynamic partition append, never a rewrite of the
     untouched lists).
     """
-    delta.createOrReplaceTempView("__ivf_delta")
-    spark.read.parquet(index_path + "_centroids").createOrReplaceTempView(
-        "__ivf_up_cent"
-    )
-    assigned = spark.sql(f"""
+    assigned = bound_sql(spark, f"""
 WITH centroids AS (SELECT centroid_id, centroid FROM __ivf_up_cent)
 {ivf_assign_sql(SPARK, "__ivf_delta", "centroids")}
-""")
+""", {"__ivf_delta": delta, "__ivf_up_cent": spark.read.parquet(index_path + "_centroids")})
     existing = spark.read.parquet(index_path).select("vec_id")
     fresh = assigned.join(existing, "vec_id", "left_anti")
     fresh.write.mode("append").partitionBy("centroid_id").parquet(index_path)

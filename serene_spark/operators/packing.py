@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views, sql_runner
+from serene_spark.catalog import bound_sql, sql_runner, staged, table_frames
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     arr_filter_nonempty,
@@ -203,21 +203,19 @@ def _corpus_build_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serene_spark.materialize import materialize
     from serene_spark.operators.text_analysis import corpus_select_spark_df
 
-    register_views(spark, sf_dir, ("documents",), spread=True)
+    frames = table_frames(spark, sf_dir, ("documents",), spread=True)
     # staged selection (materialized-feat path — the one-statement form
     # serializes its gate folds into the scan task, see corpus_select_spark_df)
-    corpus_select_spark_df(spark, sf_dir).transform(materialize) \
-        .createOrReplaceTempView("__cb_sel")
+    frames["__cb_sel"] = corpus_select_spark_df(spark, sf_dir).transform(materialize)
     # materialize the one data-scale product (selected docs tokenized) —
     # shard_cfg + stream reference it twice more, and Catalyst's CTE
     # inlining would re-run selection + tokenization per reference
-    spark.sql(
+    staged(spark, frames, [("__cb_doc_tokens",
         "WITH sel AS (SELECT * FROM __cb_sel),\n"
         "sel_docs AS (SELECT d.* FROM documents d "
         "JOIN sel ON d.doc_id = sel.doc_id)\n"
-        + doc_tokens_rel(_S, "sel_docs")
-    ).transform(materialize).createOrReplaceTempView("__cb_doc_tokens")
-    return spark.sql(f"""
+        + doc_tokens_rel(_S, "sel_docs"))])
+    return bound_sql(spark, f"""
 WITH sel AS (SELECT * FROM __cb_sel),{_stream_tail("__cb_doc_tokens")},
 manifest AS (
   SELECT doc_id,
@@ -232,7 +230,7 @@ SELECT m.doc_id, s.pred_lang, m.shard, m.n_tokens, m.start_off,
        m.first_seq, m.last_seq
 FROM manifest m JOIN sel s ON m.doc_id = s.doc_id
 ORDER BY m.shard, m.doc_id
-""")
+""", frames)
 
 
 register(

@@ -23,13 +23,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import COLUMNS, load_table, register_views
+from serene_spark.catalog import COLUMNS, bound_sql, load_table, staged, table_frames
 from serene_spark.functions.melt import melt, melt_sql
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode, explode_seq, rr, split_re
 from serene_spark.operators.profile_chardist import chardist_sql
 from serene_spark.operators.profile_typeinfer import typeinfer_sql
 from serene_spark.registry import register
-from serene_spark.materialize import materialize
 
 NONEMPTY = "length(trim(value)) > 0"
 
@@ -249,6 +248,18 @@ def _jaro(a: str, b: str) -> float:
     return (m / la + m / lb + (m - transpositions) / m) / 3.0
 
 
+def _name_pairs(spark: SparkSession, sf_dir: str, view: str) -> DataFrame:
+    """Each unordered pair of ``_TABLE``'s column names, once."""
+    return bound_sql(
+        spark,
+        f"""SELECT a.column_name AS col_1, b.column_name AS col_2
+            FROM (SELECT DISTINCT column_name FROM {view}) a
+            JOIN (SELECT DISTINCT column_name FROM {view}) b
+              ON a.column_name < b.column_name""",
+        {view: melt(load_table(spark, sf_dir, _TABLE))},
+    )
+
+
 def pair_jaro(spark: SparkSession, sf_dir: str) -> DataFrame:
     """jaroMeasureDistance (AttributePairFeatureExtractor.scala:115) over
     lowercase column names; oracle = DuckDB's built-in jaro_similarity.
@@ -261,15 +272,7 @@ def pair_jaro(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda a, b: pd.Series([_jaro(x, y) for x, y in zip(a, b)]),
         DoubleType(),
     )
-    register_views(spark, sf_dir, (_TABLE,))
-    view = f"__serene_pairjaro_{_TABLE}"
-    melt(load_table(spark, sf_dir, _TABLE)).createOrReplaceTempView(view)
-    pairs = spark.sql(
-        f"""SELECT a.column_name AS col_1, b.column_name AS col_2
-            FROM (SELECT DISTINCT column_name FROM {view}) a
-            JOIN (SELECT DISTINCT column_name FROM {view}) b
-              ON a.column_name < b.column_name"""
-    )
+    pairs = _name_pairs(spark, sf_dir, f"__serene_pairjaro_{_TABLE}")
     from pyspark.sql.functions import lower as f_lower, round as f_round
 
     return pairs.withColumn(
@@ -303,26 +306,24 @@ def pair_nw(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda a, b: pd.Series([_nw_distance(x, y) for x, y in zip(a, b)]),
         DoubleType(),
     )
-    view = f"__serene_pairnw_{_TABLE}"
-    melt(load_table(spark, sf_dir, _TABLE)).createOrReplaceTempView(view)
-    pairs = spark.sql(
-        f"""SELECT a.column_name AS col_1, b.column_name AS col_2
-            FROM (SELECT DISTINCT column_name FROM {view}) a
-            JOIN (SELECT DISTINCT column_name FROM {view}) b
-              ON a.column_name < b.column_name"""
-    )
+    pairs = _name_pairs(spark, sf_dir, f"__serene_pairnw_{_TABLE}")
     return pairs.withColumn("nw_dist", f_round(nw_udf(pairs.col_1, pairs.col_2), 6)).orderBy(
         "col_1", "col_2"
     )
+
+
+def _melted_frames(spark: SparkSession, sf_dir: str, table: str, view: str) -> dict:
+    """``table`` and its melt, bound as ``view``."""
+    frames = table_frames(spark, sf_dir, (table,))
+    frames[view] = melt(frames[table])
+    return frames
 
 
 def _melted_query(sql_fn, table: str = _TABLE):
     view = f"__serene_pair_{table}"
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, (table,))
-        melt(load_table(spark, sf_dir, table)).createOrReplaceTempView(view)
-        return spark.sql(sql_fn(view, SPARK))
+        return bound_sql(spark, sql_fn(view, SPARK), _melted_frames(spark, sf_dir, table, view))
 
     return run
 
@@ -336,16 +337,12 @@ def _materialized_pair_query(profiles: dict[str, object], body_fn, table: str = 
     as the dedup tails)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, (table,))
         view = f"__serene_pairm_{table}"
-        melt(load_table(spark, sf_dir, table)).createOrReplaceTempView(view)
-        rels = []
-        for name, sql_fn in profiles.items():
-            rel = f"__serene_{name}_{table}"
-            spark.sql(sql_fn(view, SPARK)).transform(materialize).createOrReplaceTempView(rel)
-            rels.append(rel)
+        rels = [f"__serene_{name}_{table}" for name in profiles]
+        frames = staged(spark, _melted_frames(spark, sf_dir, table, view),
+                        [(rel, fn(view, SPARK)) for rel, fn in zip(rels, profiles.values())])
         body = body_fn(*rels)
-        return spark.sql("WITH " + body if body_is_cte_fragment else body)
+        return bound_sql(spark, "WITH " + body if body_is_cte_fragment else body, frames)
 
     return run
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import sql_runner
+from serene_spark.catalog import bound_sql, sql_runner, table_frames
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_us, hex_to_int, idiv
 from serene_spark.registry import register
 
@@ -237,9 +237,9 @@ def _split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     per reference), then one SQL join for the labeling + spine summary."""
     from serene_spark.operators.dedup import dedup_lsh_verified_spark
 
-    pairs = dedup_lsh_verified_spark(spark, sf_dir)
-    pairs.createOrReplaceTempView("__leak_pairs")
-    return spark.sql(split_leakage_tail_sql(SPARK, "__leak_pairs"))
+    frames = table_frames(spark, sf_dir, ("documents",), spread=True)
+    frames["__leak_pairs"] = dedup_lsh_verified_spark(spark, sf_dir)
+    return bound_sql(spark, split_leakage_tail_sql(SPARK, "__leak_pairs"), frames)
 
 
 register(

@@ -18,13 +18,10 @@ restricted to decimal-castable forms (no exponents) for exactness.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-
 from serene_spark.catalog import COLUMNS
 from serene_spark.functions.melt import melt_sql, run_over_melt
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, rx
 from serene_spark.registry import register
-from serene_spark.materialize import materialize
 
 NUM_PAT = "^[+-]?([0-9]{1,18}([.][0-9]{0,10})?|[.][0-9]{1,10})$"
 # the exact parse of a NUM_PAT match
@@ -312,15 +309,6 @@ GROUP BY column_name
 """
 
 
-def _numeric_statement(spark: SparkSession, table: str, view: str) -> str:
-    """The stats tail references the counts relation in three CTEs and
-    Spark inlines CTEs, so the data-scale (column, num) aggregation is
-    computed once via eager localCheckpoint."""
-    rel = f"__serene_numcnt_{table}"
-    spark.sql(num_counts_sql(view, SPARK)).transform(materialize).createOrReplaceTempView(rel)
-    return "WITH " + numeric_onepass_body(rel)
-
-
 for _t in ("customer", "part", "documents"):
     register(
         f"textlen_stats_{_t}",
@@ -340,7 +328,11 @@ for _t in ("customer", "lineitem"):
         oracle=numeric_stats_sql(melt_sql(_t, COLUMNS[_t]), DUCKDB),
         doc=f"SURVEY §2.4 stats-of-numerical-type over `{_t}`",
     )(
+        # the stats tail references the counts relation in three CTEs and
+        # Spark inlines CTEs, so the data-scale (column, num) aggregation is
+        # a materialized stage
         lambda spark, sf_dir, t=_t: run_over_melt(
-            spark, sf_dir, t, lambda v: _numeric_statement(spark, t, v)
+            spark, sf_dir, t, lambda v: "WITH " + numeric_onepass_body("__serene_numcnt"),
+            stages=lambda v: [("__serene_numcnt", num_counts_sql(v, SPARK))],
         )
     )

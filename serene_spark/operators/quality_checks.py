@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views, sql_runner
+from serene_spark.catalog import bound_sql, sql_runner, table_frames
 from serene_spark.functions.melt import melt_sql
 from serene_spark.functions.sqlgen import (
     DUCKDB,
@@ -201,9 +201,7 @@ def _dq_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # melt = narrow stack projection (one pruned scan); its spread() is a
     # no-op on properly-partitioned cluster inputs
     long_df = melt(load_table(spark, sf_dir, "orders"))
-    long_df.createOrReplaceTempView("__dq_orders_long")
-    out = spark.sql(dq_metrics_sql("__dq_orders_long", SPARK))
-    return out
+    return bound_sql(spark, dq_metrics_sql("__dq_orders_long", SPARK), {"__dq_orders_long": long_df})
 
 
 register(
@@ -547,8 +545,8 @@ def dp_release_counts_salted(
             "$SPARK_GRAFT_DP_SALT); for the oracle-checkable demo noise "
             "use dp_release_counts explicitly"
         )
-    register_views(spark, sf_dir, ("customer",))
-    return spark.sql(_dp_counts_sql(SPARK, audit=False, salt=salt))
+    return bound_sql(spark, _dp_counts_sql(SPARK, audit=False, salt=salt),
+                     table_frames(spark, sf_dir, ("customer",)))
 
 
 register(

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
-from serene_spark.catalog import compose_with, cte_stages, register_views, sql_runner
+from serene_spark.catalog import bound_sql, compose_with, cte_stages, sql_runner, table_frames
 from serene_spark.functions.sqlgen import DUCKDB, idiv
 from serene_spark.registry import register
 from serene_spark.materialize import materialize
@@ -418,13 +418,12 @@ def als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.ml.recommendation import ALS
 
-    register_views(spark, sf_dir, ("lineitem", "orders"))
-    ratings = spark.sql("""
+    ratings = bound_sql(spark, """
         SELECT CAST(o.o_custkey AS INT) AS user, CAST(l.l_partkey AS INT) AS item,
                CAST(SUM(l.l_quantity) AS FLOAT) AS qty
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         GROUP BY o.o_custkey, l.l_partkey
-    """).transform(materialize)
+    """, table_frames(spark, sf_dir, ("lineitem", "orders"))).transform(materialize)
     als = ALS(
         rank=ALS_RANK, maxIter=ALS_ITERS, regParam=ALS_REG, seed=ALS_SEED,
         implicitPrefs=True, alpha=1.0,

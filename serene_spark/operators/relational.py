@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import load_table, register_views
+from serene_spark.catalog import bound_sql, table_frames
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, epoch_s, explode_seq, idiv
 from serene_spark.registry import register
 
@@ -501,7 +501,7 @@ ORDER BY s_name
 def _sql_query(sql: str, spread_tables: dict[str, tuple[str, ...]] | tuple[str, ...] = ()):
     """Build a runner for ``sql``.
 
-    ``spread_tables`` names fact views to re-register SPREAD (repartitioned
+    ``spread_tables`` names fact tables to bind SPREAD (repartitioned
     when under-partitioned, melt.spread): used for scan-stage
     aggregations whose partial-aggregate work (decimal money math) would
     otherwise run inside the scan task — a single-row-group local file pins
@@ -517,16 +517,15 @@ def _sql_query(sql: str, spread_tables: dict[str, tuple[str, ...]] | tuple[str, 
     """
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
+        frames = table_frames(spark, sf_dir)
         if spread_tables:
             from serene_spark.functions.melt import spread as _spread
 
             for t in spread_tables:
-                src = load_table(spark, sf_dir, t)
+                src = frames[t]
                 cols = spread_tables[t] if isinstance(spread_tables, dict) else None
-                df = src.select(*cols) if cols else src
-                _spread(df, probe=src).createOrReplaceTempView(t)
-        return spark.sql(sql)
+                frames[t] = _spread(src.select(*cols) if cols else src, probe=src)
+        return bound_sql(spark, sql, frames)
 
     return run
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import sql_runner
+from serene_spark.catalog import bound_sql, sql_runner
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, explode_seq, hex_to_int, idiv
 from serene_spark.registry import register
 
@@ -277,10 +277,8 @@ def _bagging_spark(strategy: str | None):
         from serene_spark.catalog import load_table
         from serene_spark.functions.melt import melt
 
-        melt(load_table(spark, sf_dir, "customer")).createOrReplaceTempView(
-            "__serene_bag_long"
-        )
-        return spark.sql(bagging_sql(SPARK, strategy))
+        return bound_sql(spark, bagging_sql(SPARK, strategy),
+                         {"__serene_bag_long": melt(load_table(spark, sf_dir, "customer"))})
 
     return run
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views, sql_runner
+from serene_spark.catalog import bound_sql, sql_runner, table_frames
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -265,13 +265,11 @@ def ivf_refine_centroids(spark: SparkSession, sf_dir: str, iterations: int = 1,
     corpus rows. Returns (centroid_id, centroid array<double>)."""
     from pyspark.sql import functions as F
 
-    register_views(spark, sf_dir, ("embeddings",), spread=True)
-    centroids = spark.sql(f"SELECT * FROM ({ivf_centroids_sql(SPARK, k)}) c")
+    frames = table_frames(spark, sf_dir, ("embeddings",), spread=True)
+    centroids = bound_sql(spark, f"SELECT * FROM ({ivf_centroids_sql(SPARK, k)}) c", frames)
     for _ in range(iterations):
-        centroids.createOrReplaceTempView("__ivf_centroids")
-        assigned = spark.sql(
-            ivf_assign_sql(SPARK, centroids_rel="__ivf_centroids")
-        )
+        frames["__ivf_centroids"] = centroids
+        assigned = bound_sql(spark, ivf_assign_sql(SPARK, centroids_rel="__ivf_centroids"), frames)
         centroids = (
             assigned.select("centroid_id", F.posexplode(F.col("embedding").cast("array<double>")))
             .groupBy("centroid_id", "pos")

@@ -16,7 +16,7 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import sql_runner
+from serene_spark.catalog import bound_sql, sql_runner, table_frames
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -789,15 +789,16 @@ WHERE c.n_tokens > 0
 def _corpus_chunks_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged runner: selection via the materialized-feat path (see
     corpus_select_spark_df), then the chunk tail joins the tiny selected
-    set — referenced once, so a view suffices."""
-    corpus_select_spark_df(spark, sf_dir).createOrReplaceTempView("__cc_sel")
-    return spark.sql(f"""
+    set — referenced once, so it is not materialized."""
+    frames = table_frames(spark, sf_dir, ("documents",), spread=True)
+    frames["__cc_sel"] = corpus_select_spark_df(spark, sf_dir)
+    return bound_sql(spark, f"""
 WITH selected AS (SELECT * FROM __cc_sel),
 chunks AS ({doc_chunks_sql(SPARK)})
 SELECT c.doc_id, s.pred_lang, c.chunk_idx, c.chunk_text, c.n_tokens
 FROM chunks c JOIN selected s ON c.doc_id = s.doc_id
 WHERE c.n_tokens > 0
-""")
+""", frames)
 
 
 register("corpus_chunks", oracle=corpus_chunks_sql(DUCKDB),

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import compose_with, cte_stages, register_views, sql_runner
+from serene_spark.catalog import bound_sql, compose_with, cte_stages, sql_runner, staged, table_frames
 from serene_spark.functions.sqlgen import (
     mat,
     DUCKDB,
@@ -550,15 +550,14 @@ def _mk_spark_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serene_spark.functions.melt import spread
     from serene_spark.materialize import materialize
 
-    register_views(spark, sf_dir, ("orders",))
+    frames = table_frames(spark, sf_dir, ("orders",))
     for view, body in mk_bases_spark():
-        df = spark.sql(f"WITH {body} SELECT * FROM {view}")
+        df = bound_sql(spark, f"WITH {body} SELECT * FROM {view}", frames)
         if view == "series":
             df = spread(df)
-        materialize(df).createOrReplaceTempView(view)
-    materialize(spark.sql(mk_gagg_sql())).createOrReplaceTempView("__mk_gagg")
-    materialize(spark.sql(mk_medb_sql())).createOrReplaceTempView("__mk_medb")
-    return spark.sql(mk_tail_onepass_sql())
+        frames[view] = materialize(df)
+    staged(spark, frames, [("__mk_gagg", mk_gagg_sql()), ("__mk_medb", mk_medb_sql())])
+    return bound_sql(spark, mk_tail_onepass_sql(), frames)
 
 
 register(

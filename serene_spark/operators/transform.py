@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import COLUMNS, register_views
+from serene_spark.catalog import COLUMNS, bound_sql
 from serene_spark.functions.melt import melt_sql
 from serene_spark.functions.sqlgen import DUCKDB, SPARK, rr_col
 from serene_spark.registry import register
@@ -55,6 +55,6 @@ def transform_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serene_spark.catalog import load_table
     from serene_spark.functions.melt import melt
 
-    register_views(spark, sf_dir, ("customer",))
-    melt(load_table(spark, sf_dir, "customer")).createOrReplaceTempView("__serene_transform_long")
-    return spark.sql(transform_sql("__serene_transform_long", SPARK))
+    view = "__serene_transform_long"
+    return bound_sql(spark, transform_sql(view, SPARK),
+                     {view: melt(load_table(spark, sf_dir, "customer"))})

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from serene_spark.catalog import register_views, sql_runner
+from serene_spark.catalog import bound_sql, sql_runner, table_frames
 from serene_spark.functions.sqlgen import (
     DUCKDB,
     SPARK,
@@ -151,10 +151,11 @@ def bpe_train(spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES):
 
     from serene_spark.operators.text_analysis import tokens_rel
 
-    register_views(spark, sf_dir, ("documents",), spread=True)
-    word_freq = spark.sql(
+    word_freq = bound_sql(
+        spark,
         f"WITH {tokens_rel(SPARK)} "
-        "SELECT tok AS word, COUNT(*) AS freq FROM tokens GROUP BY tok"
+        "SELECT tok AS word, COUNT(*) AS freq FROM tokens GROUP BY tok",
+        table_frames(spark, sf_dir, ("documents",), spread=True),
     )
     vocab = word_freq.select(
         "word",
@@ -166,8 +167,8 @@ def bpe_train(spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES):
 
     merges: list[tuple[str, str, int]] = []
     for rnd in range(n_merges):
-        vocab.createOrReplaceTempView("__bpe_vocab")
-        best = spark.sql(
+        best = bound_sql(
+            spark,
             """
 SELECT l, r, SUM(freq) AS cnt FROM (
   SELECT freq, syms[i] AS l, syms[i + 1] AS r
@@ -176,7 +177,8 @@ SELECT l, r, SUM(freq) AS cnt FROM (
     FROM __bpe_vocab WHERE size(syms) >= 2
   ) p
 ) q GROUP BY l, r ORDER BY cnt DESC, l, r LIMIT 1
-"""
+""",
+            {"__bpe_vocab": vocab},
         ).collect()
         if not best or best[0]["cnt"] is None:
             break
@@ -187,7 +189,6 @@ SELECT l, r, SUM(freq) AS cnt FROM (
             "word", "freq", _merge_fold(left, right).alias("syms"))
         if rnd % 5 == 4 or rnd == n_merges - 1:  # bound loop lineage
             vocab = vocab.transform(materialize)
-    spark.catalog.dropTempView("__bpe_vocab")
     return merges, vocab
 
 

@@ -63,6 +63,14 @@ def _under_data_root(path: str) -> bool:
     return os.path.realpath(path).startswith(os.path.realpath(_DATA_ROOT) + os.sep)
 
 
+def _data_path(value) -> str:
+    """A request's ``path``: 400 unless a string, 403 unless under the data
+    root."""
+    if not _under_data_root(_string(value, "path")):
+        raise HttpError(403, f"path must be under {_DATA_ROOT}")
+    return value
+
+
 class SereneService:
     """State + handlers; the HTTP layer below routes into this object."""
 
@@ -83,8 +91,7 @@ class SereneService:
     # -- datasets ------------------------------------------------------------
 
     def _read_dataset(self, path):
-        if not _under_data_root(_string(path, "path")):
-            raise HttpError(403, f"path must be under {_DATA_ROOT}")
+        path = _data_path(path)
         return (
             self.spark.read.parquet(path)
             if path.endswith(".parquet")
@@ -266,10 +273,6 @@ class SereneService:
 
 # -- HTTP layer ---------------------------------------------------------------
 
-# serializes /v1.0/query/run bodies: registered operators bind fixed-name
-# temp views on the one shared SparkSession (see run_query)
-_QUERY_LOCK = threading.Lock()
-
 # Root under which requests may name files to read (overridable for
 # deployments with a different data mount).
 _DATA_ROOT = os.environ.get("SERENE_DATA_ROOT", "/root/testdata")
@@ -377,7 +380,11 @@ def _make_handler(svc: SereneService):
 
         def post_owl(self):
             body = self._body()
-            self._send(200, {"id": svc.owls.add_owl(body["path"], body.get("format", "ttl"))})
+            # the format names the stored file (document.<format>)
+            fmt = _string(body.get("format", "ttl"), "format")
+            if not re.fullmatch(r"[A-Za-z]+", fmt):
+                raise HttpError(400, "format must be letters only")
+            self._send(200, {"id": svc.owls.add_owl(_data_path(body.get("path")), fmt)})
 
         def get_owl(self, eid: int):
             ont = svc.owls.get_ontology(eid)
@@ -422,7 +429,7 @@ def _make_handler(svc: SereneService):
             except (TypeError, ValueError):
                 limit = -1
             # checked before the query is built: staged runners checkpoint
-            # under _QUERY_LOCK, and Spark rejects a negative limit only then
+            # while building, and Spark rejects a negative limit only after
             if limit < 0:
                 self._send(400, {"error": "limit must be an integer >= 0"})
                 return
@@ -436,12 +443,11 @@ def _make_handler(svc: SereneService):
             if not _under_data_root(sf_dir):
                 self._send(403, {"error": f"sf_dir must be under {_DATA_ROOT}"})
                 return
-            # operators bind fixed-name temp views (events, documents, ...)
-            # on the shared session, so concurrent requests would silently
-            # read each other's corpus — serialize build+collect
-            with _QUERY_LOCK:
-                df = queries[name].spark(svc.spark, sf_dir)
-                rows = [r.asDict() for r in df.limit(limit).collect()]
+            # no lock: every operator binds its tables and stages per
+            # statement (catalog.bound_sql), so concurrent requests on the
+            # shared session never see each other's relations
+            df = queries[name].spark(svc.spark, sf_dir)
+            rows = [r.asDict() for r in df.limit(limit).collect()]
             self._send(200, {"name": name, "n_rows": len(rows),
                              "rows": json.loads(json.dumps(rows, default=str))})
 

@@ -166,18 +166,11 @@ def test_exact_baselines_refuse_data_scale_input(spark):
 
     from serene_spark.operators.dedup import guard_exact_baseline
 
-    spark.range(0, 101).selectExpr(
-        "id AS doc_id", "'x' AS text", "'s' AS source"
-    ).createOrReplaceTempView("documents")
-    try:
-        with _pytest.raises(ValueError, match="dedup_lsh_verified"):
-            guard_exact_baseline(spark, "documents", "dedup_ngram_jaccard",
-                                 "dedup_lsh_verified", max_docs=100)
-        # under the cap: no raise
-        guard_exact_baseline(spark, "documents", "dedup_ngram_jaccard",
-                             "dedup_lsh_verified", max_docs=101)
-    finally:
-        spark.catalog.dropTempView("documents")
+    docs = spark.range(0, 101).selectExpr("id AS doc_id", "'x' AS text", "'s' AS source")
+    with _pytest.raises(ValueError, match="dedup_lsh_verified"):
+        guard_exact_baseline(docs, "dedup_ngram_jaccard", "dedup_lsh_verified", max_docs=100)
+    # under the cap: no raise
+    guard_exact_baseline(docs, "dedup_ngram_jaccard", "dedup_lsh_verified", max_docs=101)
 
 
 def test_guarded_runners_still_pass_at_test_scale(spark, sf_dir):

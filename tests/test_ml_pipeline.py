@@ -153,9 +153,10 @@ def test_bag_averaging(spark):
 
 def test_concurrent_feature_extraction_isolated(spark):
     """profile_features_from_long from two threads at once: each call's
-    features must come from its own data (per-call temp-view names — a shared
-    name let one thread's createOrReplaceTempView clobber the other's view
-    mid-analysis; service.py serves each POST /train on its own thread)."""
+    features must come from its own data (each call binds its relations per
+    statement — a shared view name let one thread's createOrReplaceTempView
+    clobber the other's view mid-analysis; service.py serves each POST
+    /train on its own thread)."""
     import threading
 
     from serene_spark.ml.pipeline import make_fixture_long, profile_features_from_long

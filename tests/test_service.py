@@ -45,10 +45,12 @@ def test_dataset_endpoints(server, sf_dir):
     assert code == 200 and ds["id"] in ids
 
 
-def test_ssd_owl_crud_and_dependent_delete(server):
+def test_ssd_owl_crud_and_dependent_delete(server, monkeypatch, tmp_path):
     import os
+    import shutil
 
     import serene_spark.modeler.octopus as octo
+    import serene_spark.service as service
     from serene_spark.storage import ssd_to_json
 
     code, r = _req(server, "POST", "/v1.0/ssd", ssd_to_json(octo.CUSTOMER_SSD))
@@ -57,7 +59,10 @@ def test_ssd_owl_crud_and_dependent_delete(server):
     code, back = _req(server, "GET", f"/v1.0/ssd/{ssd_id}")
     assert code == 200 and back["name"] == "customer"
 
-    ttl = os.path.join(os.path.dirname(octo.__file__), "tpch_ontology.ttl")
+    # POST /owl reads only under the data root: serve the ttl from one
+    ttl = str(tmp_path / "tpch_ontology.ttl")
+    shutil.copyfile(os.path.join(os.path.dirname(octo.__file__), "tpch_ontology.ttl"), ttl)
+    monkeypatch.setattr(service, "_DATA_ROOT", str(tmp_path))
     code, r = _req(server, "POST", "/v1.0/owl", {"path": ttl})
     assert code == 200
     owl_id = r["id"]
@@ -191,15 +196,24 @@ def test_query_run_sf_dir_allowlist(server):
 
 
 def test_dataset_path_allowlist(server):
-    """POST /v1.0/dataset reads the path it is given, so it must hold that
-    path to the same data root as /query/run: any other file would come
-    back as `columns` and as GET's per-column sample."""
+    """POST /v1.0/dataset and /v1.0/owl read the path they are given, so
+    they must hold that path to the same data root as /query/run: any other
+    file would come back as `columns` and as GET's per-column sample, or be
+    copied into the ontology store. The owl's format names the stored copy
+    (``document.<format>``), so it may not carry a path or a dot."""
     from serene_spark.service import _DATA_ROOT
 
-    for path in ("/etc/passwd", f"{_DATA_ROOT}/../../etc/passwd"):
-        code, err = _req(server, "POST", "/v1.0/dataset", {"path": path})
-        assert code == 403 and "path" in err["error"], (path, err)
-    assert _req(server, "POST", "/v1.0/dataset", {"path": 5})[0] == 400
+    for route in ("/v1.0/dataset", "/v1.0/owl"):
+        for path in ("/etc/passwd", f"{_DATA_ROOT}/../../etc/passwd"):
+            code, err = _req(server, "POST", route, {"path": path})
+            assert code == 403 and "path" in err["error"], (route, path, err)
+        for body in ({"path": 5}, {}):
+            code, err = _req(server, "POST", route, body)
+            assert code == 400 and "path" in err["error"], (route, body, err)
+    for fmt in ("../ttl", "t.tl", "", 5):
+        code, err = _req(server, "POST", "/v1.0/owl",
+                         {"path": f"{_DATA_ROOT}/sf0.001/customer.parquet", "format": fmt})
+        assert code == 400 and "format" in err["error"], (fmt, err)
 
 
 @pytest.mark.parametrize("limit", ["abc", -1, None])
@@ -274,6 +288,55 @@ def test_concurrent_train_predict_query_load(server, sf_dir):
         if state["status"] in ("complete", "error"):
             break
         _t.sleep(2)
+    assert state["status"] == "complete", state
+
+
+def test_concurrent_query_run_matches_serial(server, sf_dir, tmp_path, monkeypatch):
+    """Concurrent /query/run requests on one shared session, over two
+    corpora whose `customer` differs and while a model trains, each return
+    what the same request returns alone. Queries bind their tables per
+    statement, so no request can read another's relation."""
+    import concurrent.futures as cf
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    import serene_spark.service as service
+
+    same, other = tmp_path / "same", tmp_path / "other"
+    shutil.copytree(sf_dir, same)
+    shutil.copytree(sf_dir, other)
+    customer = pq.read_table(f"{sf_dir}/customer.parquet")
+    pq.write_table(customer.slice(0, customer.num_rows // 2), other / "customer.parquet")
+    monkeypatch.setattr(service, "_DATA_ROOT", str(tmp_path))
+
+    def run(job):
+        name, corpus = job
+        code, body = _req(server, "POST", "/v1.0/query/run",
+                          {"name": name, "sf_dir": str(corpus), "limit": 100_000})
+        assert code == 200, body
+        return sorted(json.dumps(r, sort_keys=True) for r in body["rows"])
+
+    # a run_over_melt profiler and a sql_runner query, both over customer
+    jobs = [(n, c) for n in ("profile_scalar_customer", "resample_upsample_max")
+            for c in (same, other)]
+    serial = {job: run(job) for job in jobs}
+    for name in ("profile_scalar_customer", "resample_upsample_max"):
+        assert serial[(name, same)] != serial[(name, other)], name
+
+    code, r = _req(server, "POST", "/v1.0/model", {"description": "trains during queries"})
+    model_id = r["id"]
+    assert _req(server, "POST", f"/v1.0/model/{model_id}/train")[0] == 202
+    with cf.ThreadPoolExecutor(max_workers=len(jobs) * 2) as ex:
+        concurrent = list(ex.map(run, jobs * 2))
+    assert [serial[job] for job in jobs * 2] == concurrent
+
+    deadline = time.time() + 600
+    while time.time() < deadline:
+        state = _req(server, "GET", f"/v1.0/model/{model_id}")[1]
+        if state["status"] in ("complete", "error"):
+            break
+        time.sleep(2)
     assert state["status"] == "complete", state
 
 

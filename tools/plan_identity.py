@@ -8,10 +8,12 @@ given) and records, per query:
 - the optimized logical plan of each statement and of the returned
   DataFrame.
 
-Per-call uuids (in view names, so also in statements) are normalized away
-everywhere; plans additionally lose expression ids (``#123``), RDD ids
-(``[45]``), MLlib uids (``VectorAssembler_3dd06a16e489``), JVM lambda names
-and the optimizer's ``_common_expr_<n>`` counter. Two session-wide orders are
+Per-call uuids (in view names, so also in statements: each frame that
+``catalog.bound_sql`` binds records as a ``_pyspark_<uuid>`` view) are
+normalized away everywhere; plans additionally lose expression ids
+(``#123``), RDD ids (``[45]``), MLlib uids (``VectorAssembler_3dd06a16e489``),
+JVM lambda names, the optimizer's ``_common_expr_<n>`` counter and the CTE
+ids of recursive loops (``UnionLoop 0``). Two session-wide orders are
 put back into a canonical one: the suffixes of higher-order-function lambda
 variables (``x_17``) are renumbered by first use, and so is each
 distinct-aggregate rewrite's ``gid``, whose Expand rows and columns are sorted.
@@ -54,6 +56,7 @@ _PLAN_IDS = _UUIDS + (
     (re.compile(r"_[0-9a-f]{12}\b"), "_<uid>"),
     (re.compile(r"\$\$Lambda[^\s,]*"), "$$Lambda"),
     (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+    (re.compile(r"\b(UnionLoop(?:Ref)?) \d+"), r"\1 N"),
 )
 _LAMBDA_VAR = re.compile(r"\b(lambda \w+)_(\d+)\b")
 _GID = re.compile(r"gid#N = (\d+)")
